@@ -90,7 +90,7 @@ def main() -> None:
     from osmspark.datagen import gen_polygons
     from osmspark.functions.hexgrid import with_hex_cell
     from osmspark.operators import audit
-    from osmspark.operators.knn import knn_kring
+    from osmspark.operators.knn import BRUTE_COST_CAP, knn_kring
     from osmspark.operators.spatial_join import spatial_join
     from osmspark.operators.tiles import render_density_tiles, tile_counts
     from osmspark.plans.checkpoint import SnapshotStore
@@ -108,7 +108,7 @@ def main() -> None:
     # would collapse to one task and warm nothing).
     warm_docs = docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(20)) < 1)
     warm_nodes = parse_nodes(warm_docs).select("id", "lat", "lon").persist()
-    warm_nodes.count()
+    n_warm = warm_nodes.count()
     warm_nodes.write.mode("overwrite").parquet(f"{CACHE_ROOT}/warmup_out")
     spatial_join(warm_nodes, polys, res=8).count()
     tile_counts(warm_nodes.select("lat", "lon"), zoom=12).count()
@@ -116,7 +116,11 @@ def main() -> None:
     with_hex_cell(warm_nodes.select("lat", "lon"), 9).count()
     qs_warm = warm_nodes.limit(50).select(
         F.col("id").alias("query_id"), "lat", "lon")
-    knn_kring(warm_nodes, qs_warm, k=10, res=8).count()
+    # both kNN paths: 50 queries run the bucket path, brute_cost_cap=0
+    # the ring loop that the larger batches below take
+    for cap in (BRUTE_COST_CAP, 0):
+        knn_kring(warm_nodes, qs_warm, k=10, res=8, brute_cost_cap=cap,
+                  n_points=n_warm, n_queries=50).count()
     warm_nodes.unpersist()
 
     # Stage 1 (E2' in SURVEY §3.2): extract once -> columnar snapshot.
@@ -137,7 +141,7 @@ def main() -> None:
         return _extract_to("nodes_timed")
 
     # establish the stable snapshot once; downstream queries read this
-    _extract_to("nodes")
+    n_nodes = _extract_to("nodes")
     nodes = store.load(spark, "nodes")
 
     def q_spatial():
@@ -162,12 +166,14 @@ def main() -> None:
     def q_knn():
         pts = nodes.select("id", "lat", "lon")
         qs = pts.limit(50).select(F.col("id").alias("query_id"), "lat", "lon")
-        return knn_kring(pts, qs, k=10, res=8).count()
+        return knn_kring(pts, qs, k=10, res=8, n_points=n_nodes,
+                         n_queries=50).count()
 
     def q_knn_5k():
         pts = nodes.select("id", "lat", "lon")
         qs = pts.limit(5000).select(F.col("id").alias("query_id"), "lat", "lon")
-        return knn_kring(pts, qs, k=10, res=8).count()
+        return knn_kring(pts, qs, k=10, res=8, n_points=n_nodes,
+                         n_queries=5000).count()
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
 
@@ -215,7 +221,8 @@ def main() -> None:
         pts = nodes.select("id", "lat", "lon")
         qs = pts.limit(100_000).select(
             F.col("id").alias("query_id"), "lat", "lon")
-        return knn_kring(pts, qs, k=10, res=8).count()
+        return knn_kring(pts, qs, k=10, res=8, n_points=n_nodes,
+                         n_queries=100_000).count()
 
     _, t_100k, s_100k = timed(q_knn_100k)
     extras = {"knn_kring_100kq": t_100k}
@@ -244,7 +251,8 @@ def main() -> None:
 
     def q_knn_layout_5k():
         return knn_kring(lnodes, layout_qs, k=10, res=layout_res,
-                         points_cell_col="cell").count()
+                         points_cell_col="cell", n_points=n_nodes,
+                         n_queries=5000).count()
 
     # best-of-2 for the cheap extras: a single shot right after the 100k
     # kNN run can catch its GC shadow (observed: 15.6 s one-shot vs 8.1 s

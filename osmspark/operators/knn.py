@@ -1,51 +1,67 @@
-"""B5 — kNN via hex k-ring expansion (SURVEY §2.2).
+"""B5 — exact kNN: one bucket-local top-k pass for small batches, hex
+k-ring expansion for large ones (SURVEY §2.2).
 
-Queries are a DataFrame end to end (round-3 rewrite: round 2 collected the
-query set, enumerated candidate k-ring cells in driver numpy and shipped
-them back via createDataFrame — a driver ceiling at ~10^5 queries; round-2
-VERDICT item 4).  Now candidate cells are generated by an Arrow pandas UDF
-ON the queries DataFrame, active/done state lives in (local-checkpointed)
-DataFrames, and the only per-round driver values are two scalars (active
-count, candidate-row estimate).  There is no query-count cap.
+`knn_kring` picks the path from the candidate-pair count
+n_queries * n_points against `BRUTE_COST_CAP` (4e8):
 
-Scale design (unchanged where it was already right):
+  * at or below the cap, the BUCKET path answers the batch in one lazy
+    pass with no search rounds (Distributed Stream KNN Join, SIGMOD 2021:
+    exact local top-k per data partition, merged once).  Points hash
+    into B buckets (B = max(defaultParallelism, n_points / 1M)), the
+    queries are copied into every bucket, and ONE cogrouped
+    applyInPandas (both sides grouped by bucket) finds each query's
+    local top-k per bucket with block numpy
+    (unit-sphere dot products through BLAS for haversine, squared
+    degrees for sq_deg).  Every candidate within a float-error margin of
+    the local k-th is kept, so the kept set provably contains the global
+    top-k; Spark then computes `dist` with the same expression
+    `knn_bruteforce` uses and ranks by (dist, point_id), so the output
+    is bit-identical to the oracle.  Measured on the 144k-node neighbors
+    benchmark snapshot (4 vCPUs): 2.8-3.8 s and 7-8 Spark jobs per
+    500-query batch against 13.9-18.3 s and 66 jobs for the ring loop,
+    which pays a fixed assign + prep phase, one job per round and a
+    straggler brute pass.  The bucket path's cost grows with the pair
+    count (~1e-8 s per pair on 4 vCPUs), the ring loop's mostly with
+    n_points.  Measured crossover (same box, warm calls, min of 2): on
+    2.4M points (bench.py's sf0.1 nodes) between 3.8e8 pairs (bucket
+    7.4 s, ring 9.5 s) and 7.7e8 (11.0 s vs 9.5 s); on 144k points near
+    2.3e9 (24.7 s both).  The cap sits below the lower crossover.
+  * above the cap, the k-ring loop below runs: its per-query marginal
+    cost (~0.3 ms at 100k queries) beats copying a large query batch
+    into every bucket.
+
+Ring path.  Queries are a DataFrame end to end: candidate cells are
+generated by an Arrow pandas UDF ON the queries DataFrame, active/done
+state lives in (local-checkpointed) DataFrames, and the only per-round
+driver values are two scalars (active count, candidate-row estimate).
+There is no query-count cap.
   * occupancy-adaptive prefilter resolution — under hot-city skew a coarse
     cell holds thousands of points and sits in thousands of co-located
     queries' rings, degenerating the candidate join into a local
     all-pairs; the grid is refined until the hottest cell holds O(k)
-    points.  Round 6: the refine decision reads the EXACT max of a
-    base-res count pass (the same pass that feeds the density estimate)
-    instead of a separate sampled probe job, and the fine-res table is
-    assigned exactly once (no per-call fine-res count shuffle).
+    points.  The refine decision reads the EXACT max of a base-res count
+    pass (the same pass that feeds the density estimate), and the
+    fine-res table is assigned exactly once.
   * per-query start rings from local density — ring-1 occupancy is
     estimated from the query's base-res cell count scaled by 7^-steps
-    (one broadcast map join; round 6 — previously a ring-1 explode +
-    shuffle join against fine-res counts), then a uniform-density solve
-    for the ring holding >= 2k points; a bad estimate costs one doubling
-    round, never correctness.
+    (one broadcast map join), then a uniform-density solve for the ring
+    holding >= 2k points; a bad estimate costs one doubling round, never
+    correctness.
   * queries whose PRE-snap ring estimate exceeds BRUTE_RING_CAP skip the
-    join loop entirely and go straight to the single-pass brute fallback
-    (round-2 ADVICE: the post-snap comparison was dead code — snapping
-    clamped to max_ring == the cap, so 'hopeless' could never trigger and
-    sparse-territory queries paid one giant-ring join round first).
-  * candidate rings are NOT pre-intersected with the non-empty cell set
-    anymore: that intersection only ever paid for itself when rings moved
-    through the driver — in the distributed join, empty cells simply match
-    nothing.
+    join loop entirely and go straight to the single-pass brute fallback.
 
-Termination guarantee: a query is done when its k-th candidate distance
-<= the uv-exact coverage claim of its current ring (`hexgrid.claim_m` —
-what kring(r) provably covers, exact at face edges; this replaced the
-round-2 measured-local-R heuristic in round 5), or when the points table
-is exhausted.  The candidate rings are SEAM-EXACT
-(round 5): `hexgrid.kring_spill` adds re-projected anchor rings on every
+Termination guarantee (ring path): a query is done when its k-th
+candidate distance <= the uv-exact coverage claim of its current ring
+(`hexgrid.claim_m` — what kring(r) provably covers, exact at face edges),
+or when the points table is exhausted.  The candidate rings are
+SEAM-EXACT: `hexgrid.kring_spill` adds re-projected anchor rings on every
 cube face the home ring spills onto, so the bound holds for points across
 a face seam as well; the claim is clamped to hexgrid.MAX_COVER_M (the
 ring bound's validity cap), which at worst delays doneness to the brute
 fallback, never correctness.
 
-`knn_bruteforce` is the O(P*Q) reference path (crossJoin + window) — used
-as the oracle and for tiny point sets.
+`knn_bruteforce` is the O(P*Q) reference path (crossJoin + window) — the
+oracle the tests compare both paths against.
 """
 
 from __future__ import annotations
@@ -53,11 +69,13 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..functions import hexgrid
-from ..functions.geo import haversine_m, sq_deg_dist
+from ..functions.geo import haversine_m, latlon_to_xyz, sq_deg_dist
 
 # a query whose ESTIMATED ring exceeds this is cheaper as one brute-force
 # pass than as a join against thousands of candidate cells
@@ -65,6 +83,21 @@ BRUTE_RING_CAP = 32
 # broadcast the candidate (query x ring-cell) side while its estimated row
 # count stays under this; beyond it, let the shuffle join handle it
 BROADCAST_CAND_ROWS = 4_000_000
+# n_queries * n_points at or below this runs the bucket path, above it the
+# k-ring loop (below the measured crossover, ~6e8 pairs on 2.4M points)
+BRUTE_COST_CAP = 4e8
+# the bucket count keeps each applyInPandas group near this many points
+BUCKET_POINTS = 1_000_000
+# float64 elements of one (query chunk x point chunk) score block (32 MB)
+_BLOCK = 1 << 22
+# (absolute, relative) widening of each query's local k-th score.  Scores
+# differ from Spark's `dist` ordering by float error only: for haversine
+# the chord^2 estimate 2 - 2<q,p> carries <~1e-14 absolute error (unit
+# vectors off by a few ulp, a 3-term dot rounded near 1) and Spark's
+# haversine argument a few ulp more; sq_deg is the same arithmetic as
+# `sq_deg_dist`.  Keeping everything within the margin of the k-th is
+# what makes the kept set a superset of the exact top-k.
+_TIE_MARGIN = {"haversine": (1e-13, 1e-12), "sq_deg": (0.0, 1e-12)}
 
 
 def _dist_col(metric: str, qlat, qlon, plat, plon):
@@ -73,6 +106,20 @@ def _dist_col(metric: str, qlat, qlon, plat, plon):
     if metric == "sq_deg":
         return sq_deg_dist(qlat, qlon, plat, plon)
     raise ValueError(metric)
+
+
+def _rank_top_k(pairs: DataFrame, k: int, metric: str) -> DataFrame:
+    """(query, point) pairs -> `dist` plus `rank` <= k per query, ordered
+    by (dist, point_id): the one ordering every kNN path answers with."""
+    w = Window.partitionBy("query_id").orderBy(F.asc("dist"),
+                                               F.asc("point_id"))
+    return (
+        pairs.withColumn("dist", _dist_col(metric, F.col("qlat"),
+                                           F.col("qlon"), F.col("plat"),
+                                           F.col("plon")))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
 
 
 def knn_bruteforce(
@@ -97,50 +144,113 @@ def knn_bruteforce(
         F.col("lat").alias("plat"),
         F.col("lon").alias("plon"),
     )
-    joined = p.crossJoin(F.broadcast(q)).withColumn(
-        "dist",
-        _dist_col(metric, F.col("qlat"), F.col("qlon"), F.col("plat"), F.col("plon")),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("point_id"))
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "point_id", "dist")
-    )
+    return _rank_top_k(p.crossJoin(F.broadcast(q)), k, metric).select(
+        "query_id", "rank", "point_id", "dist")
 
 
-def knn_auto(
+def _bucket_candidates(qlat, qlon, plat, plon, k: int, metric: str):
+    """(query index, point index) arrays: for each query, every point whose
+    score is within `_TIE_MARGIN` of the query's k-th best score (all
+    points when there are at most k).
+
+    Works in blocks of queries x points.  The k-th best of any block is an
+    upper bound on the k-th best overall, so a running minimum of block
+    k-ths is a safe threshold: a block keeps at most ~k points per query
+    plus ties, and every point of the exact top-k is kept."""
+    nq, npt = len(qlat), len(plat)
+    if not nq or not npt:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    if metric == "haversine":
+        qv = np.stack(latlon_to_xyz(qlat, qlon), axis=1)
+        pv = np.stack(latlon_to_xyz(plat, plon))
+
+        def score(qs, ps):
+            s = qv[qs] @ pv[:, ps]  # chord^2 = 2 - 2<q,p> on the unit sphere
+            s *= -2.0
+            s += 2.0
+            return s
+    else:
+        def score(qs, ps):
+            return ((qlat[qs, None] - plat[ps]) ** 2
+                    + (qlon[qs, None] - plon[ps]) ** 2)
+    abs_m, rel_m = _TIE_MARGIN[metric]
+    pc = min(npt, _BLOCK)
+    qc = max(1, _BLOCK // pc)
+    out_q, out_p = [], []
+    for q0 in range(0, nq, qc):
+        qs = slice(q0, min(nq, q0 + qc))
+        thr = np.full(qs.stop - q0, np.inf)
+        for p0 in range(0, npt, pc):
+            s = score(qs, slice(p0, min(npt, p0 + pc)))
+            if s.shape[1] > k:
+                thr = np.minimum(thr, np.partition(s, k - 1, axis=1)[:, k - 1])
+            i, j = np.nonzero(s <= (thr + abs_m + rel_m * np.abs(thr))[:, None])
+            out_q.append(i + q0)
+            out_p.append(j + p0)
+    return np.concatenate(out_q), np.concatenate(out_p)
+
+
+def _knn_buckets(
     points: DataFrame,
     queries: DataFrame,
     k: int,
-    brute_cost_cap: float = 2e8,
-    metric: str = "haversine",
-    point_id: str = "id",
-    n_points: int | None = None,
-    n_queries: int | None = None,
-    **kring_kwargs,
+    metric: str,
+    point_id: str,
+    n_points: int,
 ) -> DataFrame:
-    """Cost-based path selection (the planner-style choice Catalyst cannot
-    make for a custom operator): below `brute_cost_cap` candidate pairs
-    (n_points * n_queries), the brute crossJoin+window path runs ONE stage
-    with zero fixed per-round cost and wins — measured at sf0.1, 50 queries
-    x 2.4M points (120M pairs) brute-forces in a few seconds while the
-    k-ring loop pays ~13 s of per-round fixed cost (checkpoints + counts).
-    Above the cap the k-ring path's ~0.3 ms/query marginal cost wins by
-    orders of magnitude (100k queries: 31 s vs an unrunnable 1.2*10^11-pair
-    crossJoin).  Both paths are exact and oracle-gated; without hints the
-    counts are one count-star each — metadata-cheap for parquet scans
-    (answered from footers) but a full upstream execution for derived
-    inputs, so pass `n_points`/`n_queries` there (estimates are fine;
-    only the dispatch decision depends on them) and the dispatcher runs
-    ZERO jobs before the real one."""
-    n_q = n_queries if n_queries is not None else queries.count()
-    n_p = n_points if n_points is not None else points.count()
-    if n_q * n_p <= brute_cost_cap:
-        return knn_bruteforce(points, queries, k, metric=metric,
-                              point_id=point_id)
-    return knn_kring(points, queries, k, metric=metric, point_id=point_id,
-                     **kring_kwargs)
+    """The no-rounds exact path: local top-k candidates per point bucket
+    in one grouped applyInPandas, then the oracle's dist + rank."""
+    n_b = max(points.sparkSession.sparkContext.defaultParallelism,
+              -(-n_points // BUCKET_POINTS))
+    pid_t = points.select(point_id).schema[0].dataType
+    qid_t = queries.select("query_id").schema[0].dataType
+    p = points.select(
+        F.pmod(F.xxhash64(point_id), F.lit(n_b)).cast("int").alias("__b"),
+        F.col(point_id).alias("point_id"),
+        F.col("lat").cast("double").alias("lat"),
+        F.col("lon").cast("double").alias("lon"),
+    )
+    q = queries.select(
+        F.explode(F.sequence(F.lit(0), F.lit(n_b - 1))).alias("__b"),
+        "query_id",
+        F.col("lat").cast("double").alias("lat"),
+        F.col("lon").cast("double").alias("lon"),
+    )
+    out_schema = StructType([
+        StructField("query_id", qid_t),
+        StructField("qlat", DoubleType()),
+        StructField("qlon", DoubleType()),
+        StructField("point_id", pid_t),
+        StructField("plat", DoubleType()),
+        StructField("plon", DoubleType()),
+    ])
+
+    def local_top_k(prows: pd.DataFrame, qrows: pd.DataFrame) -> pd.DataFrame:
+        plat = prows["lat"].to_numpy(dtype=np.float64)
+        plon = prows["lon"].to_numpy(dtype=np.float64)
+        # null coordinates never rank (the ring path drops them too)
+        ok = np.isfinite(plat) & np.isfinite(plon)
+        pid, plat, plon = prows["point_id"].to_numpy()[ok], plat[ok], plon[ok]
+        qlat = qrows["lat"].to_numpy(dtype=np.float64)
+        qlon = qrows["lon"].to_numpy(dtype=np.float64)
+        i, j = _bucket_candidates(qlat, qlon, plat, plon, k, metric)
+        return pd.DataFrame({
+            "query_id": qrows["query_id"].to_numpy()[i],
+            "qlat": qlat[i],
+            "qlon": qlon[i],
+            "point_id": pid[j],
+            "plat": plat[j],
+            "plon": plon[j],
+        })
+
+    # cogroup, not a union of the two sides: padding a union's columns
+    # with nulls would hand integer ids to pandas as float64
+    cand = (
+        p.groupBy("__b").cogroup(q.groupBy("__b"))
+        .applyInPandas(local_top_k, out_schema)
+    )
+    return _rank_top_k(cand, k, metric).select(
+        "query_id", "rank", "point_id", "dist")
 
 
 def occupancy_res(
@@ -183,6 +293,28 @@ def occupancy_res(
     return res
 
 
+def _check_cell_res(points: DataFrame, points_cell_col: str, res: int):
+    """Raise when a pinned layout cell column was assigned at a resolution
+    other than `res`: such a column would match nothing in every candidate
+    join round and silently degrade ALL queries to the O(P*Q) brute-force
+    fallback.  The check reads the res BITS packed into one sampled cell
+    id (exact — zero false positives), NOT a fresh lat/lon assignment:
+    JVM and numpy trig can differ by 1 ulp on cell boundaries, so
+    re-assignment could reject a perfectly valid layout."""
+    probe = points.select(points_cell_col).first()
+    if probe is None:
+        return
+    got_res = int(hexgrid.unpack(
+        np.array([int(probe[points_cell_col])], dtype=np.int64)
+    )[0][0])
+    if got_res != res:
+        raise ValueError(
+            f"points_cell_col '{points_cell_col}' carries res="
+            f"{got_res} cells, but this query runs at res={res}; "
+            f"was the layout written at a different resolution?"
+        )
+
+
 def knn_kring(
     points: DataFrame,
     queries: DataFrame,
@@ -194,30 +326,50 @@ def knn_kring(
     max_rounds: int = 14,
     max_ring: int = 64,
     points_cell_col: str | None = None,
+    brute_cost_cap: float = BRUTE_COST_CAP,
+    n_points: int | None = None,
+    n_queries: int | None = None,
 ) -> DataFrame:
-    """k-ring kNN: equivalent to knn_bruteforce, without the crossJoin.
+    """Exact kNN: (query_id, rank, point_id, dist), equal to
+    knn_bruteforce, without the crossJoin.
 
     points: distributed (point_id, lat, lon, ...); queries: distributed
     (query_id, lat, lon) — no size cap.
 
-    points_cell_col: name of a PRE-COMPUTED hex cell column on `points`
-    assigned at exactly `res` (the 100 TB path: the cell is part of the
-    storage layout — plans/layout cell-bucketing — so repeated kNN batches
-    skip the per-call assignment scan entirely; occupancy-adaptive
-    resolution is skipped too, since the layout pins the resolution).
+    Path choice: n_queries * n_points <= `brute_cost_cap` runs the
+    one-pass bucket path (see the module docstring), above it the k-ring
+    loop.  Without hints the counts are one count-star each (the points
+    count is skipped when n_queries alone exceeds the cap) —
+    metadata-cheap for parquet scans but a full upstream execution for
+    derived inputs, so pass `n_points`/`n_queries` there (estimates are
+    fine; only the path choice depends on them) and the dispatch runs
+    ZERO jobs before the real one.
 
-    Per round: candidate cells are the active queries' k-rings (pandas UDF
-    + explode), joined to the cell-indexed points (broadcast while the
-    candidate side is small), top-k per query by window, done-ness decided
-    by comparing the k-th distance against the ring-coverage bound.  Done
-    queries' top-k rows stay in local-checkpointed DataFrames unioned at
-    the end — results never visit the driver."""
+    points_cell_col: name of a PRE-COMPUTED hex cell column on `points`
+    assigned at exactly `res` (the storage-layout path: the cell is part
+    of the layout — plans/layout cell-bucketing — so repeated ring
+    batches skip the per-call assignment scan; occupancy-adaptive
+    resolution is skipped too, since the layout pins the resolution).  A
+    column at another resolution raises, on either path.
+
+    Ring path, per round: candidate cells are the active queries' k-rings
+    (pandas UDF + explode), joined to the cell-indexed points (broadcast
+    while the candidate side is small), top-k per query by window,
+    done-ness decided by comparing the k-th distance against the
+    ring-coverage bound.  Done queries' top-k rows stay in
+    local-checkpointed DataFrames unioned at the end — results never
+    visit the driver."""
     from functools import reduce
 
-    import os
-    import time as _time
+    if points_cell_col is not None:
+        _check_cell_res(points, points_cell_col, res)
+    n_q = n_queries if n_queries is not None else queries.count()
+    # more queries than the cap allows pairs: ring path, no points count
+    if n_q <= brute_cost_cap:
+        n_p = n_points if n_points is not None else points.count()
+        if n_q * n_p <= brute_cost_cap:
+            return _knn_buckets(points, queries, k, metric, point_id, n_p)
 
-    dbg = os.environ.get("OSMSPARK_KNN_DEBUG") == "1"
     spark = points.sparkSession
 
     def _pts(res_: int):
@@ -230,52 +382,27 @@ def knn_kring(
                                      out_col="pcell")
 
     # occupancy-adaptive prefilter resolution: refine until the hottest
-    # cell holds O(k) points.  Round-6 restructure (guide §1.2, measured:
-    # the fixed assign phase was ~4 s of a 7.5 s 50-query call): ONE
-    # base-res assignment pass feeds an EXACT per-cell count table (the
-    # base-res cover of a city is tiny), whose max drives the refine
-    # formula — replacing the separate 1/16-sampled probe job AND the
-    # full fine-res cellcnt shuffle (1.2M groups at res 13) the old path
-    # paid per call.  The fine-res table is then assigned once.  The
-    # ring-1 density estimate now comes from the query's BASE cell count
-    # scaled by 7^-steps (a broadcast map join) instead of a ring-1
-    # explode + shuffle join — estimator-only: a worse estimate costs a
-    # doubling round, never correctness.
-    _t = _time.time()
+    # cell holds O(k) points.  ONE base-res assignment pass feeds an EXACT
+    # per-cell count table (the base-res cover of a city is tiny), whose
+    # max drives the refine formula; the fine-res table is then assigned
+    # once.  The ring-1 density estimate comes from the query's BASE cell
+    # count scaled by 7^-steps (a broadcast map join) — estimator-only: a
+    # worse estimate costs a doubling round, never correctness.
     target_occ = max(32, 2 * k)
     to_unpersist: list[DataFrame] = []
     if points_cell_col is not None:
-        # validate the pinned layout cell column cheaply (round-3 ADVICE):
-        # a column assigned at a DIFFERENT resolution would match nothing
-        # in every candidate join round and silently degrade ALL queries
-        # to the O(P*Q) brute-force fallback.  The check reads the res
-        # BITS packed into the sampled cell id (exact — zero false
-        # positives), NOT a fresh lat/lon assignment: JVM and numpy trig
-        # can differ by 1 ulp on cell boundaries, so re-assignment could
-        # reject a perfectly valid layout (round-4 review finding).
-        probe = points.select(points_cell_col).first()
-        if probe is not None:
-            got_res = int(hexgrid.unpack(
-                np.array([int(probe[points_cell_col])], dtype=np.int64)
-            )[0][0])
-            if got_res != res:
-                raise ValueError(
-                    f"points_cell_col '{points_cell_col}' carries res="
-                    f"{got_res} cells, but this query runs at res={res}; "
-                    f"was the layout written at a different resolution?"
-                )
         p = points.select(
             F.col(point_id).alias("point_id"),
             F.col("lat").alias("plat"),
             F.col("lon").alias("plon"),
             F.col(points_cell_col).alias("pcell"),
         ).persist()
-        # density table at a COARSE base res even on the pinned layout
-        # (round 6): grouping the layout's fine cells directly was a
-        # 10^6-group shuffle per call (res 13 holds ~2 points/cell); one
-        # codegen re-assign of the CACHED p at res 8 plus a tiny groupBy
-        # is cheaper and feeds the same broadcast have1 estimate.  At
-        # res <= 8 the pinned cells are already coarse — group them as-is.
+        # density table at a COARSE base res even on the pinned layout:
+        # grouping the layout's fine cells directly is a 10^6-group
+        # shuffle per call (res 13 holds ~2 points/cell); one codegen
+        # re-assign of the CACHED p at res 8 plus a tiny groupBy is
+        # cheaper.  At res <= 8 the pinned cells are already coarse —
+        # group them as-is.
         if res <= 8:
             base_res, steps = res, 0
             cnt_base = p.groupBy(F.col("pcell").alias("pcell")).agg(
@@ -305,20 +432,10 @@ def knn_kring(
         res = base_res + steps
         p = _pts(res).persist()
         to_unpersist += [p, cnt_base]
-    if dbg:
-        print(f"KNN assign res={res} {_time.time()-_t:.2f}s", flush=True)
 
-    # query prep: cell, local radius, density-estimated start ring —
-    # staged selects, all distributed
-    # (round 6: the `radius_m` pandas-UDF column that used to be added
-    # here was DEAD — the round-5 uv-exact claim_m bound replaced every
-    # consumer — yet the prep checkpoint still materialized it through an
-    # ArrowEvalPython stage on every call; prep is now pure codegen)
-    #
-    try:
-        _nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        _nparts = spark.sparkContext.defaultParallelism
+    # query prep: cell and density-estimated start ring — staged
+    # selects, all distributed, pure codegen
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     q0 = hexgrid.with_hex_cell(
         queries.select("query_id", F.col("lat").alias("qlat"),
                        F.col("lon").alias("qlon")),
@@ -337,8 +454,7 @@ def knn_kring(
     sched = F.array(*[F.lit(s) for s in ring_schedule])
     # ring-1 density estimate (both paths): the query's BASE-res cell
     # count scaled to 7 final-res cells (broadcast map join — no explode,
-    # no shuffle); a missing base cell means locally empty territory,
-    # same semantics as the old have1 == 0
+    # no shuffle); a missing base cell means locally empty territory
     c8 = F.broadcast(cnt_base.select(
         F.col("pcell").alias("__qc8"), F.col("cnt").alias("__c8")))
     if base_res == res:
@@ -367,7 +483,7 @@ def knn_kring(
             F.when(empty1, F.lit(8)).otherwise(r_est),
             F.lit(start_ring),
         ).cast("int").alias("__rest"),
-    ).drop("__qc8", "__c8", "have1")
+    ).drop("__qc8", "__c8")
     # pre-snap cap check (ADVICE fix: compare the ESTIMATE, not the
     # schedule-clamped value) — hopeless queries go straight to brute force
     n_before = F.aggregate(
@@ -387,11 +503,7 @@ def knn_kring(
     # hex-assign + radius-UDF + density-join prep chain runs exactly once
     # (an un-checkpointed hopeless branch was re-running the whole prep
     # over all queries when the final leftover union materialized)
-    if dbg:
-        _t = _time.time()
     qe = qe.localCheckpoint(eager=True)
-    if dbg:
-        print(f"KNN prep {_time.time()-_t:.2f}s", flush=True)
     brute_parts: list[DataFrame] = [
         qe.filter(F.col("__hopeless")).drop("__hopeless")
     ]
@@ -407,10 +519,6 @@ def knn_kring(
         n_active, est_cand = stats["n"], stats["cand"]
         if not n_active:
             break
-        if dbg:
-            print(f"KNN round: active={n_active} est_cand={est_cand}",
-                  flush=True)
-            _t0 = _time.time()
         # covered_m is the DONENESS CLAIM — hexgrid.claim_m, the uv-exact
         # bound on what kring(ring) provably covers (the old measured-R
         # formula 1.5*R*ring - R over-claimed near face edges where the
@@ -436,7 +544,7 @@ def knn_kring(
         # shuffle-partition count (scale-adaptive, not a local constant).
         if est_cand > BROADCAST_CAND_ROWS:
             active = active.repartition(
-                _nparts, "query_id").localCheckpoint(eager=True)
+                n_parts, "query_id").localCheckpoint(eager=True)
         cand = active.select(
             "query_id", "qlat", "qlon",
             covered.alias("covered_m"),
@@ -461,19 +569,11 @@ def knn_kring(
             # memory is bounded: the points partition is AQE-sized, and
             # the candidate side is the larger stream.
             src_p = p.hint("SHUFFLE_HASH")
-        joined = src_p.join(cand, "pcell").withColumn(
-            "dist",
-            _dist_col(metric, F.col("qlat"), F.col("qlon"),
-                      F.col("plat"), F.col("plon")),
-        )
-        w = Window.partitionBy("query_id").orderBy(F.asc("dist"),
-                                                   F.asc("point_id"))
         # materialize this round's top-k ONCE (n_active*k rows,
         # distributed); the stats agg, the kept-results semi-join and the
         # next active set all read the checkpoint
         topk = (
-            joined.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            _rank_top_k(src_p.join(cand, "pcell"), k, metric)
             .select("query_id", "rank", "point_id", "dist", "covered_m")
             .localCheckpoint(eager=True)
         )
@@ -511,8 +611,6 @@ def knn_kring(
         active = nxt.filter(F.col("ring") <= max_ring)
         if n_active > 5000:
             active = active.localCheckpoint(eager=True)
-        if dbg:
-            print(f"KNN round took {_time.time()-_t0:.2f}s", flush=True)
     # long-tail fallback: hopeless + ring-overflow + round-budget leftovers
     # in one single-pass brute force (they are few by construction; the
     # union is a lazy chain over checkpointed parents — cheap to evaluate
@@ -520,15 +618,7 @@ def knn_kring(
     leftover = reduce(DataFrame.unionByName, brute_parts + [active]).select(
         "query_id", F.col("qlat").alias("lat"), F.col("qlon").alias("lon")
     )
-    if dbg:
-        _t = _time.time()
-    has_leftover = leftover.limit(1).count()
-    if dbg:
-        print(f"KNN leftover check {_time.time()-_t:.2f}s", flush=True)
-    if has_leftover:
-        if dbg:
-            print(f"KNN fallback brute queries: {leftover.count()}",
-                  flush=True)
+    if leftover.limit(1).count():
         result_dfs.append(
             knn_bruteforce(points, leftover, k, metric=metric,
                            point_id=point_id)
@@ -562,8 +652,8 @@ def idw_interpolate(
     interpolation of `value_col` at each query point (Shepard 1968) —
     the k nearest points vote with weight 1/dist^power.
 
-    Composition, not a new kernel: neighbors come from `knn_auto` (the
-    cost-dispatched brute/k-ring path with all its guarantees), values
+    Composition, not a new kernel: neighbors come from `knn_kring` (the
+    cost-dispatched bucket/k-ring path with all its guarantees), values
     join back on the point id, and the estimate is ONE groupBy(query_id)
     of two sums.  A neighbor within `exact_hit_eps` wins outright (its
     value is returned exactly — the IDW weight would be infinite).
@@ -573,8 +663,8 @@ def idw_interpolate(
         raise ValueError(f"k must be >= 1, got {k}")
     if power <= 0:
         raise ValueError(f"power must be positive, got {power}")
-    nn = knn_auto(points, queries, k, metric=metric, point_id=point_id,
-                  **knn_kwargs)
+    nn = knn_kring(points, queries, k, metric=metric, point_id=point_id,
+                   **knn_kwargs)
     vals = points.select(F.col(point_id).alias("point_id"),
                          F.col(value_col).cast("double").alias("__v"))
     j = nn.join(vals, "point_id")

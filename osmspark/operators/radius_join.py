@@ -322,7 +322,7 @@ def within_distance_auto(
     n_queries: int | None = None,
     **kwargs,
 ) -> DataFrame:
-    """Cost-based dispatch, the knn_auto shape: below `brute_cost_cap`
+    """Cost-based dispatch, the knn_kring shape: below `brute_cost_cap`
     candidate pairs (n_points * n_queries) AND `brute_query_cap` queries
     (the brute path BROADCASTS the query side — a tiny point set with a
     huge query set must not pick a multi-GB broadcast) the one-stage

@@ -319,7 +319,7 @@ def ivf_topk_auto(
     gemm_pair_threshold: float = 2e6,
     **kwargs,
 ) -> DataFrame:
-    """Cost-based IVF dispatch (the knn_auto pattern): estimate the
+    """Cost-based IVF dispatch (the knn_kring pattern): estimate the
     candidate-pair volume as n_queries * nprobe * (n_vectors /
     n_centroids); below the threshold the pair-join with the native dot
     wins (no cogroup shuffle, small fixed cost), above it the per-bucket

@@ -1,11 +1,17 @@
 """B5 kNN (k-ring == brute force), B6 tiles (pandas path == native path),
 B7 salting (salted == unsalted)."""
 
+import math
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from osmspark.operators import knn, salt, tiles
+
+# both sides of knn_kring's cost cap: 0 forces the k-ring loop, inf the
+# bucket path, so every kNN case below checks both
+CAPS = (0, math.inf)
 
 
 @pytest.fixture(scope="module")
@@ -19,23 +25,25 @@ def test_knn_kring_equals_bruteforce(nodes, queries):
     pts = nodes.select("id", "lat", "lon")
     bf = {(r["query_id"], r["rank"]): (r["point_id"], round(r["dist"], 6))
           for r in knn.knn_bruteforce(pts, queries, k=10).collect()}
-    kr = {(r["query_id"], r["rank"]): (r["point_id"], round(r["dist"], 6))
-          for r in knn.knn_kring(pts, queries, k=10, res=8).collect()}
-    assert kr == bf
+    for cap in CAPS:
+        kr = {(r["query_id"], r["rank"]): (r["point_id"], round(r["dist"], 6))
+              for r in knn.knn_kring(pts, queries, k=10, res=8,
+                                     brute_cost_cap=cap).collect()}
+        assert kr == bf, cap
     assert len(bf) == 50
 
 
 def test_knn_auto_dispatch(nodes, queries):
-    """knn_auto must return identical results on BOTH sides of its cost
-    threshold (brute below, k-ring above) — the dispatch is a pure
+    """knn_kring must return identical results on BOTH sides of its cost
+    threshold (bucket path below, k-ring above) — the dispatch is a pure
     physical-path choice, never a semantic one."""
     pts = nodes.select("id", "lat", "lon")
     lo = {(r["query_id"], r["rank"]): r["point_id"]
-          for r in knn.knn_auto(pts, queries, k=10,
-                                brute_cost_cap=1e12).collect()}
+          for r in knn.knn_kring(pts, queries, k=10,
+                                 brute_cost_cap=1e12).collect()}
     hi = {(r["query_id"], r["rank"]): r["point_id"]
-          for r in knn.knn_auto(pts, queries, k=10, brute_cost_cap=0,
-                                res=8).collect()}
+          for r in knn.knn_kring(pts, queries, k=10, brute_cost_cap=0,
+                                 res=8).collect()}
     assert lo == hi and len(lo) == 50
 
 
@@ -47,9 +55,11 @@ def test_knn_kring_sparse_region(spark, nodes, queries):
     pts = nodes.select("id", "lat", "lon")
     bf = {(r["query_id"], r["rank"]): r["point_id"]
           for r in knn.knn_bruteforce(pts, far, k=5).collect()}
-    kr = {(r["query_id"], r["rank"]): r["point_id"]
-          for r in knn.knn_kring(pts, far, k=5, res=8).collect()}
-    assert kr == bf
+    for cap in CAPS:
+        kr = {(r["query_id"], r["rank"]): r["point_id"]
+              for r in knn.knn_kring(pts, far, k=5, res=8,
+                                     brute_cost_cap=cap).collect()}
+        assert kr == bf, cap
 
 
 def test_knn_fewer_points_than_k(spark):
@@ -59,8 +69,29 @@ def test_knn_fewer_points_than_k(spark):
     )
     q = spark.createDataFrame([("q", 1.29, 103.85)],
                               "query_id string, lat double, lon double")
-    got = knn.knn_kring(pts, q, k=5, res=8).collect()
-    assert {r["point_id"] for r in got} == {"a", "b"}
+    for cap in CAPS:
+        got = knn.knn_kring(pts, q, k=5, res=8, brute_cost_cap=cap).collect()
+        assert {r["point_id"] for r in got} == {"a", "b"}, cap
+
+
+def test_knn_dispatch_skips_points_count_over_cap(monkeypatch, nodes,
+                                                  queries):
+    """When n_queries alone exceeds the cap, no points count can bring the
+    pair count under it: the dispatch goes to the ring loop without
+    counting the points."""
+    pts = nodes.select("id", "lat", "lon")
+    counted = []
+    count = type(pts).count
+    monkeypatch.setattr(type(pts), "count",
+                        lambda df: counted.append(df) or count(df))
+    bf = {(r["query_id"], r["rank"]): r["point_id"]
+          for r in knn.knn_bruteforce(pts, queries, k=10).collect()}
+    kr = {(r["query_id"], r["rank"]): r["point_id"]
+          for r in knn.knn_kring(pts, queries, k=10, res=8,
+                                 brute_cost_cap=4).collect()}
+    assert kr == bf
+    assert any(df is queries for df in counted)
+    assert not any(df is pts for df in counted)
 
 
 def test_tile_assignment_bounds(nodes):
@@ -137,10 +168,13 @@ def test_knn_preindexed_points(nodes, queries):
     bf = {(r["query_id"], r["rank"]): r["point_id"]
           for r in knn.knn_bruteforce(
               nodes.select("id", "lat", "lon"), queries, k=10).collect()}
-    pre = {(r["query_id"], r["rank"]): r["point_id"]
-           for r in knn.knn_kring(pts, queries, k=10, res=9,
-                                  points_cell_col="cell_r9").collect()}
-    assert pre == bf and len(bf) == 50
+    for cap in CAPS:
+        pre = {(r["query_id"], r["rank"]): r["point_id"]
+               for r in knn.knn_kring(pts, queries, k=10, res=9,
+                                      points_cell_col="cell_r9",
+                                      brute_cost_cap=cap).collect()}
+        assert pre == bf, cap
+    assert len(bf) == 50
 
 
 def test_knn_preindexed_wrong_res_raises(nodes, queries):

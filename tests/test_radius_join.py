@@ -191,7 +191,7 @@ def test_auto_dispatch_count_hints_run_no_jobs(spark):
     """n_points/n_queries hints must keep the dispatchers from executing
     derived inputs before the real job (round-5 VERDICT item 6): a
     poisoned upstream raises iff the dispatcher counts it."""
-    from osmspark.operators.knn import knn_auto
+    from osmspark.operators.knn import knn_kring
 
     def poisoned(df):
         schema = df.schema
@@ -212,17 +212,17 @@ def test_auto_dispatch_count_hints_run_no_jobs(spark):
     with pytest.raises(Exception, match="upstream executed"):
         rj.within_distance_auto(ppts, pqs, 1000.0)
     with pytest.raises(Exception, match="upstream executed"):
-        knn_auto(ppts, pqs, k=1)
+        knn_kring(ppts, pqs, k=1)
     # with hints: dispatch is pure plan building — no job runs (the
     # poisoned plans would raise on ANY action)
     rj.within_distance_auto(ppts, pqs, 1000.0, n_points=1, n_queries=1)
-    knn_auto(ppts, pqs, k=1, n_points=1, n_queries=1)
+    knn_kring(ppts, pqs, k=1, n_points=1, n_queries=1)
     # hinted dispatch still returns correct results on real inputs,
     # brute (tiny hints) and cell (huge hints) path alike
     for npts, nq in ((1, 1), (10**9, 10**6)):
         rows = rj.within_distance_auto(
             pts, qs, 1000.0, n_points=npts, n_queries=nq).collect()
         assert [(r["query_id"], r["point_id"]) for r in rows] == [("q0", "p0")]
-    krows = knn_auto(pts, qs, k=1, n_points=1, n_queries=1).collect()
+    krows = knn_kring(pts, qs, k=1, n_points=1, n_queries=1).collect()
     assert [(r["query_id"], r["point_id"])
             for r in krows] == [("q0", "p0")]

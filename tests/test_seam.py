@@ -8,6 +8,8 @@ straddle a face seam (lon=45, faces 0/1) and a cube corner
 (lat=35.2644, lon=45 — faces 0/1/2 meet).
 """
 
+import math
+
 import numpy as np
 import pytest
 
@@ -163,11 +165,14 @@ def test_knn_seam_equals_brute(seam_frames, which):
     from osmspark.operators import knn
 
     pts, qs = seam_frames[which]
-    got = {(r["query_id"], r["rank"], r["point_id"])
-           for r in knn.knn_kring(pts, qs, 5).collect()}
     want = {(r["query_id"], r["rank"], r["point_id"])
             for r in knn.knn_bruteforce(pts, qs, 5).collect()}
-    assert got == want
+    # both sides of the cost cap: the k-ring loop (0) and the bucket path
+    for cap in (0, math.inf):
+        got = {(r["query_id"], r["rank"], r["point_id"])
+               for r in knn.knn_kring(pts, qs, 5,
+                                      brute_cost_cap=cap).collect()}
+        assert got == want, cap
 
 
 def test_radius_join_radius_cap_raises(seam_frames):
