@@ -116,7 +116,7 @@ def main() -> None:
     with_hex_cell(warm_nodes.select("lat", "lon"), 9).count()
     qs_warm = warm_nodes.limit(50).select(
         F.col("id").alias("query_id"), "lat", "lon")
-    # both kNN paths: 50 queries run the bucket path, brute_cost_cap=0
+    # both kNN paths: 50 queries run the map-side path, brute_cost_cap=0
     # the ring loop that the larger batches below take
     for cap in (BRUTE_COST_CAP, 0):
         knn_kring(warm_nodes, qs_warm, k=10, res=8, brute_cost_cap=cap,

@@ -107,7 +107,7 @@ def main() -> None:
             layout_nodes.limit(200).select(
                 F.col("id").alias("query_id"), "lat", "lon"),
             k=5, res=layout_res, points_cell_col="cell",
-            # a 200-query batch is under the bucket path's cap; keep it on
+            # a 200-query batch is under the map-side path's cap; keep it on
             # the ring loop that reads the layout's cell column
             brute_cost_cap=0, n_queries=200,
         ),

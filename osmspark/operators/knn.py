@@ -1,34 +1,34 @@
-"""B5 — exact kNN: one bucket-local top-k pass for small batches, hex
-k-ring expansion for large ones (SURVEY §2.2).
+"""B5 — exact kNN: one map-side top-k pass for small batches, hex k-ring
+expansion for large ones (SURVEY §2.2).
 
 `knn_kring` picks the path from the candidate-pair count
-n_queries * n_points against `BRUTE_COST_CAP` (4e8):
+n_queries * n_points against `BRUTE_COST_CAP` (1e9):
 
-  * at or below the cap, the BUCKET path answers the batch in one lazy
-    pass with no search rounds (Distributed Stream KNN Join, SIGMOD 2021:
-    exact local top-k per data partition, merged once).  Points hash
-    into B buckets (B = max(defaultParallelism, n_points / 1M)), the
-    queries are copied into every bucket, and ONE cogrouped
-    applyInPandas (both sides grouped by bucket) finds each query's
-    local top-k per bucket with block numpy
-    (unit-sphere dot products through BLAS for haversine, squared
-    degrees for sq_deg).  Every candidate within a float-error margin of
-    the local k-th is kept, so the kept set provably contains the global
-    top-k; Spark then computes `dist` with the same expression
-    `knn_bruteforce` uses and ranks by (dist, point_id), so the output
-    is bit-identical to the oracle.  Measured on the 144k-node neighbors
-    benchmark snapshot (4 vCPUs): 2.8-3.8 s and 7-8 Spark jobs per
-    500-query batch against 13.9-18.3 s and 66 jobs for the ring loop,
-    which pays a fixed assign + prep phase, one job per round and a
-    straggler brute pass.  The bucket path's cost grows with the pair
-    count (~1e-8 s per pair on 4 vCPUs), the ring loop's mostly with
-    n_points.  Measured crossover (same box, warm calls, min of 2): on
-    2.4M points (bench.py's sf0.1 nodes) between 3.8e8 pairs (bucket
-    7.4 s, ring 9.5 s) and 7.7e8 (11.0 s vs 9.5 s); on 144k points near
-    2.3e9 (24.7 s both).  The cap sits below the lower crossover.
+  * at or below the cap (and with at most MAP_QUERIES queries), the
+    MAP-SIDE path answers the batch in one pass with no search rounds
+    (Distributed Stream KNN Join, SIGMOD 2021: ship the small query side
+    to the data partitions, merge the local top-k once).  The dispatch
+    fetches the query batch to the driver; the arrays ride in the
+    closure of ONE mapInArrow over the points' own partitions, so the
+    points are never shuffled.  Each Arrow batch keeps every query's
+    local top-k with block numpy (unit-sphere dot products through BLAS
+    for haversine, squared degrees for sq_deg) and a running threshold
+    carried across the partition's batches.  Every candidate within a
+    float-error margin of the local k-th is kept, so the kept set
+    provably contains the global top-k; Spark then computes `dist` with
+    the same expression `knn_bruteforce` uses and ranks by (dist,
+    point_id), so the output is bit-identical to the oracle.  Measured
+    on the 144k-node neighbors benchmark snapshot (4 vCPUs): ~0.55 s, 5
+    Spark jobs and 0.4 MB of shuffle per 500-query batch.  Its cost
+    grows with the pair count, the ring loop's mostly with n_points.
+    Measured crossover against the ring loop (same box, warm calls, min
+    of 2, hash-sampled queries; map-side s / ring s): on 2.4M points
+    (bench.py's sf0.1 nodes) 3.8e8 pairs 1.5/2.6, 7.7e8 1.9/2.5, 1.5e9
+    2.7/2.6, so near 1.3e9; on 144k points the map-side path still wins
+    at 2.3e9 (2.9/8.1).  The cap sits below the lower crossover.
   * above the cap, the k-ring loop below runs: its per-query marginal
-    cost (~0.3 ms at 100k queries) beats copying a large query batch
-    into every bucket.
+    cost (~0.3 ms at 100k queries) beats scanning every point for every
+    query.
 
 Ring path.  Queries are a DataFrame end to end: candidate cells are
 generated by an Arrow pandas UDF ON the queries DataFrame, active/done
@@ -69,7 +69,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
@@ -83,11 +83,12 @@ BRUTE_RING_CAP = 32
 # broadcast the candidate (query x ring-cell) side while its estimated row
 # count stays under this; beyond it, let the shuffle join handle it
 BROADCAST_CAND_ROWS = 4_000_000
-# n_queries * n_points at or below this runs the bucket path, above it the
-# k-ring loop (below the measured crossover, ~6e8 pairs on 2.4M points)
-BRUTE_COST_CAP = 4e8
-# the bucket count keeps each applyInPandas group near this many points
-BUCKET_POINTS = 1_000_000
+# n_queries * n_points at or below this runs the map-side path, above it
+# the k-ring loop (below the measured crossover, see the module docstring)
+BRUTE_COST_CAP = 1e9
+# the map-side path ships at most this many queries in its UDF closure
+# (~3 MB pickled); a larger batch runs the k-ring loop
+MAP_QUERIES = 100_000
 # float64 elements of one (query chunk x point chunk) score block (32 MB)
 _BLOCK = 1 << 22
 # (absolute, relative) widening of each query's local k-th score.  Scores
@@ -148,7 +149,8 @@ def knn_bruteforce(
         "query_id", "rank", "point_id", "dist")
 
 
-def _bucket_candidates(qlat, qlon, plat, plon, k: int, metric: str):
+def _bucket_candidates(qlat, qlon, plat, plon, k: int, metric: str,
+                       thr=None):
     """(query index, point index) arrays: for each query, every point whose
     score is within `_TIE_MARGIN` of the query's k-th best score (all
     points when there are at most k).
@@ -156,8 +158,19 @@ def _bucket_candidates(qlat, qlon, plat, plon, k: int, metric: str):
     Works in blocks of queries x points.  The k-th best of any block is an
     upper bound on the k-th best overall, so a running minimum of block
     k-ths is a safe threshold: a block keeps at most ~k points per query
-    plus ties, and every point of the exact top-k is kept."""
+    plus ties, and every point of the exact top-k is kept.  `thr` (one
+    float64 per query) carries that running minimum across calls on
+    successive point batches of the same queries; it is tightened in
+    place.
+
+    A block's k-th is found without partitioning the whole block: the
+    k-th over every stride-th column (>= k columns) bounds it from above,
+    so the points under that bound (widened) include every point at or
+    below the block's k-th, and the exact k-th is the k-th smallest of
+    those few survivors."""
     nq, npt = len(qlat), len(plat)
+    if thr is None:
+        thr = np.full(nq, np.inf)
     if not nq or not npt:
         return np.empty(0, np.int64), np.empty(0, np.int64)
     if metric == "haversine":
@@ -174,81 +187,90 @@ def _bucket_candidates(qlat, qlon, plat, plon, k: int, metric: str):
             return ((qlat[qs, None] - plat[ps]) ** 2
                     + (qlon[qs, None] - plon[ps]) ** 2)
     abs_m, rel_m = _TIE_MARGIN[metric]
+
+    def widen(t):
+        return t + abs_m + rel_m * np.abs(t)
+
     pc = min(npt, _BLOCK)
     qc = max(1, _BLOCK // pc)
     out_q, out_p = [], []
     for q0 in range(0, nq, qc):
         qs = slice(q0, min(nq, q0 + qc))
-        thr = np.full(qs.stop - q0, np.inf)
+        t = thr[qs]
         for p0 in range(0, npt, pc):
             s = score(qs, slice(p0, min(npt, p0 + pc)))
             if s.shape[1] > k:
-                thr = np.minimum(thr, np.partition(s, k - 1, axis=1)[:, k - 1])
-            i, j = np.nonzero(s <= (thr + abs_m + rel_m * np.abs(thr))[:, None])
+                stride = max(1, math.isqrt(s.shape[1] // k))
+                sub = np.partition(s[:, ::stride], k - 1, axis=1)[:, k - 1]
+                i, j = np.nonzero(s <= widen(np.minimum(t, sub))[:, None])
+                v = s[i, j]
+                # survivors are a sorted-order prefix of each row: when a
+                # row has >= k of them, its k-th is the block's k-th
+                n_row = np.bincount(i, minlength=len(t))
+                full = n_row >= k
+                kth = np.full(len(t), np.inf)
+                kth[full] = v[np.lexsort((v, i))][
+                    (np.cumsum(n_row) - n_row)[full] + k - 1]
+                t = np.minimum(t, kth)
+                keep = v <= widen(t)[i]
+                i, j = i[keep], j[keep]
+            else:
+                i, j = np.nonzero(s <= widen(t)[:, None])
             out_q.append(i + q0)
             out_p.append(j + p0)
+        thr[qs] = t
     return np.concatenate(out_q), np.concatenate(out_p)
 
 
-def _knn_buckets(
+def _knn_map_side(
     points: DataFrame,
-    queries: DataFrame,
+    qt: pa.Table,
+    qid_type,
     k: int,
     metric: str,
     point_id: str,
-    n_points: int,
 ) -> DataFrame:
-    """The no-rounds exact path: local top-k candidates per point bucket
-    in one grouped applyInPandas, then the oracle's dist + rank."""
-    n_b = max(points.sparkSession.sparkContext.defaultParallelism,
-              -(-n_points // BUCKET_POINTS))
-    pid_t = points.select(point_id).schema[0].dataType
-    qid_t = queries.select("query_id").schema[0].dataType
+    """The no-rounds exact path: the fetched query batch `qt` (query_id,
+    lat, lon) rides in the closure of ONE mapInArrow over the points'
+    own partitions; each partition keeps every query's local top-k
+    candidates, then the oracle's dist + rank merges them."""
     p = points.select(
-        F.pmod(F.xxhash64(point_id), F.lit(n_b)).cast("int").alias("__b"),
         F.col(point_id).alias("point_id"),
         F.col("lat").cast("double").alias("lat"),
         F.col("lon").cast("double").alias("lon"),
     )
-    q = queries.select(
-        F.explode(F.sequence(F.lit(0), F.lit(n_b - 1))).alias("__b"),
-        "query_id",
-        F.col("lat").cast("double").alias("lat"),
-        F.col("lon").cast("double").alias("lon"),
-    )
+    n_par = points.sparkSession.sparkContext.defaultParallelism
+    if p.rdd.getNumPartitions() < n_par:
+        p = p.repartition(n_par)
+    qid = qt.column(0).combine_chunks()
+    qlat = qt.column(1).to_numpy()
+    qlon = qt.column(2).to_numpy()
     out_schema = StructType([
-        StructField("query_id", qid_t),
+        StructField("query_id", qid_type),
         StructField("qlat", DoubleType()),
         StructField("qlon", DoubleType()),
-        StructField("point_id", pid_t),
+        StructField("point_id", p.schema[0].dataType),
         StructField("plat", DoubleType()),
         StructField("plon", DoubleType()),
     ])
 
-    def local_top_k(prows: pd.DataFrame, qrows: pd.DataFrame) -> pd.DataFrame:
-        plat = prows["lat"].to_numpy(dtype=np.float64)
-        plon = prows["lon"].to_numpy(dtype=np.float64)
-        # null coordinates never rank (the ring path drops them too)
-        ok = np.isfinite(plat) & np.isfinite(plon)
-        pid, plat, plon = prows["point_id"].to_numpy()[ok], plat[ok], plon[ok]
-        qlat = qrows["lat"].to_numpy(dtype=np.float64)
-        qlon = qrows["lon"].to_numpy(dtype=np.float64)
-        i, j = _bucket_candidates(qlat, qlon, plat, plon, k, metric)
-        return pd.DataFrame({
-            "query_id": qrows["query_id"].to_numpy()[i],
-            "qlat": qlat[i],
-            "qlon": qlon[i],
-            "point_id": pid[j],
-            "plat": plat[j],
-            "plon": plon[j],
-        })
+    def local_top_k(batches):
+        thr = np.full(len(qlat), np.inf)
+        for b in batches:
+            plat = b.column(1).to_numpy(zero_copy_only=False)
+            plon = b.column(2).to_numpy(zero_copy_only=False)
+            # null coordinates never rank (the ring path drops them too)
+            ok = np.flatnonzero(np.isfinite(plat) & np.isfinite(plon))
+            plat, plon = plat[ok], plon[ok]
+            i, j = _bucket_candidates(qlat, qlon, plat, plon, k, metric, thr)
+            if len(i):
+                yield pa.RecordBatch.from_arrays(
+                    [qid.take(i), pa.array(qlat[i]), pa.array(qlon[i]),
+                     b.column(0).take(ok[j]), pa.array(plat[j]),
+                     pa.array(plon[j])],
+                    names=out_schema.names)
 
-    # cogroup, not a union of the two sides: padding a union's columns
-    # with nulls would hand integer ids to pandas as float64
-    cand = (
-        p.groupBy("__b").cogroup(q.groupBy("__b"))
-        .applyInPandas(local_top_k, out_schema)
-    )
+    cand = p.mapInArrow(local_top_k, out_schema)
     return _rank_top_k(cand, k, metric).select(
         "query_id", "rank", "point_id", "dist")
 
@@ -337,13 +359,16 @@ def knn_kring(
     (query_id, lat, lon) — no size cap.
 
     Path choice: n_queries * n_points <= `brute_cost_cap` runs the
-    one-pass bucket path (see the module docstring), above it the k-ring
-    loop.  Without hints the counts are one count-star each (the points
-    count is skipped when n_queries alone exceeds the cap) —
-    metadata-cheap for parquet scans but a full upstream execution for
-    derived inputs, so pass `n_points`/`n_queries` there (estimates are
-    fine; only the path choice depends on them) and the dispatch runs
-    ZERO jobs before the real one.
+    one-pass map-side path (see the module docstring), above it the k-ring
+    loop.  The dispatch fetches at most min(MAP_QUERIES, brute_cost_cap)
+    + 1 query rows (the map-side path needs them anyway, so a derived
+    query frame still executes once per call); a fuller fetch goes to
+    the ring loop.  Otherwise the points are counted — metadata-cheap
+    for parquet scans but a full upstream execution for derived inputs,
+    so pass `n_points` there (an estimate is fine; only the path choice
+    depends on it).  An `n_queries` hint above that bound skips the
+    fetch, and `brute_cost_cap=0` runs the ring loop with no dispatch
+    job at all.
 
     points_cell_col: name of a PRE-COMPUTED hex cell column on `points`
     assigned at exactly `res` (the storage-layout path: the cell is part
@@ -363,12 +388,21 @@ def knn_kring(
 
     if points_cell_col is not None:
         _check_cell_res(points, points_cell_col, res)
-    n_q = n_queries if n_queries is not None else queries.count()
-    # more queries than the cap allows pairs: ring path, no points count
-    if n_q <= brute_cost_cap:
-        n_p = n_points if n_points is not None else points.count()
-        if n_q * n_p <= brute_cost_cap:
-            return _knn_buckets(points, queries, k, metric, point_id, n_p)
+    # fetch the query batch (it rides to the points' partitions) unless it
+    # cannot fit under MAP_QUERIES or the cap
+    q_max = int(min(MAP_QUERIES, brute_cost_cap))
+    if q_max >= 1 and (n_queries is None or n_queries <= q_max):
+        qf = queries.select(
+            "query_id",
+            F.col("lat").cast("double").alias("lat"),
+            F.col("lon").cast("double").alias("lon"),
+        )
+        qt = qf.limit(q_max + 1).toArrow()
+        if qt.num_rows <= q_max:
+            n_p = n_points if n_points is not None else points.count()
+            if qt.num_rows * n_p <= brute_cost_cap:
+                return _knn_map_side(points, qt, qf.schema[0].dataType, k,
+                                     metric, point_id)
 
     spark = points.sparkSession
 
@@ -389,7 +423,6 @@ def knn_kring(
     # count scaled by 7^-steps (a broadcast map join) — estimator-only: a
     # worse estimate costs a doubling round, never correctness.
     target_occ = max(32, 2 * k)
-    to_unpersist: list[DataFrame] = []
     if points_cell_col is not None:
         p = points.select(
             F.col(point_id).alias("point_id"),
@@ -404,34 +437,34 @@ def knn_kring(
         # cheaper.  At res <= 8 the pinned cells are already coarse —
         # group them as-is.
         if res <= 8:
-            base_res, steps = res, 0
+            base_res = res
             cnt_base = p.groupBy(F.col("pcell").alias("pcell")).agg(
                 F.count("*").alias("cnt"))
         else:
-            base_res, steps = 8, res - 8
+            base_res = 8
             cnt_base = (
                 hexgrid.with_hex_cell(p, base_res, lat="plat", lon="plon",
                                       out_col="__pc8")
                 .groupBy(F.col("__pc8").alias("pcell"))
                 .agg(F.count("*").alias("cnt"))
             )
-        to_unpersist += [p]
     else:
         base_res = res
-        cnt_base = (
-            _pts(base_res).groupBy("pcell")
-            .agg(F.count("*").alias("cnt")).persist()
-        )
-        max_occ = cnt_base.agg(F.max("cnt")).collect()[0][0] or 0
-        steps = 0
-        if max_occ > 4 * target_occ:
-            steps = max(0, min(
+        cnt_base = _pts(base_res).groupBy("pcell").agg(
+            F.count("*").alias("cnt"))
+    cnt_base = cnt_base.persist()
+    # one job: the max drives the refine, the row count guards the
+    # broadcast of the count table below
+    max_occ, n_cells = cnt_base.agg(F.max("cnt"), F.count("*")).collect()[0]
+    if points_cell_col is None:
+        if (max_occ or 0) > 4 * target_occ:
+            res = base_res + max(0, min(
                 int(math.ceil(math.log(max_occ / target_occ, 7))),
                 15 - base_res,
             ))
-        res = base_res + steps
         p = _pts(res).persist()
-        to_unpersist += [p, cnt_base]
+    steps = res - base_res
+    to_unpersist = [p, cnt_base]
 
     # query prep: cell and density-estimated start ring — staged
     # selects, all distributed, pure codegen
@@ -454,9 +487,12 @@ def knn_kring(
     sched = F.array(*[F.lit(s) for s in ring_schedule])
     # ring-1 density estimate (both paths): the query's BASE-res cell
     # count scaled to 7 final-res cells (broadcast map join — no explode,
-    # no shuffle); a missing base cell means locally empty territory
-    c8 = F.broadcast(cnt_base.select(
-        F.col("pcell").alias("__qc8"), F.col("cnt").alias("__c8")))
+    # no shuffle, while the table stays under BROADCAST_CAND_ROWS rows); a
+    # missing base cell means locally empty territory
+    c8 = cnt_base.select(
+        F.col("pcell").alias("__qc8"), F.col("cnt").alias("__c8"))
+    if n_cells <= BROADCAST_CAND_ROWS:
+        c8 = F.broadcast(c8)
     if base_res == res:
         q8 = q0.withColumn("__qc8", F.col("qcell"))
     else:
@@ -653,7 +689,7 @@ def idw_interpolate(
     the k nearest points vote with weight 1/dist^power.
 
     Composition, not a new kernel: neighbors come from `knn_kring` (the
-    cost-dispatched bucket/k-ring path with all its guarantees), values
+    cost-dispatched map-side/k-ring path with all its guarantees), values
     join back on the point id, and the estimate is ONE groupBy(query_id)
     of two sums.  A neighbor within `exact_hit_eps` wins outright (its
     value is returned exactly — the IDW weight would be infinite).

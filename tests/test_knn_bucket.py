@@ -1,6 +1,7 @@
-"""knn_kring's bucket path (n_queries * n_points <= brute_cost_cap) against
+"""knn_kring's map-side path (n_queries * n_points <= brute_cost_cap) against
 the knn_bruteforce oracle: query ids, ranks, point ids and dists compared
-exactly, on the cases where a bucket-local float selection could go wrong."""
+exactly, on the cases where a partition-local float selection could go
+wrong, plus the dispatch edges around it."""
 
 import math
 
@@ -81,8 +82,8 @@ def test_bucket_k_exceeds_points_and_empty_sides(spark):
 
 
 def test_bucket_empty_buckets(spark):
-    """Two points over at least defaultParallelism buckets: most buckets
-    hold queries and no points."""
+    """Two points over defaultParallelism partitions: most partitions
+    hold no points."""
     assert spark.sparkContext.defaultParallelism > 2
     pts = spark.createDataFrame([("a", 1.29, 103.85), ("b", 1.35, 103.69)],
                                 PTS)
@@ -126,3 +127,154 @@ def test_bucket_candidates_blocks_keep_exact_top_k(monkeypatch, metric):
         top = np.lexsort((np.arange(n), d))[:k]
         assert set(top.tolist()) <= kept, q
         assert len(kept) <= k * math.ceil(n / 64) + n_dup, q
+
+
+def _calls(monkeypatch, df, method):
+    """Record every DataFrame on which `method` is called."""
+    seen = []
+    orig = getattr(type(df), method)
+    monkeypatch.setattr(type(df), method,
+                        lambda d, *a, **kw: seen.append(d) or orig(d, *a, **kw))
+    return seen
+
+
+def _grid_points(spark, n, schema=PTS, ids=None):
+    ids = ids or [f"p{i:03d}" for i in range(n)]
+    return spark.createDataFrame(
+        [(ids[i], 1.28 + 0.004 * (i % 7), 103.80 + 0.003 * (i // 7))
+         for i in range(n)], schema)
+
+
+def _grid_queries(spark, n, schema=QS, ids=None):
+    ids = ids or [f"q{i}" for i in range(n)]
+    return spark.createDataFrame(
+        [(ids[i], 1.281 + 0.0031 * i, 103.801 + 0.0027 * i)
+         for i in range(n)], schema)
+
+
+@pytest.mark.parametrize("metric", ["haversine", "sq_deg"])
+def test_map_side_single_partition_points(spark, metric):
+    pts = _grid_points(spark, 60).coalesce(1)
+    assert pts.rdd.getNumPartitions() == 1
+    assert len(_assert_equals_oracle(pts, _grid_queries(spark, 6), 4,
+                                     metric)) == 24
+
+
+def test_map_side_more_partitions_than_rows(spark):
+    pts = _grid_points(spark, 5).repartition(23)
+    assert pts.rdd.getNumPartitions() == 23
+    for k in (1, 3, 7):
+        assert len(_assert_equals_oracle(pts, _grid_queries(spark, 4),
+                                         k)) == 4 * min(k, 5)
+
+
+def test_map_side_long_ids(spark):
+    """2^62-sized ids on both sides come back exact, not through float64."""
+    big = 2 ** 62
+    pts = _grid_points(spark, 40, "id long, lat double, lon double",
+                       [big + 3 * i for i in range(40)])
+    qs = _grid_queries(spark, 5, "query_id long, lat double, lon double",
+                       [big + i for i in range(5)])
+    want = _assert_equals_oracle(pts, qs, 6)
+    assert {r[0] for r in want} == {big + i for i in range(5)}
+    assert all(r[2] >= big for r in want)
+
+
+def test_map_side_batch_over_map_queries_runs_ring(monkeypatch, spark):
+    """A batch with more than MAP_QUERIES rows takes the ring loop without
+    counting the points, and is still exact."""
+    monkeypatch.setattr(knn, "MAP_QUERIES", 3)
+    pts = _grid_points(spark, 50)
+    counted = _calls(monkeypatch, pts, "count")
+    assert len(_assert_equals_oracle(pts, _grid_queries(spark, 5), 4)) == 20
+    assert not any(df is pts for df in counted)
+
+
+def test_map_side_cap_zero_runs_ring_without_fetch(monkeypatch, spark):
+    pts = _grid_points(spark, 50)
+    qs = _grid_queries(spark, 5)
+    fetched = _calls(monkeypatch, qs, "toArrow")
+    want = _rows(knn.knn_bruteforce(pts, qs, 4))
+    assert _rows(knn.knn_kring(pts, qs, 4, brute_cost_cap=0)) == want
+    assert fetched == []
+
+
+def _full_partition_candidates(qlat, qlon, plat, plon, k, metric):
+    """The kernel as it was before the strided bound: each block's k-th
+    comes from a partition of the whole block."""
+    from osmspark.functions.geo import latlon_to_xyz
+
+    nq, npt = len(qlat), len(plat)
+    if metric == "haversine":
+        qv = np.stack(latlon_to_xyz(qlat, qlon), axis=1)
+        pv = np.stack(latlon_to_xyz(plat, plon))
+
+        def score(qs, ps):
+            s = qv[qs] @ pv[:, ps]
+            s *= -2.0
+            s += 2.0
+            return s
+    else:
+        def score(qs, ps):
+            return ((qlat[qs, None] - plat[ps]) ** 2
+                    + (qlon[qs, None] - plon[ps]) ** 2)
+    abs_m, rel_m = knn._TIE_MARGIN[metric]
+    pc = min(npt, knn._BLOCK)
+    qc = max(1, knn._BLOCK // pc)
+    out = set()
+    for q0 in range(0, nq, qc):
+        qs = slice(q0, min(nq, q0 + qc))
+        thr = np.full(qs.stop - q0, np.inf)
+        for p0 in range(0, npt, pc):
+            s = score(qs, slice(p0, min(npt, p0 + pc)))
+            if s.shape[1] > k:
+                thr = np.minimum(thr, np.partition(s, k - 1, axis=1)[:, k - 1])
+            i, j = np.nonzero(s <= (thr + abs_m + rel_m * np.abs(thr))[:, None])
+            out |= set(zip((i + q0).tolist(), (j + p0).tolist()))
+    return out
+
+
+@pytest.mark.parametrize("metric", ["haversine", "sq_deg"])
+@pytest.mark.parametrize("block", [64, 1 << 22])
+@pytest.mark.parametrize("tail", [4, 12])
+def test_bucket_candidates_equal_full_partition_kernel(monkeypatch, metric,
+                                                       block, tail):
+    """The strided k-th bound keeps exactly the full-partition kernel's
+    set: coordinates on a binary grid give runs of exact sq_deg ties at
+    the k-th that straddle the stride, duplicates give exact ties in
+    both metrics, 64-element blocks make several blocks per query and a
+    last block of `tail` points (<= k, or stride 1), and a point set
+    streamed in two batches with a carried threshold keeps the same set
+    as one pass."""
+    monkeypatch.setattr(knn, "_BLOCK", block)
+    rng = np.random.default_rng(11)
+    k, n = 5, 3 * 64 + tail
+    plat = 1.25 + rng.integers(0, 12, n) / 64
+    plon = 103.75 + rng.integers(0, 12, n) / 64
+    plat[:30], plon[:30] = plat[30], plon[30]
+    qlat = 1.25 + rng.integers(0, 12, 9) / 64
+    qlon = 103.75 + rng.integers(0, 12, 9) / 64
+    qlat[0], qlon[0] = plat[30], plon[30]
+    # the last block holds query 1's nearest points, so its k-th decides
+    plat[-tail:] = qlat[1] + np.arange(tail) / 256
+    plon[-tail:] = qlon[1]
+    want = _full_partition_candidates(qlat, qlon, plat, plon, k, metric)
+    qi, pj = knn._bucket_candidates(qlat, qlon, plat, plon, k, metric)
+    assert set(zip(qi.tolist(), pj.tolist())) == want
+    # every query has ties at its k-th somewhere in the kept set
+    assert len(want) > len(qlat) * k
+    thr = np.full(len(qlat), np.inf)
+    a = knn._bucket_candidates(qlat, qlon, plat[:128], plon[:128], k, metric,
+                               thr)
+    b = knn._bucket_candidates(qlat, qlon, plat[128:], plon[128:], k, metric,
+                               thr)
+    if block == 64:
+        assert (set(zip(a[0].tolist(), a[1].tolist()))
+                | set(zip(b[0].tolist(), (b[1] + 128).tolist()))) == want
+    for q in range(len(qlat)):
+        if metric == "haversine":
+            d = haversine_np(qlat[q], qlon[q], plat, plon)
+        else:
+            d = (qlat[q] - plat) ** 2 + (qlon[q] - plon) ** 2
+        kept = {j for i, j in want if i == q}
+        assert set(np.lexsort((np.arange(n), d))[:k].tolist()) <= kept

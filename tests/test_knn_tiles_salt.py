@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from osmspark.operators import knn, salt, tiles
 
 # both sides of knn_kring's cost cap: 0 forces the k-ring loop, inf the
-# bucket path, so every kNN case below checks both
+# map-side path, so every kNN case below checks both
 CAPS = (0, math.inf)
 
 
@@ -35,7 +35,7 @@ def test_knn_kring_equals_bruteforce(nodes, queries):
 
 def test_knn_auto_dispatch(nodes, queries):
     """knn_kring must return identical results on BOTH sides of its cost
-    threshold (bucket path below, k-ring above) — the dispatch is a pure
+    threshold (map-side path below, k-ring above) — the dispatch is a pure
     physical-path choice, never a semantic one."""
     pts = nodes.select("id", "lat", "lon")
     lo = {(r["query_id"], r["rank"]): r["point_id"]
@@ -90,8 +90,28 @@ def test_knn_dispatch_skips_points_count_over_cap(monkeypatch, nodes,
           for r in knn.knn_kring(pts, queries, k=10, res=8,
                                  brute_cost_cap=4).collect()}
     assert kr == bf
-    assert any(df is queries for df in counted)
     assert not any(df is pts for df in counted)
+
+
+def test_knn_ring_count_table_join_without_broadcast(monkeypatch, nodes,
+                                                    queries):
+    """Above BROADCAST_CAND_ROWS base-res cells the ring loop joins the
+    density table without a broadcast hint; with the threshold at 0 it
+    takes that join on the self-assigning and the pinned-layout path and
+    still equals brute force."""
+    from osmspark.functions.hexgrid import with_hex_cell
+
+    pts = nodes.select("id", "lat", "lon")
+    bf = {(r["query_id"], r["rank"]): r["point_id"]
+          for r in knn.knn_bruteforce(pts, queries, k=10).collect()}
+    monkeypatch.setattr(knn, "BROADCAST_CAND_ROWS", 0)
+    own = knn.knn_kring(pts, queries, k=10, res=8, brute_cost_cap=0)
+    pinned = knn.knn_kring(
+        with_hex_cell(pts, 9, out_col="cell_r9"), queries, k=10, res=9,
+        points_cell_col="cell_r9", brute_cost_cap=0)
+    for df in (own, pinned):
+        assert {(r["query_id"], r["rank"]): r["point_id"]
+                for r in df.collect()} == bf
 
 
 def test_tile_assignment_bounds(nodes):

@@ -22,8 +22,10 @@ import datetime
 import json
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 N_TRIALS = int(os.environ.get("OSMSPARK_BENCH_TRIALS", "2"))
 
@@ -92,7 +94,7 @@ def main() -> None:
     n = out["variants"]["naive_cross_range_filter"]["best_sec"]
     out["speedup"] = round(n / b, 2)
     print(json.dumps(out))
-    with open("/root/repo/BENCH_INTERVAL_AB.json", "w") as f:
+    with open(ROOT / "BENCH_INTERVAL_AB.json", "w") as f:
         json.dump(out, f, indent=2)
 
 

@@ -15,8 +15,10 @@ from __future__ import annotations
 import json
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 N_TRIALS = int(os.environ.get("OSMSPARK_BENCH_TRIALS", "2"))
 
@@ -86,7 +88,7 @@ def main() -> None:
         "protocol": f"interleaved best-of-{N_TRIALS}, warmed",
     }
     print(json.dumps(out))
-    with open("/root/repo/BENCH_IVF_AB.json", "w") as f:
+    with open(ROOT / "BENCH_IVF_AB.json", "w") as f:
         json.dump(out, f, indent=2)
     spark.stop()
 

@@ -14,9 +14,11 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -428,7 +430,7 @@ def main() -> None:
         "cpus": 32,
         "protocol": "warmed best-of-2, per-run steal% recorded",
     }
-    with open("/root/repo/BENCH_MISC_r05.json", "w") as f:
+    with open(ROOT / "BENCH_MISC_r05.json", "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out))
     spark.stop()

@@ -13,9 +13,11 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -73,7 +75,7 @@ def main() -> None:
         "cpus": 32,
         "protocol": "one-shot (iterative loop), steal% recorded",
     }
-    with open("/root/repo/BENCH_PAGERANK.json", "w") as f:
+    with open(ROOT / "BENCH_PAGERANK.json", "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out), flush=True)
 

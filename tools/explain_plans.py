@@ -15,8 +15,10 @@ from __future__ import annotations
 
 import io
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -761,7 +763,7 @@ def main() -> None:
         "(writes EXPLAINS.md).\n\n"
     )
     out.write("\n".join(sections))
-    with open("/root/repo/EXPLAINS.md", "w") as f:
+    with open(ROOT / "EXPLAINS.md", "w") as f:
         f.write(out.getvalue())
     print("wrote EXPLAINS.md")
     spark.stop()
