@@ -410,15 +410,14 @@ def main() -> None:
     lm_counts.unpersist()
     big_docs.unpersist()
 
-    # adaptive PIP join over a MIXED-SIZE dim (the round-4 continent path):
-    # the km-scale zip/admin grid PLUS an Antarctica-style polar cap and a
-    # 150-deg-wide box containing the whole city — per-polygon cover res
-    # keeps the broadcast cover bounded while the wide box floods the
-    # refine with every point as a candidate (the realistic worst case of
-    # a global polygon over a dense region)
+    # PIP join over a MIXED-SIZE dim (the continent path): the km-scale
+    # zip/admin grid PLUS an Antarctica-style polar cap and a 150-deg-wide
+    # box containing the whole city.  min_res=3 gives each polygon its own
+    # cover res, which keeps the broadcast cover bounded; the wide box
+    # makes every point a candidate, and its certified-interior cells let
+    # the refine keep them without a ray-cast (the realistic worst case
+    # of a global polygon over a dense region)
     import math
-
-    from osmspark.operators.spatial_join import spatial_join_adaptive
 
     cap = [(-65.0 + 4.0 * math.sin(math.radians(2.0 * lo)), float(lo))
            for lo in range(-180, 181, 10)][::-1]
@@ -437,9 +436,8 @@ def main() -> None:
 
     def q_pip_adaptive():
         return (
-            spatial_join_adaptive(nodes.select("id", "lat", "lon"),
-                                  mixed_dim, max_res=8, min_res=3,
-                                  max_cover_cells=8192)
+            spatial_join(nodes.select("id", "lat", "lon"), mixed_dim,
+                         res=8, min_res=3, max_cover_cells=8192)
             .groupBy("poly_id").agg(F.count("*").alias("cnt")).count()
         )
 

@@ -12,7 +12,8 @@ H3-equivalent semantics (res 7-10, k-ring, parent), not Uber-bit-compatible.
 Bit layout (id >= 0, high bit clear):
   [62:59] res (4b) | [58:56] face (3b) | [55:28] q+2^27 | [27:0] r+2^27
 
-All math is numpy-vectorized; Spark surface = Arrow pandas UDFs.
+All math is numpy-vectorized; Spark surface: native column expressions for
+cell assignment (`with_hex_cell`), Arrow pandas UDFs for the rest.
 """
 
 from __future__ import annotations
@@ -592,8 +593,10 @@ def claim_m_udf(res: int):
 
 
 # --- Spark surface ---------------------------------------------------------
-def with_hex_cell_native(df, res: int, lat="lat", lon="lon", out_col=None):
-    """Hex cell id via PURE NATIVE column expressions — the whole
+def with_hex_cell(df, res: int, lat="lat", lon="lon", out_col=None):
+    """Adds the hex cell column (default name `hex_r{res}`).
+
+    Computed by PURE NATIVE column expressions — the whole
     latlon -> xyz -> face/uv -> rotated axial -> cube-round -> pack chain in
     built-in functions, so cell assignment stays inside whole-stage codegen
     (no Python in the headline spatial path; round-2 perf item).
@@ -697,28 +700,6 @@ def with_hex_cell_native(df, res: int, lat="lat", lon="lon", out_col=None):
     packed = F.coalesce(packed, F.lit(-1).cast("long"))
     tmp = [col for col in s9.columns if col.startswith("__h")]
     return s9.select("*", packed.alias(out_col)).drop(*tmp)
-
-
-def hex_cell_udf(res: int):
-    if not 0 <= res <= 15:
-        raise ValueError("res must be in [0, 15]")
-
-    @F.pandas_udf(T.LongType())
-    def hex_cell(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(latlon_to_cell(lat.to_numpy(), lon.to_numpy(), res))
-
-    return hex_cell
-
-
-def with_hex_cell(df, res: int, lat="lat", lon="lon", out_col=None,
-                  native: bool = True):
-    """Adds the hex cell column.  native=True (default) uses the staged
-    column-expression path (whole-stage codegen, zero Python);
-    native=False keeps the Arrow pandas UDF (numpy) path — tested equal."""
-    out_col = out_col or f"hex_r{res}"
-    if native:
-        return with_hex_cell_native(df, res, lat, lon, out_col)
-    return df.withColumn(out_col, hex_cell_udf(res)(F.col(lat), F.col(lon)))
 
 
 def kring_udf(k: int):

@@ -12,7 +12,7 @@ equi-joined to the polygon cover cells.  Candidate completeness: if
 dist(P, poly) <= radius there is a polygon point Q within radius of P;
 Q's cell is in the polygon cover (superset guarantee) and in P's disk
 (disk_cells contract) — so the pair always surfaces.  Refine: per
-distinct polygon per Arrow batch (the `_grouped_pip` factorized shape,
+distinct polygon per Arrow batch (the `_grouped_pip_idx` grouped shape,
 never a per-pair loop), inside => 0 else the min point-to-segment
 distance over the ring edges.
 
@@ -41,29 +41,29 @@ from .spatial_join import (
     _pip_single_ring,
     _point_segment_dist2,
 )
-from .zonal import _covers_and_rings
+from .zonal import _COVER_SCHEMA, _covers_and_rings
 
 _M_PER_DEG = 111320.0
 
 
-def _grouped_poly_dist(py, px, poly_ids, rings_by_id):
+def _grouped_poly_dist(py, px, pidx, rings_list):
     """Squared degree-plane distance from each point to its candidate
-    polygon: 0 inside, else min over ring edges.  Factorized by poly_id,
-    one vectorized pass per distinct polygon per batch."""
+    polygon: 0 inside, else min over ring edges.  Factorized by dim-row
+    index, one vectorized pass per distinct polygon per batch."""
     py = np.asarray(py, dtype=np.float64)
     px = np.asarray(px, dtype=np.float64)
     out = np.full(len(py), np.inf, dtype=np.float64)
-    codes, uniques = pd.factorize(poly_ids)
+    codes, uniques = pd.factorize(pidx)
     order = np.argsort(codes, kind="stable")
     bounds = np.searchsorted(codes[order], np.arange(len(uniques) + 1))
-    for i, pid in enumerate(uniques):
+    for i, k in enumerate(uniques):
         idx = order[bounds[i]:bounds[i + 1]]
         if len(idx) == 0:
             continue
         y, x = py[idx], px[idx]
         inside = np.zeros(len(idx), dtype=bool)
         d2 = np.full(len(idx), np.inf)
-        for rl, rx in rings_by_id[pid]:
+        for rl, rx in rings_list[k]:
             # whole-point frame shift to the ring's unwrapped frame (the
             # zonal_length lesson: per-point mod is membership-safe but
             # breaks geometry continuity for points just west of the
@@ -104,16 +104,15 @@ def nearest_polygon(
         raise ValueError("radius_deg must be positive")
     use_res = DEFAULT_COVER_RES if res is None else res
     spark = points.sparkSession
-    covers, rings_by_id = _covers_and_rings(polys, use_res)
-    cover_all = F.broadcast(spark.createDataFrame(
-        covers, "poly_id string, cell long, interior boolean"))
-    bc = spark.sparkContext.broadcast(rings_by_id)
+    covers, rings_list = _covers_and_rings(polys, use_res)
+    cover_all = F.broadcast(spark.createDataFrame(covers, _COVER_SCHEMA))
+    bc = spark.sparkContext.broadcast(rings_list)
 
     @F.pandas_udf(T.DoubleType())
     def poly_d2(plat: pd.Series, plon: pd.Series,
-                pid: pd.Series) -> pd.Series:
+                pidx: pd.Series) -> pd.Series:
         return pd.Series(_grouped_poly_dist(
-            plat.to_numpy(), plon.to_numpy(), pid.to_numpy(), bc.value))
+            plat.to_numpy(), plon.to_numpy(), pidx.to_numpy(), bc.value))
 
     # two-phase (the zonal shape, applied to nearest): every polygon
     # CONTAINING a point has the point's home cell in its cover (the
@@ -135,8 +134,8 @@ def nearest_polygon(
         F.lit(0.0).alias("__d2"))
     # leg B: home cell in a boundary cover cell -> exact kernel
     leg_b = hpairs.filter(~F.col("interior")).select(
-        "query_id", "qlat", "qlon", "poly_id").withColumn(
-        "__d2", poly_d2(F.col("qlat"), F.col("qlon"), F.col("poly_id")))
+        "query_id", "qlat", "qlon", "poly_id",
+        poly_d2(F.col("qlat"), F.col("qlon"), F.col("pidx")).alias("__d2"))
     home_best = leg_a.unionByName(leg_b).groupBy("query_id").agg(
         F.min(F.struct(F.col("__d2").alias("d2"),
                        F.col("poly_id").alias("poly_id"))).alias("b"),
@@ -153,11 +152,13 @@ def nearest_polygon(
         outside.select("query_id", F.col("qlat").alias("lat"),
                        F.col("qlon").alias("lon")),
         radius_deg, metric="sq_deg", res=use_res)
+    # poly_id follows pidx; keeping it in the dedupe key leaves every
+    # first() buffer fixed-width, so the dedupe stays a HashAggregate
     leg_c = cand.join(
         cover_all, cand["__pcell"] == cover_all["cell"], "inner"
-    ).dropDuplicates(["query_id", "poly_id"]).select(
-        "query_id", "qlat", "qlon", "poly_id").withColumn(
-        "__d2", poly_d2(F.col("qlat"), F.col("qlon"), F.col("poly_id")))
+    ).dropDuplicates(["query_id", "pidx", "poly_id"]).select(
+        "query_id", "qlat", "qlon", "poly_id",
+        poly_d2(F.col("qlat"), F.col("qlon"), F.col("pidx")).alias("__d2"))
 
     r2 = float(radius_deg) * float(radius_deg)
     # the radius cut happens AFTER the argmin, on the aggregated scalar:

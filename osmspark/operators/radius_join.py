@@ -236,13 +236,10 @@ def within_distance_join(
     dist, keep = _exact_filter(metric, radius)
     # certified-interior candidates short-circuit the exact filter (Or
     # codegen evaluates the right side lazily); membership is identical
-    # because the certificate is conservative.  Older prepared frames
-    # without the flag column keep the plain filter.
-    if "__inside" in q.columns:
-        keep = F.col("__inside") | keep
+    # because the certificate is conservative
     return (
         q.join(pts, "__pcell")
-        .where(keep)
+        .where(F.col("__inside") | keep)
         .select("query_id", "point_id", dist.alias("dist"),
                 *[F.col(c) for c in carry_cols])
     )

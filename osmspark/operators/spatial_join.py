@@ -7,9 +7,9 @@ ordinary join; no custom strategy needed (SURVEY §4.2).
 
 Phase 2 (refine): exact ray-casting (crossing-number) point-in-ring test,
 numpy-vectorized over Arrow batches.  Ring geometry reaches executors ONCE
-via a Spark broadcast variable keyed by poly_id — candidate rows carry only
-(lat, lon, poly_id), so Arrow transfer stays O(candidates), not
-O(candidates * ring_size).
+via a Spark broadcast variable indexed by dim row — candidate rows carry
+only (lat, lon, pidx, interior), so Arrow transfer stays O(candidates),
+not O(candidates * ring_size).
 
 Cover computation runs driver-side in numpy: the polygon side is a
 broadcastable dimension by contract (if it weren't, covers would move into
@@ -25,13 +25,19 @@ polygon; a pole-encircling ring closes over the pole on the traversal's
 left — eastward keeps the north side).  Round-3 VERDICT item 3: these
 used to raise ValueError.
 
+Interior/boundary split: cover cells certified fully inside their
+polygon mark their candidates interior; the refine UDF keeps those
+without a ray-cast, so only boundary-cell candidates pay edge math.
+
 Scale notes: the cover res trades candidate fan-out vs join width (default
 res 8 ~ 1 km cells); hot-city skew on the cell key is handled by AQE
 skew-join plus optional explicit salting (operators.salt).  A continent-
 scale polygon covered at fine res yields a very large cover (the
-Antarctica piece at res 5 is ~10^4 cells) — pick the cover res per dim
-table; a hierarchical (mixed-res) cover is the upgrade path if a single
-join ever needs fine cells AND hemisphere polygons.
+Antarctica piece at res 5 is ~10^4 cells), so `spatial_join` takes a
+`min_res`: each dim row is then covered at its own res in [min_res, res]
+within a cell budget, and the join runs one candidate join per distinct
+res — fine cells for the ZIP rectangles, coarse ones for the continents,
+in one join.
 """
 
 from __future__ import annotations
@@ -524,19 +530,6 @@ def _cover_pieces_flagged(pieces: list, res: int):
     return cells[uniq], interior_or
 
 
-def polygon_covers(polys_rows: list, res: int) -> list[tuple]:
-    """[(poly_id, cell, interior), ...] computed driver-side from collected
-    rows; interior cells need no ray-cast refine."""
-    out = []
-    for r in polys_rows:
-        lats = np.array([p["lat"] for p in r["ring"]], dtype=np.float64)
-        lons = np.array([p["lon"] for p in r["ring"]], dtype=np.float64)
-        cells, interior = _ring_cover_cells_flagged(lats, lons, res)
-        for c, i in zip(cells, interior):
-            out.append((r["poly_id"], int(c), bool(i)))
-    return out
-
-
 def points_in_rings_np(py, px, ring_lats, ring_lons):
     """Vectorized crossing-number test for a batch of (point, ring) pairs.
 
@@ -575,38 +568,14 @@ def _ranges(counts: np.ndarray) -> np.ndarray:
     return np.arange(total, dtype=np.int64) - np.repeat(offsets, counts)
 
 
-def _grouped_pip(py, px, poly_ids, rings_by_id):
-    """Batch refine: group candidate rows by poly_id, one vectorized
-    crossing-number pass per (distinct polygon, piece) in the batch.
-
-    rings_by_id maps poly_id -> LIST of split_ring pieces (one entry for
-    ordinary rings); membership in the polygon is membership in ANY piece
-    (pieces have disjoint interiors tiling the original, so OR is exact).
-
-    poly ids are factorized to integer codes first — object-string equality
-    scans over millions of candidates were the hot spot before."""
-    py = np.asarray(py, dtype=np.float64)
-    px = np.asarray(px, dtype=np.float64)
-    out = np.zeros(len(py), dtype=bool)
-    codes, uniques = pd.factorize(poly_ids)
-    order = np.argsort(codes, kind="stable")
-    bounds = np.searchsorted(codes[order], np.arange(len(uniques) + 1))
-    for k, pid in enumerate(uniques):
-        idx = order[bounds[k]:bounds[k + 1]]
-        if len(idx) == 0:
-            continue
-        acc = np.zeros(len(idx), dtype=bool)
-        for rl, rlon in rings_by_id[pid]:
-            acc |= _pip_single_ring(py[idx], px[idx], rl, rlon)
-        out[idx] = acc
-    return out
-
-
 def _grouped_pip_idx(py, px, codes, rings_list):
-    """`_grouped_pip` over PRE-FACTORIZED integer polygon indices (round
-    6): the cover table now carries a small int per candidate instead of
-    the poly_id string, so the per-batch Arrow transfer shrinks and the
-    string factorize disappears — rings_list is indexed by that int."""
+    """Batch refine over integer dim-row indices: group candidate rows by
+    code, one vectorized crossing-number pass per (distinct row, piece)
+    in the batch.  rings_list[code] is that row's split_ring pieces;
+    membership is membership in ANY piece (pieces have disjoint interiors
+    tiling the original, so OR is exact).  A code outside
+    [0, len(rings_list)) — e.g. -1 — belongs to no group and stays
+    False."""
     py = np.asarray(py, dtype=np.float64)
     px = np.asarray(px, dtype=np.float64)
     codes = np.asarray(codes, dtype=np.int64)
@@ -645,141 +614,42 @@ def _pip_single_ring(py, px, ring_lat, ring_lon):
     return (cross.sum(axis=1) % 2) == 1
 
 
-def spatial_join(
-    points: DataFrame,
-    polys: DataFrame,
-    res: int = DEFAULT_COVER_RES,
-    broadcast_polys: bool = True,
-    lat: str = "lat",
-    lon: str = "lon",
-    interior_shortcut: bool = False,
-) -> DataFrame:
-    """points x polygons -> point rows + (poly_id, level, postcode).
-
-    Inner-join semantics (a point outside every polygon is dropped);
-    boundary points resolve by crossing-number convention.
-
-    interior_shortcut: skip the ray-cast for candidates whose cover cell is
-    fully interior to the polygon.  Off by default: A/B-measured NEUTRAL to
-    slightly negative on few-vertex polygons (Arrow transfer dominates; the
-    skipped ray-cast is cheap and the extra flag column + partial indexing
-    cost more).  Turn it ON for many-vertex polygons (admin boundaries with
-    10^2-10^4 edges), where per-candidate edge math dominates the refine."""
-    spark = points.sparkSession
-    prows = polys.select("poly_id", "level", "postcode", "ring").collect()
-    # split_ring ONCE per polygon (ordinary rings -> one unwrapped piece,
-    # fast path; antimeridian rings unwrap; hemisphere-wide /
-    # pole-encircling rings become piece lists whose even-odd interiors
-    # tile the polygon); the SAME pieces feed the cover and the refine.
-    # Polygons are FACTORIZED to a small int index here (round 6): the
-    # cover table and the refine UDF carry `pidx` instead of the poly_id
-    # string — per-candidate Arrow transfer shrinks and the per-batch
-    # string factorize disappears (measured 1.4x on the 4M-candidate
-    # bench join); poly_id re-attaches via the broadcast attrs join.
-    rings_list = [
-        split_ring(
-            np.array([p["lat"] for p in r["ring"]], dtype=np.float64),
-            np.array([p["lon"] for p in r["ring"]], dtype=np.float64),
-        )
-        for r in prows
-    ]
-    covers = []
-    for i, pieces in enumerate(rings_list):
-        cells, interior = _cover_pieces_flagged(pieces, res)
-        covers.extend((i, int(c), bool(f)) for c, f in zip(cells, interior))
-    attrs = [(i, r["poly_id"], r["level"], r["postcode"])
-             for i, r in enumerate(prows)]
-    bc = spark.sparkContext.broadcast(rings_list)
-
-    cover_df = spark.createDataFrame(
-        covers, "pidx int, cell long, interior boolean"
-    )
-    attrs_df = spark.createDataFrame(
-        attrs, "pidx int, poly_id string, level string, postcode string"
-    )
-    if broadcast_polys:
-        cover_df = F.broadcast(cover_df)
-        attrs_df = F.broadcast(attrs_df)
-
-    @F.pandas_udf(T.BooleanType())
-    def refine_flagged(plat: pd.Series, plon: pd.Series, pidx: pd.Series,
-                       interior: pd.Series) -> pd.Series:
-        # interior/boundary split: candidates whose cover cell is FULLY
-        # inside the polygon are in by construction — the ray-cast runs
-        # only on the boundary-cell subset of each Arrow batch (typically
-        # a perimeter-fraction of the candidates)
-        inter = interior.to_numpy()
-        out = inter.copy()
-        b = ~inter
-        if b.any():
-            out[b] = _grouped_pip_idx(
-                plat.to_numpy()[b], plon.to_numpy()[b],
-                pidx.to_numpy()[b], bc.value,
-            )
-        return pd.Series(out)
-
-    @F.pandas_udf(T.BooleanType())
-    def refine(plat: pd.Series, plon: pd.Series,
-               pidx: pd.Series) -> pd.Series:
-        return pd.Series(
-            _grouped_pip_idx(plat.to_numpy(), plon.to_numpy(),
-                             pidx.to_numpy(), bc.value)
-        )
-
-    pts = hexgrid.with_hex_cell(points, res, lat=lat, lon=lon, out_col="__cell")
-    cand = pts.join(cover_df, pts["__cell"] == cover_df["cell"], "inner")
-    if interior_shortcut:
-        refined = cand.filter(
-            refine_flagged(F.col(lat), F.col(lon), F.col("pidx"),
-                           F.col("interior"))
-        )
-    else:
-        refined = cand.filter(
-            refine(F.col(lat), F.col(lon), F.col("pidx"))
-        )
-    return (
-        refined.drop("__cell", "cell", "interior")
-        .join(attrs_df, "pidx")
-        # same output column order as the pre-index shape
-        .select("poly_id", *points.columns, "level", "postcode")
-    )
-
-
 def adaptive_polygon_covers(
     prows: list,
     max_res: int = DEFAULT_COVER_RES,
-    min_res: int = 2,
+    min_res: int | None = None,
     max_cover_cells: int = 4096,
 ):
-    """Per-polygon adaptive cover resolution: each polygon is covered at
-    the FINEST res whose cover stays within max_cover_cells (floored at
-    min_res) — a ZIP rectangle gets km-scale cells, Antarctica gets
-    continent-scale ones, and the broadcast cover table stays bounded at
-    ~max_cover_cells * n_polys rows no matter how the dim mixes sizes.
+    """Per-polygon cover resolution: each dim row is covered at the
+    FINEST res in [min_res, max_res] whose cover stays within
+    max_cover_cells (floored at min_res) — a ZIP rectangle gets km-scale
+    cells, Antarctica gets continent-scale ones, and the broadcast cover
+    table stays bounded at ~max_cover_cells * n_polys rows no matter how
+    the dim mixes sizes.  min_res=None means max_res: one fixed-res cover
+    and no walk.
 
     Resolution search walks COARSE -> FINE, refining while the next step's
     ~7x growth (aperture-7) still fits the budget, so the wasted work is a
     geometric series dominated by the accepted res — a huge polygon never
     pays for a fine cover it will discard.
 
-    Returns (covers_by_res, res_by_pid, pieces_by_pid): covers_by_res
-    maps res -> list of (poly_id, cell, interior) rows — the interior
-    flag (cell certified fully inside the polygon, `_cover_pieces
-    _flagged`) rides along so the caller's refine can skip certified
-    candidates (round-6: the wide-polygon refine-flood fix);
-    pieces_by_pid carries each polygon's split_ring pieces (split ONCE
-    here — res trials and the caller's refine all reuse them; round-4
-    review finding)."""
+    Everything is keyed by dim-row index (`pidx`), never by poly_id:
+    multipolygon parts share an id, and each part needs its own cover and
+    ring.  Returns (covers_by_res, res_list, rings_list): covers_by_res
+    maps res -> list of (pidx, cell, interior) rows, where interior marks
+    a cell certified fully inside the polygon (`_cover_pieces_flagged`);
+    res_list[pidx] is the row's cover res; rings_list[pidx] is its
+    split_ring pieces (split ONCE here — res trials and the caller's
+    refine all reuse them)."""
+    min_res = max_res if min_res is None else min_res
     covers_by_res: dict[int, list] = {}
-    res_by_pid: dict = {}
-    pieces_by_pid: dict = {}
-    for r in prows:
-        pid = r["poly_id"]
+    res_list: list[int] = []
+    rings_list: list = []
+    for i, r in enumerate(prows):
         pieces = split_ring(
             np.array([p["lat"] for p in r["ring"]], dtype=np.float64),
             np.array([p["lon"] for p in r["ring"]], dtype=np.float64),
         )
-        pieces_by_pid[pid] = pieces
         rr = min_res
         cells, flags = _cover_pieces_flagged(pieces, rr)
         while rr < max_res and len(cells) * 7 <= max_cover_cells:
@@ -787,104 +657,87 @@ def adaptive_polygon_covers(
             if len(nxt) > max_cover_cells:
                 break
             rr, cells, flags = rr + 1, nxt, nflags
-        res_by_pid[pid] = rr
+        res_list.append(rr)
+        rings_list.append(pieces)
         covers_by_res.setdefault(rr, []).extend(
-            (pid, int(c), bool(i)) for c, i in zip(cells, flags)
+            (i, int(c), bool(f)) for c, f in zip(cells, flags)
         )
-    return covers_by_res, res_by_pid, pieces_by_pid
+    return covers_by_res, res_list, rings_list
 
 
-def spatial_join_adaptive(
+def spatial_join(
     points: DataFrame,
     polys: DataFrame,
-    max_res: int = DEFAULT_COVER_RES,
-    min_res: int = 2,
-    max_cover_cells: int = 4096,
-    broadcast_polys: bool = True,
+    res: int = DEFAULT_COVER_RES,
     lat: str = "lat",
     lon: str = "lon",
+    min_res: int | None = None,
+    max_cover_cells: int = 4096,
 ) -> DataFrame:
-    """spatial_join with a PER-POLYGON adaptive cover resolution — the
-    mixed-size-dim scale path (round 4).
+    """points x polygons -> (poly_id, *point columns, level, postcode).
 
-    A single fixed cover res cannot serve a dim that mixes ZIP rectangles
-    with continent polygons: fine res explodes the big polygons' covers
-    (Antarctica at res 5 is ~10^4 cells; at res 8 it would be ~10^7),
-    coarse res floods the small polygons with refine candidates.  Here
-    each polygon picks its own res (adaptive_polygon_covers) and the fact
-    side runs one broadcast candidate join PER DISTINCT RES in use (cell
-    assignment is pure codegen — a second assignment pass is far cheaper
-    than a 100x cover blowup), unioned before a single shared refine.
-    Candidate uniqueness per (point, polygon) is preserved: each polygon
-    lives at exactly one res.  Result-identical to fixed-res spatial_join
-    (the cover is a superset at ANY res; the ray-cast refine is exact)."""
+    Inner-join semantics (a point outside every polygon is dropped);
+    boundary points resolve by crossing-number convention.
+
+    The dim is collected to the driver (broadcastable by contract; use
+    `spatial_join_distributed` beyond that).  Each dim row is covered at
+    the finest res in [min_res, res] that fits max_cover_cells
+    (`adaptive_polygon_covers`); min_res=None covers every row at `res`.
+    A dim mixing ZIP rectangles with continent polygons passes a lower
+    min_res so the big rows take coarse cells instead of a 10^7-cell
+    fine cover.
+
+    Plan: one broadcast candidate join per distinct cover res (an
+    ordinary dim has exactly one), unioned, then ONE filter with ONE
+    pandas UDF (Catalyst pushes it below the Union, so the plan shows
+    one ArrowEvalPython per res branch; each candidate is refined once).
+    Candidates whose cover cell is certified interior are in by
+    construction: the UDF skips their ray-cast and keeps them.  Each row
+    lives at exactly one res, so a (point, row) pair is a candidate at
+    most once."""
     spark = points.sparkSession
     prows = polys.select("poly_id", "level", "postcode", "ring").collect()
-    covers_by_res, _, rings_by_id = adaptive_polygon_covers(
-        prows, max_res=max_res, min_res=min_res,
-        max_cover_cells=max_cover_cells,
+    # rows are factorized to a small int `pidx`: the cover table and the
+    # refine carry it instead of the poly_id string (less Arrow transfer,
+    # no per-batch string factorize); poly_id re-attaches via attrs
+    covers_by_res, _, rings_list = adaptive_polygon_covers(
+        prows, max_res=res, min_res=min_res, max_cover_cells=max_cover_cells,
     )
-    # factorize poly ids to a small int for the cover/refine path (round
-    # 6, same as spatial_join): strings re-attach via the attrs join
-    pidx_of = {r["poly_id"]: i for i, r in enumerate(prows)}
-    rings_list = [rings_by_id[r["poly_id"]] for r in prows]
     attrs = [(i, r["poly_id"], r["level"], r["postcode"])
              for i, r in enumerate(prows)]
     bc = spark.sparkContext.broadcast(rings_list)
 
     @F.pandas_udf(T.BooleanType())
-    def refine(plat: pd.Series, plon: pd.Series,
-               pidx: pd.Series) -> pd.Series:
-        return pd.Series(
-            _grouped_pip_idx(plat.to_numpy(), plon.to_numpy(),
-                             pidx.to_numpy(), bc.value)
-        )
+    def refine(plat: pd.Series, plon: pd.Series, pidx: pd.Series,
+               interior: pd.Series) -> pd.Series:
+        # interior rows get code -1, which no ring group owns, so the
+        # ray-cast runs only on boundary-cell candidates
+        inter = interior.to_numpy()
+        codes = np.where(inter, -1, pidx.to_numpy())
+        return pd.Series(inter | _grouped_pip_idx(
+            plat.to_numpy(), plon.to_numpy(), codes, bc.value))
 
     cand_parts = []
-    for rr in sorted(covers_by_res):
-        cover_df = spark.createDataFrame(
-            [(pidx_of[pid], c, i) for pid, c, i in covers_by_res[rr]],
-            "pidx int, cell long, interior boolean"
-        )
-        if broadcast_polys:
-            cover_df = F.broadcast(cover_df)
+    # an empty dim still plans one (empty) candidate join at `res`
+    for rr in sorted(covers_by_res) or [res]:
+        cover_df = F.broadcast(spark.createDataFrame(
+            covers_by_res.get(rr, []), "pidx int, cell long, interior boolean"
+        ))
         pts = hexgrid.with_hex_cell(points, rr, lat=lat, lon=lon,
                                     out_col="__cell")
         cand_parts.append(
             pts.join(cover_df, pts["__cell"] == cover_df["cell"], "inner")
             .drop("__cell", "cell")
         )
-    if not cand_parts:
-        return points.limit(0).select(
-            "*", F.lit(None).cast("string").alias("poly_id"),
-            F.lit(None).cast("string").alias("level"),
-            F.lit(None).cast("string").alias("postcode"),
-        )
-    from functools import reduce
-
-    cand = reduce(DataFrame.unionByName, cand_parts)
-    # interior/boundary split NATIVELY, before any Python (round 6, guide
-    # §4.1/§2.3): a wide polygon's coarse cover certifies most of a dense
-    # region's candidates as interior (`_cover_pieces_flagged` — center
-    # inside AND clear of every edge by the cell-reach margin), and those
-    # rows now never cross the JVM->Python boundary at all — previously
-    # EVERY candidate paid Arrow transfer + the grouped ray-cast, which
-    # made a 150-deg-wide box re-ray-cast the whole city
-    # (pip_adaptive_mixed_dim, VERDICT r5 "what's wrong" #2).  Membership
-    # is identical: certification is conservative, and a cell straddling
-    # a piece boundary merely stays on the refine path.
-    refined = cand.filter(F.col("interior")).unionByName(
-        cand.filter(~F.col("interior")).filter(
-            refine(F.col(lat), F.col(lon), F.col("pidx")))
-    ).drop("interior")
-    attrs_df = spark.createDataFrame(
+    cand = functools.reduce(DataFrame.unionByName, cand_parts)
+    attrs_df = F.broadcast(spark.createDataFrame(
         attrs, "pidx int, poly_id string, level string, postcode string"
-    )
-    if broadcast_polys:
-        attrs_df = F.broadcast(attrs_df)
+    ))
     return (
-        refined.join(attrs_df, "pidx")
-        # same output column order as the pre-index shape
+        cand.filter(refine(F.col(lat), F.col(lon), F.col("pidx"),
+                           F.col("interior")))
+        .drop("interior")
+        .join(attrs_df, "pidx")
         .select("poly_id", *points.columns, "level", "postcode")
     )
 

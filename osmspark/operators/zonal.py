@@ -19,8 +19,8 @@ Two-phase shape (the reason this is its own operator and not
 3. Only points whose cell is a **boundary** cover cell (a
    perimeter-fraction of the corpus: area/perimeter wins ~linearly with
    polygon size) join candidates and go through the exact grouped
-   ray-cast refine (`spatial_join._grouped_pip` — the same kernel the PIP
-   join uses, so zonal membership IS spatial-join membership, by
+   ray-cast refine (`spatial_join._grouped_pip_idx` — the same kernel the
+   PIP join uses, so zonal membership IS spatial-join membership, by
    construction).
 
 Inner-join semantics like `spatial_join`: a polygon containing no points
@@ -47,32 +47,24 @@ from ..functions import hexgrid
 from ..functions.geo import haversine_np
 from .spatial_join import (
     DEFAULT_COVER_RES,
-    _cover_pieces_flagged,
-    _grouped_pip,
+    _grouped_pip_idx,
     _pip_single_ring,
-    split_ring,
+    adaptive_polygon_covers,
 )
+
+_COVER_SCHEMA = "pidx int, poly_id string, cell long, interior boolean"
 
 
 def _covers_and_rings(polys: DataFrame, res: int):
-    """Driver-side: [(poly_id, cell, interior)] + {poly_id: ring pieces}.
-    split_ring runs ONCE per polygon and feeds both cover and refine
-    (spatial_join's round-4 convention)."""
+    """Driver-side fixed-res covers: [(pidx, poly_id, cell, interior)] +
+    rings_list (split_ring pieces indexed by pidx).  Keyed by dim-row
+    index like `spatial_join`: multipolygon parts share a poly_id, and
+    each part keeps its own cover and ring."""
     prows = polys.select("poly_id", "ring").collect()
-    rings_by_id = {
-        r["poly_id"]: split_ring(
-            np.array([p["lat"] for p in r["ring"]], dtype=np.float64),
-            np.array([p["lon"] for p in r["ring"]], dtype=np.float64),
-        )
-        for r in prows
-    }
-    covers = []
-    for r in prows:
-        cells, interior = _cover_pieces_flagged(rings_by_id[r["poly_id"]], res)
-        covers.extend(
-            (r["poly_id"], int(c), bool(i)) for c, i in zip(cells, interior)
-        )
-    return covers, rings_by_id
+    covers_by_res, _, rings_list = adaptive_polygon_covers(prows, max_res=res)
+    covers = [(i, prows[i]["poly_id"], c, f)
+              for i, c, f in covers_by_res.get(res, [])]
+    return covers, rings_list
 
 
 def zonal_stats(
@@ -92,11 +84,9 @@ def zonal_stats(
     semantics), `mean_v = sum_v / n_values` (null when all values null).
     Membership is exactly `spatial_join` membership (equality-tested)."""
     spark = points.sparkSession
-    covers, rings_by_id = _covers_and_rings(polys, res)
-    cover_df = F.broadcast(spark.createDataFrame(
-        covers, "poly_id string, cell long, interior boolean"
-    ))
-    bc = spark.sparkContext.broadcast(rings_by_id)
+    covers, rings_list = _covers_and_rings(polys, res)
+    cover_df = F.broadcast(spark.createDataFrame(covers, _COVER_SCHEMA))
+    bc = spark.sparkContext.broadcast(rings_list)
 
     cell = "__z_cell"
     if value_col is None:
@@ -129,14 +119,15 @@ def zonal_stats(
     # phase 2b: boundary cover cells — per-point exact refine, then the
     # same partial-aggregate shape
     @F.pandas_udf(T.BooleanType())
-    def refine(plat: pd.Series, plon: pd.Series, pid: pd.Series) -> pd.Series:
-        return pd.Series(_grouped_pip(
-            plat.to_numpy(), plon.to_numpy(), pid.to_numpy(), bc.value))
+    def refine(plat: pd.Series, plon: pd.Series,
+               pidx: pd.Series) -> pd.Series:
+        return pd.Series(_grouped_pip_idx(
+            plat.to_numpy(), plon.to_numpy(), pidx.to_numpy(), bc.value))
 
     boundary = pts.join(
         cover_df.filter(~F.col("interior")),
         pts[cell] == cover_df["cell"], "inner",
-    ).filter(refine(F.col(lat), F.col(lon), F.col("poly_id")))
+    ).filter(refine(F.col(lat), F.col(lon), F.col("pidx")))
     boundary_part = boundary.groupBy("poly_id").agg(
         F.count(F.lit(1)).alias("n"),
         F.count("__v").alias("nv"),
@@ -249,24 +240,24 @@ def _clip_fracs_one_poly(p1y, p1x, p2y, p2x, pieces):
     return frac, len_in
 
 
-def _grouped_clip(p1y, p1x, p2y, p2x, poly_ids, rings_by_id):
-    """Batch clip: factorize by poly_id, one vectorized pass per distinct
-    polygon in the Arrow batch (the _grouped_pip shape)."""
+def _grouped_clip(p1y, p1x, p2y, p2x, pidx, rings_list):
+    """Batch clip: factorize by dim-row index, one vectorized pass per
+    distinct polygon in the Arrow batch (the _grouped_pip_idx shape)."""
     p1y = np.asarray(p1y, dtype=np.float64)
     p1x = np.asarray(p1x, dtype=np.float64)
     p2y = np.asarray(p2y, dtype=np.float64)
     p2x = np.asarray(p2x, dtype=np.float64)
     frac = np.zeros(len(p1y), dtype=np.float64)
     lin = np.zeros(len(p1y), dtype=np.float64)
-    codes, uniques = pd.factorize(poly_ids)
+    codes, uniques = pd.factorize(pidx)
     order = np.argsort(codes, kind="stable")
     bounds = np.searchsorted(codes[order], np.arange(len(uniques) + 1))
-    for i, pid in enumerate(uniques):
+    for i, k in enumerate(uniques):
         idx = order[bounds[i]:bounds[i + 1]]
         if len(idx) == 0:
             continue
         f, li = _clip_fracs_one_poly(
-            p1y[idx], p1x[idx], p2y[idx], p2x[idx], rings_by_id[pid])
+            p1y[idx], p1x[idx], p2y[idx], p2x[idx], rings_list[k])
         frac[idx] = f
         lin[idx] = li
     return frac, lin
@@ -286,7 +277,8 @@ def zonal_length(
     `segs` needs (seg_id, lat1, lon1, lat2, lon2); `polys` the engine's
     polygon-dim schema.  Returns (poly_id, n_segments, len_m) — or, with
     pairs=True, the per-pair grain (seg_id, poly_id, frac_inside, len_in_m)
-    with frac_inside > 0.
+    with frac_inside > 0.  A pair is a (segment, dim row): multipolygon
+    parts sharing a poly_id are clipped and reported part by part.
 
     Candidates: segment cell covers (the intersection join's sampled
     seam-exact disks) equi-joined to the polygon cover cells — if ANY
@@ -306,10 +298,11 @@ def zonal_length(
     from .intersect import _step_deg, _validate_cells_col, segment_cover_udf
 
     spark = segs.sparkSession
-    covers, rings_by_id = _covers_and_rings(polys, res)
+    covers, rings_list = _covers_and_rings(polys, res)
     cover_df = F.broadcast(spark.createDataFrame(
-        [(p, c) for p, c, _ in covers], "poly_id string, cell long"))
-    bc = spark.sparkContext.broadcast(rings_by_id)
+        [(i, p, c) for i, p, c, _ in covers],
+        "pidx int, poly_id string, cell long"))
+    bc = spark.sparkContext.broadcast(rings_list)
 
     if seg_cells_col is not None:
         # pre-covered layout (intersect.with_segment_cover): no cover UDF
@@ -333,20 +326,20 @@ def zonal_length(
         F.explode_outer("__cells").alias("__cell"),
     )
     cand = s.join(cover_df, s["__cell"] == cover_df["cell"], "inner") \
-            .dropDuplicates(["seg_id", "poly_id"])
+            .dropDuplicates(["seg_id", "pidx"])
 
     @F.pandas_udf("frac double, len_in double")
     def clip(p1y: pd.Series, p1x: pd.Series, p2y: pd.Series,
-             p2x: pd.Series, pid: pd.Series) -> pd.DataFrame:
+             p2x: pd.Series, pidx: pd.Series) -> pd.DataFrame:
         frac, lin = _grouped_clip(
             p1y.to_numpy(), p1x.to_numpy(),
             p2y.to_numpy(), p2x.to_numpy(),
-            pid.to_numpy(), bc.value)
+            pidx.to_numpy(), bc.value)
         return pd.DataFrame({"frac": frac, "len_in": lin})
 
     refined = cand.withColumn(
         "__c", clip(F.col("lat1"), F.col("lon1"),
-                    F.col("lat2"), F.col("lon2"), F.col("poly_id"))
+                    F.col("lat2"), F.col("lon2"), F.col("pidx"))
     ).filter(F.col("__c.frac") > 0)
     if pairs:
         return refined.select(

@@ -152,7 +152,7 @@ def test_hex_native_expression_matches_numpy(spark):
     df = spark.createDataFrame(pdf)
     for res in (7, 8, 10):
         got = np.array(
-            hexgrid.with_hex_cell_native(df, res, out_col="c")
+            hexgrid.with_hex_cell(df, res, out_col="c")
             .select("c").toPandas()["c"],
             dtype=np.int64,
         )
@@ -167,7 +167,7 @@ def test_hex_native_null_coords_sentinel(spark):
     df = spark.createDataFrame(
         [(None, None), (1.3, 103.8)], "lat double, lon double"
     )
-    rows = hexgrid.with_hex_cell_native(df, 8, out_col="c").collect()
+    rows = hexgrid.with_hex_cell(df, 8, out_col="c").collect()
     vals = sorted([r["c"] for r in rows])
     assert vals[0] == -1 and vals[1] > 0
-    assert not hexgrid.with_hex_cell_native(df, 8, out_col="c").schema["c"].nullable
+    assert not hexgrid.with_hex_cell(df, 8, out_col="c").schema["c"].nullable

@@ -155,14 +155,35 @@ def test_multiface_cover_superset():
     assert set(cells.tolist()) <= cover
 
 
-def test_interior_shortcut_equals_full_refine(nodes, polygons):
-    """interior_shortcut=True must be result-identical to the full ray-cast
-    path (the shortcut only skips work that is provably redundant)."""
+def test_interior_shortcut_equals_full_refine(nodes, polygons, monkeypatch):
+    """The refine keeps certified-interior candidates without a ray-cast;
+    forcing every cover `interior` flag False (so every candidate is
+    ray-cast) must give the same result, and the fixture must actually
+    exercise the shortcut (at least one interior candidate — the
+    fixture quads certify none at res 7, so this runs at res 8)."""
+    from osmspark.functions import hexgrid
+
     pts = nodes.select("id", "lat", "lon")
     a = {(r["id"], r["poly_id"]) for r in
-         sj.spatial_join(pts, polygons, res=7, interior_shortcut=True).collect()}
+         sj.spatial_join(pts, polygons, res=8).collect()}
+    covers_by_res, _, _ = sj.adaptive_polygon_covers(polygons.collect(),
+                                                     max_res=8)
+    interior_cells = [(c,) for _i, c, f in covers_by_res[8] if f]
+    cells = hexgrid.with_hex_cell(pts, 8, out_col="cell")
+    n_interior = cells.join(
+        pts.sparkSession.createDataFrame(interior_cells, "cell long"),
+        "cell").count()
+    assert n_interior > 0
+
+    flagged = sj._cover_pieces_flagged
+
+    def never_interior(pieces, res):
+        cells, interior = flagged(pieces, res)
+        return cells, np.zeros_like(interior)
+
+    monkeypatch.setattr(sj, "_cover_pieces_flagged", never_interior)
     b = {(r["id"], r["poly_id"]) for r in
-         sj.spatial_join(pts, polygons, res=7, interior_shortcut=False).collect()}
+         sj.spatial_join(pts, polygons, res=8).collect()}
     assert a == b and len(a) > 100
 
 
@@ -389,8 +410,8 @@ def test_spatial_join_adaptive_mixed_dim(spark):
         [(str(i), float(plat[i]), float(plon[i])) for i in range(len(plat))],
         "id string, lat double, lon double",
     )
-    got = {(r["id"], r["poly_id"]) for r in sj.spatial_join_adaptive(
-        pts, polys, max_res=7, min_res=2, max_cover_cells=2048).collect()}
+    got = {(r["id"], r["poly_id"]) for r in sj.spatial_join(
+        pts, polys, res=7, min_res=2, max_cover_cells=2048).collect()}
     f = np.interp(plon, lon_grid, curve)
     exp = set()
     for i in range(len(plat)):
@@ -402,25 +423,26 @@ def test_spatial_join_adaptive_mixed_dim(spark):
                      if abs(plat[i] - f[i]) <= 1.0}
     assert got - near_boundary == exp
     assert len(exp) > 400
-    # per-poly resolutions + budget
+    # per-row resolutions + budget, keyed by dim-row index (rect 0, cap 1)
     prows = [{"poly_id": "rect", "ring": [{"lat": a, "lon": o}
                                           for a, o in rect]},
              {"poly_id": "cap", "ring": [{"lat": a, "lon": o}
                                          for a, o in cap]}]
-    covers_by_res, res_by_pid, pieces_by_pid = sj.adaptive_polygon_covers(
+    covers_by_res, res_list, rings_list = sj.adaptive_polygon_covers(
         prows, max_res=7, min_res=2, max_cover_cells=2048)
-    assert len(pieces_by_pid["rect"]) == 1 and len(pieces_by_pid["cap"]) > 1
-    assert res_by_pid["rect"] == 7          # small polygon -> finest res
-    assert res_by_pid["cap"] < 7            # huge polygon -> coarser res
+    assert len(rings_list[0]) == 1 and len(rings_list[1]) > 1
+    assert res_list[0] == 7                 # small polygon -> finest res
+    assert res_list[1] < 7                  # huge polygon -> coarser res
     from collections import Counter
     for rr, rows in covers_by_res.items():
-        for pid, n in Counter(p for p, _c, _i in rows).items():
-            assert n <= 2048, (rr, pid, n)
-    # round-6 flag shape: every cover row carries the interior bool, and
-    # the big cap certifies a substantial interior (the refine-skip fuel)
+        for pidx, n in Counter(p for p, _c, _i in rows).items():
+            assert n <= 2048, (rr, pidx, n)
+            assert res_list[pidx] == rr
+    # every cover row carries the interior bool, and the big cap
+    # certifies a substantial interior (the refine-skip fuel)
     flat = [r for rows in covers_by_res.values() for r in rows]
     assert all(isinstance(r[2], bool) for r in flat)
-    assert any(r[2] for r in flat if r[0] == "cap")
+    assert any(r[2] for r in flat if r[0] == 1)
 
 
 def test_wide_ring_cover_superset():
@@ -437,3 +459,93 @@ def test_wide_ring_cover_superset():
     slon = rng.uniform(-99.99, 99.99, 800)
     cells = hexgrid.latlon_to_cell(slat, slon, 4)
     assert set(cells.tolist()) <= cover
+
+
+def _square(la, lo, d):
+    return [(la, lo), (la, lo + d), (la + d, lo + d), (la + d, lo), (la, lo)]
+
+
+@pytest.mark.parametrize("min_res", [None, 5])
+def test_duplicate_id_parts_equal_bruteforce(spark, min_res):
+    """Multipolygon parts share a poly_id: each dim row keeps its own
+    cover and ring.  Points in the first part's boundary cells (one
+    0.0005 deg inside its corner) must not be ray-cast against the other
+    part's ring."""
+    parts = [_square(1.30, 103.70, 0.05), _square(1.40, 103.85, 0.05)]
+    rows = [("m", "test", [{"lat": a, "lon": o} for a, o in ring], None)
+            for ring in parts]
+    polys = spark.createDataFrame(
+        rows,
+        schema="poly_id string, level string, "
+               "ring array<struct<lat:double,lon:double>>, postcode string",
+    )
+    rng = np.random.default_rng(43)
+    plat = np.concatenate([rng.uniform(1.29, 1.36, 800),
+                           rng.uniform(1.39, 1.46, 800), [1.3005]])
+    plon = np.concatenate([rng.uniform(103.69, 103.76, 800),
+                           rng.uniform(103.84, 103.91, 800), [103.7005]])
+    pts = spark.createDataFrame(
+        [(str(i), float(plat[i]), float(plon[i])) for i in range(len(plat))],
+        "id string, lat double, lon double",
+    )
+    got = sj.spatial_join(pts, polys, res=8, min_res=min_res,
+                          max_cover_cells=4096).collect()
+    exp = [str(i) for i in range(len(plat)) for ring in parts
+           if _pip_py(plat[i], plon[i], ring)]
+    assert sorted(r["id"] for r in got) == sorted(exp)
+    assert {r["poly_id"] for r in got} == {"m"}
+    assert str(len(plat) - 1) in exp        # the corner point is in
+    assert len(exp) > 500
+
+
+@pytest.mark.parametrize("min_res", [None, 3])
+def test_spatial_join_empty_dim_column_order(spark, min_res):
+    """An empty dim yields no rows and the same columns, in the same
+    order, as a non-empty one."""
+    polys = spark.createDataFrame(
+        [], schema="poly_id string, level string, "
+                   "ring array<struct<lat:double,lon:double>>, "
+                   "postcode string")
+    pts = spark.createDataFrame([("a", 1.3, 103.8)],
+                                "id string, lat double, lon double")
+    out = sj.spatial_join(pts, polys, res=8, min_res=min_res)
+    assert out.columns == ["poly_id", "id", "lat", "lon", "level",
+                           "postcode"]
+    assert out.count() == 0
+
+
+def test_candidate_join_runs_once_per_res(spark):
+    """The points' upstream runs once per distinct cover res — the
+    interior and boundary candidates share one candidate pass and one
+    refine, never a second copy of the candidate join."""
+    from pyspark.sql import types as T
+
+    rect = [(1.2, 103.7), (1.2, 103.9), (1.4, 103.9), (1.4, 103.7),
+            (1.2, 103.7)]
+    box = ([(-10.0, float(lo)) for lo in range(60, 151, 30)]
+           + [(40.0, float(lo)) for lo in range(150, 59, -30)]
+           + [(-10.0, 60.0)])
+    polys = _mk_polys(spark, {"rect": rect, "box": box})
+    prows = polys.collect()
+    _, res_list, _ = sj.adaptive_polygon_covers(
+        prows, max_res=8, min_res=3, max_cover_cells=2048)
+    assert len(set(res_list)) == 2
+    rng = np.random.default_rng(47)
+    n = 2000
+    base = spark.createDataFrame(
+        [(str(i), float(a), float(o)) for i, (a, o) in enumerate(zip(
+            rng.uniform(1.0, 1.6, n), rng.uniform(103.5, 104.1, n)))],
+        "id string, lat double, lon double",
+    )
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf(T.DoubleType())
+    def counted(v):
+        seen.add(len(v))
+        return v
+
+    pts = base.select("id", counted("lat").alias("lat"), "lon")
+    out = sj.spatial_join(pts, polys, res=8, min_res=3,
+                          max_cover_cells=2048).collect()
+    assert {r["poly_id"] for r in out} == {"rect", "box"}
+    assert seen.value == n * len(set(res_list))

@@ -71,20 +71,45 @@ def test_zonal_interior_shortcut_fires(valued_nodes, polygons, spark):
     if big.count() == 0:  # fall back to the first polygon
         big = polygons.limit(1)
     covers, _ = _covers_and_rings(big, 8)
-    n_int = sum(1 for _, _, i in covers if i)
-    n_bnd = sum(1 for _, _, i in covers if not i)
+    n_int = sum(1 for *_, i in covers if i)
+    n_bnd = sum(1 for *_, i in covers if not i)
     assert n_int > 0, "no interior cells certified on the largest polygon"
     assert n_bnd > 0
     # refine-leg row count < polygon point count (interior points skipped)
     from osmspark.functions import hexgrid
     pts = hexgrid.with_hex_cell(valued_nodes, 8, out_col="__c")
     cov = spark.createDataFrame(
-        covers, "poly_id string, cell long, interior boolean")
+        covers, "pidx int, poly_id string, cell long, interior boolean")
     in_poly = sj.spatial_join(valued_nodes, big, res=8).count()
     refine_rows = pts.join(
         cov.filter(~F.col("interior")), pts["__c"] == cov["cell"]).count()
     if in_poly > 0:
         assert refine_rows < in_poly
+
+
+def test_zonal_duplicate_id_parts(spark):
+    """Multipolygon parts share a poly_id: each part keeps its own cover
+    and ring, so zonal_stats counts every point inside either part,
+    boundary-cell points included — the spatial_join membership."""
+    parts = [[(1.30, 103.70), (1.30, 103.75), (1.35, 103.75),
+              (1.35, 103.70), (1.30, 103.70)],
+             [(1.40, 103.85), (1.40, 103.90), (1.45, 103.90),
+              (1.45, 103.85), (1.40, 103.85)]]
+    polys = spark.createDataFrame(
+        [("m", "admin", [{"lat": a, "lon": o} for a, o in ring], None)
+         for ring in parts],
+        schema="poly_id string, level string, "
+               "ring array<struct<lat:double,lon:double>>, postcode string",
+    )
+    pts = spark.createDataFrame(
+        [("a", 1.325, 103.725), ("a_edge", 1.3005, 103.7005),
+         ("b", 1.425, 103.875), ("out", 1.38, 103.80)],
+        "id string, lat double, lon double",
+    )
+    got = _rows(zonal_stats(pts, polys, res=8))
+    exp = _rows(sj.spatial_join(pts, polys, res=8).groupBy("poly_id")
+                .agg(F.count(F.lit(1)).alias("n_points")))
+    assert got == exp == {"m": (3,)}
 
 
 def test_zonal_null_values_and_empty_polygon(spark, valued_nodes):

@@ -31,6 +31,12 @@ def plan_of(df) -> str:
     )
 
 
+def _final(plan: str) -> str:
+    """The AQE final plan tree of a formatted plan (drops the initial
+    plan and the per-node details)."""
+    return plan.split("== Initial Plan ==")[0]
+
+
 CHECKS = {
     "ReadSchema pruning": lambda p: "ReadSchema" in p,
     "no row-wise python (BatchEvalPython)": lambda p: "BatchEvalPython" not in p,
@@ -203,8 +209,6 @@ def main() -> None:
          ("no driver-built rows", lambda p: "LocalTableScan" not in p)],
     )
 
-    from osmspark.operators.spatial_join import spatial_join_adaptive
-
     wide = spark.createDataFrame(
         [("wide", "admin",
           [{"lat": a, "lon": o} for a, o in
@@ -214,14 +218,18 @@ def main() -> None:
                "ring array<struct<lat:double,lon:double>>, postcode string",
     )
     add(
-        "Adaptive mixed-res PIP join (round 4 — per-polygon cover res)",
-        spatial_join_adaptive(nodes.select("id", "lat", "lon"),
-                              polys.unionByName(wide),
-                              max_res=8, min_res=4, max_cover_cells=512),
+        "Mixed-res PIP join (spatial_join min_res — per-polygon cover res)",
+        spatial_join(nodes.select("id", "lat", "lon"),
+                     polys.unionByName(wide),
+                     res=8, min_res=4, max_cover_cells=512),
         ["BroadcastHashJoin",
          ("one candidate join per distinct res, unioned (the 90-deg box "
           "takes coarse cells, the km-scale grid stays fine)",
           lambda p: "Union" in p),
+         ("each points scan feeds exactly one refine UDF: interior and "
+          "boundary candidates share one candidate join",
+          lambda p: _final(p).count("ArrowEvalPython (")
+          == _final(p).count("Scan parquet")),
          ("no row-wise python", lambda p: "BatchEvalPython" not in p)],
     )
 

@@ -45,8 +45,7 @@ def build(spark):
                                                ivf_topk_gemm_int8,
                                                quantize_embeddings,
                                                train_centroids)
-    from osmspark.operators.spatial_join import (spatial_join,
-                                                 spatial_join_adaptive)
+    from osmspark.operators.spatial_join import spatial_join
     from osmspark.operators.tiles import render_density_tiles, tile_counts
     from osmspark.plans.checkpoint import SnapshotStore
     from osmspark.sources import parse_nodes
@@ -116,8 +115,8 @@ def build(spark):
                "ring array<struct<lat:double,lon:double>>, postcode string")
     mixed_dim = polys.unionByName(extra_polys)
     out["pip_adaptive_mixed_dim"] = lambda: (
-        spatial_join_adaptive(pts, mixed_dim, max_res=8, min_res=3,
-                              max_cover_cells=8192)
+        spatial_join(pts, mixed_dim, res=8, min_res=3,
+                     max_cover_cells=8192)
         .groupBy("poly_id").agg(F.count("*").alias("cnt")))
 
     # --- heavy extras built lazily (vectors / postings / LM) --------------
