@@ -414,8 +414,7 @@ def _q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     qdf = spark.createDataFrame(
         _KNN_QUERIES, "query_id string, lat double, lon double"
     )
-    return knn_kring(pts, qdf, k=10, res=8, metric="sq_deg",
-                     n_queries=len(_KNN_QUERIES)).select(
+    return knn_kring(pts, qdf, k=10, metric="sq_deg").select(
         "query_id", "rank", "point_id"
     )
 
@@ -1392,8 +1391,7 @@ def _q_knn_haversine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rank-level compare only: the haversine VALUE is float-env-sensitive
     # across engines (JVM StrictMath vs libm), but the ORDERING is stable —
     # distinct grid points differ by >> 1 ulp, exact ties break on point_id
-    return knn_kring(pts, qdf, k=10, res=8, metric="haversine",
-                     n_queries=len(_KNN_QUERIES)).select(
+    return knn_kring(pts, qdf, k=10, metric="haversine").select(
         "query_id", "rank", "point_id"
     )
 

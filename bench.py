@@ -90,7 +90,7 @@ def main() -> None:
     from osmspark.datagen import gen_polygons
     from osmspark.functions.hexgrid import with_hex_cell
     from osmspark.operators import audit
-    from osmspark.operators.knn import BRUTE_COST_CAP, knn_kring
+    from osmspark.operators.knn import knn_kring
     from osmspark.operators.spatial_join import spatial_join
     from osmspark.operators.tiles import render_density_tiles, tile_counts
     from osmspark.plans.checkpoint import SnapshotStore
@@ -108,7 +108,7 @@ def main() -> None:
     # would collapse to one task and warm nothing).
     warm_docs = docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(20)) < 1)
     warm_nodes = parse_nodes(warm_docs).select("id", "lat", "lon").persist()
-    n_warm = warm_nodes.count()
+    warm_nodes.count()
     warm_nodes.write.mode("overwrite").parquet(f"{CACHE_ROOT}/warmup_out")
     spatial_join(warm_nodes, polys, res=8).count()
     tile_counts(warm_nodes.select("lat", "lon"), zoom=12).count()
@@ -116,11 +116,7 @@ def main() -> None:
     with_hex_cell(warm_nodes.select("lat", "lon"), 9).count()
     qs_warm = warm_nodes.limit(50).select(
         F.col("id").alias("query_id"), "lat", "lon")
-    # both kNN paths: 50 queries run the map-side path, brute_cost_cap=0
-    # the ring loop that the larger batches below take
-    for cap in (BRUTE_COST_CAP, 0):
-        knn_kring(warm_nodes, qs_warm, k=10, res=8, brute_cost_cap=cap,
-                  n_points=n_warm, n_queries=50).count()
+    knn_kring(warm_nodes, qs_warm, k=10).count()
     warm_nodes.unpersist()
 
     # Stage 1 (E2' in SURVEY §3.2): extract once -> columnar snapshot.
@@ -141,7 +137,7 @@ def main() -> None:
         return _extract_to("nodes_timed")
 
     # establish the stable snapshot once; downstream queries read this
-    n_nodes = _extract_to("nodes")
+    _extract_to("nodes")
     nodes = store.load(spark, "nodes")
 
     def q_spatial():
@@ -166,14 +162,12 @@ def main() -> None:
     def q_knn():
         pts = nodes.select("id", "lat", "lon")
         qs = pts.limit(50).select(F.col("id").alias("query_id"), "lat", "lon")
-        return knn_kring(pts, qs, k=10, res=8, n_points=n_nodes,
-                         n_queries=50).count()
+        return knn_kring(pts, qs, k=10).count()
 
     def q_knn_5k():
         pts = nodes.select("id", "lat", "lon")
         qs = pts.limit(5000).select(F.col("id").alias("query_id"), "lat", "lon")
-        return knn_kring(pts, qs, k=10, res=8, n_points=n_nodes,
-                         n_queries=5000).count()
+        return knn_kring(pts, qs, k=10).count()
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
 
@@ -214,15 +208,14 @@ def main() -> None:
     # vs ~2 ms/query for kring at 5000 queries; see BASELINE.md.)
 
     # scale evidence, excluded from `value` (not comparable to earlier
-    # rounds): 100k kNN queries through the fully-distributed candidate
-    # path (no driver collect of query/cell sets, no query cap) — this
-    # long entry runs ONCE; the cheaper extras below are best-of-2
+    # rounds): one 100k-query kNN batch (the batch is fetched to the
+    # Spark driver and shipped to the points' partitions in one map-side pass)
+    # — this long entry runs ONCE; the cheaper extras below are best-of-2
     def q_knn_100k():
         pts = nodes.select("id", "lat", "lon")
         qs = pts.limit(100_000).select(
             F.col("id").alias("query_id"), "lat", "lon")
-        return knn_kring(pts, qs, k=10, res=8, n_points=n_nodes,
-                         n_queries=100_000).count()
+        return knn_kring(pts, qs, k=10).count()
 
     _, t_100k, s_100k = timed(q_knn_100k)
     extras = {"knn_kring_100kq": t_100k}
@@ -230,13 +223,11 @@ def main() -> None:
 
     # storage-layout kNN (round-3 VERDICT item 7): write the cell-bucketed
     # layout ONCE (unmeasured — it is part of the table's storage, like an
-    # Iceberg bucket transform), then a 5000-query batch rides the
-    # pre-assigned cell column — compare with knn_kring_5000q above, which
-    # pays the per-call assignment + occupancy probe.  The layout res MUST
-    # come from the occupancy rule: a res-8 layout on this dense city
-    # holds 3*10^5 points in one cell and wedges the ring join.
-    from osmspark.operators.knn import occupancy_res
-    from osmspark.plans.layout import ensure_cell_bucketed
+    # Iceberg bucket transform), then run a 5000-query batch over the
+    # layout's cell-clustered partitions — compare with knn_kring_5000q
+    # above, which reads the snapshot's own partitions.  The layout res
+    # comes from the occupancy rule.
+    from osmspark.plans.layout import ensure_cell_bucketed, occupancy_res
 
     layout_res = occupancy_res(nodes.select("id", "lat", "lon"), 8, k=10)
     lnodes = ensure_cell_bucketed(nodes.select("id", "lat", "lon"),
@@ -250,9 +241,7 @@ def main() -> None:
         F.col("id").alias("query_id"), "lat", "lon")
 
     def q_knn_layout_5k():
-        return knn_kring(lnodes, layout_qs, k=10, res=layout_res,
-                         points_cell_col="cell", n_points=n_nodes,
-                         n_queries=5000).count()
+        return knn_kring(lnodes, layout_qs, k=10).count()
 
     # best-of-2 for the cheap extras: a single shot right after the 100k
     # kNN run can catch its GC shadow (observed: 15.6 s one-shot vs 8.1 s

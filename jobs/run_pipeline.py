@@ -87,13 +87,12 @@ def main() -> None:
     )
 
     # M6 storage layout: nodes written partitioned by bounded cell bucket
-    # (the parquet stand-in for Iceberg bucket(N, cell)); downstream kNN
-    # batches read the pre-assigned cell column and skip the per-call
-    # assignment scan entirely (knn_kring points_cell_col).  Local-fs
-    # _SUCCESS marker makes the write resumable in the sandbox demo; on a
-    # real cluster the Iceberg catalog owns this stage's idempotency.
-    from osmspark.operators.knn import knn_kring, occupancy_res
-    from osmspark.plans.layout import ensure_cell_bucketed
+    # (the parquet stand-in for Iceberg bucket(N, cell)), then a kNN batch
+    # over the layout's cell-clustered partitions.  Local-fs _SUCCESS
+    # marker makes the write resumable in the sandbox demo; on a real
+    # cluster the Iceberg catalog owns this stage's idempotency.
+    from osmspark.operators.knn import knn_kring
+    from osmspark.plans.layout import ensure_cell_bucketed, occupancy_res
 
     layout_res = occupancy_res(nodes.select("id", "lat", "lon"), 8, k=10)
     layout_nodes = ensure_cell_bucketed(
@@ -106,10 +105,7 @@ def main() -> None:
             layout_nodes,
             layout_nodes.limit(200).select(
                 F.col("id").alias("query_id"), "lat", "lon"),
-            k=5, res=layout_res, points_cell_col="cell",
-            # a 200-query batch is under the map-side path's cap; keep it on
-            # the ring loop that reads the layout's cell column
-            brute_cost_cap=0, n_queries=200,
+            k=5,
         ),
         inputs=[f"layout:nodes_cell_bucketed_r{layout_res}"],
     )

@@ -188,23 +188,6 @@ FACE_AXES = np.array([
 MAX_COVER_M = 200_000.0
 
 
-def measured_radius_m(cells: np.ndarray) -> np.ndarray:
-    """Local hex circumradius in meters, measured from each cell's actual
-    ring-1 neighbor spacing (spacing s = sqrt(3)*R) — exact local gnomonic
-    scale, valid at face edges (knn._radius_m_udf wraps this)."""
-    ring1 = kring(np.asarray(cells, dtype=np.int64), 1)  # (n, 7), col 0 = self
-    la, lo = cell_center_latlon(ring1.ravel())
-    la = la.reshape(ring1.shape)
-    lo = lo.reshape(ring1.shape)
-    spacing = haversine_np(
-        np.repeat(la[:, :1], 6, axis=1),
-        np.repeat(lo[:, :1], 6, axis=1),
-        la[:, 1:],
-        lo[:, 1:],
-    ).min(axis=1)
-    return spacing / _SQRT3
-
-
 @functools.lru_cache(maxsize=None)
 def face_neighbor(f: int, side: str) -> int:
     """The cube face across one boundary of face `f`'s uv square
@@ -240,7 +223,7 @@ def _uv_on_face(f: int, x, y, z):
 # gnomonic projection maps geodesics to straight uv lines.  The projection
 # Jacobian's Gram matrix at (u, v) is 1/n^4 * [[1+v^2, -uv], [-uv, 1+u^2]]
 # with n^2 = 1 + u^2 + v^2, whose eigenvalues are exactly 1/n^2 and 1/n^4 —
-# so meters-per-uv lies in [R_e/n^2, R_e/n].  Two exact consequences:
+# so meters-per-uv lies in [R_e/n^2, R_e/n].  The exact consequence:
 #
 #  * ring_count_uv: a geodesic of length L meters starting at (u, v)
 #    cannot leave a uv box of half-width e before spending its length
@@ -257,8 +240,6 @@ def _uv_on_face(f: int, x, y, z):
 #    own cell).  This holds for arbitrary unclipped (u, v) — the
 #    neighbor-face anchor calls near cube corners included — unlike a
 #    fixed n^2 <= 3 seed, which is only valid on-face.
-#  * claim_m: conversely kring(k) provably contains every point within
-#    (1.5k - 1) * r_uv * R_e / n_max^2 meters — the kNN doneness claim.
 #
 # n_max^2 is evaluated over the relevant uv disk; for home-face calls the
 # reachable points all lie inside the face square so |u|,|v| clip at 1,
@@ -301,15 +282,6 @@ def ring_count_uv(cover_m, u, v, res: int, clip: bool = True):
     e_uv = c * _n2_max(u, v, e_star, clip)     # <= e*, still self-consistent
     k = np.ceil((e_uv / r_uv + 1.0) / 1.5)
     return np.maximum(k.astype(np.int64), 1)
-
-
-def claim_m(u, v, rings, res: int, clip: bool = True):
-    """Meters provably covered by kring(rings) around the cell containing
-    uv point (u, v) — the doneness claim dual of ring_count_uv
-    (vectorized)."""
-    r_uv = RES0_R / (SQRT7 ** res)
-    e_uv = (1.5 * np.asarray(rings, dtype=np.float64) - 1.0) * r_uv
-    return e_uv * EARTH_RADIUS_M / _n2_max(u, v, e_uv, clip)
 
 
 def _spill_sides(u, v, ext):
@@ -368,27 +340,9 @@ def disk_cells(lats, lons, cover_m, res: int, max_ring: int | None = None):
     return _multiface_rings(home, x, y, z, rings, cover, res, max_ring)
 
 
-def kring_spill(cells, lats, lons, rings, covered_m, res: int,
-                max_ring: int | None = None):
-    """Seam-exact k-ring with a CALLER-CHOSEN home ring count: home-face
-    kring(rings[i]) exactly as `kring` (the kNN round loop's doubling
-    schedule keeps its cell economics), plus neighbor-face anchor rings
-    covering `covered_m[i]` meters wherever the padded home ring spills
-    over a face boundary.  `covered_m` must not exceed what the home ring
-    provably covers — `claim_m(u, v, rings, res)`, which the kNN loop
-    uses as its doneness claim."""
-    cells = np.asarray(cells, dtype=np.int64)
-    lats = np.asarray(lats, dtype=np.float64)
-    lons = np.asarray(lons, dtype=np.float64)
-    rings = np.asarray(rings, dtype=np.int64)
-    covered = np.asarray(covered_m, dtype=np.float64)
-    x, y, z = latlon_to_xyz(lats, lons)
-    return _multiface_rings(cells, x, y, z, rings, covered, res, max_ring)
-
-
 def _multiface_rings(home, x, y, z, rings, cover, res: int,
                      max_ring: int | None):
-    """Shared core of disk_cells / kring_spill: home rings + spill BFS."""
+    """disk_cells' core: home rings + spill BFS."""
     hface = ((home >> 56) & 0x7).astype(np.int64)
 
     out: list = [None] * len(home)
@@ -557,39 +511,6 @@ def disk_cells_flagged_udf(res: int, max_ring: int | None = None):
         return pd.Series(cells)
 
     return hex_disk_flagged
-
-
-def kring_spill_udf(res: int, max_ring: int | None = None):
-    """Arrow pandas UDF: (cell, lat, lon, ring, covered_m) -> array<long>
-    seam-exact k-ring (kring_spill over the batch) — the kNN round loop's
-    candidate generator."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def hex_kring_spill(cell: pd.Series, lat: pd.Series, lon: pd.Series,
-                        ring: pd.Series, covered: pd.Series) -> pd.Series:
-        cells = kring_spill(cell.to_numpy(), lat.to_numpy(), lon.to_numpy(),
-                            ring.to_numpy(), covered.to_numpy(), res,
-                            max_ring=max_ring)
-        return pd.Series(cells)
-
-    return hex_kring_spill
-
-
-def claim_m_udf(res: int):
-    """Arrow pandas UDF: (lat, lon, ring) -> meters provably covered by
-    kring(ring) around the point's home cell (`claim_m` over the batch) —
-    the kNN doneness claim, exact at face edges."""
-
-    @F.pandas_udf(T.DoubleType())
-    def hex_claim_m(lat: pd.Series, lon: pd.Series, ring: pd.Series) -> pd.Series:
-        la = lat.to_numpy()
-        lo = lon.to_numpy()
-        x, y, z = latlon_to_xyz(la, lo)
-        face, _, _ = xyz_to_face_uv(x, y, z)
-        u, v = _uv_on_face_batch(face.astype(np.int64), x, y, z)
-        return pd.Series(claim_m(u, v, ring.to_numpy(), res))
-
-    return hex_claim_m
 
 
 # --- Spark surface ---------------------------------------------------------

@@ -189,8 +189,7 @@ def with_segment_cover(
     """Write-once cover column for a segment LAYOUT: compute the sampled
     disk cover one time (e.g. before parquet write); the intersection and
     zonal-length joins accept it via their `cells_col` knobs and skip the
-    cover UDF entirely at query time — the storage-layout pattern the kNN
-    path established (knn_kring's points_cell_col)."""
+    cover UDF entirely at query time (the storage-layout pattern)."""
     step = _step_deg(res) if step_deg is None else float(step_deg)
     cov = segment_cover_udf(res, step, max_samples, buffer_m=buffer_m)
     return segs.withColumn(
@@ -200,10 +199,10 @@ def with_segment_cover(
 
 
 def _validate_cells_col(df: DataFrame, cells_col: str, res: int) -> None:
-    """One cheap driver probe (the knn points_cell_col convention): a
-    cover column built at a different res would silently match NOTHING
-    through the equi-join — the engine's forbidden failure mode — so the
-    packed res bits of the first probe cell are checked loudly."""
+    """One cheap probe on the Spark driver: a cover column built at a
+    different res would silently match NOTHING through the equi-join —
+    the engine's forbidden failure mode — so the packed res bits of the
+    first probe cell are checked loudly."""
     probe = df.select(cells_col).first()
     if probe is None or not probe[cells_col]:
         return

@@ -13,14 +13,18 @@ This is the parquet stand-in for Iceberg `bucket(N, cell)` partition
 transforms (no Iceberg jar in-sandbox — SURVEY §7.0); the API is the same
 shape so a real catalog can slot in.
 
-Choosing `res`: use `operators.knn.occupancy_res(points, base_res, k)` —
-the layout must be at least as fine as the data density demands, or every
-kNN ring join against the pinned cell column degenerates into hot-cell
-scans (a res-8 layout on the dense bench city puts 3*10^5 points in one
-cell; the occupancy rule picks res 12 with ~10^2).
+Choosing `res`: use `occupancy_res(points, base_res, k)` — the layout
+should be at least as fine as the data density demands, or a cell read
+(`read_cells`, `read_neighborhood`) lands on hot cells that hold a city
+block's worth of rows (a res-8 layout on the dense bench city puts 3*10^5
+points in one cell; the occupancy rule picks res 12 with ~10^2).  kNN
+does not read the cell column: `knn_kring` indexes each partition's
+points itself.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,6 +32,39 @@ from pyspark.sql import functions as F
 from ..functions.hexgrid import latlon_to_cell, with_hex_cell
 
 DEFAULT_BUCKETS = 64
+
+
+def occupancy_res(
+    points: DataFrame,
+    res: int = 8,
+    k: int = 10,
+    point_id: str = "id",
+    lat: str = "lat",
+    lon: str = "lon",
+    probe_mod: int = 16,
+) -> int:
+    """The layout resolution for `points`: refine from `res` until the
+    hottest cell holds O(k) points (estimated on a 1/probe_mod
+    hash-sample; the Spark driver sees ONE max-occupancy scalar).
+    Measured: res 8 on the dense bench city holds 3*10^5 points in one
+    cell; res 12, which this rule picks, holds ~10^2."""
+    target_occ = max(32, 2 * k)
+    pts = with_hex_cell(
+        points.select(F.col(point_id).alias("__pid"),
+                      F.col(lat).alias("__lat"), F.col(lon).alias("__lon")),
+        res, lat="__lat", lon="__lon", out_col="__cell",
+    )
+    probe_max = (
+        pts.filter(F.pmod(F.xxhash64("__pid"), F.lit(probe_mod)) == 0)
+        .groupBy("__cell").agg(F.count("*").alias("cnt"))
+        .agg(F.max("cnt")).collect()[0][0] or 0
+    )
+    max_occ_est = probe_max * probe_mod
+    if max_occ_est > 4 * target_occ:
+        steps = min(int(math.ceil(math.log(max_occ_est / target_occ, 7))),
+                    15 - res)
+        res = res + max(steps, 0)
+    return res
 
 
 def bucket_of(cell_col, n_buckets: int = DEFAULT_BUCKETS):

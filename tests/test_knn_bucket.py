@@ -1,12 +1,13 @@
-"""knn_kring's map-side path (n_queries * n_points <= brute_cost_cap) against
-the knn_bruteforce oracle: query ids, ranks, point ids and dists compared
-exactly, on the cases where a partition-local float selection could go
-wrong, plus the dispatch edges around it."""
+"""knn_kring against the knn_bruteforce oracle: query ids, ranks, point ids
+and dists compared exactly, on the cases where a partition-local float
+selection could go wrong, plus the block kernel and query chunking behind
+it."""
 
 import math
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from osmspark.functions.geo import haversine_np
 from osmspark.operators import knn
@@ -22,8 +23,7 @@ def _rows(df):
 
 def _assert_equals_oracle(pts, qs, k, metric="haversine"):
     want = _rows(knn.knn_bruteforce(pts, qs, k, metric=metric))
-    got = _rows(knn.knn_kring(pts, qs, k, metric=metric,
-                              brute_cost_cap=math.inf))
+    got = _rows(knn.knn_kring(pts, qs, k, metric=metric))
     assert got == want
     return want
 
@@ -181,22 +181,13 @@ def test_map_side_long_ids(spark):
 
 
 def test_map_side_batch_over_map_queries_runs_ring(monkeypatch, spark):
-    """A batch with more than MAP_QUERIES rows takes the ring loop without
-    counting the points, and is still exact."""
+    """A batch with more than MAP_QUERIES rows runs one map-side pass per
+    query chunk, is still exact, and never counts the points."""
     monkeypatch.setattr(knn, "MAP_QUERIES", 3)
     pts = _grid_points(spark, 50)
     counted = _calls(monkeypatch, pts, "count")
     assert len(_assert_equals_oracle(pts, _grid_queries(spark, 5), 4)) == 20
     assert not any(df is pts for df in counted)
-
-
-def test_map_side_cap_zero_runs_ring_without_fetch(monkeypatch, spark):
-    pts = _grid_points(spark, 50)
-    qs = _grid_queries(spark, 5)
-    fetched = _calls(monkeypatch, qs, "toArrow")
-    want = _rows(knn.knn_bruteforce(pts, qs, 4))
-    assert _rows(knn.knn_kring(pts, qs, 4, brute_cost_cap=0)) == want
-    assert fetched == []
 
 
 def _full_partition_candidates(qlat, qlon, plat, plon, k, metric):
@@ -278,3 +269,122 @@ def test_bucket_candidates_equal_full_partition_kernel(monkeypatch, metric,
             d = (qlat[q] - plat) ** 2 + (qlon[q] - plon) ** 2
         kept = {j for i, j in want if i == q}
         assert set(np.lexsort((np.arange(n), d))[:k].tolist()) <= kept
+
+
+def _kernel_sets(qlat, qlon, plat, plon, k, metric):
+    """(block kernel set, full-scan kernel set, block kernel re-run on its
+    own kept points per query) as sets of (query, point) pairs."""
+    qi, pj = knn._partition_candidates(qlat, qlon, plat, plon, k, metric)
+    kept = set(zip(qi.tolist(), pj.tolist()))
+    fi, fj = knn._bucket_candidates(qlat, qlon, plat, plon, k, metric)
+    full = set(zip(fi.tolist(), fj.tolist()))
+    trimmed = set()
+    for q in range(len(qlat)):
+        own = np.array(sorted(j for i, j in kept if i == q), dtype=np.int64)
+        _, tj = knn._bucket_candidates(qlat[q:q + 1], qlon[q:q + 1],
+                                       plat[own], plon[own], k, metric)
+        trimmed |= {(q, int(j)) for j in own[tj]}
+    return kept, full, trimmed
+
+
+def _exact_top_k(qlat, qlon, plat, plon, k, metric):
+    out = set()
+    for q in range(len(qlat)):
+        if metric == "haversine":
+            d = haversine_np(qlat[q], qlon[q], plat, plon)
+        else:
+            d = (qlat[q] - plat) ** 2 + (qlon[q] - plon) ** 2
+        out |= {(q, int(j)) for j in np.lexsort((np.arange(len(d)), d))[:k]}
+    return out
+
+
+def _binary_grid(rng, n, nq):
+    """Coordinates on a 1/64-degree grid: runs of exact sq_deg ties, and
+    a duplicate run longer than several blocks."""
+    plat = 1.25 + rng.integers(0, 12, n) / 64
+    plon = 103.75 + rng.integers(0, 12, n) / 64
+    d = min(70, n - 1)
+    plat[:d], plon[:d] = plat[d], plon[d]
+    qlat = 1.25 + rng.integers(0, 12, nq) / 64
+    qlon = 103.75 + rng.integers(0, 12, nq) / 64
+    qlat[0], qlon[0] = plat[d], plon[d]
+    return qlat, qlon, plat, plon
+
+
+def _antimeridian_and_pole(rng, n, nq):
+    """Points on both sides of lon = +-180 and around the north pole,
+    queries among them and at the pole itself."""
+    h = n // 2
+    plat = np.concatenate([rng.uniform(-1, 1, h), rng.uniform(89, 90, n - h)])
+    plon = np.concatenate([rng.uniform(178.5, 181.5, h),
+                           rng.uniform(-180, 180, n - h)])
+    plon = (plon + 180.0) % 360.0 - 180.0
+    qlat = np.array([0.0, 0.3, -0.5, 90.0, 89.9, 89.5, 89.99])
+    qlon = np.array([180.0, -179.9, 179.95, 0.0, 45.0, -170.0, 179.0])
+    return qlat[:nq], qlon[:nq], plat, plon
+
+
+@pytest.mark.parametrize("metric", ["haversine", "sq_deg"])
+@pytest.mark.parametrize("case,k,n", [
+    ("grid", 5, 400),        # ties and duplicates across 16-point blocks
+    ("grid", 40, 400),       # k greater than the block size
+    ("grid", 7, 5),          # fewer points than k
+    ("globe", 6, 600),       # antimeridian and pole
+])
+def test_partition_candidates_equal_full_scan(monkeypatch, metric, case, k,
+                                              n):
+    """With 16-point blocks the block kernel keeps a superset of each
+    query's exact top-k and of the full-scan kernel's set, and trimming
+    its kept points back to the tie margin gives exactly that set."""
+    monkeypatch.setattr(knn, "_BLOCK_PTS", 16)
+    rng = np.random.default_rng(23)
+    make = _binary_grid if case == "grid" else _antimeridian_and_pole
+    qlat, qlon, plat, plon = make(rng, n, 9)
+    kept, full, trimmed = _kernel_sets(qlat, qlon, plat, plon, k, metric)
+    assert _exact_top_k(qlat, qlon, plat, plon, k, metric) <= full <= kept
+    assert trimmed == full
+    if case == "grid" and n > k:
+        # every query has ties at its k-th somewhere in the kept set
+        assert len(full) > len(qlat) * k
+
+
+def test_partition_candidates_prune_blocks(monkeypatch):
+    """The block kernel scores a small share of the (query, point) pairs
+    a full scan would, and keeps about k candidates per query."""
+    monkeypatch.setattr(knn, "_BLOCK_PTS", 16)
+    rng = np.random.default_rng(29)
+    plat = 1.3 + rng.uniform(0, 0.1, 4000)
+    plon = 103.8 + rng.uniform(0, 0.1, 4000)
+    qlat, qlon = plat[:300] + 1e-4, plon[:300]
+    scored = []
+    bucket = knn._bucket_candidates
+
+    def counting(qa, qo, pa, po, *a):
+        scored.append(len(qa) * len(pa))
+        return bucket(qa, qo, pa, po, *a)
+
+    monkeypatch.setattr(knn, "_bucket_candidates", counting)
+    qi, _ = knn._partition_candidates(qlat, qlon, plat, plon, 5, "haversine")
+    assert sum(scored) < 300 * 4000 / 20
+    assert len(qi) < 300 * 5 * 2
+
+
+@pytest.mark.parametrize("metric", ["haversine", "sq_deg"])
+def test_antimeridian_and_pole_equal_oracle(spark, metric):
+    """Points straddling lon = +-180 and around the north pole, 3000 per
+    partition so each partition's kernel runs its blocks."""
+    n = 24_000
+    r = F.rand(7)
+    side = F.col("id") % 2 == 0
+    pts = spark.range(n, numPartitions=8).select(
+        F.col("id").cast("string").alias("id"),
+        F.when(side, r * 2 - 1).otherwise(89 + r).alias("lat"),
+        F.when(side, F.pmod(F.rand(8) * 3 + 358.5, 360) - 180)
+        .otherwise(F.rand(8) * 360 - 180).alias("lon"),
+    ).cache()
+    qs = spark.createDataFrame(
+        [("am0", 0.0, 180.0), ("am1", 0.3, -179.9), ("am2", -0.5, 179.95),
+         ("np", 90.0, 0.0), ("p1", 89.9, 45.0), ("p2", 89.5, -170.0)], QS)
+    want = _assert_equals_oracle(pts, qs, 10, metric)
+    assert len(want) == 60
+    pts.unpersist()

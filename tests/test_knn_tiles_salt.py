@@ -1,17 +1,11 @@
-"""B5 kNN (k-ring == brute force), B6 tiles (pandas path == native path),
-B7 salting (salted == unsalted)."""
-
-import math
+"""B5 kNN (knn_kring == brute force), B6 tiles (pandas path == native
+path), B7 salting (salted == unsalted)."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from osmspark.operators import knn, salt, tiles
-
-# both sides of knn_kring's cost cap: 0 forces the k-ring loop, inf the
-# map-side path, so every kNN case below checks both
-CAPS = (0, math.inf)
 
 
 @pytest.fixture(scope="module")
@@ -21,45 +15,29 @@ def queries(spark):
     return spark.createDataFrame(pts, "query_id string, lat double, lon double")
 
 
+def _rows(df):
+    return sorted((r["query_id"], r["rank"], r["point_id"], r["dist"])
+                  for r in df.collect())
+
+
+def _assert_equals_oracle(pts, qs, k):
+    want = _rows(knn.knn_bruteforce(pts, qs, k))
+    assert _rows(knn.knn_kring(pts, qs, k)) == want
+    return want
+
+
 def test_knn_kring_equals_bruteforce(nodes, queries):
     pts = nodes.select("id", "lat", "lon")
-    bf = {(r["query_id"], r["rank"]): (r["point_id"], round(r["dist"], 6))
-          for r in knn.knn_bruteforce(pts, queries, k=10).collect()}
-    for cap in CAPS:
-        kr = {(r["query_id"], r["rank"]): (r["point_id"], round(r["dist"], 6))
-              for r in knn.knn_kring(pts, queries, k=10, res=8,
-                                     brute_cost_cap=cap).collect()}
-        assert kr == bf, cap
-    assert len(bf) == 50
-
-
-def test_knn_auto_dispatch(nodes, queries):
-    """knn_kring must return identical results on BOTH sides of its cost
-    threshold (map-side path below, k-ring above) — the dispatch is a pure
-    physical-path choice, never a semantic one."""
-    pts = nodes.select("id", "lat", "lon")
-    lo = {(r["query_id"], r["rank"]): r["point_id"]
-          for r in knn.knn_kring(pts, queries, k=10,
-                                 brute_cost_cap=1e12).collect()}
-    hi = {(r["query_id"], r["rank"]): r["point_id"]
-          for r in knn.knn_kring(pts, queries, k=10, brute_cost_cap=0,
-                                 res=8).collect()}
-    assert lo == hi and len(lo) == 50
+    assert len(_assert_equals_oracle(pts, queries, 10)) == 50
 
 
 def test_knn_kring_sparse_region(spark, nodes, queries):
-    """Queries far from the data still converge (ring expansion path)."""
+    """A query far from every point still gets its exact top-k."""
     far = spark.createDataFrame(
         [("far0", 1.70, 103.55)], "query_id string, lat double, lon double"
     )
     pts = nodes.select("id", "lat", "lon")
-    bf = {(r["query_id"], r["rank"]): r["point_id"]
-          for r in knn.knn_bruteforce(pts, far, k=5).collect()}
-    for cap in CAPS:
-        kr = {(r["query_id"], r["rank"]): r["point_id"]
-              for r in knn.knn_kring(pts, far, k=5, res=8,
-                                     brute_cost_cap=cap).collect()}
-        assert kr == bf, cap
+    assert len(_assert_equals_oracle(pts, far, 5)) == 5
 
 
 def test_knn_fewer_points_than_k(spark):
@@ -69,49 +47,21 @@ def test_knn_fewer_points_than_k(spark):
     )
     q = spark.createDataFrame([("q", 1.29, 103.85)],
                               "query_id string, lat double, lon double")
-    for cap in CAPS:
-        got = knn.knn_kring(pts, q, k=5, res=8, brute_cost_cap=cap).collect()
-        assert {r["point_id"] for r in got} == {"a", "b"}, cap
+    got = _assert_equals_oracle(pts, q, 5)
+    assert {r[2] for r in got} == {"a", "b"}
 
 
 def test_knn_dispatch_skips_points_count_over_cap(monkeypatch, nodes,
                                                   queries):
-    """When n_queries alone exceeds the cap, no points count can bring the
-    pair count under it: the dispatch goes to the ring loop without
-    counting the points."""
+    """knn_kring never counts the points: they are read in place by the
+    map-side pass, whatever the batch size."""
     pts = nodes.select("id", "lat", "lon")
     counted = []
     count = type(pts).count
     monkeypatch.setattr(type(pts), "count",
                         lambda df: counted.append(df) or count(df))
-    bf = {(r["query_id"], r["rank"]): r["point_id"]
-          for r in knn.knn_bruteforce(pts, queries, k=10).collect()}
-    kr = {(r["query_id"], r["rank"]): r["point_id"]
-          for r in knn.knn_kring(pts, queries, k=10, res=8,
-                                 brute_cost_cap=4).collect()}
-    assert kr == bf
+    _assert_equals_oracle(pts, queries, 10)
     assert not any(df is pts for df in counted)
-
-
-def test_knn_ring_count_table_join_without_broadcast(monkeypatch, nodes,
-                                                    queries):
-    """Above BROADCAST_CAND_ROWS base-res cells the ring loop joins the
-    density table without a broadcast hint; with the threshold at 0 it
-    takes that join on the self-assigning and the pinned-layout path and
-    still equals brute force."""
-    from osmspark.functions.hexgrid import with_hex_cell
-
-    pts = nodes.select("id", "lat", "lon")
-    bf = {(r["query_id"], r["rank"]): r["point_id"]
-          for r in knn.knn_bruteforce(pts, queries, k=10).collect()}
-    monkeypatch.setattr(knn, "BROADCAST_CAND_ROWS", 0)
-    own = knn.knn_kring(pts, queries, k=10, res=8, brute_cost_cap=0)
-    pinned = knn.knn_kring(
-        with_hex_cell(pts, 9, out_col="cell_r9"), queries, k=10, res=9,
-        points_cell_col="cell_r9", brute_cost_cap=0)
-    for df in (own, pinned):
-        assert {(r["query_id"], r["rank"]): r["point_id"]
-                for r in df.collect()} == bf
 
 
 def test_tile_assignment_bounds(nodes):
@@ -178,37 +128,18 @@ def test_salted_group_count_equals_plain(nodes):
 
 
 def test_knn_preindexed_points(nodes, queries):
-    """points_cell_col (the storage-layout path: cell pre-materialized at
-    a pinned res) must produce the same result as the self-assigning path
-    and as brute force."""
+    """Points laid out by cell (the storage-layout path: rows
+    repartitioned on a pre-materialized cell column, so partitions are
+    spatially disjoint and most hold none of a query's neighbors) give
+    the same result as brute force."""
     from osmspark.functions.hexgrid import with_hex_cell
 
     pts = with_hex_cell(nodes.select("id", "lat", "lon"), 9,
-                        out_col="cell_r9")
-    bf = {(r["query_id"], r["rank"]): r["point_id"]
-          for r in knn.knn_bruteforce(
-              nodes.select("id", "lat", "lon"), queries, k=10).collect()}
-    for cap in CAPS:
-        pre = {(r["query_id"], r["rank"]): r["point_id"]
-               for r in knn.knn_kring(pts, queries, k=10, res=9,
-                                      points_cell_col="cell_r9",
-                                      brute_cost_cap=cap).collect()}
-        assert pre == bf, cap
-    assert len(bf) == 50
-
-
-def test_knn_preindexed_wrong_res_raises(nodes, queries):
-    """A layout cell column pinned at the WRONG resolution must fail
-    loudly (round-3 ADVICE: it used to silently empty every candidate
-    join and push all queries through the brute-force fallback)."""
-    import pytest as _pytest
-    from osmspark.functions.hexgrid import with_hex_cell
-
-    pts = with_hex_cell(nodes.select("id", "lat", "lon"), 8,
-                        out_col="cell_r8")
-    with _pytest.raises(ValueError, match="res=9"):
-        knn.knn_kring(pts, queries, k=10, res=9,
-                      points_cell_col="cell_r8").collect()
+                        out_col="cell_r9").repartition(8, "cell_r9")
+    want = _rows(knn.knn_bruteforce(nodes.select("id", "lat", "lon"),
+                                    queries, 10))
+    assert _rows(knn.knn_kring(pts, queries, 10)) == want
+    assert len(want) == 50
 
 
 def test_vectorize_raster_components(spark):

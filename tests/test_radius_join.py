@@ -188,12 +188,12 @@ def test_radius_brute_rejects_nonpositive(spark, nodes, queries):
 
 
 def test_auto_dispatch_count_hints_run_no_jobs(spark):
-    """n_points/n_queries hints must keep the dispatchers from executing
-    derived inputs redundantly (round-5 VERDICT item 6): a poisoned
-    upstream raises iff the dispatcher executes it.  kNN's map-side path
-    reads the query rows while it builds the plan, so there the contract
-    is: nothing runs on the points at call time, and a derived query
-    frame's upstream runs exactly once across the call and the collect."""
+    """n_points/n_queries hints must keep the radius dispatcher from
+    executing derived inputs redundantly (round-5 VERDICT item 6): a
+    poisoned upstream raises iff the dispatcher executes it.  kNN reads
+    the query rows while it builds the plan and needs no hints: nothing
+    runs on the points at call time, and a derived query frame's
+    upstream runs exactly once across the call and the collect."""
     from osmspark.operators.knn import knn_kring
 
     def poisoned(df):
@@ -214,28 +214,24 @@ def test_auto_dispatch_count_hints_run_no_jobs(spark):
     # without hints: the count-stars execute the poisoned upstream
     with pytest.raises(Exception, match="upstream executed"):
         rj.within_distance_auto(ppts, pqs, 1000.0)
-    with pytest.raises(Exception, match="upstream executed"):
-        knn_kring(ppts, pqs, k=1)
     # with hints: dispatch is pure plan building — no job runs (the
     # poisoned plans would raise on ANY action)
     rj.within_distance_auto(ppts, pqs, 1000.0, n_points=1, n_queries=1)
-    knn_kring(ppts, qs, k=1, n_points=1, n_queries=1)
+    # kNN builds its plan without running the points, hints or not
+    knn_kring(ppts, qs, k=1)
     # hinted dispatch still returns correct results on real inputs,
     # brute (tiny hints) and cell (huge hints) path alike
     for npts, nq in ((1, 1), (10**9, 10**6)):
         rows = rj.within_distance_auto(
             pts, qs, 1000.0, n_points=npts, n_queries=nq).collect()
         assert [(r["query_id"], r["point_id"]) for r in rows] == [("q0", "p0")]
-    for hints in ({}, {"n_points": 1, "n_queries": 1}):
-        rows_seen = spark.sparkContext.accumulator(0)
+    rows_seen = spark.sparkContext.accumulator(0)
 
-        def counted(it, rows_seen=rows_seen):
-            for b in it:
-                rows_seen.add(len(b))
-                yield b
+    def counted(it):
+        for b in it:
+            rows_seen.add(len(b))
+            yield b
 
-        krows = knn_kring(pts, qs.mapInPandas(counted, qs.schema), k=1,
-                          **hints).collect()
-        assert rows_seen.value == 1, hints
-        assert [(r["query_id"], r["point_id"])
-                for r in krows] == [("q0", "p0")], hints
+    krows = knn_kring(pts, qs.mapInPandas(counted, qs.schema), k=1).collect()
+    assert rows_seen.value == 1
+    assert [(r["query_id"], r["point_id"]) for r in krows] == [("q0", "p0")]

@@ -2,13 +2,11 @@
 
 The hex k-ring is exact only in its home face's axial frame; points across
 a face seam live on a neighbor face with different cell ids.  These tests
-pin the multi-face disk cover (`hexgrid.disk_cells` / `kring_spill`) and
-its lifts into the radius join and kNN against brute force on corpora that
-straddle a face seam (lon=45, faces 0/1) and a cube corner
-(lat=35.2644, lon=45 — faces 0/1/2 meet).
+pin the multi-face disk cover (`hexgrid.disk_cells`) and check the radius
+join and kNN against brute force on corpora that straddle a face seam
+(lon=45, faces 0/1) and a cube corner (lat=35.2644, lon=45 — faces 0/1/2
+meet).
 """
-
-import math
 
 import numpy as np
 import pytest
@@ -63,24 +61,17 @@ def test_disk_cells_interior_matches_plain_kring():
 
 
 def test_claim_and_cover_globewide():
-    """Globe-wide property check of the uv-exact bounds: at random query
-    positions (incl. poles, face corners), every point within claim_m of
-    the query is inside kring_spill, and every point within the cover
-    radius is inside disk_cells."""
+    """Globe-wide property check of the uv-exact cover bound: at random
+    query positions (incl. poles, face corners) and cover radii, every
+    point within the cover radius is inside disk_cells."""
     rng = np.random.default_rng(17)
     qlat = np.degrees(np.arcsin(rng.uniform(-1, 1, 25)))
     qlon = rng.uniform(-180, 180, 25)
     res = 7
-    home = hexgrid.latlon_to_cell(qlat, qlon, res)
-    x, y, z = hexgrid.latlon_to_xyz(qlat, qlon)
-    u, v = hexgrid._uv_on_face_batch((home >> 56) & 0x7, x, y, z)
-    ring = rng.integers(1, 12, 25)
-    covered = hexgrid.claim_m(u, v, ring, res)
-    assert np.all(covered > 0)
-    cand_k = hexgrid.kring_spill(home, qlat, qlon, ring, covered, res)
+    covered = rng.uniform(500.0, 20_000.0, 25)
     cand_d = hexgrid.disk_cells(qlat, qlon, covered, res)
     for j in range(25):
-        # dense points inside the claim disk of query j (uniform in disk)
+        # dense points inside the cover disk of query j (uniform in disk)
         t = rng.uniform(0, 2 * np.pi, 400)
         rr = covered[j] * np.sqrt(rng.uniform(0, 1, 400))
         dlat = np.degrees(rr / 6371008.8)
@@ -92,37 +83,14 @@ def test_claim_and_cover_globewide():
                          plat, plon)
         inside = d <= covered[j]
         pc = hexgrid.latlon_to_cell(plat[inside], plon[inside], res)
-        for cand in (cand_k[j], cand_d[j]):
-            cs = set(cand.tolist())
-            missed = [c for c in pc.tolist() if c not in cs]
-            assert not missed, (j, qlat[j], qlon[j], len(missed))
+        cs = set(cand_d[j].tolist())
+        missed = [c for c in pc.tolist() if c not in cs]
+        assert not missed, (j, qlat[j], qlon[j], len(missed))
 
 
 def test_disk_cells_cover_cap_raises():
     with pytest.raises(ValueError, match="MAX_COVER_M"):
         hexgrid.disk_cells([0.0], [10.0], [hexgrid.MAX_COVER_M * 1.5], 8)
-
-
-def test_kring_spill_matches_disk_semantics():
-    """kring_spill with the home ring count and the uv-exact claim_m
-    doneness claim reaches every in-claim point across the seam."""
-    rng = np.random.default_rng(5)
-    lat, lon = _corpus(rng, *SEAM, 0.4, 3000)
-    cells = hexgrid.latlon_to_cell(lat, lon, 8)
-    qlat, qlon = _corpus(rng, *SEAM, 0.4, 30)
-    home = hexgrid.latlon_to_cell(qlat, qlon, 8)
-    x, y, z = hexgrid.latlon_to_xyz(qlat, qlon)
-    u, v = hexgrid._uv_on_face_batch((home >> 56) & 0x7, x, y, z)
-    ring = np.full(30, 8, dtype=np.int64)
-    covered = hexgrid.claim_m(u, v, ring, 8)
-    cand = hexgrid.kring_spill(home, qlat, qlon, ring, covered, 8)
-    for j in range(30):
-        d = haversine_np(np.full_like(lat, qlat[j]),
-                         np.full_like(lon, qlon[j]), lat, lon)
-        cs = set(cand[j].tolist())
-        missed = [i for i in np.nonzero(d <= covered[j])[0]
-                  if int(cells[i]) not in cs]
-        assert not missed, (j, len(missed))
 
 
 @pytest.fixture(scope="module")
@@ -165,14 +133,11 @@ def test_knn_seam_equals_brute(seam_frames, which):
     from osmspark.operators import knn
 
     pts, qs = seam_frames[which]
-    want = {(r["query_id"], r["rank"], r["point_id"])
+    want = {(r["query_id"], r["rank"], r["point_id"], r["dist"])
             for r in knn.knn_bruteforce(pts, qs, 5).collect()}
-    # both sides of the cost cap: the k-ring loop (0) and the bucket path
-    for cap in (0, math.inf):
-        got = {(r["query_id"], r["rank"], r["point_id"])
-               for r in knn.knn_kring(pts, qs, 5,
-                                      brute_cost_cap=cap).collect()}
-        assert got == want, cap
+    got = {(r["query_id"], r["rank"], r["point_id"], r["dist"])
+           for r in knn.knn_kring(pts, qs, 5).collect()}
+    assert got == want
 
 
 def test_radius_join_radius_cap_raises(seam_frames):

@@ -37,6 +37,23 @@ def _final(plan: str) -> str:
     return plan.split("== Initial Plan ==")[0]
 
 
+def _subtree(plan: str, node: str) -> list[str]:
+    """The final-plan tree lines of the first `node` and everything below
+    it (lines indented deeper than the node's own name)."""
+    lines = _final(plan).splitlines()
+
+    def col(line):
+        return len(line) - len(line.lstrip(" +-:"))
+
+    i = next(i for i, ln in enumerate(lines) if node in ln)
+    sub = [lines[i]]
+    for ln in lines[i + 1:]:
+        if col(ln) <= col(lines[i]):
+            break
+        sub.append(ln)
+    return sub
+
+
 CHECKS = {
     "ReadSchema pruning": lambda p: "ReadSchema" in p,
     "no row-wise python (BatchEvalPython)": lambda p: "BatchEvalPython" not in p,
@@ -93,6 +110,24 @@ def main() -> None:
          ("cell assignment is native — refine is the ONLY Python node "
           "(one per AQE initial/final tree)",
           lambda p: p.count("+- ArrowEvalPython") <= 2)],
+    )
+    from osmspark.operators.knn import knn_kring
+
+    nodes.select("id", "lat", "lon").repartition(8).write.mode(
+        "overwrite").parquet("/tmp/osmspark-explain-nodes")
+    knn_pts = spark.read.parquet("/tmp/osmspark-explain-nodes")
+    add(
+        "Exact kNN (B5) — one map-side pass over the points' own partitions",
+        knn_kring(knn_pts, knn_pts.limit(50).select(
+            F.col("id").alias("query_id"), "lat", "lon"), k=10),
+        [("points scan feeds MapInArrow with no Exchange below it",
+          lambda p: "Scan parquet" in "".join(_subtree(p, "MapInArrow"))
+          and "Exchange" not in "".join(_subtree(p, "MapInArrow"))),
+         ("no cartesian or nested-loop join",
+          lambda p: "CartesianProduct" not in p
+          and "BroadcastNestedLoopJoin" not in p),
+         ("no per-row Arrow UDF (ArrowEvalPython)",
+          lambda p: "ArrowEvalPython" not in p)],
     )
     from osmspark.functions.hexgrid import with_hex_cell
 

@@ -35,7 +35,7 @@ def build(spark):
     from osmspark.datagen import gen_polygons, gen_vectors
     from osmspark.functions.hexgrid import with_hex_cell
     from osmspark.operators import audit
-    from osmspark.operators.knn import knn_kring, occupancy_res
+    from osmspark.operators.knn import knn_kring
     from osmspark.operators.ngram_lm import score_perplexity, train_ngram_lm
     from osmspark.operators.pq import ivf_pq_index, ivf_pq_topk, train_pq
     from osmspark.operators.radius_join import within_distance_join
@@ -85,7 +85,7 @@ def build(spark):
 
     def knn_n(n):
         qs = pts.limit(n).select(F.col("id").alias("query_id"), "lat", "lon")
-        return knn_kring(pts, qs, k=10, res=8)
+        return knn_kring(pts, qs, k=10)
 
     out["knn_kring_50q"] = lambda: knn_n(50)
     out["knn_kring_5000q"] = lambda: knn_n(5000)
@@ -205,14 +205,13 @@ def build(spark):
     out["ngram_ppl_200kdocs"] = q_ppl
 
     def q_layout():
-        from osmspark.plans.layout import ensure_cell_bucketed
+        from osmspark.plans.layout import ensure_cell_bucketed, occupancy_res
         layout_res = occupancy_res(pts, 8, k=10)
         lnodes = ensure_cell_bucketed(
             pts, f"{B.CACHE_ROOT}/layout_{n_docs}_{cpus}", layout_res)
         layout_qs = nodes.limit(5000).select(
             F.col("id").alias("query_id"), "lat", "lon")
-        return knn_kring(lnodes, layout_qs, k=10, res=layout_res,
-                         points_cell_col="cell")
+        return knn_kring(lnodes, layout_qs, k=10)
 
     out["knn_layout_5000q"] = q_layout
     return out
