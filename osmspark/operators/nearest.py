@@ -12,9 +12,12 @@ equi-joined to the polygon cover cells.  Candidate completeness: if
 dist(P, poly) <= radius there is a polygon point Q within radius of P;
 Q's cell is in the polygon cover (superset guarantee) and in P's disk
 (disk_cells contract) — so the pair always surfaces.  Refine: per
-distinct polygon per Arrow batch (the `_grouped_pip_idx` grouped shape,
-never a per-pair loop), inside => 0 else the min point-to-segment
-distance over the ring edges.
+distinct polygon per Arrow batch (`_poly_dist2` under the shared
+group-by-polygon loop, never a per-pair loop), inside => 0 else the min
+point-to-segment distance over the ring edges.  The distance kernel, not
+PIP membership, decides a boundary point: a point on polygon a's edge
+that the crossing-number rule puts inside its neighbour b answers
+(a, 0.0) here, while `spatial_join` puts it in b only.
 
 Metric is `sq_deg` — distance in the raw lat/lon degree plane, the
 engine's bit-reproducible oracle convention (multiply/subtract/add and
@@ -25,63 +28,48 @@ compose with the radius join's haversine verify.
 
 Scale notes: ONE Arrow disk UDF on the points (the radius-join plan),
 one broadcast cover join, refine + one min-struct aggregate per point —
-two exchanges beyond the scan.  The polygon dim broadcasts by contract.
+two exchanges beyond the scan.  The polygon dim is collected once and
+broadcast by contract, through `spatial_join._PolyDim` — the layer that
+also serves `spatial_join` and the zonal operators.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .spatial_join import (
     DEFAULT_COVER_RES,
     _pip_single_ring,
     _point_segment_dist2,
+    _PolyDim,
 )
-from .zonal import _COVER_SCHEMA, _covers_and_rings
-
-_M_PER_DEG = 111320.0
 
 
-def _grouped_poly_dist(py, px, pidx, rings_list):
-    """Squared degree-plane distance from each point to its candidate
-    polygon: 0 inside, else min over ring edges.  Factorized by dim-row
-    index, one vectorized pass per distinct polygon per batch."""
-    py = np.asarray(py, dtype=np.float64)
-    px = np.asarray(px, dtype=np.float64)
-    out = np.full(len(py), np.inf, dtype=np.float64)
-    codes, uniques = pd.factorize(pidx)
-    order = np.argsort(codes, kind="stable")
-    bounds = np.searchsorted(codes[order], np.arange(len(uniques) + 1))
-    for i, k in enumerate(uniques):
-        idx = order[bounds[i]:bounds[i + 1]]
-        if len(idx) == 0:
-            continue
-        y, x = py[idx], px[idx]
-        inside = np.zeros(len(idx), dtype=bool)
-        d2 = np.full(len(idx), np.inf)
-        for rl, rx in rings_list[k]:
-            # whole-point frame shift to the ring's unwrapped frame (the
-            # zonal_length lesson: per-point mod is membership-safe but
-            # breaks geometry continuity for points just west of the
-            # ring's min lon — distance needs the CONTINUOUS frame)
-            ring_c = (float(rx.min()) + float(rx.max())) / 2.0
-            qx = x + 360.0 * np.round((ring_c - x) / 360.0)
-            inside |= _pip_single_ring(y, qx, rl, rx)
-            d2 = np.minimum(
-                d2,
-                _point_segment_dist2(
-                    qx[:, None], y[:, None],
-                    rx[None, :-1], rl[None, :-1],
-                    rx[None, 1:], rl[None, 1:],
-                ).min(axis=1),
-            )
-        d2[inside] = 0.0
-        out[idx] = d2
-    return out
+def _poly_dist2(py, px, pieces):
+    """Squared degree-plane distance from points to ONE polygon (its
+    split_ring pieces): 0 inside, else the min over ring edges."""
+    inside = np.zeros(len(py), dtype=bool)
+    d2 = np.full(len(py), np.inf)
+    for rl, rx in pieces:
+        # whole-point frame shift to the ring's unwrapped frame (the
+        # zonal_length lesson: per-point mod is membership-safe but
+        # breaks geometry continuity for points just west of the
+        # ring's min lon — distance needs the CONTINUOUS frame)
+        ring_c = (float(rx.min()) + float(rx.max())) / 2.0
+        qx = px + 360.0 * np.round((ring_c - px) / 360.0)
+        inside |= _pip_single_ring(py, qx, rl, rx)
+        d2 = np.minimum(
+            d2,
+            _point_segment_dist2(
+                qx[:, None], py[:, None],
+                rx[None, :-1], rl[None, :-1],
+                rx[None, 1:], rl[None, 1:],
+            ).min(axis=1),
+        )
+    d2[inside] = 0.0
+    return d2
 
 
 def nearest_polygon(
@@ -97,22 +85,14 @@ def nearest_polygon(
     `radius_deg` degrees (degree-plane distance; 0.0 inside).  Points
     with no polygon in range are absent (inner semantics).  Ties break
     deterministically on (dist, poly_id)."""
-    from ..functions import hexgrid
     from .radius_join import query_disk_cells
 
     if radius_deg <= 0:
         raise ValueError("radius_deg must be positive")
     use_res = DEFAULT_COVER_RES if res is None else res
-    spark = points.sparkSession
-    covers, rings_list = _covers_and_rings(polys, use_res)
-    cover_all = F.broadcast(spark.createDataFrame(covers, _COVER_SCHEMA))
-    bc = spark.sparkContext.broadcast(rings_list)
-
-    @F.pandas_udf(T.DoubleType())
-    def poly_d2(plat: pd.Series, plon: pd.Series,
-                pidx: pd.Series) -> pd.Series:
-        return pd.Series(_grouped_poly_dist(
-            plat.to_numpy(), plon.to_numpy(), pidx.to_numpy(), bc.value))
+    dim = _PolyDim(polys, ("poly_id",), use_res)
+    poly_d2 = dim.refine_udf("poly_d2", _poly_dist2,
+                             [("d2", "double", np.inf)])
 
     # two-phase (the zonal shape, applied to nearest): every polygon
     # CONTAINING a point has the point's home cell in its cover (the
@@ -124,10 +104,7 @@ def nearest_polygon(
     q = points.select(
         F.col(point_id).alias("query_id"),
         F.col(lat).alias("qlat"), F.col(lon).alias("qlon"))
-    home = hexgrid.with_hex_cell(q, use_res, lat="qlat", lon="qlon",
-                                 out_col="__hcell")
-    hpairs = home.join(cover_all, home["__hcell"] == cover_all["cell"],
-                       "inner")
+    hpairs = dim.candidates(q, "qlat", "qlon", "poly_id")
     # leg A: home cell certified interior -> inside, d2 = 0, no Python
     leg_a = hpairs.filter(F.col("interior")).select(
         "query_id", "qlat", "qlon", "poly_id",
@@ -154,8 +131,9 @@ def nearest_polygon(
         radius_deg, metric="sq_deg", res=use_res)
     # poly_id follows pidx; keeping it in the dedupe key leaves every
     # first() buffer fixed-width, so the dedupe stays a HashAggregate
+    cover = dim.cover(use_res, "poly_id")
     leg_c = cand.join(
-        cover_all, cand["__pcell"] == cover_all["cell"], "inner"
+        cover, cand["__pcell"] == cover["cell"], "inner"
     ).dropDuplicates(["query_id", "pidx", "poly_id"]).select(
         "query_id", "qlat", "qlon", "poly_id",
         poly_d2(F.col("qlat"), F.col("qlon"), F.col("pidx")).alias("__d2"))

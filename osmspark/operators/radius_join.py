@@ -306,33 +306,3 @@ def within_distance_bruteforce(
         .select("query_id", "point_id", dist.alias("dist"),
                 *[F.col(c) for c in carry_cols])
     )
-
-
-def within_distance_auto(
-    points: DataFrame,
-    queries: DataFrame,
-    radius: float,
-    brute_cost_cap: float = 2e8,
-    brute_query_cap: int = 500_000,
-    res: int | None = None,
-    n_points: int | None = None,
-    n_queries: int | None = None,
-    **kwargs,
-) -> DataFrame:
-    """Cost-based dispatch, the knn_kring shape: below `brute_cost_cap`
-    candidate pairs (n_points * n_queries) AND `brute_query_cap` queries
-    (the brute path BROADCASTS the query side — a tiny point set with a
-    huge query set must not pick a multi-GB broadcast) the one-stage
-    broadcast brute path wins (no UDF round, no candidate explode);
-    otherwise the cell path's per-query marginal cost wins.  Both paths
-    are exact.  `res` applies to the cell path only (the brute path has
-    no prefilter).  Without hints the two count-stars are metadata-cheap
-    for materialized sources (parquet footers) but execute the upstream
-    plan for derived inputs — pass `n_points`/`n_queries` (estimates are
-    fine; only the dispatch decision depends on them) and the dispatcher
-    runs ZERO jobs before the real one."""
-    n_q = n_queries if n_queries is not None else queries.count()
-    n_p = n_points if n_points is not None else points.count()
-    if n_q * n_p <= brute_cost_cap and n_q <= brute_query_cap:
-        return within_distance_bruteforce(points, queries, radius, **kwargs)
-    return within_distance_join(points, queries, radius, res=res, **kwargs)

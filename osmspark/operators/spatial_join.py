@@ -29,6 +29,11 @@ Interior/boundary split: cover cells certified fully inside their
 polygon mark their candidates interior; the refine UDF keeps those
 without a ray-cast, so only boundary-cell candidates pay edge math.
 
+One polygon-dim layer: the dim side of the join — the driver collect,
+the covers, the broadcast rings, the per-res candidate join and the
+group-by-polygon refine loop — is `_PolyDim`, which `zonal_stats`,
+`zonal_length` and `nearest_polygon` compose over too.
+
 Scale notes: the cover res trades candidate fan-out vs join width (default
 res 8 ~ 1 km cells); hot-city skew on the cell key is handled by AQE
 skew-join plus optional explicit salting (operators.salt).  A continent-
@@ -568,29 +573,36 @@ def _ranges(counts: np.ndarray) -> np.ndarray:
     return np.arange(total, dtype=np.int64) - np.repeat(offsets, counts)
 
 
-def _grouped_pip_idx(py, px, codes, rings_list):
-    """Batch refine over integer dim-row indices: group candidate rows by
-    code, one vectorized crossing-number pass per (distinct row, piece)
-    in the batch.  rings_list[code] is that row's split_ring pieces;
-    membership is membership in ANY piece (pieces have disjoint interiors
-    tiling the original, so OR is exact).  A code outside
-    [0, len(rings_list)) — e.g. -1 — belongs to no group and stays
-    False."""
-    py = np.asarray(py, dtype=np.float64)
-    px = np.asarray(px, dtype=np.float64)
+def _grouped(kernel, codes, cols, pieces_by_code, fills):
+    """The one group-by-polygon loop of the point x polygon family: sort
+    a batch's rows by dim-row code and call
+    `kernel(*(c[rows] for c in cols), pieces_by_code[code])` once per
+    distinct code — one vectorized pass per polygon in the batch, never a
+    per-row loop.  `fills` holds one default per kernel output; a row
+    whose code is outside [0, len(pieces_by_code)) — e.g. -1 — belongs to
+    no polygon and keeps them.  The kernel returns one array per output
+    (a bare array when there is one)."""
     codes = np.asarray(codes, dtype=np.int64)
-    out = np.zeros(len(py), dtype=bool)
+    cols = [np.asarray(c, dtype=np.float64) for c in cols]
+    outs = [np.full(len(codes), f) for f in fills]
     order = np.argsort(codes, kind="stable")
-    bounds = np.searchsorted(codes[order], np.arange(len(rings_list) + 1))
-    for k in range(len(rings_list)):
-        idx = order[bounds[k]:bounds[k + 1]]
-        if len(idx) == 0:
+    for idx in np.split(order, np.flatnonzero(np.diff(codes[order])) + 1):
+        k = codes[idx[0]] if len(idx) else -1
+        if not 0 <= k < len(pieces_by_code):
             continue
-        acc = np.zeros(len(idx), dtype=bool)
-        for rl, rlon in rings_list[k]:
-            acc |= _pip_single_ring(py[idx], px[idx], rl, rlon)
-        out[idx] = acc
-    return out
+        got = kernel(*(c[idx] for c in cols), pieces_by_code[k])
+        for o, g in zip(outs, got if isinstance(got, tuple) else (got,)):
+            o[idx] = g
+    return outs
+
+
+def _pip_pieces(py, px, pieces):
+    """Membership in ONE dim row: in ANY of its split_ring pieces (the
+    pieces have disjoint interiors tiling the original, so OR is exact)."""
+    acc = np.zeros(len(py), dtype=bool)
+    for rl, rlon in pieces:
+        acc |= _pip_single_ring(py, px, rl, rlon)
+    return acc
 
 
 def _pip_single_ring(py, px, ring_lat, ring_lon):
@@ -665,6 +677,107 @@ def adaptive_polygon_covers(
     return covers_by_res, res_list, rings_list
 
 
+class _PolyDim:
+    """The broadcast polygon dim that `spatial_join`, `zonal_stats`,
+    `zonal_length` and `nearest_polygon` compose over, built once per
+    call: the ONE driver-side collect of the dim (`attrs` + ring), its
+    `adaptive_polygon_covers`, one broadcast of the split pieces and the
+    pidx -> attribute table.  Dim rows are factorized to a small int
+    `pidx`: covers and refines carry it instead of the poly_id string
+    (less Arrow transfer, no per-batch string factorize), and attributes
+    re-attach by pidx.  Building it is the only time the dim runs; its
+    frames and UDFs are plan fragments."""
+
+    def __init__(self, polys: DataFrame, attrs=("poly_id",),
+                 res: int = DEFAULT_COVER_RES, min_res: int | None = None,
+                 max_cover_cells: int = 4096):
+        self.spark = polys.sparkSession
+        self.attrs = tuple(attrs)
+        self.res = res
+        prows = polys.select(*self.attrs, "ring").collect()
+        self.covers_by_res, _, pieces = adaptive_polygon_covers(
+            prows, max_res=res, min_res=min_res,
+            max_cover_cells=max_cover_cells,
+        )
+        self.rows = [tuple(r[a] for a in self.attrs) for r in prows]
+        self.pieces = self.spark.sparkContext.broadcast(pieces)
+
+    @staticmethod
+    def _schema(head: str, attrs) -> str:
+        return ", ".join([head, *(f"{a} string" for a in attrs)])
+
+    def cover(self, rr: int, *attrs) -> DataFrame:
+        """Broadcast cover frame at res `rr`: (pidx, cell, interior,
+        *attrs), interior marking cells certified fully inside the row."""
+        ix = [self.attrs.index(a) for a in attrs]
+        rows = [(i, c, f, *(self.rows[i][j] for j in ix))
+                for i, c, f in self.covers_by_res.get(rr, [])]
+        return F.broadcast(self.spark.createDataFrame(
+            rows, self._schema("pidx int, cell long, interior boolean",
+                               attrs)))
+
+    def attr_frame(self) -> DataFrame:
+        """Broadcast pidx -> attributes table."""
+        return F.broadcast(self.spark.createDataFrame(
+            [(i, *r) for i, r in enumerate(self.rows)],
+            self._schema("pidx int", self.attrs)))
+
+    def candidates(self, points: DataFrame, lat: str = "lat",
+                   lon: str = "lon", *attrs) -> DataFrame:
+        """Hex-cell candidate pairs: one broadcast equi-join of the points'
+        cell against the cover per distinct cover res (an ordinary dim
+        has exactly one), unioned -> (*points.columns, pidx, interior,
+        *attrs).  Each row lives at exactly one res, so a (point, row)
+        pair is a candidate at most once."""
+        parts = []
+        # an empty dim still plans one (empty) candidate join at `res`
+        for rr in sorted(self.covers_by_res) or [self.res]:
+            cover = self.cover(rr, *attrs)
+            pts = hexgrid.with_hex_cell(points, rr, lat=lat, lon=lon,
+                                        out_col="__cell")
+            parts.append(
+                pts.join(cover, pts["__cell"] == cover["cell"], "inner")
+                .drop("__cell", "cell")
+            )
+        return functools.reduce(DataFrame.unionByName, parts)
+
+    def refine_udf(self, name: str, kernel, out, interior=None):
+        """pandas UDF `name(*cols, pidx[, interior])`: `_grouped` runs
+        `kernel` once per distinct pidx in each Arrow batch against that
+        row's broadcast pieces.  `out` lists (field, type, fill) per
+        kernel output: one field returns that type, several a struct.
+        With `interior` given the UDF takes a trailing interior flag;
+        flagged rows skip the kernel (code -1) and answer `interior`."""
+        bc = self.pieces
+        names = [n for n, _, _ in out]
+        fills = [f for _, _, f in out]
+
+        def run(*cols: pd.Series) -> pd.Series:
+            arrs = [c.to_numpy() for c in cols]
+            inter = arrs.pop() if interior is not None else None
+            *data, codes = arrs
+            if inter is not None:
+                codes = np.where(inter, -1, codes)
+            res = _grouped(kernel, codes, data, bc.value, fills)
+            if inter is not None:
+                res = [np.where(inter, interior, r) for r in res]
+            if len(res) == 1:
+                return pd.Series(res[0])
+            return pd.DataFrame(dict(zip(names, res)))
+
+        run.__name__ = name
+        rtype = out[0][1] if len(out) == 1 else ", ".join(
+            f"{n} {t}" for n, t, _ in out)
+        return F.pandas_udf(run, rtype)
+
+    def membership(self):
+        """The exact PIP refine `refine(lat, lon, pidx, interior)`:
+        interior-cell candidates are in by construction (no ray-cast),
+        the rest ray-cast their own row's pieces."""
+        return self.refine_udf("refine", _pip_pieces,
+                               [("inside", "boolean", False)], interior=True)
+
+
 def spatial_join(
     points: DataFrame,
     polys: DataFrame,
@@ -695,49 +808,15 @@ def spatial_join(
     construction: the UDF skips their ray-cast and keeps them.  Each row
     lives at exactly one res, so a (point, row) pair is a candidate at
     most once."""
-    spark = points.sparkSession
-    prows = polys.select("poly_id", "level", "postcode", "ring").collect()
-    # rows are factorized to a small int `pidx`: the cover table and the
-    # refine carry it instead of the poly_id string (less Arrow transfer,
-    # no per-batch string factorize); poly_id re-attaches via attrs
-    covers_by_res, _, rings_list = adaptive_polygon_covers(
-        prows, max_res=res, min_res=min_res, max_cover_cells=max_cover_cells,
-    )
-    attrs = [(i, r["poly_id"], r["level"], r["postcode"])
-             for i, r in enumerate(prows)]
-    bc = spark.sparkContext.broadcast(rings_list)
-
-    @F.pandas_udf(T.BooleanType())
-    def refine(plat: pd.Series, plon: pd.Series, pidx: pd.Series,
-               interior: pd.Series) -> pd.Series:
-        # interior rows get code -1, which no ring group owns, so the
-        # ray-cast runs only on boundary-cell candidates
-        inter = interior.to_numpy()
-        codes = np.where(inter, -1, pidx.to_numpy())
-        return pd.Series(inter | _grouped_pip_idx(
-            plat.to_numpy(), plon.to_numpy(), codes, bc.value))
-
-    cand_parts = []
-    # an empty dim still plans one (empty) candidate join at `res`
-    for rr in sorted(covers_by_res) or [res]:
-        cover_df = F.broadcast(spark.createDataFrame(
-            covers_by_res.get(rr, []), "pidx int, cell long, interior boolean"
-        ))
-        pts = hexgrid.with_hex_cell(points, rr, lat=lat, lon=lon,
-                                    out_col="__cell")
-        cand_parts.append(
-            pts.join(cover_df, pts["__cell"] == cover_df["cell"], "inner")
-            .drop("__cell", "cell")
-        )
-    cand = functools.reduce(DataFrame.unionByName, cand_parts)
-    attrs_df = F.broadcast(spark.createDataFrame(
-        attrs, "pidx int, poly_id string, level string, postcode string"
-    ))
+    dim = _PolyDim(polys, ("poly_id", "level", "postcode"), res, min_res,
+                   max_cover_cells)
+    refine = dim.membership()
     return (
-        cand.filter(refine(F.col(lat), F.col(lon), F.col("pidx"),
-                           F.col("interior")))
+        dim.candidates(points, lat, lon)
+        .filter(refine(F.col(lat), F.col(lon), F.col("pidx"),
+                       F.col("interior")))
         .drop("interior")
-        .join(attrs_df, "pidx")
+        .join(dim.attr_frame(), "pidx")
         .select("poly_id", *points.columns, "level", "postcode")
     )
 
@@ -798,31 +877,24 @@ def spatial_join_distributed(
     cand = pts.join(prepared, pts["__cell"] == prepared["cell"], "inner")
 
     @F.pandas_udf(T.BooleanType())
-    def refine_rows(plat: pd.Series, plon: pd.Series, pid: pd.Series,
+    def refine_rows(plat: pd.Series, plon: pd.Series, ring_key: pd.Series,
                     rlat: pd.Series, rlon: pd.Series) -> pd.Series:
-        py = plat.to_numpy()
-        px = plon.to_numpy()
-        out = np.zeros(len(py), dtype=bool)
-        codes, uniques = pd.factorize(pid.to_numpy())
-        order = np.argsort(codes, kind="stable")
-        bounds = np.searchsorted(codes[order], np.arange(len(uniques) + 1))
-        for g in range(len(uniques)):
-            idx = order[bounds[g]:bounds[g + 1]]
-            if len(idx) == 0:
-                continue
-            first = idx[0]
-            pieces = split_ring(
-                np.asarray(rlat.iloc[first], dtype=np.float64),
-                np.asarray(rlon.iloc[first], dtype=np.float64),
-            )
-            acc = np.zeros(len(idx), dtype=bool)
-            for ring_lat, ring_lon in pieces:
-                acc |= _pip_single_ring(py[idx], px[idx], ring_lat, ring_lon)
-            out[idx] = acc
-        return pd.Series(out)
+        # the ring rides every candidate row: split it once per distinct
+        # ring in the batch (from its first row), then the shared loop.
+        # Keyed by ring content, not poly_id: multipolygon parts share a
+        # poly_id, and each part must ray-cast its own ring
+        codes, _ = pd.factorize(ring_key.to_numpy())
+        _, first = np.unique(codes, return_index=True)
+        pieces = [split_ring(np.asarray(rlat.iloc[i], dtype=np.float64),
+                             np.asarray(rlon.iloc[i], dtype=np.float64))
+                  for i in first]
+        return pd.Series(_grouped(_pip_pieces, codes,
+                                  (plat.to_numpy(), plon.to_numpy()),
+                                  pieces, [False])[0])
 
     refined = cand.filter(
-        refine_rows(F.col(lat), F.col(lon), F.col("poly_id"),
+        refine_rows(F.col(lat), F.col(lon),
+                    F.xxhash64("ring_lat", "ring_lon"),
                     F.col("ring_lat"), F.col("ring_lon"))
     )
     return refined.drop("__cell", "cell", "ring_lat", "ring_lon")

@@ -18,53 +18,32 @@ Two-phase shape (the reason this is its own operator and not
    per-point refine, no per-point join fan-out.
 3. Only points whose cell is a **boundary** cover cell (a
    perimeter-fraction of the corpus: area/perimeter wins ~linearly with
-   polygon size) join candidates and go through the exact grouped
-   ray-cast refine (`spatial_join._grouped_pip_idx` — the same kernel the
-   PIP join uses, so zonal membership IS spatial-join membership, by
-   construction).
+   polygon size) join candidates and go through the exact ray-cast refine
+   (`_PolyDim.membership` — the same UDF the PIP join uses, so zonal
+   membership IS spatial-join membership, by construction).
 
 Inner-join semantics like `spatial_join`: a polygon containing no points
 produces no row.  Boundary points resolve by the engine's crossing-number
 convention.  Geometry domain matches `spatial_join` (ordinary /
 antimeridian / pole-encircling rings via split_ring).
 
-Scale notes: the polygon dim is broadcastable by contract (same as
-`spatial_join`; `prepare` covers are a few-thousand-row frame).  The
+Both operators here compose over `spatial_join._PolyDim`, the polygon-dim
+layer shared with `spatial_join` and `nearest_polygon`: one driver-side
+collect of the dim (broadcastable by contract), one cover table, one
+broadcast of the split rings and one group-by-polygon refine loop.  The
 phase-1 aggregate is the dominant cost and is exactly the `groupBy(cell)`
-any tile/rollup pass already pays — callers holding a cell-aggregated
-layout (plans/layout.py) can pass `cells` directly and skip the scan.
+any tile/rollup pass already pays.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions import hexgrid
 from ..functions.geo import haversine_np
-from .spatial_join import (
-    DEFAULT_COVER_RES,
-    _grouped_pip_idx,
-    _pip_single_ring,
-    adaptive_polygon_covers,
-)
-
-_COVER_SCHEMA = "pidx int, poly_id string, cell long, interior boolean"
-
-
-def _covers_and_rings(polys: DataFrame, res: int):
-    """Driver-side fixed-res covers: [(pidx, poly_id, cell, interior)] +
-    rings_list (split_ring pieces indexed by pidx).  Keyed by dim-row
-    index like `spatial_join`: multipolygon parts share a poly_id, and
-    each part keeps its own cover and ring."""
-    prows = polys.select("poly_id", "ring").collect()
-    covers_by_res, _, rings_list = adaptive_polygon_covers(prows, max_res=res)
-    covers = [(i, prows[i]["poly_id"], c, f)
-              for i, c, f in covers_by_res.get(res, [])]
-    return covers, rings_list
+from .spatial_join import DEFAULT_COVER_RES, _pip_single_ring, _PolyDim
 
 
 def zonal_stats(
@@ -83,23 +62,16 @@ def zonal_stats(
     counts non-null values, `sum_v`/`min_v`/`max_v` ignore nulls (SQL
     semantics), `mean_v = sum_v / n_values` (null when all values null).
     Membership is exactly `spatial_join` membership (equality-tested)."""
-    spark = points.sparkSession
-    covers, rings_list = _covers_and_rings(polys, res)
-    cover_df = F.broadcast(spark.createDataFrame(covers, _COVER_SCHEMA))
-    bc = spark.sparkContext.broadcast(rings_list)
+    dim = _PolyDim(polys, ("poly_id",), res)
+    cover = dim.cover(res, "poly_id")
 
     cell = "__z_cell"
-    if value_col is None:
-        pts = hexgrid.with_hex_cell(points, res, lat=lat, lon=lon,
-                                    out_col=cell).select(
-            lat, lon, cell, F.lit(1.0).alias("__v"))
-        has_v = False
-    else:
-        pts = hexgrid.with_hex_cell(points, res, lat=lat, lon=lon,
-                                    out_col=cell).select(
-            lat, lon, cell,
-            F.col(value_col).cast("double").alias("__v"))
-        has_v = True
+    has_v = value_col is not None
+    vals = points.select(
+        lat, lon,
+        (F.col(value_col).cast("double") if has_v else F.lit(1.0))
+        .alias("__v"))
+    pts = hexgrid.with_hex_cell(vals, res, lat=lat, lon=lon, out_col=cell)
 
     # phase 1: the ONLY corpus-wide pass — cell grain, map-side combinable
     cell_agg = pts.groupBy(cell).agg(
@@ -112,22 +84,17 @@ def zonal_stats(
 
     # phase 2a: interior cover cells take the cell aggregate wholesale
     interior_part = cell_agg.join(
-        cover_df.filter(F.col("interior")),
-        cell_agg[cell] == cover_df["cell"], "inner",
+        cover.filter(F.col("interior")),
+        cell_agg[cell] == cover["cell"], "inner",
     ).select("poly_id", "n", "nv", "s", "mn", "mx")
 
     # phase 2b: boundary cover cells — per-point exact refine, then the
     # same partial-aggregate shape
-    @F.pandas_udf(T.BooleanType())
-    def refine(plat: pd.Series, plon: pd.Series,
-               pidx: pd.Series) -> pd.Series:
-        return pd.Series(_grouped_pip_idx(
-            plat.to_numpy(), plon.to_numpy(), pidx.to_numpy(), bc.value))
-
+    refine = dim.membership()
     boundary = pts.join(
-        cover_df.filter(~F.col("interior")),
-        pts[cell] == cover_df["cell"], "inner",
-    ).filter(refine(F.col(lat), F.col(lon), F.col("pidx")))
+        cover.filter(~F.col("interior")),
+        pts[cell] == cover["cell"], "inner",
+    ).filter(refine(F.col(lat), F.col(lon), F.col("pidx"), F.col("interior")))
     boundary_part = boundary.groupBy("poly_id").agg(
         F.count(F.lit(1)).alias("n"),
         F.count("__v").alias("nv"),
@@ -240,29 +207,6 @@ def _clip_fracs_one_poly(p1y, p1x, p2y, p2x, pieces):
     return frac, len_in
 
 
-def _grouped_clip(p1y, p1x, p2y, p2x, pidx, rings_list):
-    """Batch clip: factorize by dim-row index, one vectorized pass per
-    distinct polygon in the Arrow batch (the _grouped_pip_idx shape)."""
-    p1y = np.asarray(p1y, dtype=np.float64)
-    p1x = np.asarray(p1x, dtype=np.float64)
-    p2y = np.asarray(p2y, dtype=np.float64)
-    p2x = np.asarray(p2x, dtype=np.float64)
-    frac = np.zeros(len(p1y), dtype=np.float64)
-    lin = np.zeros(len(p1y), dtype=np.float64)
-    codes, uniques = pd.factorize(pidx)
-    order = np.argsort(codes, kind="stable")
-    bounds = np.searchsorted(codes[order], np.arange(len(uniques) + 1))
-    for i, k in enumerate(uniques):
-        idx = order[bounds[i]:bounds[i + 1]]
-        if len(idx) == 0:
-            continue
-        f, li = _clip_fracs_one_poly(
-            p1y[idx], p1x[idx], p2y[idx], p2x[idx], rings_list[k])
-        frac[idx] = f
-        lin[idx] = li
-    return frac, lin
-
-
 def zonal_length(
     segs: DataFrame,
     polys: DataFrame,
@@ -297,12 +241,8 @@ def zonal_length(
     The polygon dim broadcasts by contract."""
     from .intersect import _step_deg, _validate_cells_col, segment_cover_udf
 
-    spark = segs.sparkSession
-    covers, rings_list = _covers_and_rings(polys, res)
-    cover_df = F.broadcast(spark.createDataFrame(
-        [(i, p, c) for i, p, c, _ in covers],
-        "pidx int, poly_id string, cell long"))
-    bc = spark.sparkContext.broadcast(rings_list)
+    dim = _PolyDim(polys, ("poly_id",), res)
+    cover = dim.cover(res, "poly_id").drop("interior")
 
     if seg_cells_col is not None:
         # pre-covered layout (intersect.with_segment_cover): no cover UDF
@@ -325,17 +265,17 @@ def zonal_length(
         "seg_id", "lat1", "lon1", "lat2", "lon2",
         F.explode_outer("__cells").alias("__cell"),
     )
-    cand = s.join(cover_df, s["__cell"] == cover_df["cell"], "inner") \
-            .dropDuplicates(["seg_id", "pidx"])
-
-    @F.pandas_udf("frac double, len_in double")
-    def clip(p1y: pd.Series, p1x: pd.Series, p2y: pd.Series,
-             p2x: pd.Series, pidx: pd.Series) -> pd.DataFrame:
-        frac, lin = _grouped_clip(
-            p1y.to_numpy(), p1x.to_numpy(),
-            p2y.to_numpy(), p2x.to_numpy(),
-            pidx.to_numpy(), bc.value)
-        return pd.DataFrame({"frac": frac, "len_in": lin})
+    # poly_id follows pidx; keeping it in the dedupe key leaves every
+    # first() buffer fixed-width, so the dedupe stays a HashAggregate
+    cand = s.join(cover, s["__cell"] == cover["cell"], "inner") \
+            .dropDuplicates(["seg_id", "pidx", "poly_id"])
+    # nondeterministic only to the optimizer: a deterministic UDF lets the
+    # `frac > 0` filter below be pushed under its own projection, which
+    # then clips every candidate twice (two ArrowEvalPython nodes)
+    clip = dim.refine_udf(
+        "clip", _clip_fracs_one_poly,
+        [("frac", "double", 0.0), ("len_in", "double", 0.0)],
+    ).asNondeterministic()
 
     refined = cand.withColumn(
         "__c", clip(F.col("lat1"), F.col("lon1"),

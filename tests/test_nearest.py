@@ -14,12 +14,12 @@ RECTS = {
 }
 
 
-def _polys(spark):
+def _polys(spark, rects=RECTS):
     return spark.createDataFrame(
         [(pid, "admin",
           [{"lat": a, "lon": o} for a, o in
            [(la0, lo0), (la0, lo1), (la1, lo1), (la1, lo0), (la0, lo0)]],
-          None) for pid, (la0, la1, lo0, lo1) in RECTS.items()],
+          None) for pid, (la0, la1, lo0, lo1) in rects.items()],
         schema="poly_id string, level string, "
                "ring array<struct<lat:double,lon:double>>, postcode string")
 
@@ -95,3 +95,23 @@ def test_plan_shape(spark):
     # outside-leg kernel; the interior leg (most of a mostly-inside
     # corpus) is pure native
     assert plan.count("ArrowEvalPython") == 2
+
+
+def test_shared_edge_tie_is_distance_not_membership(spark):
+    """A point on the edge two rectangles share is at distance 0 from
+    both, so nearest_polygon answers the (dist, poly_id) tie (a0, 0.0);
+    the crossing-number rule puts it inside b0 only, and spatial_join
+    says b0.  Nearest keeps its own distance kernel — reusing PIP
+    membership would answer b0."""
+    from osmspark.operators.spatial_join import spatial_join
+
+    polys = _polys(spark, {"a0": (1.10, 1.20, 103.10, 103.30),
+                           "b0": (1.10, 1.20, 103.30, 103.50)})
+    pdf = spark.createDataFrame(
+        [("edge", 1.15, 103.30)], schema="id string, lat double, lon double")
+    got = [(r["point_id"], r["poly_id"], r["dist_deg"]) for r in
+           nearest_polygon(pdf, polys, radius_deg=0.02, res=8).collect()]
+    assert got == [("edge", "a0", 0.0)]
+    pip = [(r["id"], r["poly_id"]) for r in
+           spatial_join(pdf, polys, res=8).collect()]
+    assert pip == [("edge", "b0")]

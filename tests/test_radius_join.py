@@ -116,17 +116,6 @@ def test_auto_res_monotone():
     assert all(0 <= r <= 15 for r in rs)
 
 
-def test_radius_auto_dispatch_both_sides(nodes, queries):
-    """within_distance_auto must return identical results on BOTH sides
-    of its cost threshold."""
-    pts = nodes.select("id", "lat", "lon")
-    lo = {(r["query_id"], r["point_id"]) for r in rj.within_distance_auto(
-        pts, queries, 3000.0, brute_cost_cap=1e18).collect()}
-    hi = {(r["query_id"], r["point_id"]) for r in rj.within_distance_auto(
-        pts, queries, 3000.0, brute_cost_cap=0).collect()}
-    assert lo == hi == _brute(pts, queries, 3000.0, "haversine")
-
-
 def test_ring_area_rectangles_analytic(spark):
     """ring_area_m2 is EXACT for lat/lon-aligned rectangles:
     R^2 * dlam * (sin p2 - sin p1) — an analytic, non-mirror oracle."""
@@ -159,40 +148,18 @@ def test_ring_area_rectangles_analytic(spark):
     assert "Python" not in plan, plan
 
 
-def test_radius_auto_accepts_res_and_bounds_broadcast(nodes, queries):
-    """res must be routable through the auto dispatcher on BOTH sides of
-    the threshold (it only applies to the cell path), and a huge query
-    side must route to the cell path even when the pair product is under
-    the cap (the brute path broadcasts the queries)."""
-    pts = nodes.select("id", "lat", "lon").limit(50)
-    brute_side = rj.within_distance_auto(
-        pts, queries, 3000.0, brute_cost_cap=1e18, res=8)
-    cell_side = rj.within_distance_auto(
-        pts, queries, 3000.0, brute_cost_cap=0, res=8)
-    a = {(r["query_id"], r["point_id"]) for r in brute_side.collect()}
-    b = {(r["query_id"], r["point_id"]) for r in cell_side.collect()}
-    assert a == b
-    # 5 queries x 50 points = 250 pairs < cap, but query cap 2 forces cell
-    forced = rj.within_distance_auto(
-        pts, queries, 3000.0, brute_cost_cap=1e18, brute_query_cap=2)
-    plan = forced._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan, plan   # the cell path's disk UDF
-
-
 def test_radius_brute_rejects_nonpositive(spark, nodes, queries):
     pts = nodes.select("id", "lat", "lon").limit(10)
     with pytest.raises(ValueError, match="positive"):
         rj.within_distance_bruteforce(pts, queries, -5.0, metric="sq_deg")
     with pytest.raises(ValueError, match="positive"):
-        rj.within_distance_auto(pts, queries, 0.0)
+        rj.within_distance_join(pts, queries, 0.0)
 
 
 def test_auto_dispatch_count_hints_run_no_jobs(spark):
-    """n_points/n_queries hints must keep the radius dispatcher from
-    executing derived inputs redundantly (round-5 VERDICT item 6): a
-    poisoned upstream raises iff the dispatcher executes it.  kNN reads
-    the query rows while it builds the plan and needs no hints: nothing
-    runs on the points at call time, and a derived query frame's
+    """kNN reads the query rows while it builds the plan and needs no
+    count hints: nothing runs on the points at call time (a poisoned
+    upstream raises iff it executes), and a derived query frame's
     upstream runs exactly once across the call and the collect."""
     from osmspark.operators.knn import knn_kring
 
@@ -209,22 +176,7 @@ def test_auto_dispatch_count_hints_run_no_jobs(spark):
         [("p0", 1.29, 103.85)], "id string, lat double, lon double")
     qs = spark.createDataFrame(
         [("q0", 1.2901, 103.8501)], "query_id string, lat double, lon double")
-    ppts, pqs = poisoned(pts), poisoned(qs)
-
-    # without hints: the count-stars execute the poisoned upstream
-    with pytest.raises(Exception, match="upstream executed"):
-        rj.within_distance_auto(ppts, pqs, 1000.0)
-    # with hints: dispatch is pure plan building — no job runs (the
-    # poisoned plans would raise on ANY action)
-    rj.within_distance_auto(ppts, pqs, 1000.0, n_points=1, n_queries=1)
-    # kNN builds its plan without running the points, hints or not
-    knn_kring(ppts, qs, k=1)
-    # hinted dispatch still returns correct results on real inputs,
-    # brute (tiny hints) and cell (huge hints) path alike
-    for npts, nq in ((1, 1), (10**9, 10**6)):
-        rows = rj.within_distance_auto(
-            pts, qs, 1000.0, n_points=npts, n_queries=nq).collect()
-        assert [(r["query_id"], r["point_id"]) for r in rows] == [("q0", "p0")]
+    knn_kring(poisoned(pts), qs, k=1)
     rows_seen = spark.sparkContext.accumulator(0)
 
     def counted(it):

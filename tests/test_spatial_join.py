@@ -549,3 +549,64 @@ def test_candidate_join_runs_once_per_res(spark):
                           max_cover_cells=2048).collect()
     assert {r["poly_id"] for r in out} == {"rect", "box"}
     assert seen.value == n * len(set(res_list))
+
+
+@pytest.mark.parametrize(
+    "op", ["spatial_join", "zonal_stats", "zonal_length", "nearest_polygon"])
+def test_polygon_dim_runs_once_per_call(spark, op):
+    """Every point x polygon operator runs its polygon dim exactly once,
+    at call time (the one collect of the shared dim layer), and
+    collecting the result runs it zero more times: covers, split rings
+    and attributes all reach the plan as broadcast constants."""
+    from osmspark.operators.nearest import nearest_polygon
+    from osmspark.operators.zonal import zonal_length, zonal_stats
+
+    rect = [(1.2, 103.7), (1.2, 103.9), (1.4, 103.9), (1.4, 103.7),
+            (1.2, 103.7)]
+    box = [(1.5, 103.7), (1.5, 103.8), (1.6, 103.8), (1.6, 103.7),
+           (1.5, 103.7)]
+    base = _mk_polys(spark, {"rect": rect, "box": box})
+    rows_seen = spark.sparkContext.accumulator(0)
+
+    def counted(it):
+        for b in it:
+            rows_seen.add(len(b))
+            yield b
+
+    polys = base.mapInPandas(counted, base.schema)
+    pts = spark.createDataFrame(
+        [("a", 1.3, 103.8), ("b", 1.55, 103.75), ("c", 1.45, 103.75)],
+        "id string, lat double, lon double")
+    segs = spark.createDataFrame(
+        [("s", 1.3, 103.6, 1.3, 103.8)],
+        "seg_id string, lat1 double, lon1 double, lat2 double, lon2 double")
+    calls = {
+        "spatial_join": lambda: sj.spatial_join(pts, polys, res=8),
+        "zonal_stats": lambda: zonal_stats(pts, polys, res=8),
+        "zonal_length": lambda: zonal_length(segs, polys, res=8),
+        "nearest_polygon": lambda: nearest_polygon(
+            pts, polys, radius_deg=0.2, res=8),
+    }
+    out = calls[op]()
+    assert rows_seen.value == 2          # one run of the 2-row dim
+    assert out.collect()                 # non-empty answer ...
+    assert rows_seen.value == 2          # ... without a second run
+
+
+def test_distributed_duplicate_id_parts(spark):
+    """spatial_join_distributed groups its refine by ring content, not by
+    poly_id: multipolygon parts sharing an id, in one Arrow batch, each
+    ray-cast their own ring (keyed by poly_id, both cast the first's)."""
+    parts = [_square(1.30, 103.70, 0.05), _square(1.40, 103.85, 0.05)]
+    polys = spark.createDataFrame(
+        [("m", "test", [{"lat": a, "lon": o} for a, o in ring], None)
+         for ring in parts],
+        schema="poly_id string, level string, "
+               "ring array<struct<lat:double,lon:double>>, postcode string",
+    ).coalesce(1)
+    pts = spark.createDataFrame(
+        [("a", 1.325, 103.725), ("b", 1.425, 103.875), ("out", 1.38, 103.80)],
+        "id string, lat double, lon double").coalesce(1)
+    got = sj.spatial_join_distributed(pts, polys, res=8).collect()
+    assert sorted((r["id"], r["poly_id"]) for r in got) == [
+        ("a", "m"), ("b", "m")]

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from osmspark.operators import spatial_join as sj
-from osmspark.operators.zonal import zonal_stats, _covers_and_rings
+from osmspark.operators.zonal import zonal_stats
 
 
 def _rows(df):
@@ -63,14 +63,15 @@ def test_zonal_count_only(valued_nodes, polygons):
     assert got == exp
 
 
-def test_zonal_interior_shortcut_fires(valued_nodes, polygons, spark):
+def test_zonal_interior_shortcut_fires(valued_nodes, polygons):
     """Scale shape: on a large polygon, a real fraction of cover cells is
     certified interior, and the refine leg sees only boundary-cell points
     (strictly fewer than the polygon's total points)."""
     big = polygons.filter(F.col("poly_id") == "admin_0")
     if big.count() == 0:  # fall back to the first polygon
         big = polygons.limit(1)
-    covers, _ = _covers_and_rings(big, 8)
+    dim = sj._PolyDim(big, res=8)
+    covers = dim.covers_by_res[8]
     n_int = sum(1 for *_, i in covers if i)
     n_bnd = sum(1 for *_, i in covers if not i)
     assert n_int > 0, "no interior cells certified on the largest polygon"
@@ -78,8 +79,7 @@ def test_zonal_interior_shortcut_fires(valued_nodes, polygons, spark):
     # refine-leg row count < polygon point count (interior points skipped)
     from osmspark.functions import hexgrid
     pts = hexgrid.with_hex_cell(valued_nodes, 8, out_col="__c")
-    cov = spark.createDataFrame(
-        covers, "pidx int, poly_id string, cell long, interior boolean")
+    cov = dim.cover(8)
     in_poly = sj.spatial_join(valued_nodes, big, res=8).count()
     refine_rows = pts.join(
         cov.filter(~F.col("interior")), pts["__c"] == cov["cell"]).count()

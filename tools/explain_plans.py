@@ -14,6 +14,7 @@ scale-relevant assertions a reviewer should check:
 from __future__ import annotations
 
 import io
+import re
 import sys
 from pathlib import Path
 
@@ -52,6 +53,14 @@ def _subtree(plan: str, node: str) -> list[str]:
             break
         sub.append(ln)
     return sub
+
+
+def _python_udfs(plan: str) -> list[str]:
+    """UDF name of each ArrowEvalPython node in the final plan tree, one
+    entry per node (a node's details are listed once, under its id)."""
+    ids = re.findall(r"ArrowEvalPython \((\d+)\)", _final(plan))
+    return [re.search(rf"\n\({i}\) ArrowEvalPython\n(?:.*\n)*?"
+                      r"Arguments: \[(\w+)\(", plan).group(1) for i in ids]
 
 
 CHECKS = {
@@ -721,6 +730,26 @@ def main() -> None:
          ("partial+final aggregates on the cell and polygon keys",
           lambda p: "HashAggregate" in p),
          ("no cartesian", lambda p: "Cartesian" not in p)],
+    )
+
+    from osmspark.operators.zonal import zonal_length
+
+    zl_segs = nodes.select(
+        F.col("id").cast("string").alias("seg_id"),
+        F.col("lat").alias("lat1"), F.col("lon").alias("lon1"),
+        (F.col("lat") + 0.004).alias("lat2"),
+        (F.col("lon") + 0.004).alias("lon2"))
+    add(
+        "Zonal length (road-km per polygon — segment covers x the shared "
+        "broadcast polygon cover, exact clip)",
+        zonal_length(zl_segs, polys, res=8),
+        [("cover join broadcast (the dim contract)",
+          lambda p: "BroadcastHashJoin" in p and "BroadcastExchange" in p),
+         ("exactly ONE clip ArrowEvalPython — the `frac > 0` filter is "
+          "not pushed under the clip projection, so no candidate is "
+          "clipped twice", lambda p: _python_udfs(p).count("clip") == 1),
+         ("no cartesian", lambda p: "Cartesian" not in p),
+         ("no row-wise python", lambda p: "BatchEvalPython" not in p)],
     )
 
     from osmspark.operators.intersect import segment_intersection_join

@@ -122,6 +122,53 @@ def build(spark):
     # --- heavy extras built lazily (vectors / postings / LM) --------------
     _st = {}
 
+    # the point x polygon rows of tools/bench_misc.py, same inputs: the
+    # 50-polygon dim, every node, the real extracted way segments
+    def _zpolys():
+        if "zpolys" not in _st:
+            zp = gen_polygons(spark).persist()
+            zp.count()
+            _st["zpolys"] = zp
+        return _st["zpolys"]
+
+    def _wsegs():
+        if "wsegs" not in _st:
+            from osmspark.operators.mapmatch import way_segments
+            from osmspark.sources import parse_ways
+
+            ws = way_segments(parse_ways(docs), nodes).select(
+                F.concat_ws("_", "way_id", "seg_idx").alias("seg_id"),
+                "lat1", "lon1", "lat2", "lon2").persist()
+            ws.count()
+            _st["wsegs"] = ws
+        return _st["wsegs"]
+
+    def q_zonal_stats():
+        from osmspark.operators.zonal import zonal_stats
+
+        zpts = nodes.select("lat", "lon", (F.col("lat") * 3.0).alias("val"))
+        return zonal_stats(zpts, _zpolys(), value_col="val").agg(
+            F.sum("n_points"), F.sum("sum_v"), F.min("min_v"),
+            F.max("max_v"))
+
+    def q_zonal_length():
+        from osmspark.operators.zonal import zonal_length
+
+        return zonal_length(_wsegs(), _zpolys()).agg(
+            F.sum("len_m"), F.sum("n_segments"))
+
+    def q_nearest():
+        from osmspark.operators.nearest import nearest_polygon
+
+        return nearest_polygon(
+            nodes.select("id", "lat", "lon"), _zpolys(),
+            radius_deg=0.02, res=8).agg(
+                F.count(F.lit(1)), F.sum("dist_deg"))
+
+    out["zonal_stats_2p4m_pts_50_polys"] = q_zonal_stats
+    out["zonal_length_roadkm_50_polys"] = q_zonal_length
+    out["nearest_polygon_2p4m_pts"] = q_nearest
+
     def _vecs():
         if "vecs" not in _st:
             v = gen_vectors(spark, 200_000, 64).persist()
