@@ -623,15 +623,6 @@ def with_hex_cell(df, res: int, lat="lat", lon="lon", out_col=None):
     return s9.select("*", packed.alias(out_col)).drop(*tmp)
 
 
-def kring_udf(k: int):
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def hex_kring(cell: pd.Series) -> pd.Series:
-        arr = kring(cell.to_numpy(), k)
-        return pd.Series(list(arr))
-
-    return hex_kring
-
-
 def parent_udf(parent_res: int):
     """Arrow pandas UDF: cell id -> approximate-containment parent id at
     `parent_res` (child center re-assigned, H3 aperture-7 semantics)."""

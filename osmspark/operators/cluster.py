@@ -43,7 +43,6 @@ def dbscan(
     min_pts: int,
     metric: str = "haversine",
     point_id: str = "id",
-    res: int | None = None,
     max_iter: int = 20,
     strict: bool = True,
 ) -> DataFrame:
@@ -54,12 +53,13 @@ def dbscan(
     A point is core when its eps-neighborhood INCLUDING ITSELF has at
     least `min_pts` members (the classic |N_eps(p)| >= minPts).  `cluster`
     is the min core id of the point's component — NULL for noise (neither
-    core nor within eps of a core).  `res`/`max_iter`/`strict` pass
-    through to the radius join and the component engine."""
+    core nor within eps of a core).  `max_iter`/`strict` pass through
+    to the component engine; the radius join derives its cell
+    resolution from `eps`."""
     if int(min_pts) < 1:
         raise ValueError(f"min_pts must be >= 1, got {min_pts}")
     pairs = within_distance_pairs(
-        points, eps, metric=metric, res=res, point_id=point_id
+        points, eps, metric=metric, point_id=point_id
     ).select("a", "b")
     # three consumers (degree, core-core edges, border join) — materialize
     # once so the disk-cover join doesn't re-run per consumer

@@ -16,10 +16,12 @@ Three stages, each in the engine's established shape:
     adjacent-pair explode.  A dangling ref BREAKS the chain (no
     fabricated bridging segment), matching way_geometry's contract.
   * `match_candidates` — (gps fix, segment) pairs within `radius_m`,
-    via the seam-exact radius-join machinery: segment MIDPOINTS are the
-    query side of `query_disk_cells` with cover radius_m +
-    max_seg_len_m/2 (any point within radius_m of a segment is within
-    that of its midpoint — a provable superset), then one equi-join on
+    via the seam-exact radius-join machinery: segment MIDPOINTS go
+    through the radius family's one disk step
+    (`radius_join._with_disk_cells`, plain cover, res from the radius)
+    with cover radius_m + max_seg_len_m/2 (any point within radius_m of
+    a segment is within that of its midpoint — a provable superset),
+    past MAX_COVER_M it raises; then one equi-join on
     the cell and a NATIVE exact point-to-segment filter (local
     equirectangular chart at the segment, clamped projection, haversine
     to the projected point; chart error is O((L/R)^2) of the distance —
@@ -131,7 +133,7 @@ def _project_onto_segment(plat, plon, lat1, lon1, kx, dlat, dlon,
 
 
 def match_candidates(gps: DataFrame, segments: DataFrame,
-                     radius_m: float = 50.0, res: int | None = None,
+                     radius_m: float = 50.0,
                      max_seg_len_m: float = 500.0,
                      traj_col: str = "traj_id",
                      ts_col: str = "ts") -> DataFrame:
@@ -143,19 +145,9 @@ def match_candidates(gps: DataFrame, segments: DataFrame,
         raise ValueError("radius_m must be positive")
     if float(max_seg_len_m) <= 0:
         raise ValueError("max_seg_len_m must be positive")
-    from .radius_join import MAX_RING, auto_res
-    from ..functions.hexgrid import (MAX_COVER_M, disk_cells_udf,
-                                     with_hex_cell)
+    from ..functions.hexgrid import with_hex_cell
+    from .radius_join import _with_disk_cells
 
-    cover = float(radius_m) + float(max_seg_len_m) / 2.0
-    if cover > MAX_COVER_M:
-        raise ValueError(
-            f"match_candidates: disk cover {cover:.0f} m (radius_m + "
-            f"max_seg_len_m/2) exceeds MAX_COVER_M={MAX_COVER_M:.0f} m — "
-            "the radius-join fanout envelope; lower the radius or "
-            "densify the ways")
-    if res is None:
-        res = auto_res(cover)
     # the guard rides inside lat1 — a column the exact filter ALWAYS
     # consumes, so column pruning cannot elide the raise (the first cut
     # hung it on len_m, which nothing downstream reads — pruned away)
@@ -177,19 +169,23 @@ def match_candidates(gps: DataFrame, segments: DataFrame,
     # string-keyed join was 10x the cost of everything else combined.)
     # The chart constants (kx, dlat, dlon, dx, dy, den) are materialized
     # HERE, on the segment side pre-join — see _project_onto_segment for
-    # the measured 11x this buys on the post-join filter.
+    # the measured 11x this buys on the post-join filter.  The disk is
+    # the plain (unclassified) cover: the classification certifies
+    # points against the midpoint, not the segment.
     ky = F.lit(_M_PER_DEG_LAT)
-    segd = segments.select(
-        "way_id", "seg_idx", lat1_g.alias("lat1"), "lon1", "lat2", "lon2",
-        (ky * F.cos(F.radians("mid_lat"))).alias("__kx"),
-        (F.col("lat2") - F.col("lat1")).alias("__dlat"),
-        (F.col("lon2") - F.col("lon1")).alias("__dlon"),
-        F.explode_outer(
-            disk_cells_udf(res, max_ring=MAX_RING)(
-                F.col("mid_lat"), F.col("mid_lon"), F.lit(cover))
-        ).alias("__pcell"),
-    ).select(
-        "*",
+    segd, res = _with_disk_cells(
+        segments.select(
+            "way_id", "seg_idx", lat1_g.alias("lat1"), "lon1", "lat2",
+            "lon2", "mid_lat", "mid_lon",
+            (ky * F.cos(F.radians("mid_lat"))).alias("__kx"),
+            (F.col("lat2") - F.col("lat1")).alias("__dlat"),
+            (F.col("lon2") - F.col("lon1")).alias("__dlon"),
+        ),
+        "mid_lat", "mid_lon",
+        float(radius_m) + float(max_seg_len_m) / 2.0, None, flagged=False)
+    segd = segd.select(
+        "way_id", "seg_idx", "lat1", "lon1", "lat2", "lon2",
+        "__kx", "__dlat", "__dlon", "__pcell",
         (F.col("__dlon") * F.col("__kx")).alias("__dx"),
         (F.col("__dlat") * ky).alias("__dy"),
     ).select(
@@ -220,7 +216,7 @@ def match_candidates(gps: DataFrame, segments: DataFrame,
 
 def map_match(gps: DataFrame, segments: DataFrame,
               radius_m: float = 50.0, sigma_m: float = 4.07,
-              beta_m: float = 5.0, res: int | None = None,
+              beta_m: float = 5.0,
               max_seg_len_m: float = 500.0,
               max_candidates_per_fix: int = 64,
               max_traj_rows: int = 100_000,
@@ -238,7 +234,7 @@ def map_match(gps: DataFrame, segments: DataFrame,
     if max_candidates_per_fix < 1:
         raise ValueError("max_candidates_per_fix must be >= 1")
     cand = match_candidates(
-        gps, segments, radius_m=radius_m, res=res,
+        gps, segments, radius_m=radius_m,
         max_seg_len_m=max_seg_len_m, traj_col=traj_col, ts_col=ts_col)
     fixes = gps.select(
         F.col(traj_col), F.col(ts_col).cast("double").alias(ts_col),

@@ -686,60 +686,63 @@ def _on_edges(vlat, vlon, ring_lat, ring_lon) -> np.ndarray:
     return out
 
 
-def _pairwise_polygon_join(
+def _ring_key(lat, lon):
+    """Ring-content key: multipolygon parts share a poly_id, so rings
+    (and the verifier's caches) are keyed by content, as in
+    spatial_join_distributed."""
+    return F.xxhash64(lat, lon)
+
+
+def _ring_pairs(
     polys_a: DataFrame,
     polys_b: DataFrame,
     res: int,
     batch_verify,
 ) -> DataFrame:
     """Shared scaffold of the overlay joins: cover-cell candidate
-    equi-join of two polygon dims, one row per candidate (a, b) pair,
-    filtered by the factorized `batch_verify(aid, bid, a_cache,
-    b_cache) -> bool[n]` inside one Arrow UDF."""
-    pa = prepare_polygons(polys_a, res).select(
-        F.col("poly_id").alias("a_id"),
-        F.col("ring_lat").alias("__alat"),
-        F.col("ring_lon").alias("__alon"),
-        "cell",
-    )
-    pb = prepare_polygons(polys_b, res).select(
-        F.col("poly_id").alias("b_id"),
-        F.col("ring_lat").alias("__blat"),
-        F.col("ring_lon").alias("__blon"),
-        "cell",
-    )
-    cand = (
-        pa.join(pb, "cell")
-        .dropDuplicates(["a_id", "b_id"])   # rings identical per id
-    )
+    equi-join of two polygon dims, one row per candidate RING pair,
+    filtered by the factorized `batch_verify(akey, bkey, a_cache,
+    b_cache) -> bool[n]` inside one Arrow UDF.  Returns (a_id, b_id,
+    __bkey) per verified ring pair."""
+    def side(polys, p):
+        return prepare_polygons(polys, res).select(
+            F.col("poly_id").alias(f"{p}_id"),
+            _ring_key("ring_lat", "ring_lon").alias(f"__{p}key"),
+            F.col("ring_lat").alias(f"__{p}lat"),
+            F.col("ring_lon").alias(f"__{p}lon"),
+            "cell",
+        )
+
+    cand = side(polys_a, "a").join(side(polys_b, "b"), "cell") \
+        .dropDuplicates(["a_id", "__akey", "b_id", "__bkey"])
 
     @F.pandas_udf(T.BooleanType())
-    def verify(aid: pd.Series, bid: pd.Series,
+    def verify(akey: pd.Series, bkey: pd.Series,
                alat: pd.Series, alon: pd.Series,
                blat: pd.Series, blon: pd.Series) -> pd.Series:
-        if not len(aid):
+        if not len(akey):
             return pd.Series(np.zeros(0, dtype=bool))
-        a_cache = _ring_cache(aid, alat, alon)
-        b_cache = _ring_cache(bid, blat, blon)
+        a_cache = _ring_cache(akey, alat, alon)
+        b_cache = _ring_cache(bkey, blat, blon)
         return pd.Series(batch_verify(
-            aid.to_numpy(), bid.to_numpy(), a_cache, b_cache))
+            akey.to_numpy(), bkey.to_numpy(), a_cache, b_cache))
 
     return (
-        cand.filter(verify(F.col("a_id"), F.col("b_id"),
+        cand.filter(verify(F.col("__akey"), F.col("__bkey"),
                            F.col("__alat"), F.col("__alon"),
                            F.col("__blat"), F.col("__blon")))
-        .select("a_id", "b_id")
+        .select("a_id", "b_id", "__bkey")
     )
 
 
-def _ring_cache(ids: pd.Series, lats: pd.Series, lons: pd.Series) -> dict:
-    """id -> (lat, lon) numpy ring, converted ONCE per distinct ring in
-    the batch (rings are identical per id — dropDuplicates upstream)."""
+def _ring_cache(keys: pd.Series, lats: pd.Series, lons: pd.Series) -> dict:
+    """ring key -> (lat, lon) numpy ring, converted ONCE per distinct
+    ring in the batch."""
     cache: dict = {}
-    for i, pid in enumerate(ids):
-        if pid not in cache:
-            cache[pid] = (np.asarray(lats.iloc[i], dtype=np.float64),
-                          np.asarray(lons.iloc[i], dtype=np.float64))
+    for i, k in enumerate(keys):
+        if k not in cache:
+            cache[k] = (np.asarray(lats.iloc[i], dtype=np.float64),
+                        np.asarray(lons.iloc[i], dtype=np.float64))
     return cache
 
 
@@ -750,8 +753,10 @@ def polygon_intersect_join(
 ) -> DataFrame:
     """(a_id, b_id) for every intersecting pair.  Both inputs use the
     engine polygon schema (poly_id, level, ring, postcode); neither side
-    is collected to the driver."""
-    return _pairwise_polygon_join(polys_a, polys_b, res, _batch_intersect)
+    is collected to the driver.  A multipolygon id intersects when any
+    of its parts does."""
+    return _ring_pairs(polys_a, polys_b, res, _batch_intersect).select(
+        "a_id", "b_id").distinct()
 
 
 def _all_vertices_inside(vlat, vlon, ring_lat, ring_lon) -> bool:
@@ -794,5 +799,14 @@ def polygon_contains_join(
     B — 'which ZIP sits inside which admin area'.  Same cover-cell
     candidate join as polygon_intersect_join; the verifier swaps in the
     containment predicate (shared-boundary children count as contained —
-    see polygon_contains_np)."""
-    return _pairwise_polygon_join(polys_a, polys_b, res, _batch_contains)
+    see polygon_contains_np).  A multipolygon B id is contained when
+    every one of its parts lies inside some part of the A id."""
+    n_b = polys_b.select(
+        F.col("poly_id").alias("b_id"),
+        _ring_key(F.transform("ring", lambda p: p["lat"]),
+                  F.transform("ring", lambda p: p["lon"])).alias("__bkey"),
+    ).groupBy("b_id").agg(F.countDistinct("__bkey").alias("__nb"))
+    inside = _ring_pairs(polys_a, polys_b, res, _batch_contains).groupBy(
+        "a_id", "b_id").agg(F.countDistinct("__bkey").alias("__n"))
+    return inside.join(n_b, "b_id").where(
+        F.col("__n") == F.col("__nb")).select("a_id", "b_id")

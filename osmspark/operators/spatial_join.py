@@ -57,7 +57,7 @@ from pyspark.sql import types as T
 
 from ..functions import hexgrid
 from ..functions.geo import latlon_to_xyz
-from ..functions.s2 import face_uv_to_xyz, xyz_to_face_uv
+from ..functions.s2 import xyz_to_face_uv
 
 DEFAULT_COVER_RES = 8
 # interior samples per ring edge when collecting touched cube faces (a
@@ -119,30 +119,6 @@ def _point_segment_dist2(px, py, x1, y1, x2, y2):
     cx = x1 + t * dx
     cy = y1 + t * dy
     return (px - cx) ** 2 + (py - cy) ** 2
-
-
-# unit axis of each cube face (S2 face layout; s2.face_uv_to_xyz)
-_FACE_AXES = np.array([
-    [1, 0, 0], [0, 1, 0], [0, 0, 1], [-1, 0, 0], [0, -1, 0], [0, 0, -1],
-], dtype=np.float64)
-
-
-def _xyz_to_uv_on_face(f: int, x, y, z):
-    """Gnomonic (u, v) of points onto the plane of a GIVEN face `f` —
-    the per-face inverse of s2.face_uv_to_xyz.  Valid for points in the
-    open hemisphere of the face axis (denominator sign checked by caller).
-    Unlike xyz_to_face_uv, |u|/|v| may exceed 1 (point lives off-face)."""
-    if f == 0:
-        return y / x, z / x
-    if f == 1:
-        return -x / y, z / y
-    if f == 2:
-        return -x / z, -y / z
-    if f == 3:
-        return z / x, y / x
-    if f == 4:
-        return z / y, -x / y
-    return -y / z, -x / z
 
 
 def _cover_on_face(f: int, u, v, res: int):
@@ -214,28 +190,6 @@ def _ring_cover_cells(lats: np.ndarray, lons: np.ndarray, res: int) -> np.ndarra
     return _ring_cover_cells_flagged(lats, lons, res)[0]
 
 
-@functools.lru_cache(maxsize=None)
-def _face_neighbors(f: int, side: str) -> tuple[int, ...]:
-    """Cube faces adjacent to face `f` across one boundary of its uv square
-    ('u+','u-','v+','v-'), derived numerically: probe points just beyond
-    the boundary and ask xyz_to_face_uv who owns them."""
-    out = set()
-    for w in (-0.9, 0.0, 0.9):
-        if side == "u+":
-            u, v = 1.2, w
-        elif side == "u-":
-            u, v = -1.2, w
-        elif side == "v+":
-            u, v = w, 1.2
-        else:
-            u, v = w, -1.2
-        x, y, z = face_uv_to_xyz(np.array([f]), np.array([u]), np.array([v]))
-        nf, _, _ = xyz_to_face_uv(x, y, z)
-        out.add(int(nf[0]))
-    out.discard(f)
-    return tuple(sorted(out))
-
-
 def _definite_faces(x: np.ndarray, y: np.ndarray, z: np.ndarray) -> set[int]:
     """Cube faces touched by a ring's vertices or by interior samples of
     its edges (7 samples per edge — a midpoint-only scheme can miss a
@@ -292,7 +246,7 @@ def _cover_piece_flagged(lats: np.ndarray, lons: np.ndarray, res: int):
         if f in seen:
             continue
         seen.add(f)
-        ax = _FACE_AXES[f]
+        ax = hexgrid.FACE_AXES[f]
         dots = x * ax[0] + y * ax[1] + z * ax[2]
         if np.any(dots <= 0.05):
             if f in definite:
@@ -301,7 +255,7 @@ def _cover_piece_flagged(lats: np.ndarray, lons: np.ndarray, res: int):
                     "joining"
                 )
             continue  # spill-probe face the polygon cannot meaningfully reach
-        uf, vf = _xyz_to_uv_on_face(f, x, y, z)
+        uf, vf = hexgrid._uv_on_face(f, x, y, z)
         covers.append(_cover_on_face(f, uf, vf, res))
         # bbox-spill fixpoint: coverage continues past a face boundary ->
         # the neighbor face owns its share of the cover
@@ -310,8 +264,7 @@ def _cover_piece_flagged(lats: np.ndarray, lons: np.ndarray, res: int):
             ("v+", vf.max() > 1.0 - pad), ("v-", vf.min() < -1.0 + pad),
         ):
             if crossed:
-                queue.extend(n for n in _face_neighbors(f, side)
-                             if n not in seen)
+                queue.append(hexgrid.face_neighbor(f, side))
     cells = np.concatenate([c for c, _ in covers])
     interior = np.concatenate([i for _, i in covers])
     # dedupe across faces (a cell id is face-scoped, so dupes only arise
@@ -419,7 +372,7 @@ def _piece_is_coverable(lats: np.ndarray, lons: np.ndarray) -> bool:
         return False
     x, y, z = latlon_to_xyz(lats, lons)
     for f in _definite_faces(x, y, z):
-        ax = _FACE_AXES[f]
+        ax = hexgrid.FACE_AXES[f]
         if np.any(x * ax[0] + y * ax[1] + z * ax[2] <= 0.05):
             return False
     return True

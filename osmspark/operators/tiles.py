@@ -195,41 +195,6 @@ def render_density_tiles_pandas(
     )
 
 
-def raster_from_counts(points: DataFrame, zoom: int, px: int = 64,
-                       lat="lat", lon="lon") -> DataFrame:
-    """Pure-native equivalent of render_density_tiles: pixel binning +
-    groupBy + ordered sparse assembly.  Same (tile, raster) content for
-    cross-checking the applyInPandas path, expressed without any Python."""
-    n = F.lit(float(1 << zoom))
-    mx, my = mercator_xy(F.col(lat), F.col(lon))
-    pxl = F.least(F.floor((mx * n - F.col("tile_x")) * px), F.lit(px - 1)).cast("int")
-    pyl = F.least(F.floor((my * n - F.col("tile_y")) * px), F.lit(px - 1)).cast("int")
-    sparse = (
-        with_tile(points, zoom, lat, lon)
-        .withColumn("pix", pyl * px + pxl)
-        .groupBy("tile_x", "tile_y", "pix")
-        .agg(F.count("*").alias("cnt"))
-    )
-    # dense row-major assembly: scatter sparse (pix, cnt) into a px*px array
-    return (
-        sparse.groupBy("tile_x", "tile_y")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct(F.col("pix"), F.col("cnt")))
-            ).alias("m")
-        )
-        .select(
-            F.lit(zoom).alias("zoom"),
-            "tile_x",
-            "tile_y",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(px * px - 1)),
-                lambda i: F.coalesce(F.element_at("m", i), F.lit(0)),
-            ).alias("raster"),
-        )
-    )
-
-
 def int_tile_counts(points: DataFrame, cell_deg_u: int = 4000,
                     lat_u="lat_u", lon_u="lon_u") -> DataFrame:
     """Oracle-exact integer tiling: inputs are integer 1e-5-degree units;

@@ -115,7 +115,6 @@ def streaming_radius_alerts(
     queries: DataFrame,
     radius: float,
     metric: str = "haversine",
-    res: int | None = None,
     point_id: str = "id",
     lat: str = "lat",
     lon: str = "lon",
@@ -126,17 +125,18 @@ def streaming_radius_alerts(
     sensors, geofence centers) — one row per (site, point) within
     `radius`.
 
-    The batch B5b operator streams with ONE adaptation: the STREAM side
-    only gets the stateless native cell projection, and all the Python
-    (local-scale measurement + disk-cell generation) runs on the small
-    STATIC side — which is MATERIALIZED eagerly (localCheckpoint) before
-    the join, because a stream-static join whose static subplan still
-    contains Arrow UDF nodes deadlocks the micro-batch (observed; the
-    checkpointed frame is plain rows and joins fine).  The join itself
+    The batch B5b operator streams with ONE adaptation: it runs the
+    batch join's two halves (`query_disk_cells`, then the join half)
+    with a localCheckpoint in between.  The STREAM side only gets the
+    stateless native cell projection, and all the Python (disk-cell
+    generation) runs on the small STATIC side — which is MATERIALIZED
+    eagerly before the join, because a stream-static join whose static
+    subplan still contains Arrow UDF nodes deadlocks the micro-batch
+    (observed; the checkpointed frame is plain rows and joins fine).  The join itself
     is a stream-static inner equi-join — no streaming state at all.
     Emits exactly the batch join's rows for the same input
     (equivalence-tested)."""
-    from ..operators.radius_join import query_disk_cells, within_distance_join
+    from ..operators.radius_join import _join_disk_cells, query_disk_cells
 
     # rename PER AXIS: the old both-or-nothing drop broke the mixed case
     # (lat='lat', lon='lng' dropped the real lat column), and silently
@@ -151,11 +151,9 @@ def streaming_radius_alerts(
                 f"points has a {axis!r} column but {axis} data was mapped "
                 f"from {name!r} — drop or rename the conflicting column")
         pts = pts.withColumnRenamed(name, axis)
-    q, used_res = query_disk_cells(queries, radius, metric=metric, res=res)
-    q = q.localCheckpoint(eager=True)
-    return within_distance_join(
-        pts, queries, radius, metric=metric, res=used_res,
-        point_id=point_id, carry_cols=carry_cols, _prepared=(q, used_res))
+    q, res = query_disk_cells(queries, radius, metric=metric)
+    return _join_disk_cells(pts, q.localCheckpoint(eager=True), res,
+                            radius, metric, point_id, carry_cols)
 
 
 def streaming_radius_counts(

@@ -249,6 +249,10 @@ def test_guards(spark):
     with pytest.raises(Exception, match="max_seg_len_m"):
         match_candidates(gps, segs, radius_m=50.0,
                          max_seg_len_m=100.0).collect()
+    # disk cover radius_m + max_seg_len_m/2 past the fanout envelope
+    with pytest.raises(ValueError, match="MAX_COVER_M"):
+        match_candidates(gps, segs, radius_m=150_000.0,
+                         max_seg_len_m=200_000.0)
     # two roads within radius -> 2 candidates > max_candidates_per_fix=1
     with pytest.raises(Exception, match="max_candidates_per_fix"):
         map_match(gps, segs, radius_m=80.0,

@@ -247,3 +247,35 @@ def test_polygon_contains_shared_boundary(spark):
     assert ("parent", "child") in got
     assert ("parent", "same") in got
     assert ("parent", "outside") not in got
+
+
+def test_overlay_multipart_ids(spark):
+    """Multipolygon parts share a poly_id: each candidate is verified
+    against its OWN ring, intersect reports an id pair when any ring pair
+    intersects, and contains reports it only when every B ring of the id
+    lies inside some A ring of the id."""
+    from osmspark.operators.overlay import polygon_contains_join
+
+    p1 = _rect(1.000, 1.010, 103.000, 103.010)
+    inside_p1 = _rect(1.003, 1.007, 103.002, 103.008)
+    inside_right = _rect(1.003, 1.007, 103.030, 103.035)
+    outside = _rect(1.003, 1.007, 103.050, 103.060)
+    cases = [
+        # (join, A's second part, B rect "b", expected id pairs)
+        (polygon_intersect_join, _rect(1.000, 1.010, 103.020, 103.040),
+         _rect(1.002, 1.008, 103.0105, 103.030),
+         {("m", "b"), ("m", "two"), ("m", "both")}),
+        (polygon_contains_join, _rect(1.000, 1.010, 103.011, 103.040),
+         _rect(1.002, 1.008, 103.015, 103.030),
+         {("m", "b"), ("m", "both")}),
+    ]
+    for join, part2, rect_b, want in cases:
+        b = _mk(spark, [("b", rect_b),
+                        ("two", inside_right), ("two", outside),
+                        ("both", inside_p1), ("both", inside_right)])
+        for parts in ([p1, part2], [part2, p1]):
+            a = _mk(spark, [("m", ring) for ring in parts])
+            for res in (6, 7, 8):
+                got = {(r["a_id"], r["b_id"])
+                       for r in join(a, b, res=res).collect()}
+                assert got == want, (join.__name__, parts[0], res, got)

@@ -54,6 +54,13 @@ def test_radius_join_equals_bruteforce_sq_deg(nodes, queries):
     assert len(want) > 0
 
 
+def _pinned_join(pts, queries, radius, res):
+    """The radius join's two halves with the disk res pinned (as
+    nearest_polygon pins it to its cover res)."""
+    q, res = rj.query_disk_cells(queries, radius, res=res)
+    return rj._join_disk_cells(pts, q, res, radius, "haversine", "id", ())
+
+
 def test_radius_join_res_invariant(nodes, queries):
     """Exactness must not depend on the prefilter resolution — a coarser
     pinned res changes only the candidate volume."""
@@ -61,8 +68,7 @@ def test_radius_join_res_invariant(nodes, queries):
     auto = {(r["query_id"], r["point_id"])
             for r in rj.within_distance_join(pts, queries, 2000.0).collect()}
     coarse = {(r["query_id"], r["point_id"])
-              for r in rj.within_distance_join(
-                  pts, queries, 2000.0, res=6).collect()}
+              for r in _pinned_join(pts, queries, 2000.0, 6).collect()}
     assert auto == coarse
 
 
@@ -87,13 +93,13 @@ def test_radius_pairs_equals_brute(nodes):
 
 
 def test_radius_join_too_fine_res_raises(nodes, queries):
-    """A user-pinned res too fine for the radius must raise loudly (the
+    """A pinned res too fine for the radius must raise loudly (the
     executor-side guard), not silently fan out thousands of cells."""
     from py4j.protocol import Py4JJavaError
 
     pts = nodes.select("id", "lat", "lon")
     with pytest.raises(Exception) as ei:
-        rj.within_distance_join(pts, queries, 50000.0, res=12).collect()
+        _pinned_join(pts, queries, 50000.0, 12).collect()
     assert "coarser res" in str(ei.value) or isinstance(
         ei.value, Py4JJavaError)
 

@@ -301,9 +301,10 @@ def main() -> None:
         [("candidate join is an equi-join on the cell key",
           lambda p: "CartesianProduct" not in p
           and "BroadcastNestedLoopJoin" not in p),
-         ("point cell assignment native; Python only for per-query disk "
-          "generation (local-scale + kring UDFs)",
-          lambda p: "ArrowEvalPython" in p),
+         ("point cell assignment native; exactly ONE disk-cell "
+          "ArrowEvalPython (the one disk step, run once per query — the "
+          "outer explode keeps it from running twice)",
+          lambda p: _python_udfs(p) == ["hex_disk_flagged"]),
          ("no row-wise python", lambda p: "BatchEvalPython" not in p),
          ("exact distance filter in codegen",
           lambda p: "codegen id" in p or "WholeStageCodegen" in p)],

@@ -169,6 +169,71 @@ def build(spark):
     out["zonal_length_roadkm_50_polys"] = q_zonal_length
     out["nearest_polygon_2p4m_pts"] = q_nearest
 
+    # the radius-family rows of tools/bench_misc.py, same inputs: 200k
+    # GPS fixes over a 20k-segment grid network, 200k points in ~2000
+    # blobs
+    def _mm_inputs():
+        if "mm" not in _st:
+            ky = 111194.9  # m per degree latitude (engine earth radius)
+            dx = 100.0 / (ky * 0.999)  # ~100 m in lon degrees at lat ~1.3
+            dy = 0.002  # rows ~222 m apart
+            segs = spark.range(100 * 200).select(
+                (F.col("id") % 100).cast("string").alias("way_id"),
+                F.floor(F.col("id") / 100).cast("int").alias("seg_idx"),
+                (F.lit(1.2) + (F.col("id") % 100) * F.lit(dy)).alias("lat1"),
+                (F.lit(103.6) + F.floor(F.col("id") / 100) * F.lit(dx))
+                .alias("lon1"),
+                (F.lit(1.2) + (F.col("id") % 100) * F.lit(dy)).alias("lat2"),
+                (F.lit(103.6) + (F.floor(F.col("id") / 100) + 1) * F.lit(dx))
+                .alias("lon2"),
+            ).withColumn("mid_lat", (F.col("lat1") + F.col("lat2")) / 2) \
+                .withColumn("mid_lon", (F.col("lon1") + F.col("lon2")) / 2) \
+                .withColumn("len_m", F.lit(100.0)).persist()
+            segs.count()
+            gps = spark.range(500 * 400).select(
+                (F.col("id") % 500).alias("traj_id"),
+                F.floor(F.col("id") / 500).cast("double").alias("ts"),
+                (F.lit(1.2) + (F.col("id") % 500) % 100 * F.lit(dy)
+                 + (F.pmod(F.xxhash64("id"), F.lit(41)) - F.lit(20))
+                 * F.lit(1.0 / ky)).alias("lat"),
+                (F.lit(103.6) + F.floor(F.col("id") / 500)
+                 * F.lit(50.0 / ky)).alias("lon"),
+            ).persist()
+            gps.count()
+            _st["mm"] = (gps, segs)
+        return _st["mm"]
+
+    def q_map_match():
+        from osmspark.operators.mapmatch import map_match
+
+        gps, segs = _mm_inputs()
+        return map_match(gps, segs, radius_m=60.0, sigma_m=10.0)
+
+    def _u(h, salt, mod=999_983):
+        return F.pmod(F.xxhash64(h + F.lit(salt)), F.lit(mod)) / F.lit(
+            float(mod))
+
+    def q_dbscan():
+        from osmspark.operators.cluster import dbscan
+
+        if "blob" not in _st:
+            blob = F.col("id") % 2000
+            pb = spark.range(200_000).select(
+                F.col("id"),
+                (F.lit(1.0) + _u(blob, 0) * F.lit(0.5)
+                 + (_u(F.col("id"), 7) - F.lit(0.5)) * F.lit(0.002))
+                .alias("lat"),
+                (F.lit(103.5) + _u(blob, 1_000_000) * F.lit(0.6)
+                 + (_u(F.col("id"), 13) - F.lit(0.5)) * F.lit(0.002))
+                .alias("lon"),
+            ).persist()
+            pb.count()
+            _st["blob"] = pb
+        return dbscan(_st["blob"], 60.0, 5)
+
+    out["map_match_200k_fixes_20k_segs"] = q_map_match
+    out["dbscan_200k_pts_60m"] = q_dbscan
+
     def _vecs():
         if "vecs" not in _st:
             v = gen_vectors(spark, 200_000, 64).persist()
