@@ -256,7 +256,7 @@ def main() -> None:
     # DataFrame and the scan is the per-bucket block-GEMM cogroup — no
     # driver collect of the query set anywhere in the path
     from osmspark.datagen import gen_vectors
-    from osmspark.operators.similarity import ivf_topk_gemm, train_centroids
+    from osmspark.operators.similarity import ivf_topk, train_centroids
 
     vecs = gen_vectors(spark, 200_000, 64).persist()
     vecs.count()
@@ -268,8 +268,8 @@ def main() -> None:
         F.col("vec_id").alias("query_id"), "embedding")
 
     def q_ivf_100k():
-        return ivf_topk_gemm(vecs, ivf_qs, k=10, centroids=cents,
-                             nprobe=2).count()
+        return ivf_topk(vecs, ivf_qs, k=10, centroids=cents,
+                        nprobe=2).count()
 
     q_ivf_100k()  # warm (JIT + Arrow path), unmeasured
     _, t_ivf, s_ivf = best_of(q_ivf_100k)
@@ -281,15 +281,14 @@ def main() -> None:
     # corpus is stored quantized, so quantization cost is write-path, not
     # per-scan; what's timed is what repeats: the cid shuffle (1-byte
     # lanes, 4-8x fewer bytes than float) + the cogroup GEMM
-    from osmspark.operators.similarity import (ivf_topk_gemm_int8,
-                                               quantize_embeddings)
+    from osmspark.operators.similarity import quantize_embeddings
 
     vecs8 = quantize_embeddings(vecs).select("vec_id", "qvec").persist()
     vecs8.count()
 
     def q_ivf_int8_100k():
-        return ivf_topk_gemm_int8(vecs8, ivf_qs, k=10, centroids=cents,
-                                  nprobe=2).count()
+        return ivf_topk(vecs8, ivf_qs, k=10, centroids=cents, nprobe=2,
+                        vec_col="qvec").count()
 
     q_ivf_int8_100k()  # warm
     _, t_ivf8, s_ivf8 = best_of(q_ivf_int8_100k)

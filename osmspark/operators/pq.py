@@ -25,27 +25,23 @@ engine returns the exact cosine between the query and the RECONSTRUCTED
 vector — the only approximation is the quantization itself, which the
 tests measure (recall vs the float brute force) rather than assert.
 
-Spark shape (mirrors `similarity.ivf_topk_gemm`, the measured winner at
-big batch sizes): probes and encoded vectors each shuffle ONCE on cid,
-cogrouped per bucket, scored by numpy LUT gathers with per-bucket top-k
-truncation; only queries*nprobe*k rows reach the global window.  The
-corpus side of the shuffle ships (vec_id, cid, m-byte binary code) —
-nothing else.
+Spark shape (`similarity._ivf_scan`, the scan `similarity.ivf_topk`
+runs): probes and encoded vectors each shuffle ONCE on cid, meet per
+bucket, scored by numpy LUT gathers with per-bucket top-k truncation;
+only queries*nprobe*k rows reach the global window.  The corpus side of
+the shuffle ships (vec_id, cid, m-byte binary code) — nothing else.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from osmspark.operators.similarity import _assign_udf, _probe_udf
-
-
-def _normalize_rows(m: np.ndarray) -> np.ndarray:
-    return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+from osmspark.operators.similarity import (_assign_udf, _ivf_scan,
+                                           _normalize_rows)
 
 
 def _check_geometry(dim: int, m: int, n_codes: int) -> int:
@@ -63,19 +59,18 @@ def _prep_udf(centroids: np.ndarray | None):
     residual mode.  One vectorized pandas UDF so train/encode/decode all
     share the identical prep (a train/encode mismatch here would silently
     destroy recall)."""
-    cents = None if centroids is None else _normalize_rows(
-        np.asarray(centroids, dtype=np.float64))
+    cents = None if centroids is None else _normalize_rows(centroids)
 
     if cents is None:
         @F.pandas_udf(T.ArrayType(T.DoubleType()))
         def prep(emb: pd.Series) -> pd.Series:
-            v = _normalize_rows(np.stack(emb.to_numpy()).astype(np.float64))
+            v = _normalize_rows(np.stack(emb.to_numpy()))
             return pd.Series(list(v))
         return prep
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
     def prep_resid(emb: pd.Series, cid: pd.Series) -> pd.Series:
-        v = _normalize_rows(np.stack(emb.to_numpy()).astype(np.float64))
+        v = _normalize_rows(np.stack(emb.to_numpy()))
         v = v - cents[cid.to_numpy()]
         return pd.Series(list(v))
     return prep_resid
@@ -196,8 +191,7 @@ def pq_encode(
     cb = np.asarray(codebooks, dtype=np.float64)
     m, _, dsub = cb.shape
     cb_sq = (cb ** 2).sum(axis=2)
-    cents = None if centroids is None else _normalize_rows(
-        np.asarray(centroids, dtype=np.float64))
+    cents = None if centroids is None else _normalize_rows(centroids)
     if (cents is None) != (cid_col is None):
         raise ValueError("pq_encode: centroids and cid_col go together "
                          "(residual mode) — pass both or neither")
@@ -210,14 +204,14 @@ def pq_encode(
     if cents is None:
         @F.pandas_udf(T.BinaryType())
         def enc(emb: pd.Series) -> pd.Series:
-            v = _normalize_rows(np.stack(emb.to_numpy()).astype(np.float64))
+            v = _normalize_rows(np.stack(emb.to_numpy()))
             codes = _codes(v).astype(np.uint8)
             return pd.Series([c.tobytes() for c in codes])
         return df.withColumn(out_col, enc(F.col(vec_col)))
 
     @F.pandas_udf(T.BinaryType())
     def enc_resid(emb: pd.Series, cid: pd.Series) -> pd.Series:
-        v = _normalize_rows(np.stack(emb.to_numpy()).astype(np.float64))
+        v = _normalize_rows(np.stack(emb.to_numpy()))
         v = v - cents[cid.to_numpy()]
         codes = _codes(v).astype(np.uint8)
         return pd.Series([c.tobytes() for c in codes])
@@ -239,8 +233,7 @@ def pq_decode(
         raise ValueError(f"pq_decode: output column {out_col!r} exists")
     cb = np.asarray(codebooks, dtype=np.float64)
     m, _, dsub = cb.shape
-    cents = None if centroids is None else _normalize_rows(
-        np.asarray(centroids, dtype=np.float64))
+    cents = None if centroids is None else _normalize_rows(centroids)
     if (cents is None) != (cid_col is None):
         raise ValueError("pq_decode: centroids and cid_col go together")
 
@@ -307,44 +300,31 @@ def ivf_pq_topk(
     over `pq_decode`d vectors by identity, and recall vs the FLOAT
     corpus is the measured quantization cost.
 
-    Physical shape = `ivf_topk_gemm`'s: one shuffle of each side on cid,
-    cogrouped ADC kernel with per-bucket top-k truncation, global window
-    on the survivors.  Per bucket per query the kernel builds one
-    (m x n_codes) dot LUT (centroid folded in under residual mode) and
-    scores each corpus row with m gathers — independent of dim."""
+    Physical shape = `similarity.ivf_topk`'s (`_ivf_scan`): one shuffle of
+    each side on cid, one ADC kernel call per bucket with top-k
+    truncation, global window on the survivors.  Per bucket per query the
+    kernel builds one (m x n_codes) dot LUT (centroid folded in under
+    residual mode) and scores each corpus row with m gathers —
+    independent of dim."""
     cb = np.asarray(codebooks, dtype=np.float64)
     m, n_codes, dsub = cb.shape
     dt = dict(encoded.dtypes).get("pq_code")
     if dt != "binary":
         raise ValueError(f"ivf_pq_topk: pq_code column is {dt!r}, expected "
                          "binary — build the table with ivf_pq_index")
-    cents = _normalize_rows(np.asarray(centroids, dtype=np.float64))
+    cents = _normalize_rows(centroids)
     if cents.shape[1] != m * dsub:
         raise ValueError("ivf_pq_topk: centroid dim != m * dsub")
-
-    probes = queries.select(
-        F.col(qid_col).alias("query_id"),
-        F.col(qvec_col).alias("qv"),
-        F.explode(_probe_udf(centroids, nprobe)(F.col(qvec_col))).alias("cid"),
-    )
-    v = encoded.select("vec_id", "cid", "pq_code")
 
     # codebook entry norms: |recon|^2 separates per subspace because the
     # reconstruction is a concatenation of per-subspace entries
     cent_sub = cents.reshape(len(cents), m, dsub)
 
-    def score(key, qdf: pd.DataFrame, vdf: pd.DataFrame):
-        if len(qdf) == 0 or len(vdf) == 0:
-            return pd.DataFrame(
-                {"query_id": [], "vec_id": [], "sim": []}
-            ).astype({"query_id": "int64", "vec_id": "int64",
-                      "sim": "float64"})
-        cid = int(key[0])
+    def adc_sims(cid: int, qdf: pd.DataFrame, vdf: pd.DataFrame):
         # effective per-subspace dictionary for THIS bucket
         eff = cb + (cent_sub[cid][:, None, :] if residual else 0.0)
         eff_nsq = (eff ** 2).sum(axis=2)                    # (m, K)
-        Q = _normalize_rows(
-            np.stack(qdf["qv"].to_numpy()).astype(np.float64))
+        Q = _normalize_rows(np.stack(qdf["qv"].to_numpy()))
         Qs = Q.reshape(len(Q), m, dsub)
         lut = np.einsum("qsd,skd->qsk", Qs, eff)            # (nq, m, K)
         codes = np.stack([np.frombuffer(b, dtype=np.uint8)
@@ -360,25 +340,9 @@ def ivf_pq_topk(
             cs = codes[:, s]
             dots += lut[:, s, :][:, cs]
             nsq += eff_nsq[s, cs]
-        sims = dots / np.maximum(np.sqrt(nsq)[None, :], 1e-12)
-        vids = vdf["vec_id"].to_numpy()
-        kk = min(k, nv)
-        order = np.lexsort((np.broadcast_to(vids, sims.shape), -sims), axis=1)
-        idx = order[:, :kk]
-        return pd.DataFrame({
-            "query_id": np.repeat(qdf["query_id"].to_numpy(), kk),
-            "vec_id": vids[idx].ravel(),
-            "sim": np.take_along_axis(sims, idx, axis=1).ravel(),
-        })
+        return dots / np.maximum(np.sqrt(nsq)[None, :], 1e-12)
 
-    scored = (
-        probes.groupBy("cid")
-        .cogroup(v.groupBy("cid"))
-        .applyInPandas(score, schema="query_id long, vec_id long, sim double")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "sim")
-    )
+    qs = queries.select(
+        F.col(qid_col).alias("query_id"), F.col(qvec_col).alias("qv"))
+    return _ivf_scan(qs, encoded.select("vec_id", "cid", "pq_code"), k,
+                     centroids, nprobe, adc_sims)

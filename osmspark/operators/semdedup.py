@@ -36,11 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .dedup import min_label_components
-from .similarity import _assign_udf, train_centroids
-
-
-def _normalize(m: np.ndarray) -> np.ndarray:
-    return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+from .similarity import _assign_udf, _normalize_rows, train_centroids
 
 
 def _visit_order(ids, m, cvec, order):
@@ -100,7 +96,7 @@ def semantic_dedup(
         vectors, n_centroids=n_centroids, iters=iters,
         vec_col=vec_col, id_col=id_col,
     )
-    cnorm = _normalize(np.asarray(cents, dtype=np.float64))
+    cnorm = _normalize_rows(cents)
     assigned = vectors.select(id_col, vec_col).withColumn(
         "cid", _assign_udf(cents)(F.col(vec_col))
     )
@@ -125,7 +121,7 @@ def semantic_dedup(
         def dedup_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
             _guard(len(pdf))
             ids = pdf[id_col].to_numpy()
-            m = _normalize(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
+            m = _normalize_rows(np.stack(pdf[vec_col].to_numpy()))
             cvec = cnorm[int(pdf["cid"].iloc[0])]
             perm = _visit_order(ids, m, cvec, order)
             keep, keeper = greedy_keep(ids, m, perm, threshold)
@@ -146,7 +142,7 @@ def semantic_dedup(
     def cluster_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         _guard(len(pdf))
         ids = pdf[id_col].to_numpy()
-        m = _normalize(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
+        m = _normalize_rows(np.stack(pdf[vec_col].to_numpy()))
         iu, ju = np.triu_indices(len(ids), k=1)
         if len(iu) == 0:
             return pd.DataFrame({"a": ids[:0], "b": ids[:0]})

@@ -81,7 +81,7 @@ import json, sys, time
 sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
 from osmspark.session import build_session
-from osmspark.operators.similarity import ivf_topk_gemm, train_centroids
+from osmspark.operators.similarity import ivf_topk, train_centroids
 
 cores = int(sys.argv[1]); vecs_path = sys.argv[2]; n_queries = int(sys.argv[3])
 spark = build_session(f"scale-ivf-{{cores}}", cores=cores)
@@ -93,10 +93,10 @@ cents = train_centroids(vecs, n_centroids=256, iters=1)
 qs = vecs.filter(F.col("vec_id") < n_queries).select(
     F.col("vec_id").alias("query_id"), "embedding")
 # JIT/Arrow warm-up on a slice, unmeasured (same code paths)
-ivf_topk_gemm(vecs, qs.filter(F.col("query_id") < 5000), k=10,
-              centroids=cents, nprobe=2).count()
+ivf_topk(vecs, qs.filter(F.col("query_id") < 5000), k=10,
+         centroids=cents, nprobe=2).count()
 t0 = time.time()
-n = ivf_topk_gemm(vecs, qs, k=10, centroids=cents, nprobe=2).count()
+n = ivf_topk(vecs, qs, k=10, centroids=cents, nprobe=2).count()
 dt = time.time() - t0
 print(json.dumps({{"cores": cores, "sec": round(dt, 3),
                    "queries_per_sec": round(n_queries / dt, 1),

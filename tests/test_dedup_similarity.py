@@ -219,70 +219,106 @@ def test_ivf_recall(embeddings):
     assert len(part_s & bf_s) / len(bf_s) >= 0.5
 
 
-def test_ivf_distributed_probes_and_arrow_sim(embeddings):
-    """Round-3 VERDICT item 1: probe generation must be distributed — the
-    physical plan may contain no LocalTableScan (driver-built probe rows)
-    and must carry the probe pandas UDF (ArrowEvalPython).  The arrow dot
-    implementation must return the same ranking as the native one."""
+def test_ivf_distributed_probes(embeddings):
+    """Probe generation must be distributed — the physical plan may contain
+    no LocalTableScan (driver-built probe rows) and must carry the probe
+    pandas UDF (ArrowEvalPython) and the per-bucket cogroup."""
     queries = embeddings.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     cents = similarity.train_centroids(embeddings, n_centroids=8, iters=0)
     out = similarity.ivf_topk(embeddings, queries, k=5, centroids=cents,
-                              nprobe=3, broadcast_queries=False)
+                              nprobe=3)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" not in plan, plan
     assert "ArrowEvalPython" in plan, plan
-    native = {(r["query_id"], r["rank"], r["vec_id"])
-              for r in out.collect()}
-    arrow = {(r["query_id"], r["rank"], r["vec_id"])
-             for r in similarity.ivf_topk(
-                 embeddings, queries, k=5, centroids=cents, nprobe=3,
-                 sim_impl="arrow").collect()}
-    assert native == arrow
+    assert "FlatMapCoGroupsInPandas" in plan, plan
+    assert out.count() == 50
+
+
+def _np_ivf_topk(vec_rows, query_rows, cents, nprobe, k):
+    """numpy IVF: nearest-centroid buckets, the nprobe nearest buckets per
+    query (stable on centroid id), exact cosine top-k over the probed
+    vectors, ties on vec_id asc -> {(query_id, rank, vec_id)}."""
+    def hat(m):
+        m = np.asarray(m, dtype=np.float64)
+        return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+
+    ids = np.array([r[0] for r in vec_rows])
+    vn = hat(np.stack([r[1] for r in vec_rows]))
+    cn = hat(cents)
+    cid = np.argmax(vn @ cn.T, axis=1)
+    out = set()
+    for qid, qv in query_rows:
+        q = hat(np.asarray(qv)[None, :])[0]
+        probe = np.argsort(-(cn @ q), kind="stable")[:nprobe]
+        sel = np.isin(cid, probe)
+        sims = vn[sel] @ q
+        order = np.lexsort((ids[sel], -sims))[:k]
+        out |= {(qid, r + 1, ids[sel][i]) for r, i in enumerate(order)}
+    return out
 
 
 def test_ivf_gemm_equivalence(embeddings):
-    """The per-bucket block-GEMM scan (big-batch path) must return the same
-    (query, rank, vec) triples as the pair-join path, full and partial
-    probe."""
+    """The per-bucket block-GEMM scan returns exactly the numpy IVF top-k
+    (same buckets, same probes, exact cosine ranking over the probed
+    vectors), full and partial probe."""
     queries = embeddings.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     cents = similarity.train_centroids(embeddings, n_centroids=8, iters=1)
+    vec_rows = [(r["vec_id"], r["embedding"])
+                for r in embeddings.select("vec_id", "embedding").collect()]
+    query_rows = [(r["query_id"], r["embedding"]) for r in queries.collect()]
     for nprobe in (8, 3):
-        a = {(r["query_id"], r["rank"], r["vec_id"])
-             for r in similarity.ivf_topk(
-                 embeddings, queries, k=5, centroids=cents,
-                 nprobe=nprobe).collect()}
-        b = {(r["query_id"], r["rank"], r["vec_id"])
-             for r in similarity.ivf_topk_gemm(
-                 embeddings, queries, k=5, centroids=cents,
-                 nprobe=nprobe).collect()}
-        assert a == b
+        got = {(r["query_id"], r["rank"], r["vec_id"])
+               for r in similarity.ivf_topk(
+                   embeddings, queries, k=5, centroids=cents,
+                   nprobe=nprobe).collect()}
+        assert got == _np_ivf_topk(vec_rows, query_rows, cents, nprobe, 5)
 
 
-def test_ivf_auto_dispatch(embeddings):
-    """ivf_topk_auto routes small batches to the pair-join and big
-    estimated volumes to the GEMM path, with identical results."""
+def test_ivf_zero_centroid(embeddings):
+    """A zero centroid (train_centroids keeps a zero seed vector as is)
+    must not swallow the corpus: normalized without a guard it is a NaN
+    column that wins every bucket assignment yet ranks last among probes,
+    so a partial probe returns nothing."""
     queries = embeddings.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     cents = similarity.train_centroids(embeddings, n_centroids=8, iters=0)
-    small = similarity.ivf_topk_auto(embeddings, queries, k=5,
-                                     centroids=cents, nprobe=2,
-                                     gemm_pair_threshold=1e9)
-    big = similarity.ivf_topk_auto(embeddings, queries, k=5,
-                                   centroids=cents, nprobe=2,
-                                   gemm_pair_threshold=1)
-    a = {(r["query_id"], r["rank"], r["vec_id"]) for r in small.collect()}
-    b = {(r["query_id"], r["rank"], r["vec_id"]) for r in big.collect()}
-    assert a == b and len(a) == 25
-    # the two thresholds picked different physical paths
-    assert "FlatMapCoGroupsInPandas" not in \
-        small._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in \
-        big._jdf.queryExecution().executedPlan().toString()
+    cents[0] = 0.0
+    bf = {(r["query_id"], r["rank"], r["vec_id"]) for r in
+          similarity.cosine_topk_bruteforce(embeddings, queries, k=5)
+          .collect()}
+    full = {(r["query_id"], r["rank"], r["vec_id"]) for r in
+            similarity.ivf_topk(embeddings, queries, k=5, centroids=cents,
+                                nprobe=8).collect()}
+    assert full == bf
+    part = similarity.ivf_topk(embeddings, queries, k=5, centroids=cents,
+                               nprobe=2).collect()
+    assert len(part) == 25
+
+
+def test_ivf_string_ids(embeddings):
+    """query_id/vec_id keep their input types through the scan — string
+    ids come back as strings, ranked as the integer ids are."""
+    s_emb = embeddings.select(
+        F.format_string("v%04d", "vec_id").alias("vec_id"), "embedding")
+    queries = s_emb.filter(F.col("vec_id") < "v0005").select(
+        F.concat(F.lit("q"), "vec_id").alias("query_id"), "embedding")
+    cents = similarity.train_centroids(embeddings, n_centroids=8, iters=0)
+    out = similarity.ivf_topk(s_emb, queries, k=5, centroids=cents,
+                              nprobe=3)
+    assert dict(out.dtypes) == {"query_id": "string", "rank": "int",
+                                "vec_id": "string", "sim": "double"}
+    int_q = embeddings.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding")
+    want = {(f"qv{r['query_id']:04d}", r["rank"], f"v{r['vec_id']:04d}")
+            for r in similarity.ivf_topk(
+                embeddings, int_q, k=5, centroids=cents, nprobe=3).collect()}
+    assert {(r["query_id"], r["rank"], r["vec_id"])
+            for r in out.collect()} == want
 
 
 def test_embedding_multiband_recall(spark):
@@ -838,15 +874,14 @@ def test_textstats_null_text_reads_as_empty(spark):
 
 
 def test_ivf_gemm_int8_recall_and_error(embeddings):
-    """Round-4 VERDICT item 7: the IVF block-GEMM scan composed directly
-    over the int8-quantized corpus.  Bounds are MEASURED on this fixture
-    (sf0.001 embeddings, 64-dim, 8 centroids, iters=1): recall vs the
-    float GEMM path 0.98 (nprobe=8) / 1.0 (nprobe=3), max |sim error| vs
-    exact cosine 0.0015 — pinned with slack (>=0.9 recall, <=0.005 error)
-    so a legitimate numeric drift doesn't flake while a broken dequantize
+    """The IVF block-GEMM scan run directly over the int8-quantized corpus
+    (`vec_col="qvec"`).  Bounds are MEASURED on this fixture (sf0.001
+    embeddings, 64-dim, 8 centroids, iters=1): recall vs the float corpus
+    0.98 (nprobe=8) / 1.0 (nprobe=3), max |sim error| vs exact cosine
+    0.0015 — pinned with slack (>=0.9 recall, <=0.005 error) so a
+    legitimate numeric drift doesn't flake while a broken dequantize
     assumption (scale not cancelling) fails loudly: dropping the per-row
     normalization in the kernel pushes the error above 0.1."""
-    import pytest as _pytest
     queries = embeddings.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding")
     cents = similarity.train_centroids(embeddings, n_centroids=8, iters=1)
@@ -855,11 +890,12 @@ def test_ivf_gemm_int8_recall_and_error(embeddings):
             for r in embeddings.collect()}
     for nprobe in (8, 3):
         flt = {(r["query_id"], r["vec_id"])
-               for r in similarity.ivf_topk_gemm(
+               for r in similarity.ivf_topk(
                    embeddings, queries, k=5, centroids=cents,
                    nprobe=nprobe).collect()}
-        rows = similarity.ivf_topk_gemm_int8(
-            q8, queries, k=5, centroids=cents, nprobe=nprobe).collect()
+        rows = similarity.ivf_topk(
+            q8, queries, k=5, centroids=cents, nprobe=nprobe,
+            vec_col="qvec").collect()
         i8 = {(r["query_id"], r["vec_id"]) for r in rows}
         assert len(flt & i8) / len(flt) >= 0.9, (nprobe, flt ^ i8)
         assert len(rows) == 50                      # k per query, both paths
@@ -867,31 +903,6 @@ def test_ivf_gemm_int8_recall_and_error(embeddings):
             a, b = vecs[r["query_id"]], vecs[r["vec_id"]]
             exact = float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
             assert abs(exact - r["sim"]) <= 0.005, (r, exact)
-    # contract: a float corpus column is rejected, not silently accepted —
-    # the 4x shuffle-bytes claim only holds if the column really is tinyint
-    with _pytest.raises(ValueError, match="array<tinyint>"):
-        similarity.ivf_topk_gemm_int8(embeddings, queries, k=5,
-                                      centroids=cents, int8_col="embedding")
-
-
-def test_ivf_pair_join_runs_on_int8_corpus(embeddings):
-    """The NATIVE pair-join IVF path (ivf_topk) must also accept the
-    quantized corpus directly — before the lane-upcast fix in `_dot` this
-    threw BINARY_ARITHMETIC_OVERFLOW under ANSI (and silently wrapped
-    without it).  Full probe over int8 must track float brute force up to
-    quantization rank flips."""
-    queries = embeddings.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    cents = similarity.train_centroids(embeddings, n_centroids=8, iters=1)
-    q8 = similarity.quantize_embeddings(embeddings).select(
-        "vec_id", F.col("qvec").alias("embedding"))
-    bf = {(r["query_id"], r["vec_id"]) for r in
-          similarity.cosine_topk_bruteforce(embeddings, queries, k=5)
-          .collect()}
-    i8 = {(r["query_id"], r["vec_id"]) for r in
-          similarity.ivf_topk(q8, queries, k=5, centroids=cents,
-                              nprobe=8).collect()}
-    assert len(i8 & bf) / len(bf) >= 0.9, bf ^ i8
 
 
 def test_ivf_gemm_int8_ships_tinyint(embeddings):
@@ -902,9 +913,9 @@ def test_ivf_gemm_int8_ships_tinyint(embeddings):
     queries = embeddings.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding")
     cents = similarity.train_centroids(embeddings, n_centroids=4, iters=0)
-    out = similarity.ivf_topk_gemm_int8(
+    out = similarity.ivf_topk(
         similarity.quantize_embeddings(embeddings), queries, k=3,
-        centroids=cents, nprobe=2)
+        centroids=cents, nprobe=2, vec_col="qvec")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapCoGroupsInPandas" in plan
     # the corpus vectors enter the cid exchange as the qvec column itself

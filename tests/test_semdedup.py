@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from osmspark.operators import semdedup as sd
+from osmspark.operators.similarity import _normalize_rows
 
 
 @pytest.fixture(scope="module")
@@ -94,9 +95,9 @@ def test_guards(spark):
 
 def _oracle(rows, cents, threshold, policy, order):
     ids = np.array([r[0] for r in rows], dtype=np.int64)
-    m = sd._normalize(np.stack([np.asarray(r[1], dtype=np.float64)
-                                for r in rows]))
-    cn = sd._normalize(np.asarray(cents, dtype=np.float64))
+    m = _normalize_rows(np.stack([np.asarray(r[1], dtype=np.float64)
+                                  for r in rows]))
+    cn = _normalize_rows(cents)
     cid = np.argmax(m @ cn.T, axis=1)
     out = {}
     for c in np.unique(cid):

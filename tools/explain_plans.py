@@ -188,7 +188,7 @@ def main() -> None:
 
     from osmspark.datagen import gen_vectors
     from osmspark.operators.similarity import (
-        ivf_topk, ivf_topk_gemm, train_centroids,
+        ivf_topk, quantize_embeddings, train_centroids,
     )
 
     vecs = gen_vectors(spark, 5000, 64)
@@ -196,33 +196,24 @@ def main() -> None:
     ivf_qs = vecs.limit(50).select(
         F.col("vec_id").alias("query_id"), "embedding")
     add(
-        "IVF ANN, pair-join path (round-4 distributed probes)",
-        ivf_topk(vecs, ivf_qs, k=5, centroids=cents, nprobe=2,
-                 broadcast_queries=False),
-        [("probes generated ON the queries DataFrame — no driver-built "
-          "rows", lambda p: "LocalTableScan" not in p),
-         "ArrowEvalPython",
-         ("no row-wise python", lambda p: "BatchEvalPython" not in p)],
-    )
-    add(
-        "IVF ANN, per-bucket block-GEMM path (round-4 big-batch scan)",
-        ivf_topk_gemm(vecs, ivf_qs, k=5, centroids=cents, nprobe=2),
+        "IVF ANN, per-bucket block-GEMM scan (`ivf_topk`)",
+        ivf_topk(vecs, ivf_qs, k=5, centroids=cents, nprobe=2),
         [("cogrouped per centroid bucket",
           lambda p: "FlatMapCoGroupsInPandas" in p),
          ("probes + vectors each shuffled ONCE on cid",
           lambda p: "hashpartitioning(cid" in p),
-         ("no driver-built rows", lambda p: "LocalTableScan" not in p)],
-    )
-
-    from osmspark.operators.similarity import (
-        ivf_topk_gemm_int8, quantize_embeddings,
+         ("probes generated ON the queries DataFrame — no driver-built "
+          "rows", lambda p: "LocalTableScan" not in p),
+         "ArrowEvalPython",
+         ("no row-wise python", lambda p: "BatchEvalPython" not in p)],
     )
 
     vecs8 = quantize_embeddings(vecs).select("vec_id", "qvec")
     add(
-        "IVF ANN, int8-composed block-GEMM (round 5 — quantized corpus "
-        "scan)",
-        ivf_topk_gemm_int8(vecs8, ivf_qs, k=5, centroids=cents, nprobe=2),
+        "IVF ANN, block-GEMM scan over an int8-quantized corpus "
+        "(`ivf_topk(..., vec_col=\"qvec\")`)",
+        ivf_topk(vecs8, ivf_qs, k=5, centroids=cents, nprobe=2,
+                 vec_col="qvec"),
         [("cogrouped per centroid bucket",
           lambda p: "FlatMapCoGroupsInPandas" in p),
          ("corpus enters the cid exchange as the tinyint column itself "
