@@ -233,14 +233,18 @@ def map_match(gps: DataFrame, segments: DataFrame,
         raise ValueError("sigma_m and beta_m must be positive")
     if max_candidates_per_fix < 1:
         raise ValueError("max_candidates_per_fix must be >= 1")
+    # every fix enters the Viterbi group as one null-match row beside its
+    # candidates: a union has one physical plan, where a fix-side join
+    # is planned by AQE stage timing.  A NULL-ts fix has no timestep, so
+    # it keeps only its null row and no candidates are made for it.
     cand = match_candidates(
-        gps, segments, radius_m=radius_m,
-        max_seg_len_m=max_seg_len_m, traj_col=traj_col, ts_col=ts_col)
+        gps.filter(F.col(ts_col).cast("double").isNotNull()), segments,
+        radius_m=radius_m, max_seg_len_m=max_seg_len_m,
+        traj_col=traj_col, ts_col=ts_col)
     fixes = gps.select(
         F.col(traj_col), F.col(ts_col).cast("double").alias(ts_col),
         "lat", "lon")
-    joined = fixes.join(
-        cand.drop("lat", "lon"), [traj_col, ts_col], "left")
+    rows = fixes.unionByName(cand, allowMissingColumns=True)
 
     id_type = gps.schema[traj_col].dataType
     way_type = segments.schema["way_id"].dataType
@@ -262,7 +266,8 @@ def map_match(gps: DataFrame, segments: DataFrame,
     def viterbi(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) > max_traj_rows:
             raise RuntimeError(
-                f"map_match: trajectory with {len(pdf)} candidate rows "
+                f"map_match: trajectory with {len(pdf)} fix + candidate "
+                "rows "
                 f"exceeds max_traj_rows={max_traj_rows}; split the key "
                 "upstream (e.g. by day)")
         # deterministic state order inside each timestep
@@ -360,4 +365,4 @@ def map_match(gps: DataFrame, segments: DataFrame,
         o.loc[chosen < 0, ["m_lat", "m_lon", "dist_m"]] = None
         return o
 
-    return joined.groupBy(traj_col).applyInPandas(viterbi, out_schema)
+    return rows.groupBy(traj_col).applyInPandas(viterbi, out_schema)

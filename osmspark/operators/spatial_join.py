@@ -488,44 +488,6 @@ def _cover_pieces_flagged(pieces: list, res: int):
     return cells[uniq], interior_or
 
 
-def points_in_rings_np(py, px, ring_lats, ring_lons):
-    """Vectorized crossing-number test for a batch of (point, ring) pairs.
-
-    py/px: float arrays (n,); ring_lats/ring_lons: lists of per-row arrays.
-    Returns bool array (n,). One flat pass over all edges of the batch.
-    """
-    py = np.asarray(py, dtype=np.float64)
-    px = np.asarray(px, dtype=np.float64)
-    n = len(py)
-    if n == 0:
-        return np.zeros(0, dtype=bool)
-    lens = np.fromiter((len(r) for r in ring_lats), dtype=np.int64, count=n)
-    edge_counts = lens - 1  # rings are closed (last == first)
-    row_idx = np.repeat(np.arange(n), edge_counts)
-    flat_lat = np.concatenate([np.asarray(r, dtype=np.float64) for r in ring_lats])
-    flat_lon = np.concatenate([np.asarray(r, dtype=np.float64) for r in ring_lons])
-    starts = np.concatenate(([0], np.cumsum(lens)))[:-1]
-    first = np.repeat(starts, edge_counts) + _ranges(edge_counts)
-    y1, y2 = flat_lat[first], flat_lat[first + 1]
-    x1, x2 = flat_lon[first], flat_lon[first + 1]
-    pyr, pxr = py[row_idx], px[row_idx]
-    straddle = (y1 > pyr) != (y2 > pyr)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = x1 + (pyr - y1) * (x2 - x1) / (y2 - y1)
-    cross = straddle & (pxr < xint)
-    counts = np.bincount(row_idx[cross], minlength=n)
-    return (counts % 2) == 1
-
-
-def _ranges(counts: np.ndarray) -> np.ndarray:
-    """[0..c0-1, 0..c1-1, ...] without a Python loop."""
-    total = int(counts.sum())
-    if total == 0:
-        return np.zeros(0, dtype=np.int64)
-    offsets = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    return np.arange(total, dtype=np.int64) - np.repeat(offsets, counts)
-
-
 def _grouped(kernel, codes, cols, pieces_by_code, fills):
     """The one group-by-polygon loop of the point x polygon family: sort
     a batch's rows by dim-row code and call

@@ -1,6 +1,6 @@
-"""B6 — raster tile rendering (SURVEY §2.2).
+"""B6 — raster tile rendering and hex-lattice statistics (SURVEY §2.2).
 
-Two layers:
+Three layers:
   * `with_tile` / `tile_counts`: Web-Mercator (z/x/y) tile assignment and
     per-tile density — pure native expressions (whole-stage codegen), the
     scale path for 10^12 points: one shuffle keyed by tile.
@@ -10,7 +10,16 @@ Two layers:
     `render_density_tiles_pandas` keeps the original applyInPandas /
     numpy-histogram2d form as the independent cross-check twin.  Output
     rows (z, tile_x, tile_y, raster array<long>) with deterministic
-    binning so rasters are hash-comparable.
+    binning so rasters are hash-comparable.  `vectorize_raster` turns
+    rasters back into hotspot polygons.
+  * Hex lattice: `cell_rollup_pyramid` (per-cell counts at every res,
+    each level folded from the one below) and four statistics —
+    `kde_smooth`, `gi_star`, `morans_i`, `gi_star_spacetime` — composed
+    over one private layer: `_lattice_values` (the per-cell or per
+    (cell, t_bucket) double aggregate, face-seam guard, optional
+    localCheckpoint), `_spread` (one literal-stencil explode of
+    (d_cell, d_t, weight) offsets and one groupBy to (wx, w)) and
+    `_gi_star_z` (the Gi* moments, z-score, join-back and broadcast).
 
 An integer-grid variant (`int_tile`) bins by exact integer arithmetic —
 used for the DuckDB-oracle query (bit-identical across engines).
@@ -24,8 +33,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_SQRT3_KDE = math.sqrt(3.0)
 
 
 def mercator_xy(lat, lon):
@@ -375,37 +382,122 @@ def cell_rollup_pyramid(points: DataFrame, fine_res: int, coarse_res: int,
     return out
 
 
-def _guard_face_seam(cells: DataFrame, res: int, reach_k: int,
-                     value_col: str, opname: str, consequence: str) -> DataFrame:
+def _guard_face_seam(bins: DataFrame, res: int, reach_k: int,
+                     opname: str) -> DataFrame:
     """Executor-side raise when any occupied cell sits within `reach_k`
     cell pitches of its cube-face edge — the loud-guard convention for
     the lattice-stencil operators, whose neighbor arithmetic is axial on
     the cell's own face (kring contract).  Pure native expressions: the
-    cell's face xy is re-derived with shift/AND arithmetic."""
-    from ..functions.hexgrid import _OFF, _res_frame
+    cell's face xy is re-derived with shift/AND arithmetic and the raise
+    rides inside `x`, the column every consumer reads."""
+    from ..functions.hexgrid import _OFF, _SQRT3, _res_frame
 
     radius, c, s = _res_frame(res)
     q = ((F.shiftright("cell", 28).bitwiseAND(F.lit((1 << 28) - 1)))
          - F.lit(_OFF)).cast("double")
     r = (F.col("cell").bitwiseAND(F.lit((1 << 28) - 1))
          - F.lit(_OFF)).cast("double")
-    xr = F.lit(radius) * (F.lit(_SQRT3_KDE) * q
-                          + F.lit(_SQRT3_KDE / 2.0) * r)
+    xr = F.lit(radius) * (F.lit(_SQRT3) * q + F.lit(_SQRT3 / 2.0) * r)
     yr = F.lit(radius * 1.5) * r
     x = xr * F.lit(c) - yr * F.lit(s)
     y = xr * F.lit(s) + yr * F.lit(c)
     # conservative reach: reach_k+2 center pitches (pitch = sqrt(3)*radius)
-    margin = (reach_k + 2) * _SQRT3_KDE * radius
+    margin = (reach_k + 2) * _SQRT3 * radius
     near = (F.greatest(F.abs(x), F.abs(y)) > F.lit(1.0 - margin))
-    return cells.withColumn(
-        value_col,
+    return bins.withColumn(
+        "x",
         F.when(near, F.raise_error(F.concat(
             F.lit(f"{opname}: occupied cell within the stencil's "
                   "reach of its face edge (cell="),
             F.col("cell").cast("string"),
-            F.lit(f") — {consequence}; pass "
-                  "strict_seam=False to accept the documented leak"),
-        ))).otherwise(F.col(value_col)))
+            F.lit(") — cross-seam neighbors would be silently dropped; "
+                  "pass strict_seam=False to accept the documented leak"),
+        ))).otherwise(F.col("x")))
+
+
+def _lattice_values(points: DataFrame, res: int, k: int, opname: str,
+                    lat: str, lon: str, value_col: str | None,
+                    strict_seam: bool, materialize: bool,
+                    bucket=None) -> DataFrame:
+    """(cell[, t_bucket], x): the one per-bin aggregate of the lattice
+    statistics — ONE native cell assignment and ONE groupBy summing
+    `value_col` (or 1.0 per point) into a double `x`.  `bucket` is the
+    t_bucket Column of the space-time form; without it the bins are the
+    cells alone.
+
+    strict_seam adds the face-seam guard for a k-cell stencil.
+    materialize localCheckpoints the aggregate (bin-count-sized, not
+    point-sized) before it fans into its consumers — the
+    cell_rollup_pyramid convention: without it the point-scan
+    aggregation re-executes once per consumer (ReuseExchange does not
+    dedupe it here)."""
+    from ..functions.hexgrid import with_hex_cell
+
+    x_in = F.col(value_col).cast("double") if value_col else F.lit(1.0)
+    cols = [F.col(lat).alias("lat"), F.col(lon).alias("lon")]
+    keys = ["cell"]
+    if bucket is not None:
+        cols.append(bucket.alias("t_bucket"))
+        keys.append("t_bucket")
+    bins = with_hex_cell(
+        points.select(*cols, x_in.alias("__x")), res, out_col="cell",
+    ).groupBy(*keys).agg(F.sum("__x").alias("x"))
+    if strict_seam:
+        bins = _guard_face_seam(bins, res, k, opname)
+    if materialize:
+        bins = bins.localCheckpoint(eager=True)
+    return bins
+
+
+def _spread(bins: DataFrame, keys, offsets) -> DataFrame:
+    """(keys..., wx, w): every bin's `x` spread over ONE literal stencil
+    of (d_cell, d_t, weight) offsets, then ONE groupBy(keys) —
+    wx = sum(x * weight) and w = the number of contributing bins.
+
+    d_cell is a packed axial offset (dq << 28) + dr: q/r live in
+    disjoint bit fields of the cell id, so cell + d_cell IS the
+    neighbor — pure int arithmetic, whole-stage codegen, zero Python.
+    d_t shifts t_bucket and is read only when it is a key."""
+    stencil = F.array(*[
+        F.struct(*[F.lit(d).cast("long").alias(key)
+                   for key, d in zip(keys, (d_cell, d_t))],
+                 F.lit(float(weight)).alias("__w"))
+        for d_cell, d_t, weight in offsets
+    ])
+    return (
+        bins.select(*keys, "x", F.explode(stencil).alias("__s"))
+        .select(*[(F.col(key) + F.col(f"__s.{key}")).alias(key)
+                  for key in keys],
+                (F.col("x") * F.col("__s.__w")).alias("__xw"))
+        .groupBy(*keys)
+        .agg(F.sum("__xw").alias("wx"), F.count("*").alias("w"))
+    )
+
+
+def _gi_star_z(bins: DataFrame, nb: DataFrame, keys) -> DataFrame:
+    """(keys..., x, w, wx, z): the `gi_star` z-score of every occupied
+    bin from its `_spread` neighborhood sums.  The study-set moments
+    (n, mean, population sd S) broadcast as a one-row crossJoin; the
+    inner join on the keys restricts the neighborhoods to occupied
+    receivers (both sides exit hash-partitioned on them)."""
+    stats = bins.agg(
+        F.count("*").cast("double").alias("__n"),
+        F.avg("x").alias("__mean"),
+        F.sqrt(F.avg(F.col("x") * F.col("x"))
+               - F.avg("x") * F.avg("x")).alias("__s"),
+    )
+    wd = F.col("w").cast("double")
+    var_term = (F.col("__n") * wd - wd * wd) / (F.col("__n") - F.lit(1.0))
+    z = F.when(
+        (F.col("__n") > 1) & (F.col("__s") > 0) & (var_term > 0),
+        (F.col("wx") - F.col("__mean") * wd)
+        / (F.col("__s") * F.sqrt(var_term)),
+    )
+    return (
+        bins.join(nb, list(keys))
+        .crossJoin(F.broadcast(stats))
+        .select(*keys, "x", "w", "wx", z.alias("z"))
+    )
 
 
 def kde_smooth(points: DataFrame, res: int, k: int = 2, sigma: float = 1.0,
@@ -417,12 +509,10 @@ def kde_smooth(points: DataFrame, res: int, k: int = 2, sigma: float = 1.0,
     (d = hex ring distance, sigma in CELL PITCHES), kernel normalized to
     sum 1 so total mass is conserved exactly.
 
-    Plan shape: one cell assignment + ONE groupBy for the input counts,
-    then a LITERAL (1+3k(k+1))-element stencil explode — the neighbor id
-    is pure int arithmetic on the packed cell (q/r live in disjoint bit
-    fields, so cell + (dq<<28) + dr IS the neighbor) — and ONE final
-    groupBy(cell) sum.  Entirely whole-stage codegen; the convolution
-    never leaves the JVM.
+    Plan shape: `_lattice_values` (one cell assignment + groupBy), then
+    `_spread` with the normalized weights — a literal (1+3k(k+1))-element
+    stencil explode and ONE groupBy(cell) sum.  Entirely whole-stage
+    codegen; the convolution never leaves the JVM.
 
     Face-seam contract: neighbors are axial on the cell's own face (the
     `kring` contract).  strict_seam=True (default) raises executor-side
@@ -430,44 +520,21 @@ def kde_smooth(points: DataFrame, res: int, k: int = 2, sigma: float = 1.0,
     edge — silent cross-seam mass loss is the failure mode this engine
     never ships; pass strict_seam=False to accept the documented leak
     (mass addressed to off-face ids that nothing reads)."""
-    from ..functions.hexgrid import kring_offsets, with_hex_cell
+    from ..functions.hexgrid import kring_offsets
 
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
     if sigma <= 0:
         raise ValueError(f"sigma must be positive, got {sigma}")
-    w_in = (F.col(weight_col).cast("double") if weight_col
-            else F.lit(1.0))
-    cells = with_hex_cell(
-        points.select(F.col(lat).alias("lat"), F.col(lon).alias("lon"),
-                      w_in.alias("__w")),
-        res, out_col="cell",
-    ).groupBy("cell").agg(F.sum("__w").alias("__m"))
-
     offs = kring_offsets(k)
     dists = [(abs(dq) + abs(dr) + abs(dq + dr)) // 2 for dq, dr in offs]
     raw = [math.exp(-(d * d) / (2.0 * sigma * sigma)) for d in dists]
     tot = sum(raw)
-    stencil = F.array(*[
-        F.struct(F.lit((dq << 28) + dr).cast("long").alias("d"),
-                 F.lit(w / tot).alias("w"))
-        for (dq, dr), w in zip(offs, raw)
-    ])
-
-    if strict_seam:
-        cells = _guard_face_seam(cells, res, k, "__m", "kde_smooth",
-                                 "cross-seam mass would silently leak")
-
-    sp = cells.select(
-        F.col("cell"), F.col("__m"),
-        F.explode(stencil).alias("__s"),
-    )
-    return (
-        sp.select((F.col("cell") + F.col("__s.d")).alias("cell"),
-                  (F.col("__m") * F.col("__s.w")).alias("__c"))
-        .groupBy("cell")
-        .agg(F.sum("__c").alias("density"))
-    )
+    cells = _lattice_values(points, res, k, "kde_smooth", lat, lon,
+                            weight_col, strict_seam, materialize=False)
+    nb = _spread(cells, ("cell",), [
+        ((dq << 28) + dr, 0, w / tot) for (dq, dr), w in zip(offs, raw)])
+    return nb.select("cell", F.col("wx").alias("density"))
 
 
 def gi_star(points: DataFrame, res: int, k: int = 1,
@@ -491,71 +558,22 @@ def gi_star(points: DataFrame, res: int, k: int = 1,
     k-ring of i (incl. i) and wx_i sums their x.  z is NULL where the
     variance term degenerates (n <= 1, S == 0, or w_i == n).
 
-    Plan shape: ONE cell-assignment + groupBy for x_i; the neighborhood
-    sums reuse the kde stencil trick — a literal (1+3k(k+1))-element
-    explode whose neighbor id is plain int arithmetic on the packed
-    cell, then one groupBy — restricted to occupied receivers by an
-    inner self-join on cell (both sides exit hash-partitioned on cell);
-    the three global scalars broadcast as a one-row crossJoin.  Zero
-    Python anywhere.
-
-    materialize=True (default) localCheckpoints the per-cell aggregate
-    (cell-count-sized, thousands of rows) before it fans into the three
-    consumers — the cell_rollup_pyramid convention: without it the
-    point-scan aggregation re-executes once per consumer (ReuseExchange
-    does not dedupe it here, same finding as the pyramid's).
+    Plan shape: `_lattice_values` (localCheckpointed when materialize,
+    the default), `_spread` with weight 1.0, `_gi_star_z`.  Zero Python
+    anywhere.
 
     Face-seam contract: identical to `kde_smooth` — strict_seam=True
     raises executor-side when an occupied cell sits within stencil reach
     of its face edge; the lenient mode under-counts w_i at the seam."""
-    from ..functions.hexgrid import kring_offsets, with_hex_cell
+    from ..functions.hexgrid import kring_offsets
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    x_in = (F.col(value_col).cast("double") if value_col else F.lit(1.0))
-    cells = with_hex_cell(
-        points.select(F.col(lat).alias("lat"), F.col(lon).alias("lon"),
-                      x_in.alias("__x")),
-        res, out_col="cell",
-    ).groupBy("cell").agg(F.sum("__x").alias("x"))
-    if strict_seam:
-        cells = _guard_face_seam(
-            cells, res, k, "x", "gi_star",
-            "cross-seam neighborhoods would silently under-count")
-    if materialize:
-        cells = cells.localCheckpoint(eager=True)
-
-    stencil = F.array(*[
-        F.lit((dq << 28) + dr).cast("long")
-        for dq, dr in kring_offsets(k)
-    ])
-    nb = (
-        cells.select(
-            F.col("cell"), F.col("x").alias("__xj"),
-            F.explode(stencil).alias("__d"),
-        )
-        .select((F.col("cell") + F.col("__d")).alias("cell"), "__xj")
-        .groupBy("cell")
-        .agg(F.sum("__xj").alias("wx"), F.count("*").alias("w"))
-    )
-    stats = cells.agg(
-        F.count("*").cast("double").alias("__n"),
-        F.avg("x").alias("__mean"),
-        F.sqrt(F.avg(F.col("x") * F.col("x"))
-               - F.avg("x") * F.avg("x")).alias("__s"),
-    )
-    wd = F.col("w").cast("double")
-    var_term = (F.col("__n") * wd - wd * wd) / (F.col("__n") - F.lit(1.0))
-    z = F.when(
-        (F.col("__n") > 1) & (F.col("__s") > 0) & (var_term > 0),
-        (F.col("wx") - F.col("__mean") * wd)
-        / (F.col("__s") * F.sqrt(var_term)),
-    )
-    return (
-        cells.join(nb, "cell")
-        .crossJoin(F.broadcast(stats))
-        .select("cell", "x", "w", "wx", z.alias("z"))
-    )
+    cells = _lattice_values(points, res, k, "gi_star", lat, lon, value_col,
+                            strict_seam, materialize)
+    nb = _spread(cells, ("cell",),
+                 [((dq << 28) + dr, 0, 1.0) for dq, dr in kring_offsets(k)])
+    return _gi_star_z(cells, nb, ("cell",))
 
 
 def morans_i(points: DataFrame, res: int, k: int = 1,
@@ -578,49 +596,29 @@ def morans_i(points: DataFrame, res: int, k: int = 1,
     aggregates.  i/z are NULL when degenerate (n <= 1, no variance, or
     no neighboring pairs).
 
-    Plan shape: the gi_star machinery minus the per-cell join-back —
-    one cell aggregate (localCheckpointed before its fan-out, same
-    rationale), one broadcast of the two global moments, one stencil
-    explode + groupBy for neighbor deviation sums, ONE final single-row
-    aggregate.  Zero Python; same face-seam guard."""
-    from ..functions.hexgrid import kring_offsets, with_hex_cell
+    Plan shape: `_lattice_values`, one broadcast of the two global
+    moments, `_spread` of dev over the stencil without its (0, 0)
+    offset, ONE final single-row aggregate.  Zero Python; same face-seam
+    guard as `gi_star`."""
+    from ..functions.hexgrid import kring_offsets
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    x_in = (F.col(value_col).cast("double") if value_col else F.lit(1.0))
-    cells = with_hex_cell(
-        points.select(F.col(lat).alias("lat"), F.col(lon).alias("lon"),
-                      x_in.alias("__x")),
-        res, out_col="cell",
-    ).groupBy("cell").agg(F.sum("__x").alias("x"))
-    if strict_seam:
-        cells = _guard_face_seam(
-            cells, res, k, "x", "morans_i",
-            "cross-seam neighborhoods would silently under-count")
-    if materialize:
-        cells = cells.localCheckpoint(eager=True)
-
+    cells = _lattice_values(points, res, k, "morans_i", lat, lon,
+                            value_col, strict_seam, materialize)
     stats = cells.agg(
         F.count("*").cast("double").alias("__n"),
         F.avg("x").alias("__mean"),
     )
+    # dev rides in `x`, the column _spread reads
     dev = cells.crossJoin(F.broadcast(stats)).select(
-        "cell", (F.col("x") - F.col("__mean")).alias("dev"), "__n")
-
-    offs = [o for o in kring_offsets(k) if o != (0, 0)]
-    stencil = F.array(*[
-        F.lit((dq << 28) + dr).cast("long") for dq, dr in offs
-    ])
-    nb = (
-        dev.select("cell", F.col("dev").alias("__dj"),
-                   F.explode(stencil).alias("__d"))
-        .select((F.col("cell") + F.col("__d")).alias("cell"), "__dj")
-        .groupBy("cell")
-        .agg(F.sum("__dj").alias("nb_dev"), F.count("*").alias("w"))
-    )
+        "cell", (F.col("x") - F.col("__mean")).alias("x"), "__n")
+    nb = _spread(dev, ("cell",), [((dq << 28) + dr, 0, 1.0)
+                                  for dq, dr in kring_offsets(k)
+                                  if (dq, dr) != (0, 0)])
     per = dev.join(nb, "cell", "left").select(
-        "__n", "dev",
-        F.coalesce(F.col("nb_dev"), F.lit(0.0)).alias("nb_dev"),
+        "__n", F.col("x").alias("dev"),
+        F.coalesce(F.col("wx"), F.lit(0.0)).alias("nb_dev"),
         F.coalesce(F.col("w"), F.lit(0)).cast("double").alias("w"),
     )
     agg = per.agg(
@@ -679,11 +677,11 @@ def gi_star_spacetime(points: DataFrame, res: int, bucket_s: float,
     seconds); NULL-ts rows are excluded (the sessionize convention).
     t_bucket = floor(epoch / bucket_s).
 
-    Plan shape: gi_star's, with the literal stencil widened to
-    (1 + 3k(k+1)) * (2*t_neighbors + 1) (d_cell, d_t) struct offsets —
-    one explode + one groupBy on the (cell, bucket) key; zero Python.
-    Face-seam guard identical to gi_star."""
-    from ..functions.hexgrid import kring_offsets, with_hex_cell
+    Plan shape: gi_star's, with the `_spread` stencil widened to
+    (1 + 3k(k+1)) * (2*t_neighbors + 1) (d_cell, d_t) offsets on the
+    (cell, t_bucket) key; zero Python.  Face-seam guard identical to
+    gi_star."""
+    from ..functions.hexgrid import kring_offsets
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -691,54 +689,14 @@ def gi_star_spacetime(points: DataFrame, res: int, bucket_s: float,
         raise ValueError(f"t_neighbors must be >= 0, got {t_neighbors}")
     if bucket_s <= 0:
         raise ValueError(f"bucket_s must be positive, got {bucket_s}")
-    x_in = (F.col(value_col).cast("double") if value_col else F.lit(1.0))
-    bins = with_hex_cell(
-        points.filter(F.col(ts_col).isNotNull()).select(
-            F.col(lat).alias("lat"), F.col(lon).alias("lon"),
-            F.floor(F.col(ts_col).cast("double") / F.lit(float(bucket_s)))
-             .cast("long").alias("t_bucket"),
-            x_in.alias("__x")),
-        res, out_col="cell",
-    ).groupBy("cell", "t_bucket").agg(F.sum("__x").alias("x"))
-    if strict_seam:
-        bins = _guard_face_seam(
-            bins, res, k, "x", "gi_star_spacetime",
-            "cross-seam neighborhoods would silently under-count")
-    if materialize:
-        bins = bins.localCheckpoint(eager=True)
-
-    stencil = F.array(*[
-        F.struct(F.lit((dq << 28) + dr).cast("long").alias("d"),
-                 F.lit(dt).cast("long").alias("dt"))
-        for dq, dr in kring_offsets(k)
-        for dt in range(-t_neighbors, t_neighbors + 1)
-    ])
-    nb = (
-        bins.select(
-            F.col("cell"), F.col("t_bucket"), F.col("x").alias("__xj"),
-            F.explode(stencil).alias("__s"),
-        )
-        .select((F.col("cell") + F.col("__s.d")).alias("cell"),
-                (F.col("t_bucket") + F.col("__s.dt")).alias("t_bucket"),
-                "__xj")
-        .groupBy("cell", "t_bucket")
-        .agg(F.sum("__xj").alias("wx"), F.count("*").alias("w"))
-    )
-    stats = bins.agg(
-        F.count("*").cast("double").alias("__n"),
-        F.avg("x").alias("__mean"),
-        F.sqrt(F.avg(F.col("x") * F.col("x"))
-               - F.avg("x") * F.avg("x")).alias("__s"),
-    )
-    wd = F.col("w").cast("double")
-    var_term = (F.col("__n") * wd - wd * wd) / (F.col("__n") - F.lit(1.0))
-    z = F.when(
-        (F.col("__n") > 1) & (F.col("__s") > 0) & (var_term > 0),
-        (F.col("wx") - F.col("__mean") * wd)
-        / (F.col("__s") * F.sqrt(var_term)),
-    )
-    return (
-        bins.join(nb, ["cell", "t_bucket"])
-        .crossJoin(F.broadcast(stats))
-        .select("cell", "t_bucket", "x", "w", "wx", z.alias("z"))
-    )
+    bucket = F.floor(F.col(ts_col).cast("double")
+                     / F.lit(float(bucket_s))).cast("long")
+    bins = _lattice_values(
+        points.filter(F.col(ts_col).isNotNull()), res, k,
+        "gi_star_spacetime", lat, lon, value_col, strict_seam, materialize,
+        bucket=bucket)
+    keys = ("cell", "t_bucket")
+    nb = _spread(bins, keys, [
+        ((dq << 28) + dr, dt, 1.0) for dq, dr in kring_offsets(k)
+        for dt in range(-t_neighbors, t_neighbors + 1)])
+    return _gi_star_z(bins, nb, keys)

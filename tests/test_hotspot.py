@@ -101,13 +101,17 @@ def test_gi_star_hotspot_and_weighted(spark):
 
 
 def test_gi_star_seam_guard(spark):
+    from osmspark.operators.tiles import gi_star_spacetime, morans_i
+
     df = spark.createDataFrame(
-        [(0.001, 44.9999), (1.30, 103.80), (1.31, 103.81)],
-        "lat double, lon double")
-    with pytest.raises(Exception, match="face edge"):
-        gi_star(df, res=9, k=1).collect()
-    rows = gi_star(df, res=9, k=1, strict_seam=False).collect()
-    assert len(rows) == 3
+        [(0.001, 44.9999, 0.0), (1.30, 103.80, 0.0), (1.31, 103.81, 0.0)],
+        "lat double, lon double, ts double")
+    for op, kw, n_rows in ((gi_star, {}, 3), (morans_i, {}, 1),
+                           (gi_star_spacetime, {"bucket_s": 3600.0}, 3)):
+        with pytest.raises(Exception, match="face edge"):
+            op(df, res=9, k=1, **kw).collect()
+        rows = op(df, res=9, k=1, strict_seam=False, **kw).collect()
+        assert len(rows) == n_rows, op.__name__
 
 
 def test_gi_star_plan_pure_native(spark):
@@ -247,6 +251,35 @@ def test_gi_star_spacetime_matches_python_oracle(spark):
             assert abs(got[b][3] - exp[b][3]) < 1e-9
     # the fixture exercises real time structure: multiple buckets per cell
     assert len({tb for _, tb in exp}) >= 4
+
+
+def test_gi_star_spacetime_one_bucket_equals_gi_star(spark):
+    """Every ts in one bucket and t_neighbors=0: the space-time bins are
+    the cells and the stencil is the spatial k-ring, so each bin's
+    (x, w, wx, z) equals gi_star's for its cell."""
+    from osmspark.operators.tiles import gi_star_spacetime
+
+    rng = random.Random(53)
+    pts = [(1.29 + rng.random() * 0.02, 103.79 + rng.random() * 0.02,
+            7200.0 + rng.random() * 3599.0, rng.random() * 5.0)
+           for _ in range(300)]
+    df = spark.createDataFrame(
+        pts, "lat double, lon double, ts double, v double")
+    exp = {r["cell"]: r for r in
+           gi_star(df, res=8, k=1, value_col="v").collect()}
+    got = gi_star_spacetime(df, res=8, bucket_s=3600.0, k=1, t_neighbors=0,
+                            value_col="v").collect()
+    assert {r["t_bucket"] for r in got} == {2}
+    assert {r["cell"] for r in got} == set(exp)
+    assert any(r["z"] is not None for r in got)     # non-vacuous
+    for r in got:
+        e = exp[r["cell"]]
+        assert r["w"] == e["w"]
+        for f in ("x", "wx", "z"):
+            if e[f] is None:
+                assert r[f] is None
+            else:
+                assert abs(r[f] - e[f]) < 1e-12, (f, r[f], e[f])
 
 
 def test_gi_star_spacetime_burst_detection(spark):

@@ -233,6 +233,33 @@ def test_gap_emits_null_and_breaks_chain(spark):
     assert got[3.0]["way_id"] == "B" and got[4.0]["way_id"] == "B"
 
 
+def test_null_ts_fix_emits_null_match(spark):
+    """A NULL-ts fix has no place in the timestep order: it keeps one
+    null-match row (ts NULL, its own lat/lon) even when a road is within
+    radius, and the rest of the trajectory matches as without it."""
+    ways, nodes = _net(spark, {
+        "A": [(1.3000, 103.800), (1.3000, 103.802)],
+        "B": [(1.3200, 103.820), (1.3200, 103.822)],
+    })
+    segs = way_segments(ways, nodes)
+    fixes = [(1, 0.0, 1.30001, 103.8005), (1, 1.0, 1.30001, 103.8010),
+             (1, None, 1.30001, 103.8007),     # 1 m from road A
+             (2, 0.0, 1.30001, 103.8005), (2, None, 1.32001, 103.8207),
+             (2, 1.0, 1.30002, 103.8009)]
+    gps = spark.createDataFrame(
+        fixes, "traj_id long, ts double, lat double, lon double")
+    got = {(r["traj_id"], r["ts"]): r for r in
+           map_match(gps, segs, radius_m=100.0).collect()}
+    assert len(got) == 6
+    for traj, lat, lon in ((1, 1.30001, 103.8007), (2, 1.32001, 103.8207)):
+        r = got[(traj, None)]
+        assert (r["lat"], r["lon"]) == (lat, lon)
+        assert r["way_id"] is None and r["seg_idx"] is None
+        assert r["m_lat"] is None and r["dist_m"] is None
+    for key in ((1, 0.0), (1, 1.0), (2, 0.0), (2, 1.0)):
+        assert (got[key]["way_id"], got[key]["seg_idx"]) == ("A", 0), key
+
+
 def test_guards(spark):
     ways, nodes = _net(spark, {
         "A": [(1.3000, 103.800), (1.3000, 103.802)],   # ~222 m segment

@@ -6,7 +6,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from osmspark.functions import geo, hexgrid, s2
-from osmspark.operators.spatial_join import points_in_rings_np
+from osmspark.operators.spatial_join import _pip_single_ring
 
 latlon = st.tuples(
     st.floats(min_value=-84.9, max_value=84.9, allow_nan=False),
@@ -54,7 +54,7 @@ def test_pip_vectorized_vs_scalar_random_polygon(nv, seed):
     rx = np.append(rx, rx[0])
     py = rng.uniform(2, 8, 64)
     px = rng.uniform(2, 8, 64)
-    got = points_in_rings_np(py, px, [ry] * 64, [rx] * 64)
+    got = _pip_single_ring(py, px, ry, rx)
 
     def scalar(yy, xx):
         inside = False
@@ -84,19 +84,9 @@ def test_kring_unique_and_symmetric(seed):
         assert int(cell[0]) in set(hexgrid.kring(np.array([n]), 1)[0].tolist())
 
 
-@settings(max_examples=30, deadline=None)
-@given(st.lists(st.integers(min_value=0, max_value=5), min_size=1, max_size=8))
-def test_ranges_property(counts):
-    from osmspark.operators.spatial_join import _ranges
-
-    out = _ranges(np.array(counts, dtype=np.int64))
-    exp = [i for c in counts for i in range(c)]
-    assert out.tolist() == exp
-
-
 # --- round-4 split_ring invariants (pure numpy, no SparkSession) -----------
 from osmspark.operators.spatial_join import (  # noqa: E402
-    _clip_halfplane, _densify_ring, _pip_single_ring, split_ring,
+    _clip_halfplane, _densify_ring, split_ring,
 )
 
 

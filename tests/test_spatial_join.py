@@ -18,12 +18,6 @@ def _pip_py(py, px, ring):
     return inside
 
 
-def test_ranges_helper():
-    out = sj._ranges(np.array([3, 1, 0, 2]))
-    assert out.tolist() == [0, 1, 2, 0, 0, 1]
-    assert sj._ranges(np.array([], dtype=np.int64)).tolist() == []
-
-
 def test_points_in_rings_np_vs_scalar():
     rng = np.random.default_rng(7)
     n = 500
@@ -38,11 +32,11 @@ def test_points_in_rings_np_vs_scalar():
         ring = [(cy + r * np.sin(a), cx + r * np.cos(a)) for a, r in zip(ang, rad)]
         ring.append(ring[0])
         rings.append(ring)
-    got = sj.points_in_rings_np(
-        py, px,
-        [np.array([p[0] for p in r]) for r in rings],
-        [np.array([p[1] for p in r]) for r in rings],
-    )
+    got = np.array([
+        sj._pip_single_ring(py[i:i + 1], px[i:i + 1],
+                            np.array([p[0] for p in r]),
+                            np.array([p[1] for p in r]))[0]
+        for i, r in enumerate(rings)])
     exp = np.array([_pip_py(py[i], px[i], rings[i]) for i in range(n)])
     assert (got == exp).all()
     assert exp.any() and (~exp).any()  # both classes exercised

@@ -63,6 +63,22 @@ def _python_udfs(plan: str) -> list[str]:
                       r"Arguments: \[(\w+)\(", plan).group(1) for i in ids]
 
 
+def _stencil_explodes(plan: str) -> int:
+    """Final-plan Generate nodes that explode a literal array — the
+    lattice operators' stencil (the fixture's own parse explodes read
+    columns, not literals)."""
+    ids = re.findall(r"Generate \((\d+)\)", _final(plan))
+    return sum(bool(re.search(
+        rf"\n\({i}\) Generate[^\n]*\nInput[^\n]*\nArguments: explode\(\[",
+        plan)) for i in ids)
+
+
+def _first_join_or_union(plan: str, node: str) -> str:
+    """The first join or union line in the final-plan subtree of `node`."""
+    return next((ln.strip(" +-:*") for ln in _subtree(plan, node)
+                 if "Join" in ln or "Union" in ln), "")
+
+
 CHECKS = {
     "ReadSchema pruning": lambda p: "ReadSchema" in p,
     "no row-wise python (BatchEvalPython)": lambda p: "BatchEvalPython" not in p,
@@ -582,9 +598,9 @@ def main() -> None:
     add(
         "Hex KDE smoothing (round 5 — codegen stencil convolution)",
         kde_smooth(nodes.select("lat", "lon"), res=8, k=2, sigma=1.2),
-        [("the 19-cell stencil is a literal-array explode (Generate), "
+        [("the 19-cell stencil is ONE literal-array explode (Generate), "
           "neighbor ids pure int arithmetic",
-          lambda p: "Generate explode" in p or "Generate" in p),
+          lambda p: _stencil_explodes(p) == 1),
          ("zero Python anywhere — the convolution never leaves the JVM",
           lambda p: "EvalPython" not in p),
          ("two aggregates total (input counts + convolved sum)",
@@ -598,8 +614,8 @@ def main() -> None:
         "output)",
         morans_i(nodes.select("lat", "lon"), res=8, k=1,
                  materialize=False),
-        [("neighbor deviation sums ride the literal stencil explode",
-          lambda p: "Generate" in p),
+        [("neighbor deviation sums ride ONE literal stencil explode",
+          lambda p: _stencil_explodes(p) == 1),
          ("global moments arrive by broadcast, not shuffle",
           lambda p: "BroadcastExchange" in p),
          ("zero Python anywhere", lambda p: "EvalPython" not in p)],
@@ -640,6 +656,10 @@ def main() -> None:
         map_match(mm_gps, mm_segs, radius_m=80.0),
         [("exactly one per-key python stage (the Viterbi pass)",
           lambda p: p.count("FlatMapGroupsInPandas") >= 1),
+         ("fixes meet their candidates in a Union, no LeftOuter join "
+          "(that join's plan varied with AQE stage timing)",
+          lambda p: _first_join_or_union(p, "FlatMapGroupsInPandas")
+          .startswith("Union")),
          ("no cartesian/nested-loop join",
           lambda p: "CartesianProduct" not in p
           and "BroadcastNestedLoopJoin" not in p),
@@ -778,8 +798,9 @@ def main() -> None:
             res=8, bucket_s=3600.0, k=1, t_neighbors=1,
             strict_seam=False),
         [("ZERO Python", lambda p: "EvalPython" not in p),
-         ("one (d_cell, d_t) stencil explode + one groupBy on the bin "
-          "key", lambda p: "Generate" in p and "HashAggregate" in p),
+         ("ONE (d_cell, d_t) stencil explode + one groupBy on the bin "
+          "key", lambda p: _stencil_explodes(p) == 1
+          and "HashAggregate" in p),
          ("global moments broadcast as a one-row crossJoin",
           lambda p: "BroadcastNestedLoopJoin" in p
           or "BroadcastExchange" in p)],
