@@ -303,6 +303,19 @@ def _map_side(p: DataFrame, qt: pa.Table, qid_type, k: int,
     return p.mapInArrow(local_top_k, out_schema)
 
 
+def fetch_queries(queries: DataFrame) -> tuple[pa.Table, StructType]:
+    """A query batch on the Spark driver: (query_id, lat, lon), the
+    coordinates cast to double, as one Arrow table, plus its Spark schema.
+    The batch executes here, once; `knn_kring` and
+    `radius_join.within_distance_join` serve it from driver memory."""
+    qf = queries.select(
+        "query_id",
+        F.col("lat").cast("double").alias("lat"),
+        F.col("lon").cast("double").alias("lon"),
+    )
+    return qf.toArrow(), qf.schema
+
+
 def knn_kring(
     points: DataFrame,
     queries: DataFrame,
@@ -318,12 +331,7 @@ def knn_kring(
     is spread first).  queries: (query_id, lat, lon), fetched to the
     Spark driver once per call, so the batch must fit there: ~24 B per
     query plus its id.  A derived query frame executes exactly once."""
-    qf = queries.select(
-        "query_id",
-        F.col("lat").cast("double").alias("lat"),
-        F.col("lon").cast("double").alias("lon"),
-    )
-    qt = qf.toArrow()
+    qt, qschema = fetch_queries(queries)
     p = points.select(
         F.col(point_id).alias("point_id"),
         F.col("lat").cast("double").alias("lat"),
@@ -333,7 +341,7 @@ def knn_kring(
     if p.rdd.getNumPartitions() < n_par:
         p = p.repartition(n_par)
     cand = reduce(DataFrame.unionByName, [
-        _map_side(p, qt.slice(q0, MAP_QUERIES), qf.schema[0].dataType, k,
+        _map_side(p, qt.slice(q0, MAP_QUERIES), qschema[0].dataType, k,
                   metric)
         for q0 in range(0, max(qt.num_rows, 1), MAP_QUERIES)
     ])

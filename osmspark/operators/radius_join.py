@@ -1,5 +1,5 @@
 """B5b — within-distance (radius) join via hex disk cover (SURVEY §2.2
-extension; sibling of the kNN k-ring operator in knn.py).
+extension; sibling of the kNN operator in knn.py).
 
 `within_distance_join(points, queries, radius)` returns every (query,
 point) pair whose distance is <= radius; `within_distance_pairs(points,
@@ -7,42 +7,64 @@ radius)` is the self-join variant (near-neighbor pairs).  This is the
 range-join member of the spatial family the reference's audit pipeline
 implies (kNN answers "nearest k", PIP answers "inside polygon", this
 answers "within d meters") — none of it exists as a Spark builtin, so it
-is composed from the engine's own cell index:
+is composed from the engine's own cell index.
 
-  1. the query half (`query_disk_cells`) turns each query into the
-     cells that can hold a point within the radius, through
-     `_with_disk_cells`, the one disk step of the radius family: the
-     res comes from the radius (`auto_res`), and ONE Arrow pandas UDF
-     emits the seam-exact disk of `hexgrid.disk_cells` — a home k-ring
+`within_distance_join` serves a query batch the way `knn_kring` does: the
+static side is prepared once and each batch is shipped to it (*Distributed
+Stream KNN Join*, SIGMOD 2021):
+
+  1. the query half (`_batch_disk_cells`) fetches the batch to the Spark
+     driver once (`knn.fetch_queries`) and computes every query's disk
+     there in numpy — the cells that can hold a point within the radius,
+     at the res that comes from the radius (`auto_res`): a home k-ring
      whose ring count PROVABLY covers the disk (the uv-exact
      `hexgrid.ring_count_uv` bound) plus re-projected anchor rings on
      every cube face the disk spills onto (BFS fixpoint), so queries
-     straddling a face seam or corner get their cross-face matches;
-  2. the join half (`_join_disk_cells`) hex-cell-assigns the points
-     ONCE at that res via the native staged expression path (whole-stage
-     codegen, zero Python) and equi-joins them to the candidate cells —
-     a plain shuffle hash join on a long key, no crossJoin anywhere;
-  3. exact distance filter (haversine native columns, or the
-     SQL-bit-reproducible squared-degree metric for oracle rows).
+     straddling a face seam or corner get their cross-face matches.  The
+     disk arrays go back to Spark as one small local frame, exploded
+     there to (query, cell) rows;
+  2. the point half (`_prepared_points`) hex-cell-assigns the points at
+     that res via the native staged expression path (whole-stage
+     codegen, zero Python) and persists them ONCE per points snapshot:
+     later batches at that res read the cached rows, with no re-plan and
+     no rescan;
+  3. the halves equi-join on the long cell key — the planner broadcasts
+     the small query side, no crossJoin anywhere — then the exact distance
+     filter (haversine native columns, or the SQL-bit-reproducible
+     squared-degree metric for oracle rows).
 
-Scale shape: the only Python is the per-QUERY disk generation (queries
-are the small-multiplied side — 1+3k(k+1) rows each, k<=~6 at typical
-gnomonic scale); the point side is touched once, natively, and shuffles
-on the cell key with map-side-combinable cardinality.  Skewed hot cells
-degrade gracefully: a hot cell fans out to the queries whose disks
-contain it, which is the true output workload, not an artifact.  The
-`hexgrid.MAX_COVER_M` cap (~200 km) is an OPERATING-ENVELOPE limit on
-disk fanout — past it a disk approaches face scale and the adaptive
-polygon-cover join is the right tool — enforced loudly rather than
-letting a mis-sized radius explode the candidate count.
+No Python runs at query time.  A caller whose query side is a whole point
+set or a stream cannot fetch it, so it takes the distributed disk step
+instead, `_with_disk_cells` (the same disk as ONE Arrow UDF over the
+query frame): map-match directly, `nearest_polygon` through
+`query_disk_cells`, and `within_distance_pairs` and the streaming alerts
+through `query_disk_cells` + `_join_disk_cells` (the point half planned
+per call).
+
+Scale shape: the query batch must fit on the driver (like kNN's); each
+query multiplies into 1+3k(k+1) cell rows, k<=~6 at typical gnomonic
+scale.  The prepared point half is touched once per snapshot, natively.
+Skewed hot cells degrade gracefully: a hot cell fans out to the queries
+whose disks contain it, which is the true output workload, not an
+artifact.  The `hexgrid.MAX_COVER_M` cap (~200 km) is an
+OPERATING-ENVELOPE limit on disk fanout — past it a disk approaches face
+scale and the adaptive polygon-cover join is the right tool — enforced
+loudly rather than letting a mis-sized radius explode the candidate
+count.
 """
 
 from __future__ import annotations
 
 import math
+import threading
+from collections import OrderedDict
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (ArrayType, DoubleType, LongType, StructField,
+                               StructType)
 
 from ..config import EARTH_RADIUS_M
 from ..functions.geo import haversine_m, sq_deg_dist
@@ -51,10 +73,13 @@ from ..functions.hexgrid import (
     MAX_COVER_M,
     RES0_R,
     SQRT7,
+    disk_cells,
+    disk_cells_flagged,
     disk_cells_flagged_udf,
     disk_cells_udf,
     with_hex_cell,
 )
+from .knn import fetch_queries
 
 # upper bound on meters per degree of squared-degree distance: one great-
 # circle degree on the sphere, plus 1% slack (sq_deg treats lon degrees
@@ -80,7 +105,7 @@ def auto_res(cover_m: float) -> int:
     keeping the TYPICAL (face-center-scale) disk within TARGET_RING
     rings.  Pure driver math from published constants — no data access,
     no collect.  Every radius-family caller gets its res from here
-    (`_with_disk_cells`); only `nearest_polygon` pins one, to its
+    (`_disk_res`); only `nearest_polygon` pins one, to its
     polygon-cover res.
 
     Correctness never depends on the resolution (each query derives its
@@ -119,20 +144,10 @@ def _exact_filter(metric: str, radius: float):
     raise ValueError(f"unknown metric {metric!r}")
 
 
-def _with_disk_cells(df: DataFrame, lat: str, lon: str, cover_m: float,
-                     res: int | None, flagged: bool):
-    """The one disk step of the radius family: (`df` with every input
-    column plus (__pcell, __inside), one row per candidate cell of the
-    `cover_m`-meter disk around (lat, lon); res).
-
-    In order: the positive-radius and MAX_COVER_M guards; res=None takes
-    `auto_res`; ONE Arrow UDF generates the seam-exact disk (raising
-    executor-side when a pinned res needs more than MAX_RING rings); the
-    outer explode; the sign-bit split.  `flagged` selects the classified
-    cover (`disk_cells_flagged`): provably-outside cells are dropped and
-    certified-interior cells set `__inside`, so their points skip the
-    exact filter.  The plain cover sets `__inside` to a constant false,
-    which BooleanSimplification folds out of `false OR keep`."""
+def _disk_res(cover_m: float, res: int | None) -> tuple[float, int]:
+    """The disk step's guards, in order: positive radius, then the
+    MAX_COVER_M envelope; res=None then takes `auto_res`.  (MAX_RING is
+    checked per query by the disk generation itself.)"""
     cover_m = float(cover_m)
     if cover_m <= 0:
         raise ValueError("radius must be positive")
@@ -144,28 +159,58 @@ def _with_disk_cells(df: DataFrame, lat: str, lon: str, cover_m: float,
             "approaches face scale); split the radius or use the "
             "polygon-cover join"
         )
-    if res is None:
-        res = auto_res(cover_m)
-    mk_cells = (disk_cells_flagged_udf if flagged else disk_cells_udf)(
-        res, max_ring=MAX_RING)
-    cols = df.columns
-    out = df.withColumn(
-        "__cells", mk_cells(F.col(lat), F.col(lon), F.lit(cover_m)),
-    ).select(*cols,
-             # explode_OUTER, deliberately: plain explode lets Catalyst's
-             # InferFiltersFromGenerate push a size(__cells)>0 filter below
-             # the projection, which re-evaluates the disk UDF — the whole
-             # candidate-generation stage ran TWICE (observed in the
-             # map_match candidate plan, round 5).  Outer generate infers
-             # no filter; disk_cells always emits the home cell, and a
-             # hypothetical null __pcell can never pass the inner equi-join,
-             # so the semantics are identical.
-             F.explode_outer("__cells").alias("__raw"))
+    return cover_m, auto_res(cover_m) if res is None else res
+
+
+def _cover(radius: float, metric: str) -> tuple[float, bool]:
+    """(disk cover in meters, classified cover?) of a radius-join radius.
+    Only the haversine metric takes the classified cover; the sq_deg
+    (oracle) metric keeps the plain one, so its plan — and its bit-exact
+    boundary membership — is the unclassified cell join."""
+    if metric == "haversine":
+        return float(radius), True
+    if metric == "sq_deg":
+        return float(radius) * _M_PER_DEG, False
+    raise ValueError(f"unknown metric {metric!r}")
+
+
+def _explode_cells(df: DataFrame, cols: list, flagged: bool) -> DataFrame:
+    """`cols` of `df` plus (__pcell, __inside), one row per entry of its
+    `__cells` disk array, split on the sign bit (`flagged`) or with a
+    constant-false `__inside`, which BooleanSimplification folds out of
+    `false OR keep`."""
+    # explode_OUTER, deliberately: plain explode lets Catalyst's
+    # InferFiltersFromGenerate push a size(__cells)>0 filter below the
+    # projection, which re-evaluates a disk UDF — the whole candidate-
+    # generation stage ran TWICE (observed in the map_match candidate
+    # plan, round 5).  Outer generate infers no filter; a disk always
+    # holds the home cell, and a hypothetical null __pcell can never pass
+    # the inner equi-join, so the semantics are identical.
+    out = df.select(*cols, F.explode_outer("__cells").alias("__raw"))
     raw = F.col("__raw")
     cell, inside = ((raw.bitwiseAND(F.lit(DISK_CELL_MASK)), raw < 0)
                     if flagged else (raw, F.lit(False)))
-    return out.select(*cols, cell.alias("__pcell"),
-                      inside.alias("__inside")), res
+    return out.select(*cols, cell.alias("__pcell"), inside.alias("__inside"))
+
+
+def _with_disk_cells(df: DataFrame, lat: str, lon: str, cover_m: float,
+                     res: int | None, flagged: bool):
+    """The distributed disk step of the radius family: (`df` with every
+    input column plus (__pcell, __inside), one row per candidate cell of
+    the `cover_m`-meter disk around (lat, lon); res).
+
+    The `_disk_res` guards run first; then ONE Arrow UDF generates the
+    seam-exact disk (raising executor-side when a pinned res needs more
+    than MAX_RING rings), and `_explode_cells` splits it.  `flagged`
+    selects the classified cover (`disk_cells_flagged`): provably-outside
+    cells are dropped and certified-interior cells set `__inside`, so
+    their points skip the exact filter."""
+    cover_m, res = _disk_res(cover_m, res)
+    mk_cells = (disk_cells_flagged_udf if flagged else disk_cells_udf)(
+        res, max_ring=MAX_RING)
+    out = df.withColumn(
+        "__cells", mk_cells(F.col(lat), F.col(lon), F.lit(cover_m)))
+    return _explode_cells(out, df.columns, flagged), res
 
 
 def query_disk_cells(
@@ -174,25 +219,119 @@ def query_disk_cells(
     metric: str = "haversine",
     res: int | None = None,
 ):
-    """The query half of the radius join: ((query_id, qlat, qlon,
-    __pcell, __inside) candidate-cell frame, res).  A STREAMING caller
-    materializes it eagerly (localCheckpoint) before the join half — a
-    stream-static join whose static side still contains the Arrow UDF
-    subplan deadlocks the micro-batch (observed; the materialized frame
-    joins fine).  `res` is pinned only by `nearest_polygon` (its
-    polygon-cover res); None derives it from the radius.
-
-    Only the haversine metric takes the classified cover; the sq_deg
-    (oracle) metric keeps the plain one, so its plan — and its bit-exact
-    boundary membership — is the unclassified cell join."""
-    cover_m = float(radius) if metric == "haversine" else float(radius) * _M_PER_DEG
+    """The distributed query half of the radius join: ((query_id, qlat,
+    qlon, __pcell, __inside) candidate-cell frame, res), for a query side
+    that cannot be fetched to the driver (a whole point set, a stream).
+    A STREAMING caller materializes it eagerly (localCheckpoint) before
+    the join half — a stream-static join whose static side still contains
+    the Arrow UDF subplan deadlocks the micro-batch (observed; the
+    materialized frame joins fine).  `res` is pinned only by
+    `nearest_polygon` (its polygon-cover res); None derives it from the
+    radius."""
+    cover_m, flagged = _cover(radius, metric)
     q = queries.select(
         "query_id",
         F.col("lat").alias("qlat"),
         F.col("lon").alias("qlon"),
     )
-    return _with_disk_cells(q, "qlat", "qlon", cover_m, res,
-                            flagged=metric == "haversine")
+    return _with_disk_cells(q, "qlat", "qlon", cover_m, res, flagged)
+
+
+def _batch_disk_cells(queries: DataFrame, radius: float, metric: str):
+    """The query half of `within_distance_join`: the same frame and res as
+    `query_disk_cells`, with the disks built on the driver.  The
+    `_disk_res` guards run before the batch is fetched (`fetch_queries`,
+    its one execution); numpy then computes every disk at once and the
+    arrays go back to Spark as one small local frame of (query_id, qlat,
+    qlon, __cells), exploded by `_explode_cells` — no Python stage."""
+    cover_m, flagged = _cover(radius, metric)
+    cover_m, res = _disk_res(cover_m, None)
+    qt, qschema = fetch_queries(queries)
+    qlat, qlon = qt.column(1), qt.column(2)
+    cells = (disk_cells_flagged if flagged else disk_cells)(
+        qlat.to_numpy(), qlon.to_numpy(), cover_m, res, max_ring=MAX_RING)
+    offsets = np.cumsum([0, *map(len, cells)], dtype=np.int32)
+    flat = np.concatenate([np.empty(0, np.int64), *cells])
+    t = pa.table([qt.column(0), qlat, qlon,
+                  pa.ListArray.from_arrays(offsets, flat)],
+                 names=["query_id", "qlat", "qlon", "__cells"])
+    schema = StructType([
+        StructField("query_id", qschema[0].dataType),
+        StructField("qlat", DoubleType()),
+        StructField("qlon", DoubleType()),
+        StructField("__cells", ArrayType(LongType())),
+    ])
+    q = queries.sparkSession.createDataFrame(t, schema)
+    return _explode_cells(q, ["query_id", "qlat", "qlon"], flagged), res
+
+
+def _point_half(points: DataFrame, res: int, point_id: str,
+                carry_cols: tuple) -> DataFrame:
+    """(point_id, plat, plon, __pcell, *carry_cols): the points
+    hex-assigned at the disk `res` by the native staged expressions."""
+    cell = f"__rj_cell_r{res}"
+    return with_hex_cell(points, res, out_col=cell).select(
+        F.col(point_id).alias("point_id"),
+        F.col("lat").alias("plat"),
+        F.col("lon").alias("plon"),
+        F.col(cell).alias("__pcell"),
+        *[F.col(c) for c in carry_cols],
+    )
+
+
+# prepared point halves kept per session, least recently used first
+PREPARED_MAX = 4
+_PREPARED: OrderedDict = OrderedDict()
+_PREPARED_LOCK = threading.Lock()
+
+
+def _prepared_points(points: DataFrame, res: int, point_id: str,
+                     carry_cols: tuple) -> DataFrame:
+    """`_point_half`, planned and persisted once per points snapshot and
+    reused by every later batch at that res.  Lazy: `persist()` runs no
+    job; the first join that reads it fills the cache.
+
+    Keyed on the session, the points plan (`semanticHash`, confirmed with
+    `sameSemantics`, as the hash is 32 bits), the files the plan reads,
+    res, point_id and carry_cols.  The files matter because a re-saved
+    snapshot lists new part files under the same path, and Spark's cache
+    matches the two loads as one plan: a miss on the files alone replaces
+    the stale entry instead of caching beside it.  At most PREPARED_MAX
+    halves stay persisted; the least recently used one is unpersisted."""
+    app = points.sparkSession.sparkContext.applicationId
+    key = (app, points.semanticHash(), res, point_id, tuple(carry_cols))
+    files = sorted(points.inputFiles())
+    with _PREPARED_LOCK:
+        for k in [k for k in _PREPARED if k[0] != app]:
+            del _PREPARED[k]  # a stopped session's cache went with it
+        hit = _PREPARED.pop(key, None)
+        if (hit is not None and hit[1] == files
+                and hit[0].sameSemantics(points)):
+            pts = hit[2]
+        else:
+            if hit is not None:
+                hit[2].unpersist()
+            pts = _point_half(points, res, point_id, carry_cols).persist()
+        _PREPARED[key] = (points, files, pts)
+        while len(_PREPARED) > PREPARED_MAX:
+            _PREPARED.popitem(last=False)[1][2].unpersist()
+    return pts
+
+
+def _cell_join(q: DataFrame, pts: DataFrame, radius: float, metric: str,
+               carry_cols: tuple) -> DataFrame:
+    """A query half equi-joined to a point half on the cell key, then the
+    exact filter."""
+    dist, keep = _exact_filter(metric, radius)
+    # certified-interior candidates short-circuit the exact filter (Or
+    # codegen evaluates the right side lazily); membership is identical
+    # because the certificate is conservative
+    return (
+        q.join(pts, "__pcell")
+        .where(F.col("__inside") | keep)
+        .select("query_id", "point_id", dist.alias("dist"),
+                *[F.col(c) for c in carry_cols])
+    )
 
 
 def _join_disk_cells(
@@ -204,27 +343,10 @@ def _join_disk_cells(
     point_id: str,
     carry_cols: tuple,
 ) -> DataFrame:
-    """The join half of the radius join: points hex-assigned at the disk
-    `res` (native staged expressions), equi-joined to the `q` frame of
-    `query_disk_cells` on the cell key, then the exact filter."""
-    cell = f"__rj_cell_r{res}"
-    pts = with_hex_cell(points, res, out_col=cell).select(
-        F.col(point_id).alias("point_id"),
-        F.col("lat").alias("plat"),
-        F.col("lon").alias("plon"),
-        F.col(cell).alias("__pcell"),
-        *[F.col(c) for c in carry_cols],
-    )
-    dist, keep = _exact_filter(metric, radius)
-    # certified-interior candidates short-circuit the exact filter (Or
-    # codegen evaluates the right side lazily); membership is identical
-    # because the certificate is conservative
-    return (
-        q.join(pts, "__pcell")
-        .where(F.col("__inside") | keep)
-        .select("query_id", "point_id", dist.alias("dist"),
-                *[F.col(c) for c in carry_cols])
-    )
+    """The distributed join half of the radius join: the `q` frame of
+    `query_disk_cells` joined to the point half planned for this call."""
+    return _cell_join(q, _point_half(points, res, point_id, carry_cols),
+                      radius, metric, carry_cols)
 
 
 def within_distance_join(
@@ -243,10 +365,17 @@ def within_distance_join(
     `radius` is meters for metric='haversine', degrees for 'sq_deg'
     (compared on the squared value, like knn's sq_deg path).  `queries`
     needs (query_id, lat, lon); `points` needs (point_id, lat, lon).
-    The cell resolution comes from the radius (`auto_res`)."""
-    q, res = query_disk_cells(queries, radius, metric=metric)
-    return _join_disk_cells(points, q, res, radius, metric, point_id,
-                            carry_cols)
+    The cell resolution comes from the radius (`auto_res`).
+
+    `queries` is fetched to the Spark driver once per call, so the batch
+    must fit there (~24 B per query plus its id, and its disk cells); a
+    derived query frame executes exactly once.  `points` is a batch frame
+    (a stream goes through `streaming.spatial.streaming_radius_alerts`),
+    hex-assigned and persisted once per snapshot (`_prepared_points`);
+    the call runs no job on it."""
+    q, res = _batch_disk_cells(queries, radius, metric)
+    return _cell_join(q, _prepared_points(points, res, point_id, carry_cols),
+                      radius, metric, carry_cols)
 
 
 def within_distance_pairs(
@@ -257,14 +386,14 @@ def within_distance_pairs(
 ) -> DataFrame:
     """Unordered near-neighbor pairs (a, b, dist), a < b, dist <= radius.
 
-    Self-join through `within_distance_join`: every unordered pair is
-    produced exactly twice (once per orientation, since a disk contains
+    Self-join through the radius join's distributed halves (the query side
+    is the whole point set, so it is never fetched): every unordered pair
+    is produced exactly twice (once per orientation, since a disk contains
     any cell at most once), and the a < b filter keeps one — no distinct
     pass needed."""
     q = points.select(F.col(point_id).alias("query_id"), "lat", "lon")
-    out = within_distance_join(
-        points, q, radius, metric=metric, point_id=point_id
-    )
+    q, res = query_disk_cells(q, radius, metric=metric)
+    out = _join_disk_cells(points, q, res, radius, metric, point_id, ())
     return (
         out.where(F.col("query_id") < F.col("point_id"))
         .select(
@@ -287,7 +416,7 @@ def within_distance_bruteforce(
     pytest oracle, and the cheaper plan for tiny query batches (one
     stage, no UDF, no explode)."""
     if float(radius) <= 0:
-        # same loud contract as the cell path (_with_disk_cells) — for
+        # same loud contract as the cell path (_disk_res) — for
         # sq_deg a negative radius would otherwise square into a positive
         # threshold and silently return matches
         raise ValueError("radius must be positive")

@@ -109,9 +109,79 @@ def test_radius_join_no_cartesian(nodes, queries):
     CartesianProduct / BroadcastNestedLoopJoin anywhere in the plan."""
     pts = nodes.select("id", "lat", "lon")
     out = rj.within_distance_join(pts, queries, 3000.0)
+    out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+    # the disks are built on the driver: no Python runs at query time
+    assert "EvalPython" not in plan, plan
+
+
+def test_prepared_points_built_once(nodes, queries):
+    """Two calls on one points frame share one prepared point half, and
+    the second call reads it from the cache with no Python stage."""
+    pts = nodes.select("id", "lat", "lon").where(F.col("lat") > -90.0)
+    first = rj.within_distance_join(pts, queries, 2500.0).collect()
+    out = rj.within_distance_join(pts, queries, 2500.0)
+    assert sorted(out.collect()) == sorted(first)
+    assert sum(e[0].sameSemantics(pts) for e in rj._PREPARED.values()) == 1
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" in plan, plan
+    assert "EvalPython" not in plan, plan
+
+
+def test_prepared_points_follow_resaved_snapshot(spark, nodes, queries,
+                                                 tmp_path):
+    """A snapshot re-saved to the same stage is a new points snapshot: the
+    join after each reload returns the new points' pairs, not the pairs
+    of the prepared half cached for an earlier save.  A Spark write in
+    this session refreshes Spark's own cache of that path; a writer in
+    another process does not, so the last snapshot is published the way
+    one would (new part files, the old ones gone), and only the prepared
+    half's file list tells the two loads apart."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from osmspark.plans.checkpoint import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path / "snap"))
+    stage = tmp_path / "snap" / "nodes"
+    pts = nodes.select("id", "lat", "lon")
+    frames = [pts.select("id", (F.col("lat") + d).alias("lat"), "lon")
+              for d in (0.0, 0.01, -0.01)]
+
+    def publish_elsewhere(frame):
+        rows = frame.collect()
+        for f in stage.glob("*.parquet"):
+            f.unlink()
+        pq.write_table(pa.table({
+            "id": [r["id"] for r in rows],
+            "lat": pa.array([r["lat"] for r in rows], pa.float64()),
+            "lon": pa.array([r["lon"] for r in rows], pa.float64()),
+        }), stage / "part-00000-elsewhere.parquet")
+
+    got = []
+    for i, frame in enumerate(frames):
+        if i < 2:
+            store.save(frame, "nodes")
+        else:
+            publish_elsewhere(frame)
+        snap = store.load(spark, "nodes")
+        got.append({(r["query_id"], r["point_id"]) for r in
+                    rj.within_distance_join(snap, queries, 3000.0).collect()})
+        assert got[-1] == _brute(frame, queries, 3000.0, "haversine"), i
+    assert len({frozenset(g) for g in got}) == 3
+
+
+def test_prepared_points_lru_bound(nodes):
+    """After PREPARED_MAX + 1 distinct points frames, exactly PREPARED_MAX
+    prepared halves stay persisted: the least recently used one goes."""
+    frames = [rj._prepared_points(
+        nodes.select("id", "lat", "lon").where(F.col("lat") > -80.0 + i),
+        8, "id", ()) for i in range(rj.PREPARED_MAX + 1)]
+    assert [f.storageLevel.useMemory for f in frames] == [False] + [
+        True] * rj.PREPARED_MAX
+    assert len(rj._PREPARED) == rj.PREPARED_MAX
 
 
 def test_auto_res_monotone():
@@ -163,10 +233,10 @@ def test_radius_brute_rejects_nonpositive(spark, nodes, queries):
 
 
 def test_auto_dispatch_count_hints_run_no_jobs(spark):
-    """kNN reads the query rows while it builds the plan and needs no
-    count hints: nothing runs on the points at call time (a poisoned
-    upstream raises iff it executes), and a derived query frame's
-    upstream runs exactly once across the call and the collect."""
+    """kNN and the radius join read the query rows while they build the
+    plan and need no count hints: nothing runs on the points at call time
+    (a poisoned upstream raises iff it executes), and a derived query
+    frame's upstream runs exactly once across the call and the collect."""
     from osmspark.operators.knn import knn_kring
 
     def poisoned(df):
@@ -182,14 +252,17 @@ def test_auto_dispatch_count_hints_run_no_jobs(spark):
         [("p0", 1.29, 103.85)], "id string, lat double, lon double")
     qs = spark.createDataFrame(
         [("q0", 1.2901, 103.8501)], "query_id string, lat double, lon double")
-    knn_kring(poisoned(pts), qs, k=1)
-    rows_seen = spark.sparkContext.accumulator(0)
+    for op in (lambda p, q: knn_kring(p, q, k=1),
+               lambda p, q: rj.within_distance_join(p, q, 500.0)):
+        op(poisoned(pts), qs)
+        rows_seen = spark.sparkContext.accumulator(0)
 
-    def counted(it):
-        for b in it:
-            rows_seen.add(len(b))
-            yield b
+        def counted(it, rows_seen=rows_seen):
+            for b in it:
+                rows_seen.add(len(b))
+                yield b
 
-    krows = knn_kring(pts, qs.mapInPandas(counted, qs.schema), k=1).collect()
-    assert rows_seen.value == 1
-    assert [(r["query_id"], r["point_id"]) for r in krows] == [("q0", "p0")]
+        rows = op(pts, qs.mapInPandas(counted, qs.schema)).collect()
+        assert rows_seen.value == 1
+        assert [(r["query_id"], r["point_id"]) for r in rows] == [
+            ("q0", "p0")]

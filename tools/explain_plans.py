@@ -308,11 +308,19 @@ def main() -> None:
         [("candidate join is an equi-join on the cell key",
           lambda p: "CartesianProduct" not in p
           and "BroadcastNestedLoopJoin" not in p),
-         ("point cell assignment native; exactly ONE disk-cell "
-          "ArrowEvalPython (the one disk step, run once per query — the "
-          "outer explode keeps it from running twice)",
-          lambda p: _python_udfs(p) == ["hex_disk_flagged"]),
-         ("no row-wise python", lambda p: "BatchEvalPython" not in p),
+         ("no Python node at all: the disks are built on the driver and "
+          "the point cells by native expressions",
+          lambda p: not re.search(r"Python|InPandas|InArrow", _final(p))),
+         ("point side is an InMemoryTableScan of the prepared point half",
+          lambda p: "InMemoryTableScan" in "".join(
+              _subtree(p, "TableCacheQueryStage"))),
+         ("query side is LocalTableScan -> Generate under a "
+          "BroadcastExchange",
+          lambda p: re.search(
+              r"Generate.*\n(.*\n)*.*LocalTableScan",
+              "\n".join(_subtree(p, "BroadcastExchange")))
+          and "Scan parquet" not in "".join(
+              _subtree(p, "BroadcastExchange"))),
          ("exact distance filter in codegen",
           lambda p: "codegen id" in p or "WholeStageCodegen" in p)],
     )
