@@ -17,8 +17,8 @@ the same public primitives the rest of the engine uses:
 The word array travels as a ONE-ROW broadcast frame (crossJoin with a
 single row is a BroadcastNestedLoopJoin that costs one array reference
 per partition) — a `lit()` array literal would inline m/64 children
-into the Catalyst tree, the same multiplying-tree hazard the geohash
-module documents.
+into the Catalyst tree, which every analyzer and optimizer rule then
+walks.
 
 False negatives are impossible (probe tests exactly the bits build
 set); false positives are bounded by the sizing formula and measured

@@ -13,11 +13,9 @@ stack-overflow the JVM during analysis when composed.
 Wrapping the expensive subexpression in a single-element `transform`
 makes every internal reference a LambdaVariable leaf: tree growth
 becomes additive, and the bound expression is evaluated once per row.
-Measured effects in this repo: geohash encode∘decode goes from
-JVM-stack-overflow to instant (functions/geohash.py), and the n-gram
-scorer's tokenize+gram build drops 4x (operators/ngram_lm.py — the
-tokenizer was being re-evaluated ~10x per row through the duplicated
-gram subtrees).
+Measured effect in this repo: the n-gram scorer's tokenize+gram build
+drops 4x (operators/ngram_lm.py — the tokenizer was being re-evaluated
+~10x per row through the duplicated gram subtrees).
 
 Cost: the wrapped subtree is evaluated via the interpreted path
 (higher-order functions don't participate in codegen).  That trade wins

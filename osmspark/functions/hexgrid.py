@@ -408,21 +408,6 @@ def _uv_on_face_batch(faces, x, y, z):
     return u, v
 
 
-def disk_cells_udf(res: int, max_ring: int | None = None):
-    """Arrow pandas UDF: (lat, lon, cover_m) -> array<long> of the
-    seam-exact candidate cells (disk_cells over the batch)."""
-    if not 0 <= res <= 15:
-        raise ValueError("res must be in [0, 15]")
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def hex_disk(lat: pd.Series, lon: pd.Series, cover: pd.Series) -> pd.Series:
-        cells = disk_cells(lat.to_numpy(), lon.to_numpy(), cover.to_numpy(),
-                           res, max_ring=max_ring)
-        return pd.Series(cells)
-
-    return hex_disk
-
-
 # sign bit used by disk_cells_flagged to mark CERTIFIED-INTERIOR cells:
 # packed ids always have bit 63 clear (pack() range-checks 28-bit axials),
 # so `flagged < 0` <=> interior and `flagged & DISK_CELL_MASK` recovers
@@ -494,23 +479,6 @@ def disk_cells_flagged(lats, lons, cover_m, res: int,
         flat[s:s + n][keep[s:s + n]]
         for s, n in zip(starts.tolist(), lens.tolist())
     ]
-
-
-def disk_cells_flagged_udf(res: int, max_ring: int | None = None):
-    """Arrow pandas UDF form of `disk_cells_flagged`: array<long> where
-    negative entries are certified-interior cells (id = value &
-    DISK_CELL_MASK) and provably-outside cells are already dropped."""
-    if not 0 <= res <= 15:
-        raise ValueError("res must be in [0, 15]")
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def hex_disk_flagged(lat: pd.Series, lon: pd.Series,
-                         cover: pd.Series) -> pd.Series:
-        cells = disk_cells_flagged(lat.to_numpy(), lon.to_numpy(),
-                                   cover.to_numpy(), res, max_ring=max_ring)
-        return pd.Series(cells)
-
-    return hex_disk_flagged
 
 
 # --- Spark surface ---------------------------------------------------------

@@ -306,8 +306,9 @@ def _map_side(p: DataFrame, qt: pa.Table, qid_type, k: int,
 def fetch_queries(queries: DataFrame) -> tuple[pa.Table, StructType]:
     """A query batch on the Spark driver: (query_id, lat, lon), the
     coordinates cast to double, as one Arrow table, plus its Spark schema.
-    The batch executes here, once; `knn_kring` and
-    `radius_join.within_distance_join` serve it from driver memory."""
+    The batch executes here, once; `knn_kring` and the radius join's
+    driver-side query half (`radius_join._batch_disk_cells`) serve it
+    from driver memory."""
     qf = queries.select(
         "query_id",
         F.col("lat").cast("double").alias("lat"),

@@ -50,7 +50,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .spatial_join import _pip_single_ring, prepare_polygons, split_ring
+from .spatial_join import (_GRID_CHUNK, _pip_single_ring, prepare_polygons,
+                           split_ring)
 
 
 def _pieces(ring_lat, ring_lon):
@@ -167,9 +168,6 @@ def polygons_intersect_np(alat, alon, blat, blon) -> bool:
 # the fallback for rows whose key ring needs split_ring (polar /
 # antimeridian); all ordinary-ring rows take the flat ragged kernels
 # further down, which have no per-ring Python at all.
-
-# cap on orientation-grid cells per chunk (4 double grids ~ 128 MB)
-_GRID_CHUNK = 4_000_000
 
 
 def _group_rows(ids: np.ndarray, mask: np.ndarray) -> dict:

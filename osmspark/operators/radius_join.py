@@ -33,13 +33,17 @@ Stream KNN Join*, SIGMOD 2021):
      filter (haversine native columns, or the SQL-bit-reproducible
      squared-degree metric for oracle rows).
 
-No Python runs at query time.  A caller whose query side is a whole point
-set or a stream cannot fetch it, so it takes the distributed disk step
-instead, `_with_disk_cells` (the same disk as ONE Arrow UDF over the
-query frame): map-match directly, `nearest_polygon` through
-`query_disk_cells`, and `within_distance_pairs` and the streaming alerts
-through `query_disk_cells` + `_join_disk_cells` (the point half planned
-per call).
+A query batch runs no Python at query time.  Every disk comes from ONE
+function, `_disks`, and every caller joins through ONE body,
+`_cell_join`; the callers split only on the query side:
+
+  * a batch or static query side builds its disks on the driver
+    (`_batch_disk_cells`): `within_distance_join`, and the streaming
+    alerts, whose static site table joins the stream's point half;
+  * a query side that is a whole point set cannot be fetched, so it takes
+    the distributed disk step, `_with_disk_cells` (`_disks` as ONE Arrow
+    UDF over the query frame): map-match directly, and `nearest_polygon`
+    and `within_distance_pairs` through `query_disk_cells`.
 
 Scale shape: the query batch must fit on the driver (like kNN's); each
 query multiplies into 1+3k(k+1) cell rows, k<=~6 at typical gnomonic
@@ -60,6 +64,7 @@ import threading
 from collections import OrderedDict
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -75,8 +80,6 @@ from ..functions.hexgrid import (
     SQRT7,
     disk_cells,
     disk_cells_flagged,
-    disk_cells_flagged_udf,
-    disk_cells_udf,
     with_hex_cell,
 )
 from .knn import fetch_queries
@@ -146,8 +149,9 @@ def _exact_filter(metric: str, radius: float):
 
 def _disk_res(cover_m: float, res: int | None) -> tuple[float, int]:
     """The disk step's guards, in order: positive radius, then the
-    MAX_COVER_M envelope; res=None then takes `auto_res`.  (MAX_RING is
-    checked per query by the disk generation itself.)"""
+    MAX_COVER_M envelope; res=None then takes `auto_res`, and a pinned
+    res must lie in [0, 15].  (MAX_RING is checked per query by the disk
+    generation itself.)"""
     cover_m = float(cover_m)
     if cover_m <= 0:
         raise ValueError("radius must be positive")
@@ -159,7 +163,10 @@ def _disk_res(cover_m: float, res: int | None) -> tuple[float, int]:
             "approaches face scale); split the radius or use the "
             "polygon-cover join"
         )
-    return cover_m, auto_res(cover_m) if res is None else res
+    res = auto_res(cover_m) if res is None else res
+    if not 0 <= res <= 15:
+        raise ValueError("res must be in [0, 15]")
+    return cover_m, res
 
 
 def _cover(radius: float, metric: str) -> tuple[float, bool]:
@@ -193,23 +200,33 @@ def _explode_cells(df: DataFrame, cols: list, flagged: bool) -> DataFrame:
     return out.select(*cols, cell.alias("__pcell"), inside.alias("__inside"))
 
 
+def _disks(lat: np.ndarray, lon: np.ndarray, cover_m: float, res: int,
+           flagged: bool) -> list:
+    """The one disk function of the radius family: per (lat, lon), the
+    seam-exact cells of the `cover_m`-meter disk at `res` (raising when
+    it needs more than MAX_RING rings).  `flagged` selects the classified
+    cover (`disk_cells_flagged`): provably-outside cells are dropped and
+    certified-interior cells carry the sign bit."""
+    return (disk_cells_flagged if flagged else disk_cells)(
+        lat, lon, cover_m, res, max_ring=MAX_RING)
+
+
 def _with_disk_cells(df: DataFrame, lat: str, lon: str, cover_m: float,
                      res: int | None, flagged: bool):
-    """The distributed disk step of the radius family: (`df` with every
-    input column plus (__pcell, __inside), one row per candidate cell of
-    the `cover_m`-meter disk around (lat, lon); res).
-
-    The `_disk_res` guards run first; then ONE Arrow UDF generates the
-    seam-exact disk (raising executor-side when a pinned res needs more
-    than MAX_RING rings), and `_explode_cells` splits it.  `flagged`
-    selects the classified cover (`disk_cells_flagged`): provably-outside
-    cells are dropped and certified-interior cells set `__inside`, so
-    their points skip the exact filter."""
+    """The distributed disk step of the radius family, for a query side
+    that is a whole point set: (`df` with every input column plus
+    (__pcell, __inside), one row per candidate cell of the `cover_m`-meter
+    disk around (lat, lon); res).  The `_disk_res` guards run first; then
+    ONE Arrow UDF runs `_disks` executor-side and `_explode_cells` splits
+    its arrays."""
     cover_m, res = _disk_res(cover_m, res)
-    mk_cells = (disk_cells_flagged_udf if flagged else disk_cells_udf)(
-        res, max_ring=MAX_RING)
-    out = df.withColumn(
-        "__cells", mk_cells(F.col(lat), F.col(lon), F.lit(cover_m)))
+
+    @F.pandas_udf(ArrayType(LongType()))
+    def hex_disk(la: pd.Series, lo: pd.Series) -> pd.Series:
+        return pd.Series(
+            _disks(la.to_numpy(), lo.to_numpy(), cover_m, res, flagged))
+
+    out = df.withColumn("__cells", hex_disk(F.col(lat), F.col(lon)))
     return _explode_cells(out, df.columns, flagged), res
 
 
@@ -221,13 +238,9 @@ def query_disk_cells(
 ):
     """The distributed query half of the radius join: ((query_id, qlat,
     qlon, __pcell, __inside) candidate-cell frame, res), for a query side
-    that cannot be fetched to the driver (a whole point set, a stream).
-    A STREAMING caller materializes it eagerly (localCheckpoint) before
-    the join half — a stream-static join whose static side still contains
-    the Arrow UDF subplan deadlocks the micro-batch (observed; the
-    materialized frame joins fine).  `res` is pinned only by
-    `nearest_polygon` (its polygon-cover res); None derives it from the
-    radius."""
+    too large to fetch to the driver (a whole point set).  `res` is pinned
+    only by `nearest_polygon` (its polygon-cover res); None derives it
+    from the radius."""
     cover_m, flagged = _cover(radius, metric)
     q = queries.select(
         "query_id",
@@ -238,18 +251,17 @@ def query_disk_cells(
 
 
 def _batch_disk_cells(queries: DataFrame, radius: float, metric: str):
-    """The query half of `within_distance_join`: the same frame and res as
-    `query_disk_cells`, with the disks built on the driver.  The
+    """The query half of a batch or static query side: the same frame and
+    res as `query_disk_cells`, with the disks built on the driver.  The
     `_disk_res` guards run before the batch is fetched (`fetch_queries`,
-    its one execution); numpy then computes every disk at once and the
+    its one execution); `_disks` then computes every disk at once and the
     arrays go back to Spark as one small local frame of (query_id, qlat,
     qlon, __cells), exploded by `_explode_cells` — no Python stage."""
     cover_m, flagged = _cover(radius, metric)
     cover_m, res = _disk_res(cover_m, None)
     qt, qschema = fetch_queries(queries)
     qlat, qlon = qt.column(1), qt.column(2)
-    cells = (disk_cells_flagged if flagged else disk_cells)(
-        qlat.to_numpy(), qlon.to_numpy(), cover_m, res, max_ring=MAX_RING)
+    cells = _disks(qlat.to_numpy(), qlon.to_numpy(), cover_m, res, flagged)
     offsets = np.cumsum([0, *map(len, cells)], dtype=np.int32)
     flat = np.concatenate([np.empty(0, np.int64), *cells])
     t = pa.table([qt.column(0), qlat, qlon,
@@ -334,21 +346,6 @@ def _cell_join(q: DataFrame, pts: DataFrame, radius: float, metric: str,
     )
 
 
-def _join_disk_cells(
-    points: DataFrame,
-    q: DataFrame,
-    res: int,
-    radius: float,
-    metric: str,
-    point_id: str,
-    carry_cols: tuple,
-) -> DataFrame:
-    """The distributed join half of the radius join: the `q` frame of
-    `query_disk_cells` joined to the point half planned for this call."""
-    return _cell_join(q, _point_half(points, res, point_id, carry_cols),
-                      radius, metric, carry_cols)
-
-
 def within_distance_join(
     points: DataFrame,
     queries: DataFrame,
@@ -393,7 +390,8 @@ def within_distance_pairs(
     pass needed."""
     q = points.select(F.col(point_id).alias("query_id"), "lat", "lon")
     q, res = query_disk_cells(q, radius, metric=metric)
-    out = _join_disk_cells(points, q, res, radius, metric, point_id, ())
+    out = _cell_join(q, _point_half(points, res, point_id, ()),
+                     radius, metric, ())
     return (
         out.where(F.col("query_id") < F.col("point_id"))
         .select(

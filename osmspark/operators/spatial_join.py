@@ -488,15 +488,23 @@ def _cover_pieces_flagged(pieces: list, res: int):
     return cells[uniq], interior_or
 
 
+# cap on (rows x edges) cells per vectorized grid: the refine kernels
+# build that many floats per temporary (4 double grids ~ 128 MB); the
+# overlay's orientation grids share the bound
+_GRID_CHUNK = 4_000_000
+
+
 def _grouped(kernel, codes, cols, pieces_by_code, fills):
     """The one group-by-polygon loop of the point x polygon family: sort
     a batch's rows by dim-row code and call
     `kernel(*(c[rows] for c in cols), pieces_by_code[code])` once per
     distinct code — one vectorized pass per polygon in the batch, never a
-    per-row loop.  `fills` holds one default per kernel output; a row
-    whose code is outside [0, len(pieces_by_code)) — e.g. -1 — belongs to
-    no polygon and keeps them.  The kernel returns one array per output
-    (a bare array when there is one)."""
+    per-row loop.  Each polygon's rows go in chunks of at most
+    `_GRID_CHUNK` // (its longest piece's vertex count), so a long ring
+    never builds a (batch x edges) grid.  `fills` holds one default per
+    kernel output; a row whose code is outside [0, len(pieces_by_code))
+    — e.g. -1 — belongs to no polygon and keeps them.  The kernel returns
+    one array per output (a bare array when there is one)."""
     codes = np.asarray(codes, dtype=np.int64)
     cols = [np.asarray(c, dtype=np.float64) for c in cols]
     outs = [np.full(len(codes), f) for f in fills]
@@ -505,9 +513,14 @@ def _grouped(kernel, codes, cols, pieces_by_code, fills):
         k = codes[idx[0]] if len(idx) else -1
         if not 0 <= k < len(pieces_by_code):
             continue
-        got = kernel(*(c[idx] for c in cols), pieces_by_code[k])
-        for o, g in zip(outs, got if isinstance(got, tuple) else (got,)):
-            o[idx] = g
+        pieces = pieces_by_code[k]
+        ne = max((len(rl) for rl, _ in pieces), default=1)
+        step = max(1, _GRID_CHUNK // ne)
+        for s in range(0, len(idx), step):
+            rows = idx[s:s + step]
+            got = kernel(*(c[rows] for c in cols), pieces)
+            for o, g in zip(outs, got if isinstance(got, tuple) else (got,)):
+                o[rows] = g
     return outs
 
 

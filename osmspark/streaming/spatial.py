@@ -125,18 +125,18 @@ def streaming_radius_alerts(
     sensors, geofence centers) — one row per (site, point) within
     `radius`.
 
-    The batch B5b operator streams with ONE adaptation: it runs the
-    batch join's two halves (`query_disk_cells`, then the join half)
-    with a localCheckpoint in between.  The STREAM side only gets the
-    stateless native cell projection, and all the Python (disk-cell
-    generation) runs on the small STATIC side — which is MATERIALIZED
-    eagerly before the join, because a stream-static join whose static
-    subplan still contains Arrow UDF nodes deadlocks the micro-batch
-    (observed; the checkpointed frame is plain rows and joins fine).  The join itself
-    is a stream-static inner equi-join — no streaming state at all.
+    The batch B5b operator's halves, unchanged: the site table is the
+    query batch, fetched to the Spark driver once at call time with its
+    disks built there (`_batch_disk_cells`), so it must fit on the driver
+    as `within_distance_join`'s batch must.  The static side is then a
+    plain local relation — no Python anywhere in the plan.  The STREAM
+    side gets only the stateless native cell projection (`_point_half`;
+    a stream cannot be persisted, so not `_prepared_points`), and the
+    join is a stream-static inner equi-join — no streaming state at all.
     Emits exactly the batch join's rows for the same input
     (equivalence-tested)."""
-    from ..operators.radius_join import _join_disk_cells, query_disk_cells
+    from ..operators.radius_join import (_batch_disk_cells, _cell_join,
+                                         _point_half)
 
     # rename PER AXIS: the old both-or-nothing drop broke the mixed case
     # (lat='lat', lon='lng' dropped the real lat column), and silently
@@ -151,9 +151,9 @@ def streaming_radius_alerts(
                 f"points has a {axis!r} column but {axis} data was mapped "
                 f"from {name!r} — drop or rename the conflicting column")
         pts = pts.withColumnRenamed(name, axis)
-    q, res = query_disk_cells(queries, radius, metric=metric)
-    return _join_disk_cells(pts, q.localCheckpoint(eager=True), res,
-                            radius, metric, point_id, carry_cols)
+    q, res = _batch_disk_cells(queries, radius, metric)
+    return _cell_join(q, _point_half(pts, res, point_id, carry_cols),
+                      radius, metric, carry_cols)
 
 
 def streaming_radius_counts(

@@ -235,7 +235,8 @@ def test_streaming_geofence_equals_batch(spark, tmp_path):
 
 def test_streaming_radius_equals_batch(spark, tmp_path):
     """The B5b radius join streams as-is (stateless stream-side cell
-    projection + stream-static equi-join against static disk cells): hit
+    projection + stream-static equi-join against the driver-built disk
+    cells of the static site table): hit
     set and windowed per-site counts equal the batch join on the same
     input; the timestamp rides through as a carried column (no
     stream-stream re-join)."""
@@ -265,8 +266,15 @@ def test_streaming_radius_equals_batch(spark, tmp_path):
         [("s0", 1.29, 103.85), ("s1", 1.35, 103.69), ("s2", 1.44, 103.79)],
         "query_id string, lat double, lon double")
 
+    alerts = sp.streaming_radius_alerts(stream, sites, 8000.0)
+    # the static side is the driver-built query half: a local relation,
+    # with no Python UDF and no checkpointed RDD anywhere in the plan
+    analyzed = alerts._jdf.queryExecution().analyzed()
+    assert "LocalRelation" in analyzed.toString(), analyzed.toString()
+    assert "LogicalRDD" not in analyzed.toString(), analyzed.toString()
+    assert "PythonUDF" not in analyzed.toJSON(), analyzed.toString()
     got = {(r["query_id"], r["point_id"]) for r in ev.run_to_memory(
-        sp.streaming_radius_alerts(stream, sites, 8000.0), "t_rad").collect()}
+        alerts, "t_rad").collect()}
     exp = {(r["query_id"], r["point_id"]) for r in within_distance_join(
         batch.select("id", "lat", "lon"), sites, 8000.0).collect()}
     assert got == exp and len(exp) > 100

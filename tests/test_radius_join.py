@@ -58,7 +58,8 @@ def _pinned_join(pts, queries, radius, res):
     """The radius join's two halves with the disk res pinned (as
     nearest_polygon pins it to its cover res)."""
     q, res = rj.query_disk_cells(queries, radius, res=res)
-    return rj._join_disk_cells(pts, q, res, radius, "haversine", "id", ())
+    return rj._cell_join(q, rj._point_half(pts, res, "id", ()),
+                         radius, "haversine", ())
 
 
 def test_radius_join_res_invariant(nodes, queries):
@@ -94,7 +95,8 @@ def test_radius_pairs_equals_brute(nodes):
 
 def test_radius_join_too_fine_res_raises(nodes, queries):
     """A pinned res too fine for the radius must raise loudly (the
-    executor-side guard), not silently fan out thousands of cells."""
+    executor-side guard), not silently fan out thousands of cells; a
+    pinned res past the finest one raises at plan time."""
     from py4j.protocol import Py4JJavaError
 
     pts = nodes.select("id", "lat", "lon")
@@ -102,6 +104,8 @@ def test_radius_join_too_fine_res_raises(nodes, queries):
         _pinned_join(pts, queries, 50000.0, 12).collect()
     assert "coarser res" in str(ei.value) or isinstance(
         ei.value, Py4JJavaError)
+    with pytest.raises(ValueError, match=r"res must be in \[0, 15\]"):
+        rj._with_disk_cells(queries, "lat", "lon", 1000.0, 16, False)
 
 
 def test_radius_join_no_cartesian(nodes, queries):
