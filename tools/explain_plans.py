@@ -116,7 +116,7 @@ def main() -> None:
             oks.append(f"  - [{'x' if ok else ' '}] {tag}")
         sections.append(
             f"## {name}\n\nAssertions:\n" + "\n".join(oks)
-            + "\n\n```\n" + p.strip()[:4000] + "\n```\n"
+            + "\n\n```\n" + p.strip() + "\n```\n"
         )
 
     add(

@@ -331,6 +331,18 @@ def build(spark):
         return knn_kring(lnodes, layout_qs, k=10)
 
     out["knn_layout_5000q"] = q_layout
+
+    def q_python_task_floor():
+        # the fixed cost of Python tasks, without data: a 500-row local
+        # query frame fetched as perfbench's `neighbors` builds it (the
+        # PythonRDD under createDataFrame(list)), then a no-op mapInArrow
+        spark.createDataFrame(
+            [(str(i), 0.0, 0.0) for i in range(500)],
+            "query_id string, lat double, lon double").toArrow()
+        return spark.range(0, 4, numPartitions=4).mapInArrow(
+            lambda batches: batches, "id long")
+
+    out["python_task_floor"] = q_python_task_floor
     return out
 
 
