@@ -12,8 +12,9 @@ H3-equivalent semantics (res 7-10, k-ring, parent), not Uber-bit-compatible.
 Bit layout (id >= 0, high bit clear):
   [62:59] res (4b) | [58:56] face (3b) | [55:28] q+2^27 | [27:0] r+2^27
 
-All math is numpy-vectorized; Spark surface: native column expressions for
-cell assignment (`with_hex_cell`), Arrow pandas UDFs for the rest.
+All math is numpy-vectorized; Spark surface: cell assignment as one
+selectExpr of named built-in SQL steps (`with_hex_cell`), and one Arrow pandas
+UDF, `parent_udf`.
 """
 
 from __future__ import annotations
@@ -485,110 +486,68 @@ def disk_cells_flagged(lats, lons, cover_m, res: int,
 def with_hex_cell(df, res: int, lat="lat", lon="lon", out_col=None):
     """Adds the hex cell column (default name `hex_r{res}`).
 
-    Computed by PURE NATIVE column expressions — the whole
-    latlon -> xyz -> face/uv -> rotated axial -> cube-round -> pack chain in
-    built-in functions, so cell assignment stays inside whole-stage codegen
-    (no Python in the headline spatial path; round-2 perf item).
-
-    STAGED on purpose: each step is a separate select() defining named
-    intermediates, so every value is computed ONCE per row.  Building this
-    as one nested Column expression duplicates each subtree at every
-    reference (Catalyst expressions are trees, not DAGs) — measured 6x
-    SLOWER than the Arrow UDF before staging.  CollapseProject keeps the
-    stages separate because the intermediates are non-cheap and
-    multiply-referenced; codegen pipelines them with local variables.
+    The latlon -> xyz -> face/uv -> rotated axial -> cube-round -> pack
+    chain is built-in SQL, so cell assignment stays in whole-stage codegen
+    with no Python.  Each step is a named lateral alias in one `selectExpr`:
+    Catalyst expressions are trees, so an unnamed value is recomputed at
+    every reference (the nested form ran 6x slower).  The steps are SQL text
+    because every PySpark Column call costs py4j round trips.  An input
+    column named like a step would shadow its alias, so it is refused.
 
     Bit-parity with the numpy path (`latlon_to_cell`): same constants, same
-    rounding (F.rint == np.rint, half-even); JVM-vs-numpy trig can differ by
+    rounding (rint == np.rint, half-even); JVM-vs-numpy trig can differ by
     ~1 ulp, which can flip a point sitting EXACTLY on a cell boundary to the
     adjacent cell — harmless for the join/kNN contracts (covers pad by >=
     one circumradius; kNN bounds are metric) and asserted absent in tests."""
     if not 0 <= res <= 15:
         raise ValueError("res must be in [0, 15]")
-    out_col = out_col or f"hex_r{res}"
-    radius, c, s = _res_frame(res)
-    C = F.col
-    lat_r, lon_r = F.radians(C(lat)), F.radians(C(lon))
-    cl = F.cos(lat_r)
-    s1 = df.select(
-        "*",
-        (cl * F.cos(lon_r)).alias("__hx"),
-        (cl * F.sin(lon_r)).alias("__hy"),
-        F.sin(lat_r).alias("__hz"),
-    )
-    ax, ay, az = F.abs(C("__hx")), F.abs(C("__hy")), F.abs(C("__hz"))
-    face0 = (
-        F.when((ax >= ay) & (ax >= az), F.lit(0))
-        .when(ay >= az, F.lit(1))
-        .otherwise(F.lit(2))
-    )
-    s2 = s1.select("*", face0.alias("__hf0"))
-    major = (
-        F.when(C("__hf0") == 0, C("__hx"))
-        .when(C("__hf0") == 1, C("__hy"))
-        .otherwise(C("__hz"))
-    )
-    s3 = s2.select(
-        "*",
-        F.when(major < 0, C("__hf0") + F.lit(3))
-        .otherwise(C("__hf0")).alias("__hface"),
-    )
-    u = (
-        F.when(C("__hface") == 0, C("__hy") / C("__hx"))
-        .when(C("__hface") == 1, -C("__hx") / C("__hy"))
-        .when(C("__hface") == 2, -C("__hx") / C("__hz"))
-        .when(C("__hface") == 3, C("__hz") / C("__hx"))
-        .when(C("__hface") == 4, C("__hz") / C("__hy"))
-        .otherwise(-C("__hy") / C("__hz"))
-    )
-    v = (
-        F.when(C("__hface") == 0, C("__hz") / C("__hx"))
-        .when(C("__hface") == 1, C("__hz") / C("__hy"))
-        .when(C("__hface") == 2, -C("__hy") / C("__hz"))
-        .when(C("__hface") == 3, C("__hy") / C("__hx"))
-        .when(C("__hface") == 4, -C("__hx") / C("__hy"))
-        .otherwise(-C("__hx") / C("__hz"))
-    )
-    s4 = s3.select("*", u.alias("__hu"), v.alias("__hv"))
-    xr = C("__hu") * F.lit(c) + C("__hv") * F.lit(s)
-    yr = -C("__hu") * F.lit(s) + C("__hv") * F.lit(c)
-    s5 = s4.select("*", xr.alias("__hxr"), yr.alias("__hyr"))
-    qf = (F.lit(_SQRT3 / 3.0) * C("__hxr") - C("__hyr") / F.lit(3.0)) / F.lit(radius)
-    rf = (F.lit(2.0 / 3.0) * C("__hyr")) / F.lit(radius)
-    s6 = s5.select("*", qf.alias("__hqf"), rf.alias("__hrf"),
-                   (-qf - rf).alias("__hsf"))
-    s7 = s6.select(
-        "*",
-        F.rint(C("__hqf")).alias("__hq0"),
-        F.rint(C("__hrf")).alias("__hr0"),
-        F.rint(C("__hsf")).alias("__hs0"),
-    )
-    dq = F.abs(C("__hq0") - C("__hqf"))
-    dr = F.abs(C("__hr0") - C("__hrf"))
-    ds = F.abs(C("__hs0") - C("__hsf"))
-    s8 = s7.select("*", dq.alias("__hdq"), dr.alias("__hdr"), ds.alias("__hds"))
-    fix_q = (C("__hdq") > C("__hdr")) & (C("__hdq") > C("__hds"))
-    fix_r = ~fix_q & (C("__hdr") > C("__hds"))
-    # when fix_r holds, fix_q is false, so the q in (-q - s) is still q0
-    q = F.when(fix_q, -C("__hr0") - C("__hs0")).otherwise(C("__hq0")).cast("long")
-    r = F.when(fix_r, -C("__hq0") - C("__hs0")).otherwise(C("__hr0")).cast("long")
-    s9 = s8.select("*", q.alias("__hq"), r.alias("__hr"))
-    packed = (
-        F.shiftleft(F.lit(res).cast("long"), 59)
-        .bitwiseOR(F.shiftleft(C("__hface").cast("long"), 56))
-        .bitwiseOR(F.shiftleft(C("__hq") + F.lit(_OFF), 28))
-        .bitwiseOR(C("__hr") + F.lit(_OFF))
-    )
-    # coalesce to a sentinel: (a) null coords -> -1, which matches no real
-    # cell in any equi-join (inner joins drop them, same as the UDF path's
-    # null); (b) the column becomes NON-NULLABLE, so joins on it generate
-    # no isnotnull predicate — Catalyst pushes such predicates below the
-    # staged projects by INLINING the whole expression tree into the
-    # filter, which re-created the 6x duplication blowup this staging
-    # exists to avoid (measured; see plan in EXPLAINS.md).
-    packed = F.coalesce(packed, F.lit(-1).cast("long"))
-    tmp = [col for col in s9.columns if col.startswith("__h")]
-    return s9.select("*", packed.alias(out_col)).drop(*tmp)
+    radius, c, s = (f"{v!r}D" for v in _res_frame(res))
+
+    def by_face(*exprs):
+        return "CASE __hface " + " ".join(
+            f"WHEN {i} THEN {e}" for i, e in enumerate(exprs)) + " END"
+
+    steps = [
+        ("__hcl", f"cos(radians(`{lat}`))"),
+        ("__hx", f"__hcl * cos(radians(`{lon}`))"),
+        ("__hy", f"__hcl * sin(radians(`{lon}`))"),
+        ("__hz", f"sin(radians(`{lat}`))"),
+        ("__hface",
+         "CASE WHEN abs(__hx) >= abs(__hy) AND abs(__hx) >= abs(__hz)"
+         " THEN IF(__hx < 0, 3, 0)"
+         " WHEN abs(__hy) >= abs(__hz) THEN IF(__hy < 0, 4, 1)"
+         " ELSE IF(__hz < 0, 5, 2) END"),
+        ("__hu", by_face("__hy / __hx", "-__hx / __hy", "-__hx / __hz",
+                         "__hz / __hx", "__hz / __hy", "-__hy / __hz")),
+        ("__hv", by_face("__hz / __hx", "__hz / __hy", "-__hy / __hz",
+                         "__hy / __hx", "-__hx / __hy", "-__hx / __hz")),
+        ("__hxr", f"__hu * {c} + __hv * {s}"),
+        ("__hyr", f"-__hu * {s} + __hv * {c}"),
+        ("__hqf", f"({_SQRT3 / 3.0!r}D * __hxr - __hyr / 3.0D) / {radius}"),
+        ("__hrf", f"({2.0 / 3.0!r}D * __hyr) / {radius}"),
+        ("__hsf", "-__hqf - __hrf"),
+        *((f"__h{a}0", f"rint(__h{a}f)") for a in "qrs"),
+        *((f"__hd{a}", f"abs(__h{a}0 - __h{a}f)") for a in "qrs"),
+        ("__hfq", "__hdq > __hdr AND __hdq > __hds"),
+        # when r is fixed, q is not, so the q in (-q - s) is still q0
+        ("__hq", "CAST(IF(__hfq, -__hr0 - __hs0, __hq0) AS BIGINT)"),
+        ("__hr", "CAST(IF(__hdr > __hds AND NOT __hfq, -__hq0 - __hs0, __hr0)"
+                 " AS BIGINT)"),
+    ]
+    names = [n for n, _ in steps]
+    clash = set(names) & {col.lower() for col in df.columns}
+    if clash:
+        raise ValueError(f"input columns {sorted(clash)} would shadow "
+                         "with_hex_cell's steps")
+    packed = (f"{res << 59}L | shiftleft(CAST(__hface AS BIGINT), 56)"
+              f" | shiftleft(__hq + {_OFF}, 28) | (__hr + {_OFF})")
+    # coalesce keeps the column non-nullable: null coords give -1, which
+    # matches no real cell, and a join on the cell pushes down no isnotnull
+    # filter (one would inline the whole chain into the filter).
+    return df.selectExpr(
+        "*", *(f"{e} AS {n}" for n, e in steps),
+        f"coalesce({packed}, -1L) AS `{out_col or f'hex_r{res}'}`",
+    ).drop(*names)
 
 
 def parent_udf(parent_res: int):

@@ -24,8 +24,8 @@ Stream KNN Join*, SIGMOD 2021):
      disk arrays go back to Spark as one small local frame, exploded
      there to (query, cell) rows;
   2. the point half (`_prepared_points`) hex-cell-assigns the points at
-     that res via the native staged expression path (whole-stage
-     codegen, zero Python) and persists them ONCE per points snapshot:
+     that res via the native SQL projection (whole-stage codegen,
+     zero Python) and persists them ONCE per points snapshot:
      later batches at that res read the cached rows, with no re-plan and
      no rescan;
   3. the halves equi-join on the long cell key — the planner broadcasts
@@ -280,7 +280,7 @@ def _batch_disk_cells(queries: DataFrame, radius: float, metric: str):
 def _point_half(points: DataFrame, res: int, point_id: str,
                 carry_cols: tuple) -> DataFrame:
     """(point_id, plat, plon, __pcell, *carry_cols): the points
-    hex-assigned at the disk `res` by the native staged expressions."""
+    hex-assigned at the disk `res` by the native SQL projection."""
     cell = f"__rj_cell_r{res}"
     return with_hex_cell(points, res, out_col=cell).select(
         F.col(point_id).alias("point_id"),

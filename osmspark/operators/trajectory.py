@@ -122,7 +122,7 @@ def route_cell_text(traj: DataFrame, res: int = 9,
     string, consecutive duplicate cells collapsed (dwell-invariance — a
     10-minute stop contributes ONE token, so similarity measures the
     ROUTE, not the schedule).  Cell assignment is the engine's native
-    staged hex encode; the per-trajectory fold is sort_array over
+    hex encode; the per-trajectory fold is sort_array over
     (ts, lat, lon, cell) structs + a shifted zip_with dedup — one shuffle
     on traj_id, zero Python.
 

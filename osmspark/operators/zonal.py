@@ -239,35 +239,18 @@ def zonal_length(
     shortcut (a cell-level length pre-aggregate would need segments
     clipped per CELL — strictly more work than clipping per polygon).
     The polygon dim broadcasts by contract."""
-    from .intersect import _step_deg, _validate_cells_col, segment_cover_udf
+    from .intersect import _covered, _step_deg
 
     dim = _PolyDim(polys, ("poly_id",), res)
     cover = dim.cover(res, "poly_id").drop("interior")
-
-    if seg_cells_col is not None:
-        # pre-covered layout (intersect.with_segment_cover): no cover UDF
-        _validate_cells_col(segs, seg_cells_col, res)
-        pre = segs.select(
-            F.col(seg_id).alias("seg_id"),
-            "lat1", "lon1", "lat2", "lon2",
-            F.col(seg_cells_col).alias("__cells"),
-        )
-    else:
-        cov = segment_cover_udf(res, _step_deg(res))
-        pre = segs.select(
-            F.col(seg_id).alias("seg_id"),
-            "lat1", "lon1", "lat2", "lon2",
-        ).withColumn(
-            "__cells",
-            cov(F.col("lat1"), F.col("lon1"), F.col("lat2"), F.col("lon2")),
-        )
-    s = pre.select(
-        "seg_id", "lat1", "lon1", "lat2", "lon2",
-        F.explode_outer("__cells").alias("__cell"),
-    )
+    # the intersection join's cover step, prefixed "seg_": (seg_id,
+    # seg_lat1, seg_lon1, seg_lat2, seg_lon2, __seg_cell); a pre-covered
+    # layout column (intersect.with_segment_cover) skips the cover UDF
+    s = _covered(segs, seg_id, "seg_", res, _step_deg(res),
+                 max_samples=256, cells_col=seg_cells_col)
     # poly_id follows pidx; keeping it in the dedupe key leaves every
     # first() buffer fixed-width, so the dedupe stays a HashAggregate
-    cand = s.join(cover, s["__cell"] == cover["cell"], "inner") \
+    cand = s.join(cover, s["__seg_cell"] == cover["cell"], "inner") \
             .dropDuplicates(["seg_id", "pidx", "poly_id"])
     # nondeterministic only to the optimizer: a deterministic UDF lets the
     # `frac > 0` filter below be pushed under its own projection, which
@@ -278,8 +261,8 @@ def zonal_length(
     ).asNondeterministic()
 
     refined = cand.withColumn(
-        "__c", clip(F.col("lat1"), F.col("lon1"),
-                    F.col("lat2"), F.col("lon2"), F.col("pidx"))
+        "__c", clip(F.col("seg_lat1"), F.col("seg_lon1"),
+                    F.col("seg_lat2"), F.col("seg_lon2"), F.col("pidx"))
     ).filter(F.col("__c.frac") > 0)
     if pairs:
         return refined.select(

@@ -1,6 +1,6 @@
 """Streaming geospatial rollups — the spatial tier under Structured
 Streaming (SURVEY B2/B6 x §2.3): a stream of timestamped points gets its
-hex cell assigned by the SAME staged native expressions as the batch path
+hex cell assigned by the SAME native SQL projection as the batch path
 (stateless projections stream as-is), then rolls up into watermarked
 tumbling-window per-cell counts — the shape of a live density-tile feed.
 

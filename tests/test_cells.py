@@ -136,21 +136,32 @@ def test_spark_cell_udfs(spark, nodes):
     assert "ArrowEvalPython" in plan and "BatchEvalPython" not in plan
 
 
+# fixed rows: both poles, lon +-180, the face seams and the cube corners
+_CORNER_LAT = float(np.degrees(np.arctan(1 / np.sqrt(2))))  # 35.264 deg
+HEX_EDGE_ROWS = (
+    [(90.0, 0.0), (-90.0, 0.0), (90.0, 180.0), (-90.0, -180.0)]
+    + [(la, lo) for la in (0.0, 52.5, -52.5) for lo in (180.0, -180.0)]
+    + [(0.0, lo) for lo in (45.0, -45.0, 135.0, -135.0)]
+    + [(45.0, 0.0), (-45.0, 0.0)]
+    + [(sa * _CORNER_LAT, lo) for sa in (1.0, -1.0)
+       for lo in (45.0, -45.0, 135.0, -135.0)]
+)
+
+
 def test_hex_native_expression_matches_numpy(spark):
-    """hex_cell_col (pure column expressions, codegen path) must agree with
-    latlon_to_cell (numpy/Arrow path) — same constants, same half-even
-    rounding; ulp-level trig skew may flip only exact-boundary points, and
-    none exist on the 1e-5 grid or in this random sample."""
+    """with_hex_cell (built-in SQL, codegen path) must agree with
+    latlon_to_cell (numpy path) over the full globe and on the seam, pole
+    and corner rows — same constants, same half-even rounding; ulp-level
+    trig skew could flip only exact-boundary points, and none are hit."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     n = 100_000
     rng = np.random.default_rng(7)
-    lat = rng.uniform(-80, 80, n)
-    lon = rng.uniform(-179.9, 179.9, n)
-    pdf = pd.DataFrame({"lat": lat, "lon": lon})
-    df = spark.createDataFrame(pdf)
-    for res in (7, 8, 10):
+    edge_lat, edge_lon = zip(*HEX_EDGE_ROWS)
+    lat = np.concatenate([rng.uniform(-90, 90, n), edge_lat])
+    lon = np.concatenate([rng.uniform(-180, 180, n), edge_lon])
+    df = spark.createDataFrame(pd.DataFrame({"lat": lat, "lon": lon})).cache()
+    for res in (0, 1, 5, 7, 8, 10, 12, 15):
         got = np.array(
             hexgrid.with_hex_cell(df, res, out_col="c")
             .select("c").toPandas()["c"],
@@ -158,7 +169,32 @@ def test_hex_native_expression_matches_numpy(spark):
         )
         exp = hexgrid.latlon_to_cell(lat, lon, res)
         n_diff = int((got != exp).sum())
-        assert n_diff == 0, f"res {res}: {n_diff}/{n} cells differ"
+        assert n_diff == 0, f"res {res}: {n_diff}/{len(lat)} cells differ"
+    df.unpersist()
+
+
+def test_hex_native_plan_computes_each_trig_once(spark):
+    """Each named step is computed once per row: the optimized plan holds
+    one node per trig call and per rounding (a nested expression tree
+    would repeat each subtree at every reference)."""
+    import re
+
+    df = spark.createDataFrame([(1.3, 103.8)], "lat double, lon double")
+    plan = (hexgrid.with_hex_cell(df, 8)._jdf.queryExecution()
+            .optimizedPlan().toString())
+    counts = {f: len(re.findall(rf"\b{f}\(", plan))
+              for f in ("COS", "SIN", "rint")}
+    assert counts == {"COS": 2, "SIN": 2, "rint": 3}, counts
+
+
+@pytest.mark.parametrize("col", ["__hx", "__HFACE"])
+def test_hex_native_refuses_shadowing_columns(spark, col):
+    """An input column named like a step would silently shadow the lateral
+    alias and give wrong cells, so it is refused."""
+    df = spark.createDataFrame([(1.3, 103.8, 0.5)],
+                               f"lat double, lon double, {col} double")
+    with pytest.raises(ValueError, match="shadow"):
+        hexgrid.with_hex_cell(df, 8)
 
 
 def test_hex_native_null_coords_sentinel(spark):

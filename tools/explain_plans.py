@@ -157,10 +157,14 @@ def main() -> None:
     from osmspark.functions.hexgrid import with_hex_cell
 
     add(
-        "Hex cell assignment (B2) — staged native expressions",
+        "Hex cell assignment (B2) — one selectExpr of named SQL steps",
         with_hex_cell(nodes.select("lat", "lon"), 9),
         [("ZERO Python (pure codegen; round-2 rewrite)",
           lambda p: "EvalPython" not in p),
+         ("each trig node appears once per hex assignment (COS 2, SIN 2, "
+          "rint 3: no subtree is duplicated into a later step)",
+          lambda p: [len(re.findall(rf"\b{f}\(", _final(p)))
+                     for f in ("COS", "SIN", "rint")] == [2, 2, 3]),
          ("whole-stage codegen",
           lambda p: "codegen id" in p or "WholeStageCodegen" in p)],
     )

@@ -343,6 +343,15 @@ def build(spark):
             lambda batches: batches, "id long")
 
     out["python_task_floor"] = q_python_task_floor
+
+    def q_hex_cell_plan():
+        # the driver-side cost of planning the hex cell chain, without a
+        # job: ten frames built and optimized, then a trivial frame
+        for _ in range(10):
+            with_hex_cell(nodes, 8)._jdf.queryExecution().optimizedPlan()
+        return spark.range(0)
+
+    out["hex_cell_plan"] = q_hex_cell_plan
     return out
 
 
