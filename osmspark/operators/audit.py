@@ -33,19 +33,6 @@ def tag_name_frequency(spans: DataFrame) -> DataFrame:
     return spans.groupBy(F.col("kind").alias("kind")).agg(F.count("*").alias("cnt"))
 
 
-def tag_key_frequency(nodes: DataFrame, top_k: int | None = None) -> DataFrame:
-    """Frequency of tag KEYS across elements (BASELINE north_star: "tag
-    key/value frequency tables" [D]). explode map keys -> group-count."""
-    out = (
-        nodes.select(F.explode(F.map_keys("tags")).alias("k"))
-        .groupBy("k")
-        .agg(F.count("*").alias("cnt"))
-    )
-    if top_k:
-        out = out.orderBy(F.desc("cnt"), "k").limit(top_k)
-    return out
-
-
 # --------------------------------------------------------------------------
 # A5 — regex key classification (tags.py:~L8 key_type/process_map [C])
 # --------------------------------------------------------------------------
@@ -134,7 +121,7 @@ def unexpected_street_types(streets_df: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 def _mapping_expr() -> Column:
     """The reference's `mapping` dict as a literal create_map — constant-folded
-    JVM-side; the broadcast-join variant is normalize_streets(use_join=True)."""
+    JVM-side."""
     pairs = []
     for k, v in STREET_TYPE_MAPPING.items():
         pairs += [F.lit(k), F.lit(v)]
@@ -146,25 +133,10 @@ def normalized_street_type(col: Column | str) -> Column:
     return F.coalesce(_mapping_expr()[st], st)
 
 
-def normalize_streets(streets_df: DataFrame, use_join: bool = False) -> DataFrame:
-    """street -> (street, stype, normalized_type, normalized_street).
-
-    use_join=True routes the rewrite through a broadcast join against a
-    mapping dim table instead of a literal map — the pattern that scales to a
-    large mapping dimension (SURVEY A11 note)."""
-    df = streets_df.withColumn("stype", street_type("street"))
-    if use_join:
-        spark = streets_df.sparkSession
-        mapping = spark.createDataFrame(
-            list(STREET_TYPE_MAPPING.items()), schema="old string, new string"
-        )
-        df = (
-            df.join(F.broadcast(mapping), df["stype"] == mapping["old"], "left")
-            .withColumn("normalized_type", F.coalesce("new", "stype"))
-            .drop("old", "new")
-        )
-    else:
-        df = df.withColumn("normalized_type", normalized_street_type("street"))
+def normalize_streets(streets_df: DataFrame) -> DataFrame:
+    """street -> (street, stype, normalized_type, normalized_street)."""
+    df = streets_df.withColumn("stype", street_type("street")).withColumn(
+        "normalized_type", normalized_street_type("street"))
     # re-substitute the type token in the full name (re.sub in update_name):
     # suffix position -> replace last token; prefix position -> first token.
     first = F.split(F.col("street"), " ")[0]

@@ -27,10 +27,12 @@ the usual cos(lat) lon squeeze; callers needing metric meters at scale
 compose with the radius join's haversine verify.
 
 Scale notes: ONE Arrow disk UDF on the points (the radius-join plan),
-one broadcast cover join, refine + one min-struct aggregate per point —
-two exchanges beyond the scan.  The polygon dim is collected once and
-broadcast by contract, through `spatial_join._PolyDim` — the layer that
-also serves `spatial_join` and the zonal operators.
+one cover join, refine + one min-struct aggregate per point — two
+exchanges beyond the scan.  The polygon side is
+`spatial_join.polygon_cover`, the cached dim-side cover and ring frames
+that also serve `spatial_join` and the zonal operators; the planner
+broadcasts or shuffles each by its size, and only the pairs that run
+the distance kernel read a ring.
 """
 
 from __future__ import annotations
@@ -40,10 +42,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .spatial_join import (
+    _RING,
     DEFAULT_COVER_RES,
+    _candidates,
     _pip_single_ring,
     _point_segment_dist2,
-    _PolyDim,
+    _ring_udf,
+    polygon_cover,
 )
 
 
@@ -90,9 +95,8 @@ def nearest_polygon(
     if radius_deg <= 0:
         raise ValueError("radius_deg must be positive")
     use_res = DEFAULT_COVER_RES if res is None else res
-    dim = _PolyDim(polys, ("poly_id",), use_res)
-    poly_d2 = dim.refine_udf("poly_d2", _poly_dist2,
-                             [("d2", "double", np.inf)])
+    cover, rings, res_list = polygon_cover(polys, use_res)
+    poly_d2 = _ring_udf("poly_d2", _poly_dist2, [("d2", "double", np.inf)])
 
     # two-phase (the zonal shape, applied to nearest): every polygon
     # CONTAINING a point has the point's home cell in its cover (the
@@ -104,15 +108,16 @@ def nearest_polygon(
     q = points.select(
         F.col(point_id).alias("query_id"),
         F.col(lat).alias("qlat"), F.col(lon).alias("qlon"))
-    hpairs = dim.candidates(q, "qlat", "qlon", "poly_id")
+    hpairs = _candidates(q, cover, res_list, "qlat", "qlon")
     # leg A: home cell certified interior -> inside, d2 = 0, no Python
     leg_a = hpairs.filter(F.col("interior")).select(
         "query_id", "qlat", "qlon", "poly_id",
         F.lit(0.0).alias("__d2"))
     # leg B: home cell in a boundary cover cell -> exact kernel
-    leg_b = hpairs.filter(~F.col("interior")).select(
+    leg_b = hpairs.filter(~F.col("interior")).join(
+        rings, "ring_key").select(
         "query_id", "qlat", "qlon", "poly_id",
-        poly_d2(F.col("qlat"), F.col("qlon"), F.col("pidx")).alias("__d2"))
+        poly_d2(F.col("qlat"), F.col("qlon"), *_RING).alias("__d2"))
     home_best = leg_a.unionByName(leg_b).groupBy("query_id").agg(
         F.min(F.struct(F.col("__d2").alias("d2"),
                        F.col("poly_id").alias("poly_id"))).alias("b"),
@@ -129,14 +134,16 @@ def nearest_polygon(
         outside.select("query_id", F.col("qlat").alias("lat"),
                        F.col("qlon").alias("lon")),
         radius_deg, metric="sq_deg", res=use_res)
-    # poly_id follows pidx; keeping it in the dedupe key leaves every
-    # first() buffer fixed-width, so the dedupe stays a HashAggregate
-    cover = dim.cover(use_res, "poly_id")
+    # poly_id follows ring_key; keeping it in the dedupe key leaves every
+    # first() buffer fixed-width, so the dedupe stays a HashAggregate, and
+    # the ring joins the deduped pairs only
+    poly_cells = cover.select("cell", "ring_key", "poly_id")
     leg_c = cand.join(
-        cover, cand["__pcell"] == cover["cell"], "inner"
-    ).dropDuplicates(["query_id", "pidx", "poly_id"]).select(
+        poly_cells, cand["__pcell"] == poly_cells["cell"], "inner"
+    ).dropDuplicates(["query_id", "ring_key", "poly_id"]).join(
+        rings, "ring_key").select(
         "query_id", "qlat", "qlon", "poly_id",
-        poly_d2(F.col("qlat"), F.col("qlon"), F.col("pidx")).alias("__d2"))
+        poly_d2(F.col("qlat"), F.col("qlon"), *_RING).alias("__d2"))
 
     r2 = float(radius_deg) * float(radius_deg)
     # the radius cut happens AFTER the argmin, on the aggregated scalar:

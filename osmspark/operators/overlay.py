@@ -4,9 +4,9 @@ conflict checks, vectorized-raster features (tiles.vectorize_raster)
 joined back against the admin dim.
 
 Same two-phase shape as the PIP join, lifted one rank: phase 1 joins the
-two sides' COVER CELLS (prepare_polygons — per-polygon covers computed in
-a pandas UDF, superset of every cell the polygon touches, so any
-intersecting pair shares at least one candidate cell); phase 2 verifies
+two sides' COVER CELLS (`spatial_join.polygon_cover` — the PIP join's
+cached dim-side cover, a superset of every cell the polygon touches, so
+any intersecting pair shares at least one candidate cell); phase 2 verifies
 each candidate pair exactly with the standard polygon-intersection
 predicate:
 
@@ -26,9 +26,10 @@ boundary ambiguity the PIP join documents); antimeridian rings must be
 pre-unwrapped (each comparison shifts its partner into the reference
 ring's longitude frame).
 
-Scale shape: covers are per-polygon pandas-UDF work (no driver collect
-of either dim), the candidate join is a shuffle equi-join on the cell
-key, and the verifier is one Arrow UDF running the FLAT RAGGED kernels:
+Scale shape: covers are per-polygon Arrow-map work (no driver collect
+of either dim), cached per dim snapshot at their real size, so the
+candidate join on the cell key broadcasts or shuffles by that size, and
+the verifier is one Arrow UDF running the FLAT RAGGED kernels:
 per batch, each side's distinct rings go into one flat vertex/edge
 table, every leg's ragged (probe x edge) combo space across ALL rows is
 indexed with vectorized repeat/cumsum arithmetic, the crossing /
@@ -50,7 +51,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .spatial_join import (_GRID_CHUNK, _pip_single_ring, prepare_polygons,
+from .spatial_join import (_GRID_CHUNK, _pip_single_ring, polygon_cover,
                            split_ring)
 
 
@@ -686,8 +687,8 @@ def _on_edges(vlat, vlon, ring_lat, ring_lon) -> np.ndarray:
 
 def _ring_key(lat, lon):
     """Ring-content key: multipolygon parts share a poly_id, so rings
-    (and the verifier's caches) are keyed by content, as in
-    spatial_join_distributed."""
+    (and the verifier's caches) are keyed by content — the ring_key of
+    `polygon_cover`."""
     return F.xxhash64(lat, lon)
 
 
@@ -702,17 +703,23 @@ def _ring_pairs(
     filtered by the factorized `batch_verify(akey, bkey, a_cache,
     b_cache) -> bool[n]` inside one Arrow UDF.  Returns (a_id, b_id,
     __bkey) per verified ring pair."""
-    def side(polys, p):
-        return prepare_polygons(polys, res).select(
-            F.col("poly_id").alias(f"{p}_id"),
-            _ring_key("ring_lat", "ring_lon").alias(f"__{p}key"),
-            F.col("ring_lat").alias(f"__{p}lat"),
-            F.col("ring_lon").alias(f"__{p}lon"),
-            "cell",
-        )
+    a_cover, a_rings, _ = polygon_cover(polys_a, res)
+    b_cover, b_rings, _ = polygon_cover(polys_b, res)
 
-    cand = side(polys_a, "a").join(side(polys_b, "b"), "cell") \
-        .dropDuplicates(["a_id", "__akey", "b_id", "__bkey"])
+    def side(cover, p):
+        return cover.select(F.col("poly_id").alias(f"{p}_id"),
+                            F.col("ring_key").alias(f"__{p}key"), "cell")
+
+    def rings(frame, p):
+        return frame.select(F.col("ring_key").alias(f"__{p}key"),
+                            F.col("ring_lat").alias(f"__{p}lat"),
+                            F.col("ring_lon").alias(f"__{p}lon"))
+
+    # the rings join the deduped ring pairs only
+    cand = side(a_cover, "a").join(side(b_cover, "b"), "cell") \
+        .dropDuplicates(["a_id", "__akey", "b_id", "__bkey"]) \
+        .join(rings(a_rings, "a"), "__akey") \
+        .join(rings(b_rings, "b"), "__bkey")
 
     @F.pandas_udf(T.BooleanType())
     def verify(akey: pd.Series, bkey: pd.Series,

@@ -60,8 +60,6 @@ count.
 from __future__ import annotations
 
 import math
-import threading
-from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
@@ -82,6 +80,7 @@ from ..functions.hexgrid import (
     disk_cells_flagged,
     with_hex_cell,
 )
+from ..plans.prepared import prepared
 from .knn import fetch_queries
 
 # upper bound on meters per degree of squared-degree distance: one great-
@@ -291,43 +290,18 @@ def _point_half(points: DataFrame, res: int, point_id: str,
     )
 
 
-# prepared point halves kept per session, least recently used first
-PREPARED_MAX = 4
-_PREPARED: OrderedDict = OrderedDict()
-_PREPARED_LOCK = threading.Lock()
-
-
 def _prepared_points(points: DataFrame, res: int, point_id: str,
                      carry_cols: tuple) -> DataFrame:
     """`_point_half`, planned and persisted once per points snapshot and
-    reused by every later batch at that res.  Lazy: `persist()` runs no
-    job; the first join that reads it fills the cache.
+    reused by every later batch at that res (`plans.prepared`: keyed on
+    the snapshot, res, point_id and carry_cols; a re-saved snapshot is a
+    new entry).  Lazy: `persist()` runs no job; the first join that reads
+    it fills the cache."""
+    def build():
+        return (_point_half(points, res, point_id, carry_cols).persist(),)
 
-    Keyed on the session, the points plan (`semanticHash`, confirmed with
-    `sameSemantics`, as the hash is 32 bits), the files the plan reads,
-    res, point_id and carry_cols.  The files matter because a re-saved
-    snapshot lists new part files under the same path, and Spark's cache
-    matches the two loads as one plan: a miss on the files alone replaces
-    the stale entry instead of caching beside it.  At most PREPARED_MAX
-    halves stay persisted; the least recently used one is unpersisted."""
-    app = points.sparkSession.sparkContext.applicationId
-    key = (app, points.semanticHash(), res, point_id, tuple(carry_cols))
-    files = sorted(points.inputFiles())
-    with _PREPARED_LOCK:
-        for k in [k for k in _PREPARED if k[0] != app]:
-            del _PREPARED[k]  # a stopped session's cache went with it
-        hit = _PREPARED.pop(key, None)
-        if (hit is not None and hit[1] == files
-                and hit[0].sameSemantics(points)):
-            pts = hit[2]
-        else:
-            if hit is not None:
-                hit[2].unpersist()
-            pts = _point_half(points, res, point_id, carry_cols).persist()
-        _PREPARED[key] = (points, files, pts)
-        while len(_PREPARED) > PREPARED_MAX:
-            _PREPARED.popitem(last=False)[1][2].unpersist()
-    return pts
+    return prepared(points, ("points", res, point_id, tuple(carry_cols)),
+                    build)[0]
 
 
 def _cell_join(q: DataFrame, pts: DataFrame, radius: float, metric: str,

@@ -86,13 +86,3 @@ def write_json_lines(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """A16 — JSON-lines sink (data.py:~L68 process_map writes json.dumps+\\n
     [C]). One JSON object per line, distributed writers."""
     df.write.mode(mode).json(path)
-
-
-def write_parquet(df: DataFrame, path: str, partition_cols: list[str] | None = None,
-                  mode: str = "overwrite") -> None:
-    """Engine-internal columnar sink (SURVEY §1.3): partition layout chosen by
-    caller (e.g. bucketed cell id) so downstream scans prune."""
-    w = df.write.mode(mode)
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(path)

@@ -2,21 +2,29 @@
 
 Phase 1 (prefilter): polygons are pre-exploded to their covering hex cells;
 points get the same cell id; the candidate set is a plain *equi-join on
-cell* — broadcast (admin/ZIP dims are small by contract).  Catalyst sees an
-ordinary join; no custom strategy needed (SURVEY §4.2).
+cell*.  Catalyst sees an ordinary join; no custom strategy needed (SURVEY
+§4.2).
 
 Phase 2 (refine): exact ray-casting (crossing-number) point-in-ring test,
-numpy-vectorized over Arrow batches.  Ring geometry reaches executors ONCE
-via a Spark broadcast variable indexed by dim row — candidate rows carry
-only (lat, lon, pidx, interior), so Arrow transfer stays O(candidates),
-not O(candidates * ring_size).
+numpy-vectorized over Arrow batches.  Only the candidates that ray-cast
+carry their ring, joined from the dim's ring frame by ring_key; the
+refine groups a batch's rows by ring and ray-casts each ring once against
+all of its rows.
 
-Cover computation runs driver-side in numpy: the polygon side is a
-broadcastable dimension by contract (if it weren't, covers would move into
-a pandas UDF — same math).  The cover is near-minimal: bbox cells filtered
-to centers inside the ring or within ~1.1 circumradius of an edge — a
-guaranteed superset of cells that can contain an interior point, so phase 2
-sees no false negatives and few false positives.
+One dim side for any dim size (`polygon_cover`): ONE Arrow map over the
+dim covers each row and emits (ring_key, dim_row, res, cell, interior,
+*attrs) rows, and each distinct ring is kept once in a (ring_key,
+ring_lat, ring_lon) frame; both are persisted and materialized once per
+dim snapshot (`plans.prepared`, the cell-cover plus query-cache design of
+*GeoBlocks*, EDBT 2021).  No dim row reaches the driver, a repeated dim is
+covered once, and the planner sees the cached frames' real sizes: it
+broadcasts an admin/ZIP cover and sort-merge joins a cover past
+`spark.sql.autoBroadcastJoinThreshold`.  `spatial_join`, `zonal_stats`,
+`zonal_length`, `nearest_polygon` and the overlay joins all take their
+candidates from it.  The cover is near-minimal: bbox cells filtered to
+centers inside the ring or within ~1.1 circumradius of an edge — a
+guaranteed superset of cells that can contain an interior point, so phase
+2 sees no false negatives and few false positives.
 
 Geometry domain: ANY valid ring joins — ordinary, antimeridian-crossing
 (longitude unwrap), hemisphere-wide and pole-encircling (split_ring
@@ -28,11 +36,6 @@ used to raise ValueError.
 Interior/boundary split: cover cells certified fully inside their
 polygon mark their candidates interior; the refine UDF keeps those
 without a ray-cast, so only boundary-cell candidates pay edge math.
-
-One polygon-dim layer: the dim side of the join — the driver collect,
-the covers, the broadcast rings, the per-res candidate join and the
-group-by-polygon refine loop — is `_PolyDim`, which `zonal_stats`,
-`zonal_length` and `nearest_polygon` compose over too.
 
 Scale notes: the cover res trades candidate fan-out vs join width (default
 res 8 ~ 1 km cells); hot-city skew on the cell key is handled by AQE
@@ -58,6 +61,7 @@ from pyspark.sql import types as T
 from ..functions import hexgrid
 from ..functions.geo import latlon_to_xyz
 from ..functions.s2 import xyz_to_face_uv
+from ..plans.prepared import prepared
 
 DEFAULT_COVER_RES = 8
 # interior samples per ring edge when collecting touched cube faces (a
@@ -108,7 +112,7 @@ def unwrap_ring_lons(lons: np.ndarray) -> np.ndarray:
     return out
 
 
-# --- geometry helpers (numpy, driver-side for the dim, reusable anywhere) --
+# --- geometry helpers (numpy, run by the dim-side cover map) --------------
 def _point_segment_dist2(px, py, x1, y1, x2, y2):
     """Squared distance from points (px,py) to segments; all (n,m) arrays."""
     dx, dy = x2 - x1, y2 - y1
@@ -164,7 +168,7 @@ def _cover_on_face(f: int, u, v, res: int):
     # block_size * n_edges doubles instead of n_cells * n_edges — a
     # continent polygon at fine res enumerates 10^5-10^6 bbox cells
     # against 10^2-10^3 densified edges, which unblocked is gigabytes of
-    # driver numpy (round-4 follow-up to the split_ring work)
+    # numpy (round-4 follow-up to the split_ring work)
     block = 16384
     inside = np.empty(len(cx), dtype=bool)
     d2 = np.empty(len(cx), dtype=np.float64)
@@ -183,11 +187,6 @@ def _cover_on_face(f: int, u, v, res: int):
     qq, rr = qq[keep], rr[keep]
     cells = hexgrid.pack(np.full_like(qq, res), np.full_like(qq, f), qq, rr)
     return cells, interior
-
-
-def _ring_cover_cells(lats: np.ndarray, lons: np.ndarray, res: int) -> np.ndarray:
-    """Cover cells only (compatibility wrapper over the flagged variant)."""
-    return _ring_cover_cells_flagged(lats, lons, res)[0]
 
 
 def _definite_faces(x: np.ndarray, y: np.ndarray, z: np.ndarray) -> set[int]:
@@ -454,25 +453,14 @@ def split_ring(lats: np.ndarray, lons: np.ndarray,
     return pieces
 
 
-def _ring_cover_cells_flagged(lats: np.ndarray, lons: np.ndarray, res: int):
-    """Cover of an ARBITRARY valid ring: split_ring pieces covered
-    individually, merged with cell dedupe (see _cover_pieces_flagged)."""
-    return _cover_pieces_flagged(
-        split_ring(np.asarray(lats, dtype=np.float64),
-                   np.asarray(lons, dtype=np.float64)),
-        res,
-    )
-
-
 def _cover_pieces_flagged(pieces: list, res: int):
-    """Merged cover of pre-split pieces — callers that need several
-    resolutions (adaptive covers) or reuse pieces for the refine split
-    ONCE and cover the cached pieces (round-4 review finding: re-running
-    split_ring per res trial repeated seconds of driver numpy per
-    polygon).  A cell is flagged interior iff it is fully inside SOME
-    piece (pieces have disjoint interiors tiling the ring's interior, so
-    piece-interior implies union-interior; a cell straddling a cut line
-    merely loses the refine shortcut)."""
+    """Merged cover of pre-split pieces — `_ring_cover` tries several
+    resolutions, so it splits ONCE and covers the same pieces at each
+    (round-4 review finding: re-running split_ring per res trial
+    repeated seconds of numpy per polygon).  A cell is flagged interior
+    iff it is fully inside SOME piece (pieces have disjoint interiors
+    tiling the ring's interior, so piece-interior implies union-interior;
+    a cell straddling a cut line merely loses the refine shortcut)."""
     if not pieces:
         return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=bool)
     covers = [_cover_piece_flagged(la, lo, res) for la, lo in pieces]
@@ -554,156 +542,201 @@ def _pip_single_ring(py, px, ring_lat, ring_lon):
     return (cross.sum(axis=1) % 2) == 1
 
 
-def adaptive_polygon_covers(
-    prows: list,
-    max_res: int = DEFAULT_COVER_RES,
-    min_res: int | None = None,
-    max_cover_cells: int = 4096,
-):
-    """Per-polygon cover resolution: each dim row is covered at the
-    FINEST res in [min_res, max_res] whose cover stays within
-    max_cover_cells (floored at min_res) — a ZIP rectangle gets km-scale
-    cells, Antarctica gets continent-scale ones, and the broadcast cover
-    table stays bounded at ~max_cover_cells * n_polys rows no matter how
-    the dim mixes sizes.  min_res=None means max_res: one fixed-res cover
-    and no walk.
+def _ring_cover(pieces: list, max_res: int, min_res: int,
+                max_cover_cells: int):
+    """One dim row's cover: (res, cells, interior) at the FINEST res in
+    [min_res, max_res] whose cover stays within max_cover_cells (floored
+    at min_res) — a ZIP rectangle gets km-scale cells, Antarctica gets
+    continent-scale ones, and the cover stays bounded at ~max_cover_cells
+    rows per dim row no matter how the dim mixes sizes.  interior marks
+    cells certified fully inside the row (`_cover_pieces_flagged`).
 
-    Resolution search walks COARSE -> FINE, refining while the next step's
-    ~7x growth (aperture-7) still fits the budget, so the wasted work is a
-    geometric series dominated by the accepted res — a huge polygon never
-    pays for a fine cover it will discard.
-
-    Everything is keyed by dim-row index (`pidx`), never by poly_id:
-    multipolygon parts share an id, and each part needs its own cover and
-    ring.  Returns (covers_by_res, res_list, rings_list): covers_by_res
-    maps res -> list of (pidx, cell, interior) rows, where interior marks
-    a cell certified fully inside the polygon (`_cover_pieces_flagged`);
-    res_list[pidx] is the row's cover res; rings_list[pidx] is its
-    split_ring pieces (split ONCE here — res trials and the caller's
-    refine all reuse them)."""
-    min_res = max_res if min_res is None else min_res
-    covers_by_res: dict[int, list] = {}
-    res_list: list[int] = []
-    rings_list: list = []
-    for i, r in enumerate(prows):
-        pieces = split_ring(
-            np.array([p["lat"] for p in r["ring"]], dtype=np.float64),
-            np.array([p["lon"] for p in r["ring"]], dtype=np.float64),
-        )
-        rr = min_res
-        cells, flags = _cover_pieces_flagged(pieces, rr)
-        while rr < max_res and len(cells) * 7 <= max_cover_cells:
-            nxt, nflags = _cover_pieces_flagged(pieces, rr + 1)
-            if len(nxt) > max_cover_cells:
-                break
-            rr, cells, flags = rr + 1, nxt, nflags
-        res_list.append(rr)
-        rings_list.append(pieces)
-        covers_by_res.setdefault(rr, []).extend(
-            (i, int(c), bool(f)) for c, f in zip(cells, flags)
-        )
-    return covers_by_res, res_list, rings_list
+    The walk goes COARSE -> FINE, refining while the next step's ~7x
+    growth (aperture-7) still fits the budget, so the wasted work is a
+    geometric series dominated by the accepted res — a huge polygon
+    never pays for a fine cover it will discard."""
+    rr = min_res
+    cells, flags = _cover_pieces_flagged(pieces, rr)
+    while rr < max_res and len(cells) * 7 <= max_cover_cells:
+        nxt, nflags = _cover_pieces_flagged(pieces, rr + 1)
+        if len(nxt) > max_cover_cells:
+            break
+        rr, cells, flags = rr + 1, nxt, nflags
+    return rr, cells, flags
 
 
-class _PolyDim:
-    """The broadcast polygon dim that `spatial_join`, `zonal_stats`,
-    `zonal_length` and `nearest_polygon` compose over, built once per
-    call: the ONE driver-side collect of the dim (`attrs` + ring), its
-    `adaptive_polygon_covers`, one broadcast of the split pieces and the
-    pidx -> attribute table.  Dim rows are factorized to a small int
-    `pidx`: covers and refines carry it instead of the poly_id string
-    (less Arrow transfer, no per-batch string factorize), and attributes
-    re-attach by pidx.  Building it is the only time the dim runs; its
-    frames and UDFs are plan fragments."""
+# the columns the refine UDFs read a dim row's ring from
+_RING = ("ring_key", "ring_lat", "ring_lon")
 
-    def __init__(self, polys: DataFrame, attrs=("poly_id",),
-                 res: int = DEFAULT_COVER_RES, min_res: int | None = None,
-                 max_cover_cells: int = 4096):
-        self.spark = polys.sparkSession
-        self.attrs = tuple(attrs)
-        self.res = res
-        prows = polys.select(*self.attrs, "ring").collect()
-        self.covers_by_res, _, pieces = adaptive_polygon_covers(
-            prows, max_res=res, min_res=min_res,
-            max_cover_cells=max_cover_cells,
-        )
-        self.rows = [tuple(r[a] for a in self.attrs) for r in prows]
-        self.pieces = self.spark.sparkContext.broadcast(pieces)
 
-    @staticmethod
-    def _schema(head: str, attrs) -> str:
-        return ", ".join([head, *(f"{a} string" for a in attrs)])
+def polygon_cover(polys: DataFrame, res: int = DEFAULT_COVER_RES,
+                  min_res: int | None = None, max_cover_cells: int = 4096):
+    """The dim side of every point x polygon operator: (cover, rings,
+    res_list).
 
-    def cover(self, rr: int, *attrs) -> DataFrame:
-        """Broadcast cover frame at res `rr`: (pidx, cell, interior,
-        *attrs), interior marking cells certified fully inside the row."""
-        ix = [self.attrs.index(a) for a in attrs]
-        rows = [(i, c, f, *(self.rows[i][j] for j in ix))
-                for i, c, f in self.covers_by_res.get(rr, [])]
-        return F.broadcast(self.spark.createDataFrame(
-            rows, self._schema("pidx int, cell long, interior boolean",
-                               attrs)))
+    `cover` holds one row per (dim row, cover cell): (ring_key, dim_row,
+    res, cell, interior, *every dim column but ring).  ring_key is
+    `xxhash64(ring_lat, ring_lon)`, the ring's content key: multipolygon
+    parts share a poly_id, and each part keeps its own cover and ring.
+    dim_row tells byte-identical dim rows apart.  Each row is covered at
+    its own res (`_ring_cover`); min_res=None covers every row at `res`.
+    `rings` holds each distinct ring once: (ring_key, ring_lat,
+    ring_lon), joined only to the candidates that ray-cast, so the cover
+    stays a few fixed-width columns per cell however many vertices a
+    ring has.  `res_list` is the sorted list of the resolutions the
+    cover holds (`[res]` for an empty dim).
 
-    def attr_frame(self) -> DataFrame:
-        """Broadcast pidx -> attributes table."""
-        return F.broadcast(self.spark.createDataFrame(
-            [(i, *r) for i, r in enumerate(self.rows)],
-            self._schema("pidx int", self.attrs)))
+    ONE Arrow map over the dim computes the covers, so the dim never
+    reaches the driver as rows.  Both frames are persisted and
+    materialized once per dim snapshot (`plans.prepared`), the dim read
+    once for the two: a repeated dim is covered once, and the planner
+    sees each cached frame's real size, so it broadcasts a small one and
+    shuffles a large one."""
+    min_res = res if min_res is None else min_res
+    return prepared(
+        polys, ("polygon_cover", res, min_res, max_cover_cells),
+        lambda: _build_cover(polys, res, min_res, max_cover_cells))
 
-    def candidates(self, points: DataFrame, lat: str = "lat",
-                   lon: str = "lon", *attrs) -> DataFrame:
-        """Hex-cell candidate pairs: one broadcast equi-join of the points'
-        cell against the cover per distinct cover res (an ordinary dim
-        has exactly one), unioned -> (*points.columns, pidx, interior,
-        *attrs).  Each row lives at exactly one res, so a (point, row)
-        pair is a candidate at most once."""
-        parts = []
-        # an empty dim still plans one (empty) candidate join at `res`
-        for rr in sorted(self.covers_by_res) or [self.res]:
-            cover = self.cover(rr, *attrs)
-            pts = hexgrid.with_hex_cell(points, rr, lat=lat, lon=lon,
-                                        out_col="__cell")
-            parts.append(
-                pts.join(cover, pts["__cell"] == cover["cell"], "inner")
-                .drop("__cell", "cell")
+
+def _build_cover(polys: DataFrame, res: int, min_res: int,
+                 max_cover_cells: int):
+    attrs = [c for c in polys.columns if c != "ring"]
+    # the dim, read once into the cache that the cover and ring frames
+    # are both built from (dropped once both are materialized)
+    src = polys.select(
+        F.transform("ring", lambda p: p["lat"]).alias("ring_lat"),
+        F.transform("ring", lambda p: p["lon"]).alias("ring_lon"),
+        *attrs,
+    ).select(F.xxhash64("ring_lat", "ring_lon").alias("ring_key"),
+             F.monotonically_increasing_id().alias("dim_row"),
+             "ring_lat", "ring_lon", *attrs).persist()
+    schema = T.StructType([
+        T.StructField("ring_key", T.LongType()),
+        T.StructField("dim_row", T.LongType()),
+        T.StructField("res", T.IntegerType()),
+        T.StructField("cell", T.LongType()),
+        T.StructField("interior", T.BooleanType()),
+        *(polys.schema[a] for a in attrs),
+    ])
+
+    def cover(batches):
+        for pdf in batches:
+            got = [_ring_cover(split_ring(np.asarray(la, dtype=np.float64),
+                                          np.asarray(lo, dtype=np.float64)),
+                               res, min_res, max_cover_cells)
+                   for la, lo in zip(pdf["ring_lat"], pdf["ring_lon"])]
+            n = [len(c) for _, c, _ in got]
+            out = pdf.drop(columns=["ring_lat", "ring_lon"])
+            out = out.iloc[np.repeat(np.arange(len(pdf)), n)]
+            out = out.reset_index(drop=True).assign(
+                res=np.repeat([r for r, _, _ in got], n).astype(np.int32),
+                cell=np.concatenate([np.zeros(0, dtype=np.int64),
+                                     *(c for _, c, _ in got)]),
+                interior=np.concatenate([np.zeros(0, dtype=bool),
+                                         *(f for _, _, f in got)]),
             )
-        return functools.reduce(DataFrame.unionByName, parts)
+            yield out[schema.fieldNames()]
 
-    def refine_udf(self, name: str, kernel, out, interior=None):
-        """pandas UDF `name(*cols, pidx[, interior])`: `_grouped` runs
-        `kernel` once per distinct pidx in each Arrow batch against that
-        row's broadcast pieces.  `out` lists (field, type, fill) per
-        kernel output: one field returns that type, several a struct.
-        With `interior` given the UDF takes a trailing interior flag;
-        flagged rows skip the kernel (code -1) and answer `interior`."""
-        bc = self.pieces
-        names = [n for n, _, _ in out]
-        fills = [f for _, _, f in out]
+    frame = src.mapInPandas(cover, schema).persist()
+    res_list = frame.agg(F.sort_array(F.collect_set("res"))).first()[0]
+    rings = src.select(*_RING).dropDuplicates(["ring_key"]).persist()
+    rings.count()
+    src.unpersist()
+    return frame, rings, res_list or [res]
 
-        def run(*cols: pd.Series) -> pd.Series:
-            arrs = [c.to_numpy() for c in cols]
-            inter = arrs.pop() if interior is not None else None
-            *data, codes = arrs
-            if inter is not None:
-                codes = np.where(inter, -1, codes)
-            res = _grouped(kernel, codes, data, bc.value, fills)
-            if inter is not None:
-                res = [np.where(inter, interior, r) for r in res]
-            if len(res) == 1:
-                return pd.Series(res[0])
-            return pd.DataFrame(dict(zip(names, res)))
 
-        run.__name__ = name
-        rtype = out[0][1] if len(out) == 1 else ", ".join(
-            f"{n} {t}" for n, t, _ in out)
-        return F.pandas_udf(run, rtype)
+def _candidates(points: DataFrame, cover: DataFrame, res_list,
+                lat: str = "lat", lon: str = "lon",
+                carry=("ring_key", "interior", "poly_id")) -> DataFrame:
+    """Hex-cell candidate pairs: the points' cell equi-joined to the cover
+    once per distinct cover res (an ordinary dim has exactly one),
+    unioned -> (*points.columns, *carry), `carry` naming the cover
+    columns kept.  Each dim row lives at exactly one res, so a (point,
+    dim row) pair is a candidate at most once.  No join hint: the cover
+    is a cached frame of known size, so the planner picks broadcast or
+    shuffle."""
+    parts = []
+    for rr in res_list:
+        pts = hexgrid.with_hex_cell(points, rr, lat=lat, lon=lon,
+                                    out_col="__cell")
+        part = cover.filter(F.col("res") == rr)
+        parts.append(
+            pts.join(part, pts["__cell"] == part["cell"], "inner").select(
+                *(pts[c] for c in points.columns),
+                *(part[c] for c in carry))
+        )
+    return functools.reduce(DataFrame.unionByName, parts)
 
-    def membership(self):
-        """The exact PIP refine `refine(lat, lon, pidx, interior)`:
-        interior-cell candidates are in by construction (no ray-cast),
-        the rest ray-cast their own row's pieces."""
-        return self.refine_udf("refine", _pip_pieces,
-                               [("inside", "boolean", False)], interior=True)
+
+# split_ring pieces by ring_key, kept in each Python worker process:
+# workers are reused across tasks, so a ring is split once per worker
+# instead of once per Arrow batch (a 1e5-polygon dim puts thousands of
+# distinct rings in every batch, at ~1 ms of split each).  Bounded by
+# vertex count; emptied when full.
+_SPLIT: dict = {}
+_SPLIT_MAX_VERTICES = 4_000_000
+_split_vertices = 0
+
+
+def _split_cached(key, lats, lons) -> list:
+    global _split_vertices
+    pieces = _SPLIT.get(key)
+    if pieces is None:
+        pieces = split_ring(np.asarray(lats, dtype=np.float64),
+                            np.asarray(lons, dtype=np.float64))
+        n = sum(len(la) for la, _ in pieces)
+        if _split_vertices + n > _SPLIT_MAX_VERTICES:
+            _SPLIT.clear()
+            _split_vertices = 0
+        _SPLIT[key] = pieces
+        _split_vertices += n
+    return pieces
+
+
+def _ring_udf(name: str, kernel, out, interior=None):
+    """pandas UDF `name(*cols, ring_key, ring_lat, ring_lon[, interior])`
+    over candidate rows: `_grouped` runs `kernel` once per distinct
+    ring_key in each Arrow batch, against that ring's split_ring pieces.
+    Each row carries its ring; a ring is split from its first row in
+    the batch, once per Python worker (`_split_cached`).  `out` lists (field, type, fill) per kernel output:
+    one field returns that type, several a struct.  With `interior`
+    given the UDF takes a trailing interior flag; flagged rows skip the
+    kernel (no ring read, no ray-cast; their ring may be null) and
+    answer `interior`."""
+    names = [n for n, _, _ in out]
+    fills = [f for _, _, f in out]
+
+    def run(*cols: pd.Series) -> pd.Series:
+        cols = list(cols)
+        inter = cols.pop().to_numpy() if interior is not None else None
+        *data, key, rlat, rlon = cols
+        live = np.ones(len(key), dtype=bool) if inter is None else ~inter
+        codes = np.full(len(key), -1, dtype=np.int64)
+        keys = key.to_numpy()
+        codes[live], _ = pd.factorize(keys[live])
+        _, first = np.unique(codes[live], return_index=True)
+        pieces = [_split_cached(keys[i], rlat.iloc[i], rlon.iloc[i])
+                  for i in np.flatnonzero(live)[first]]
+        res = _grouped(kernel, codes, [c.to_numpy() for c in data],
+                       pieces, fills)
+        if inter is not None:
+            res = [np.where(inter, interior, r) for r in res]
+        if len(res) == 1:
+            return pd.Series(res[0])
+        return pd.DataFrame(dict(zip(names, res)))
+
+    run.__name__ = name
+    rtype = out[0][1] if len(out) == 1 else ", ".join(
+        f"{n} {t}" for n, t, _ in out)
+    return F.pandas_udf(run, rtype)
+
+
+def _membership():
+    """The exact PIP refine `refine(lat, lon, *_RING, interior)`:
+    interior-cell candidates are in by construction (no ray-cast), the
+    rest ray-cast their own row's pieces."""
+    return _ring_udf("refine", _pip_pieces, [("inside", "boolean", False)],
+                     interior=True)
 
 
 def spatial_join(
@@ -720,109 +753,32 @@ def spatial_join(
     Inner-join semantics (a point outside every polygon is dropped);
     boundary points resolve by crossing-number convention.
 
-    The dim is collected to the driver (broadcastable by contract; use
-    `spatial_join_distributed` beyond that).  Each dim row is covered at
-    the finest res in [min_res, res] that fits max_cover_cells
-    (`adaptive_polygon_covers`); min_res=None covers every row at `res`.
-    A dim mixing ZIP rectangles with continent polygons passes a lower
-    min_res so the big rows take coarse cells instead of a 10^7-cell
-    fine cover.
+    The dim side is `polygon_cover`, cached per dim snapshot: each dim
+    row is covered at the finest res in [min_res, res] that fits
+    max_cover_cells; min_res=None covers every row at `res`.  A dim
+    mixing ZIP rectangles with continent polygons passes a lower min_res
+    so the big rows take coarse cells instead of a 10^7-cell fine cover.
+    """
+    return _pip(points, *polygon_cover(polys, res, min_res, max_cover_cells),
+                lat, lon)
 
-    Plan: one broadcast candidate join per distinct cover res (an
-    ordinary dim has exactly one), unioned, then ONE filter with ONE
-    pandas UDF (Catalyst pushes it below the Union, so the plan shows
-    one ArrowEvalPython per res branch; each candidate is refined once).
-    Candidates whose cover cell is certified interior are in by
-    construction: the UDF skips their ray-cast and keeps them.  Each row
-    lives at exactly one res, so a (point, row) pair is a candidate at
-    most once."""
-    dim = _PolyDim(polys, ("poly_id", "level", "postcode"), res, min_res,
-                   max_cover_cells)
-    refine = dim.membership()
+
+def _pip(points: DataFrame, cover: DataFrame, rings: DataFrame, res_list,
+         lat: str = "lat", lon: str = "lon") -> DataFrame:
+    """`spatial_join` over a dim's (cover, rings, res_list).
+
+    Plan: one candidate join per distinct cover res (an ordinary dim has
+    exactly one), unioned; ONE left join that attaches the ring to the
+    boundary candidates only (a candidate whose cover cell is certified
+    interior keeps a null ring), then ONE filter with ONE pandas UDF,
+    which keeps the interior candidates without a ray-cast."""
+    cand = _candidates(points, cover, res_list, lat, lon,
+                       ("ring_key", "interior", "poly_id", "level",
+                        "postcode"))
+    ring = rings.withColumnRenamed("ring_key", "__ring_key")
     return (
-        dim.candidates(points, lat, lon)
-        .filter(refine(F.col(lat), F.col(lon), F.col("pidx"),
-                       F.col("interior")))
-        .drop("interior")
-        .join(dim.attr_frame(), "pidx")
+        cand.join(ring, (F.col("ring_key") == F.col("__ring_key"))
+                  & ~F.col("interior"), "left")
+        .filter(_membership()(F.col(lat), F.col(lon), *_RING, "interior"))
         .select("poly_id", *points.columns, "level", "postcode")
     )
-
-
-# --- compatibility surface for tests / other callers -----------------------
-def cover_cells_udf(res: int):
-    """pandas UDF form of the cover (used when the polygon side is too large
-    to collect — same math as the driver-side path)."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def cover(rings: pd.Series) -> pd.Series:
-        out = []
-        for ring in rings:
-            lats = np.array([p["lat"] for p in ring], dtype=np.float64)
-            lons = np.array([p["lon"] for p in ring], dtype=np.float64)
-            out.append(_ring_cover_cells(lats, lons, res))
-        return pd.Series(out)
-
-    return cover
-
-
-def prepare_polygons(polys: DataFrame, res: int = DEFAULT_COVER_RES) -> DataFrame:
-    """polygons -> one row per (cover cell, polygon) with flat ring arrays
-    (distributed-cover variant for very large polygon sets)."""
-    return polys.select(
-        "poly_id",
-        "level",
-        "postcode",
-        F.transform("ring", lambda p: p["lat"]).alias("ring_lat"),
-        F.transform("ring", lambda p: p["lon"]).alias("ring_lon"),
-        F.explode(cover_cells_udf(res)(F.col("ring"))).alias("cell"),
-    )
-
-
-def spatial_join_distributed(
-    points: DataFrame,
-    polys: DataFrame,
-    res: int = DEFAULT_COVER_RES,
-    lat: str = "lat",
-    lon: str = "lon",
-) -> DataFrame:
-    """Fully distributed PIP join — NO driver-side polygon collect.
-
-    For polygon sets beyond the broadcast-dim contract of `spatial_join`
-    (which collects rings once and ships them via a broadcast variable):
-    covers are computed per-polygon inside a pandas UDF (prepare_polygons),
-    the candidate set is a plain shuffle equi-join on cell, and the refine
-    ray-casts against the ring arrays carried on the polygon side of each
-    candidate row (grouped per distinct polygon within each Arrow batch,
-    so the vectorized crossing-number pass still runs once per polygon per
-    batch).  Costs more Arrow transfer than spatial_join — the ring rides
-    every candidate row — so prefer `spatial_join` while the dim fits the
-    driver; semantics are identical (inner join, crossing-number,
-    antimeridian rings unwrapped)."""
-    prepared = prepare_polygons(polys, res)
-    pts = hexgrid.with_hex_cell(points, res, lat=lat, lon=lon,
-                                out_col="__cell")
-    cand = pts.join(prepared, pts["__cell"] == prepared["cell"], "inner")
-
-    @F.pandas_udf(T.BooleanType())
-    def refine_rows(plat: pd.Series, plon: pd.Series, ring_key: pd.Series,
-                    rlat: pd.Series, rlon: pd.Series) -> pd.Series:
-        # the ring rides every candidate row: split it once per distinct
-        # ring in the batch (from its first row), then the shared loop.
-        # Keyed by ring content, not poly_id: multipolygon parts share a
-        # poly_id, and each part must ray-cast its own ring
-        codes, _ = pd.factorize(ring_key.to_numpy())
-        _, first = np.unique(codes, return_index=True)
-        pieces = [split_ring(np.asarray(rlat.iloc[i], dtype=np.float64),
-                             np.asarray(rlon.iloc[i], dtype=np.float64))
-                  for i in first]
-        return pd.Series(_grouped(_pip_pieces, codes,
-                                  (plat.to_numpy(), plon.to_numpy()),
-                                  pieces, [False])[0])
-
-    refined = cand.filter(
-        refine_rows(F.col(lat), F.col(lon),
-                    F.xxhash64("ring_lat", "ring_lon"),
-                    F.col("ring_lat"), F.col("ring_lon"))
-    )
-    return refined.drop("__cell", "cell", "ring_lat", "ring_lon")

@@ -19,7 +19,7 @@ Two-phase shape (the reason this is its own operator and not
 3. Only points whose cell is a **boundary** cover cell (a
    perimeter-fraction of the corpus: area/perimeter wins ~linearly with
    polygon size) join candidates and go through the exact ray-cast refine
-   (`_PolyDim.membership` — the same UDF the PIP join uses, so zonal
+   (`spatial_join._membership` — the same UDF the PIP join uses, so zonal
    membership IS spatial-join membership, by construction).
 
 Inner-join semantics like `spatial_join`: a polygon containing no points
@@ -27,10 +27,11 @@ produces no row.  Boundary points resolve by the engine's crossing-number
 convention.  Geometry domain matches `spatial_join` (ordinary /
 antimeridian / pole-encircling rings via split_ring).
 
-Both operators here compose over `spatial_join._PolyDim`, the polygon-dim
-layer shared with `spatial_join` and `nearest_polygon`: one driver-side
-collect of the dim (broadcastable by contract), one cover table, one
-broadcast of the split rings and one group-by-polygon refine loop.  The
+Both operators here take their dim side from `spatial_join.polygon_cover`,
+shared with `spatial_join` and `nearest_polygon`: one cover frame per dim
+snapshot, covered by one Arrow map over the dim and cached beside its
+distinct rings, which join only the rows that ray-cast or clip, and one
+group-by-ring refine loop.  The
 phase-1 aggregate is the dominant cost and is exactly the `groupBy(cell)`
 any tile/rollup pass already pays.
 """
@@ -43,7 +44,8 @@ from pyspark.sql import functions as F
 
 from ..functions import hexgrid
 from ..functions.geo import haversine_np
-from .spatial_join import DEFAULT_COVER_RES, _pip_single_ring, _PolyDim
+from .spatial_join import (_RING, DEFAULT_COVER_RES, _membership,
+                           _pip_single_ring, _ring_udf, polygon_cover)
 
 
 def zonal_stats(
@@ -62,8 +64,8 @@ def zonal_stats(
     counts non-null values, `sum_v`/`min_v`/`max_v` ignore nulls (SQL
     semantics), `mean_v = sum_v / n_values` (null when all values null).
     Membership is exactly `spatial_join` membership (equality-tested)."""
-    dim = _PolyDim(polys, ("poly_id",), res)
-    cover = dim.cover(res, "poly_id")
+    cover, rings, _ = polygon_cover(polys, res)
+    cover = cover.select("cell", "interior", "ring_key", "poly_id")
 
     cell = "__z_cell"
     has_v = value_col is not None
@@ -89,12 +91,12 @@ def zonal_stats(
     ).select("poly_id", "n", "nv", "s", "mn", "mx")
 
     # phase 2b: boundary cover cells — per-point exact refine, then the
-    # same partial-aggregate shape
-    refine = dim.membership()
+    # same partial-aggregate shape; only these rows read a ring
     boundary = pts.join(
         cover.filter(~F.col("interior")),
         pts[cell] == cover["cell"], "inner",
-    ).filter(refine(F.col(lat), F.col(lon), F.col("pidx"), F.col("interior")))
+    ).join(rings, "ring_key").filter(
+        _membership()(F.col(lat), F.col(lon), *_RING, "interior"))
     boundary_part = boundary.groupBy("poly_id").agg(
         F.count(F.lit(1)).alias("n"),
         F.count("__v").alias("nv"),
@@ -238,31 +240,35 @@ def zonal_length(
     per shared cover cell before the pair dedupe; there is no interior
     shortcut (a cell-level length pre-aggregate would need segments
     clipped per CELL — strictly more work than clipping per polygon).
-    The polygon dim broadcasts by contract."""
+    The polygon cover and rings are `polygon_cover`'s cached frames,
+    each broadcast or shuffled by its size."""
     from .intersect import _covered, _step_deg
 
-    dim = _PolyDim(polys, ("poly_id",), res)
-    cover = dim.cover(res, "poly_id").drop("interior")
+    cover, rings, _ = polygon_cover(polys, res)
+    cover = cover.select("cell", "dim_row", "ring_key", "poly_id")
     # the intersection join's cover step, prefixed "seg_": (seg_id,
     # seg_lat1, seg_lon1, seg_lat2, seg_lon2, __seg_cell); a pre-covered
     # layout column (intersect.with_segment_cover) skips the cover UDF
     s = _covered(segs, seg_id, "seg_", res, _step_deg(res),
                  max_samples=256, cells_col=seg_cells_col)
-    # poly_id follows pidx; keeping it in the dedupe key leaves every
-    # first() buffer fixed-width, so the dedupe stays a HashAggregate
+    # one candidate per (segment, dim row), as spatial_join counts dim
+    # rows; ring_key and poly_id follow dim_row, and keeping them in the
+    # dedupe key leaves every first() buffer fixed-width, so the dedupe
+    # stays a HashAggregate.  The ring joins the deduped pairs only.
     cand = s.join(cover, s["__seg_cell"] == cover["cell"], "inner") \
-            .dropDuplicates(["seg_id", "pidx", "poly_id"])
+            .dropDuplicates(["seg_id", "dim_row", "ring_key", "poly_id"]) \
+            .join(rings, "ring_key")
     # nondeterministic only to the optimizer: a deterministic UDF lets the
     # `frac > 0` filter below be pushed under its own projection, which
     # then clips every candidate twice (two ArrowEvalPython nodes)
-    clip = dim.refine_udf(
+    clip = _ring_udf(
         "clip", _clip_fracs_one_poly,
         [("frac", "double", 0.0), ("len_in", "double", 0.0)],
     ).asNondeterministic()
 
     refined = cand.withColumn(
         "__c", clip(F.col("seg_lat1"), F.col("seg_lon1"),
-                    F.col("seg_lat2"), F.col("seg_lon2"), F.col("pidx"))
+                    F.col("seg_lat2"), F.col("seg_lon2"), *_RING)
     ).filter(F.col("__c.frac") > 0)
     if pairs:
         return refined.select(

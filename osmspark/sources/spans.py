@@ -20,7 +20,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # JSON payload schema for node spans (FIXTURES.md §1 grammar)
@@ -146,10 +146,6 @@ def count_xml_tags(docs: DataFrame) -> DataFrame:
         .groupBy("name").agg(F.sum("cnt").alias("cnt"))
         .filter(F.col("cnt") > 0)
     )
-
-
-def span_struct() -> Column:
-    return F.struct("kind", "text", "media_ref", "offset")
 
 
 def span_sequence_violations(docs: DataFrame) -> DataFrame:

@@ -76,15 +76,24 @@ def streaming_geofence(
     against a STATIC polygon dim.
 
     The batch two-phase join streams AS-IS: cell assignment is a
-    stateless native projection, the cover candidate join is a
-    stream-static broadcast equi-join (no streaming state), and the
-    ray-cast refine is a stateless Arrow-batched filter — so the stream
-    emits exactly the rows the batch join would produce for the same
-    input (equivalence-tested), including split hemisphere/polar rings.
-    One output row per (point, containing polygon)."""
-    from ..operators.spatial_join import spatial_join
+    stateless native projection, the cover candidate join and the ring
+    join are stream-static equi-joins against the dim's cover and ring
+    frames (no streaming state), and the ray-cast refine is a stateless
+    Arrow-batched filter — so the stream emits exactly the rows the
+    batch join would produce for the same input (equivalence-tested),
+    including split hemisphere/polar rings.  One output row per (point,
+    containing polygon).
 
-    return spatial_join(points, polys, res=res, lat=lat, lon=lon)
+    The static frames are pinned with an eager localCheckpoint, the
+    engine's stream-static rule (see streaming_segment_crossings): the
+    cached `polygon_cover` frames leave the prepared-frame LRU when
+    later calls evict them, and every micro-batch would then re-plan the
+    cover's Arrow map inside the static subplan."""
+    from ..operators.spatial_join import _pip, polygon_cover
+
+    cover, rings, res_list = polygon_cover(polys, res)
+    return _pip(points, cover.localCheckpoint(eager=True),
+                rings.localCheckpoint(eager=True), res_list, lat, lon)
 
 
 def streaming_geofence_counts(

@@ -2,6 +2,7 @@
 
 from pyspark.sql import functions as F
 
+from osmspark.config import STREET_TYPE_MAPPING
 from osmspark.operators import audit
 from osmspark.sources import explode_spans
 
@@ -43,15 +44,15 @@ def test_normalized_street_counts(nodes, docs_py):
     assert got == oracle.normalized_street_counts(docs_py)
 
 
-def test_normalize_join_variant_matches_map_variant(nodes):
-    st = audit.streets(nodes)
-    a = audit.normalize_streets(st, use_join=False).select(
-        "street", "normalized_type", "normalized_street"
-    )
-    b = audit.normalize_streets(st, use_join=True).select(
-        "street", "normalized_type", "normalized_street"
-    )
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+def test_normalize_streets_matches_python_mapping(nodes):
+    """normalize_streets' type is STREET_TYPE_MAPPING applied in Python to
+    the oracle's street type, for every distinct street of the fixture."""
+    got = audit.normalize_streets(audit.streets(nodes)).select(
+        "street", "normalized_type").distinct().collect()
+    assert got
+    for r in got:
+        t = oracle.street_type(r["street"])
+        assert r["normalized_type"] == STREET_TYPE_MAPPING.get(t, t), r
 
 
 def test_normalized_street_full_name_rewrite(spark):

@@ -233,6 +233,71 @@ def test_streaming_geofence_equals_batch(spark, tmp_path):
     assert got_c == exp_c and len(exp_c) > 20
 
 
+def test_streaming_geofence_survives_cover_eviction(spark, tmp_path):
+    """The geofence's static side is pinned: after PREPARED_MAX other
+    dims push its cached cover out of the prepared-frame LRU, the running
+    stream's next micro-batch completes with the batch join's rows and
+    runs the dim's cover map zero more times."""
+    import time
+
+    from osmspark.operators.spatial_join import polygon_cover, spatial_join
+    from osmspark.plans import prepared
+    from osmspark.streaming import spatial as sp
+
+    schema = ("poly_id string, level string, "
+              "ring array<struct<lat:double,lon:double>>, postcode string")
+
+    def box(pid, lat, lon):
+        ring = [(lat, lon), (lat, lon + 0.1), (lat + 0.1, lon + 0.1),
+                (lat + 0.1, lon), (lat, lon)]
+        return (pid, "test", [{"lat": a, "lon": o} for a, o in ring], None)
+
+    base = spark.createDataFrame(
+        [box("w", 1.25, 103.70), box("e", 1.25, 103.85)], schema)
+    runs = spark.sparkContext.accumulator(0)
+
+    def counted(it):
+        for b in it:
+            runs.add(len(b))
+            yield b
+
+    polys = base.mapInPandas(counted, base.schema)
+    src = tmp_path / "fence_pts"
+    pts_schema = "id string, lat double, lon double"
+
+    def publish(name, rows):
+        spark.createDataFrame(rows, pts_schema).coalesce(1).write.parquet(
+            str(src / name))
+
+    publish("b0", [("p0", 1.30, 103.75), ("q0", 1.30, 103.90)])
+    stream = spark.readStream.schema(pts_schema).parquet(str(src / "*"))
+    q = (sp.streaming_geofence(stream, polys, res=8).writeStream
+         .format("memory").queryName("t_geo_evict").start())
+    try:
+        q.processAllAvailable()
+        assert runs.value == 2              # the dim ran once, at the call
+        cover = polygon_cover(polys, res=8)[0]
+        for i in range(prepared.PREPARED_MAX):
+            polygon_cover(spark.createDataFrame(
+                [box(f"x{i}", 10.0 + i, 20.0)], schema), res=8)
+        assert not cover.is_cached          # evicted and unpersisted
+        publish("b1", [("p1", 1.31, 103.76), ("q1", 1.31, 103.91),
+                       ("out", 1.50, 103.80)])
+        deadline = time.time() + 120
+        while q.isActive and time.time() < deadline and spark.sql(
+                "SELECT * FROM t_geo_evict").count() < 4:
+            time.sleep(0.5)
+        got = {(r["id"], r["poly_id"]) for r in
+               spark.sql("SELECT * FROM t_geo_evict").collect()}
+    finally:
+        q.stop()
+    batch = spark.read.parquet(str(src / "*"))
+    assert got == {(r["id"], r["poly_id"]) for r in
+                   spatial_join(batch, base, res=8).collect()}
+    assert got == {("p0", "w"), ("q0", "e"), ("p1", "w"), ("q1", "e")}
+    assert runs.value == 2                  # no micro-batch re-ran the map
+
+
 def test_streaming_radius_equals_batch(spark, tmp_path):
     """The B5b radius join streams as-is (stateless stream-side cell
     projection + stream-static equi-join against the driver-built disk

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from osmspark.functions.geo import haversine_m, sq_deg_dist
 from osmspark.operators import radius_join as rj
+from osmspark.plans import prepared
 
 
 @pytest.fixture(scope="module")
@@ -128,7 +129,8 @@ def test_prepared_points_built_once(nodes, queries):
     first = rj.within_distance_join(pts, queries, 2500.0).collect()
     out = rj.within_distance_join(pts, queries, 2500.0)
     assert sorted(out.collect()) == sorted(first)
-    assert sum(e[0].sameSemantics(pts) for e in rj._PREPARED.values()) == 1
+    assert sum(e[0].sameSemantics(pts)
+               for e in prepared._PREPARED.values()) == 1
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan, plan
     assert "EvalPython" not in plan, plan
@@ -182,10 +184,41 @@ def test_prepared_points_lru_bound(nodes):
     prepared halves stay persisted: the least recently used one goes."""
     frames = [rj._prepared_points(
         nodes.select("id", "lat", "lon").where(F.col("lat") > -80.0 + i),
-        8, "id", ()) for i in range(rj.PREPARED_MAX + 1)]
+        8, "id", ()) for i in range(prepared.PREPARED_MAX + 1)]
     assert [f.storageLevel.useMemory for f in frames] == [False] + [
-        True] * rj.PREPARED_MAX
-    assert len(rj._PREPARED) == rj.PREPARED_MAX
+        True] * prepared.PREPARED_MAX
+    assert len(prepared._PREPARED) == prepared.PREPARED_MAX
+
+
+def test_prepared_build_runs_outside_the_registry_lock(spark):
+    """A build runs outside the registry lock: while one key builds, a
+    caller of another key is served, and a second caller of the building
+    key waits for that build instead of starting its own."""
+    import threading
+
+    a, b = spark.range(3), spark.range(4)
+    started, release = threading.Event(), threading.Event()
+    got = []
+
+    def slow():
+        started.set()
+        assert release.wait(60)
+        return ("a",)
+
+    def call(build):
+        got.append(prepared.prepared(a, ("lock-test",), build))
+
+    first = threading.Thread(target=call, args=(slow,))
+    first.start()
+    assert started.wait(60)
+    second = threading.Thread(target=call, args=(lambda: ("again",),))
+    second.start()
+    assert prepared.prepared(b, ("lock-test",), lambda: ("b",)) == ("b",)
+    assert not got                      # both callers of `a` still wait
+    release.set()
+    first.join(60)
+    second.join(60)
+    assert got == [("a",), ("a",)]
 
 
 def test_auto_res_monotone():

@@ -18,6 +18,36 @@ def _pip_py(py, px, ring):
     return inside
 
 
+def _cover_cells(lats, lons, res):
+    """Cover cells of one ring, as the dim-side cover map computes them."""
+    return sj._cover_pieces_flagged(sj.split_ring(lats, lons), res)[0]
+
+
+def _same_rows_both_plans(spark, run):
+    """`run()`'s rows at the session's broadcast threshold and at 1 byte,
+    below any non-empty cover: the cover join plans as a
+    BroadcastHashJoin, then as a SortMergeJoin, with the same rows."""
+    from collections import Counter
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    default = spark.conf.get(key)
+    got = []
+    for threshold, kind, other in ((default, "BroadcastHashJoin",
+                                    "SortMergeJoin"),
+                                   ("1", "SortMergeJoin",
+                                    "BroadcastHashJoin")):
+        spark.conf.set(key, threshold)
+        try:
+            out = run()
+            got.append(Counter(tuple(r) for r in out.collect()))
+            plan = out._jdf.queryExecution().executedPlan().toString()
+        finally:
+            spark.conf.set(key, default)
+        assert kind in plan and other not in plan, plan
+    assert got[0] == got[1]
+    return got[0]
+
+
 def test_points_in_rings_np_vs_scalar():
     rng = np.random.default_rng(7)
     n = 500
@@ -51,7 +81,7 @@ def test_cover_cells_superset(polygons):
         ring = [(p["lat"], p["lon"]) for p in r["ring"]]
         lats = np.array([p[0] for p in ring])
         lons = np.array([p[1] for p in ring])
-        cover = set(sj._ring_cover_cells(lats, lons, 7).tolist())
+        cover = set(_cover_cells(lats, lons, 7).tolist())
         # interior samples: convex combinations of vertices
         rng = np.random.default_rng(1)
         w = rng.dirichlet(np.ones(len(ring)), 50)
@@ -139,7 +169,7 @@ def test_multiface_cover_superset():
 
     lats = np.array([10.0, 10.0, 12.0, 12.0, 10.0])
     lons = np.array([44.0, 46.0, 46.0, 44.0, 44.0])
-    cover = set(sj._ring_cover_cells(lats, lons, 8).tolist())
+    cover = set(_cover_cells(lats, lons, 8).tolist())
     faces = {hexgrid.unpack(np.array([c]))[1][0] for c in cover}
     assert len(faces) == 2  # cover spans both cube faces
     rng = np.random.default_rng(3)
@@ -149,35 +179,28 @@ def test_multiface_cover_superset():
     assert set(cells.tolist()) <= cover
 
 
-def test_interior_shortcut_equals_full_refine(nodes, polygons, monkeypatch):
+def test_interior_shortcut_equals_full_refine(nodes, polygons):
     """The refine keeps certified-interior candidates without a ray-cast;
-    forcing every cover `interior` flag False (so every candidate is
-    ray-cast) must give the same result, and the fixture must actually
-    exercise the shortcut (at least one interior candidate — the
-    fixture quads certify none at res 7, so this runs at res 8)."""
+    passing every candidate's `interior` flag as False (so every
+    candidate is ray-cast) must give the same result, and the fixture
+    must actually exercise the shortcut (at least one interior candidate
+    — the fixture quads certify none at res 7, so this runs at res 8)."""
     from osmspark.functions import hexgrid
 
     pts = nodes.select("id", "lat", "lon")
     a = {(r["id"], r["poly_id"]) for r in
          sj.spatial_join(pts, polygons, res=8).collect()}
-    covers_by_res, _, _ = sj.adaptive_polygon_covers(polygons.collect(),
-                                                     max_res=8)
-    interior_cells = [(c,) for _i, c, f in covers_by_res[8] if f]
+    cover, rings, res_list = sj.polygon_cover(polygons, res=8)
     cells = hexgrid.with_hex_cell(pts, 8, out_col="cell")
     n_interior = cells.join(
-        pts.sparkSession.createDataFrame(interior_cells, "cell long"),
-        "cell").count()
+        cover.filter("interior").select("cell"), "cell").count()
     assert n_interior > 0
 
-    flagged = sj._cover_pieces_flagged
-
-    def never_interior(pieces, res):
-        cells, interior = flagged(pieces, res)
-        return cells, np.zeros_like(interior)
-
-    monkeypatch.setattr(sj, "_cover_pieces_flagged", never_interior)
+    refine = sj._membership()
     b = {(r["id"], r["poly_id"]) for r in
-         sj.spatial_join(pts, polygons, res=8).collect()}
+         sj._candidates(pts, cover, res_list).join(rings, "ring_key")
+         .filter(refine(F.col("lat"), F.col("lon"), *sj._RING, F.lit(False)))
+         .collect()}
     assert a == b and len(a) > 100
 
 
@@ -257,7 +280,7 @@ def test_antimeridian_cover_superset():
 
     lats = np.array([10.0, 10.0, 12.0, 12.0, 10.0])
     lons = np.array([179.0, -179.0, -179.0, 179.0, 179.0])
-    cover = set(sj._ring_cover_cells(lats, lons, 7).tolist())
+    cover = set(_cover_cells(lats, lons, 7).tolist())
     rng = np.random.default_rng(5)
     slat = rng.uniform(10.0, 12.0, 500)
     slon_u = rng.uniform(179.0, 181.0, 500)
@@ -266,19 +289,21 @@ def test_antimeridian_cover_superset():
     assert set(cells.tolist()) <= cover
 
 
-def test_spatial_join_distributed_equals_broadcast(nodes, polygons):
-    """The no-driver-collect variant must be result-identical to the
-    broadcast-dim spatial_join on the same inputs."""
-    pts = nodes.select("id", "lat", "lon")
-    a = {(r["id"], r["poly_id"]) for r in
-         sj.spatial_join(pts, polygons, res=7).collect()}
-    b = {(r["id"], r["poly_id"]) for r in
-         sj.spatial_join_distributed(pts, polygons, res=7).collect()}
-    assert a == b and len(a) > 100
+def test_distributed_join_equals_broadcast(spark, nodes, polygons):
+    """The cover join shuffled (a cover past the broadcast threshold) is
+    result-identical to the broadcast one (a points frame of its own, so
+    neither run reads the cached `joined` fixture)."""
+    pts = nodes.select("id", "lat", "lon").where(F.col("lat") > -90.0)
+    got = _same_rows_both_plans(
+        spark, lambda: sj.spatial_join(pts, polygons, res=7).select(
+            "id", "poly_id"))
+    exp = {(r["id"], r["poly_id"]) for r in
+           sj.spatial_join(pts, polygons, res=7).collect()}
+    assert set(got) == exp and len(exp) > 100
 
 
-def test_spatial_join_distributed_antimeridian(spark):
-    """Distributed variant handles antimeridian rings the same way."""
+def test_distributed_join_antimeridian(spark):
+    """The shuffled cover join handles antimeridian rings the same way."""
     ring = [(10.0, 179.0), (10.0, -179.0), (12.0, -179.0), (12.0, 179.0),
             (10.0, 179.0)]
     polys = spark.createDataFrame(
@@ -291,9 +316,9 @@ def test_spatial_join_distributed_antimeridian(spark):
          ("out_n", 13.0, 179.5), ("out_lon", 11.0, 178.0)],
         "id string, lat double, lon double",
     )
-    got = {r["id"] for r in
-           sj.spatial_join_distributed(pts, polys, res=7).collect()}
-    assert got == {"in_e", "in_w"}
+    got = _same_rows_both_plans(
+        spark, lambda: sj.spatial_join(pts, polys, res=7).select("id"))
+    assert set(got) == {("in_e",), ("in_w",)}
 
 
 def _mk_polys(spark, rings_by_id):
@@ -367,7 +392,7 @@ def test_polar_cap_ring_joins(spark):
 
 
 def test_polar_cap_distributed_equals_broadcast(spark):
-    """The no-driver-collect variant must split polar rings identically."""
+    """The shuffled cover join splits polar rings identically."""
     lon_grid = np.arange(-180.0, 180.1, 10.0)
     curve = -65.0 + 4.0 * np.sin(np.radians(2.0 * lon_grid))
     west = [(float(curve[i]), float(lon_grid[i]))
@@ -380,10 +405,11 @@ def test_polar_cap_distributed_equals_broadcast(spark):
         [(str(i), float(plat[i]), float(plon[i])) for i in range(len(plat))],
         "id string, lat double, lon double",
     )
-    a = {r["id"] for r in sj.spatial_join(pts, polys, res=3).collect()}
-    b = {r["id"] for r in
-         sj.spatial_join_distributed(pts, polys, res=3).collect()}
-    assert a == b and len(a) > 100
+    got = _same_rows_both_plans(
+        spark, lambda: sj.spatial_join(pts, polys, res=3).select("id"))
+    f = np.interp(plon, lon_grid, curve)
+    clear = {(str(i),) for i in range(len(plat)) if plat[i] < f[i] - 1.0}
+    assert clear <= set(got) and len(got) > 100
 
 
 def test_split_ring_pieces_tile_exactly():
@@ -452,26 +478,25 @@ def test_spatial_join_adaptive_mixed_dim(spark):
                      if abs(plat[i] - f[i]) <= 1.0}
     assert got - near_boundary == exp
     assert len(exp) > 400
-    # per-row resolutions + budget, keyed by dim-row index (rect 0, cap 1)
-    prows = [{"poly_id": "rect", "ring": [{"lat": a, "lon": o}
-                                          for a, o in rect]},
-             {"poly_id": "cap", "ring": [{"lat": a, "lon": o}
-                                         for a, o in cap]}]
-    covers_by_res, res_list, rings_list = sj.adaptive_polygon_covers(
-        prows, max_res=7, min_res=2, max_cover_cells=2048)
-    assert len(rings_list[0]) == 1 and len(rings_list[1]) > 1
-    assert res_list[0] == 7                 # small polygon -> finest res
-    assert res_list[1] < 7                  # huge polygon -> coarser res
-    from collections import Counter
-    for rr, rows in covers_by_res.items():
-        for pidx, n in Counter(p for p, _c, _i in rows).items():
-            assert n <= 2048, (rr, pidx, n)
-            assert res_list[pidx] == rr
-    # every cover row carries the interior bool, and the big cap
-    # certifies a substantial interior (the refine-skip fuel)
-    flat = [r for rows in covers_by_res.values() for r in rows]
-    assert all(isinstance(r[2], bool) for r in flat)
-    assert any(r[2] for r in flat if r[0] == 1)
+    # one res per dim row + budget, read back from the cached cover
+    def split(ring):
+        return sj.split_ring(np.array([p[0] for p in ring]),
+                             np.array([p[1] for p in ring]))
+
+    assert len(split(rect)) == 1 and len(split(cap)) > 1
+    cover, _, res_list = sj.polygon_cover(polys, res=7, min_res=2,
+                                          max_cover_cells=2048)
+    rows = {r["poly_id"]: r for r in cover.groupBy("poly_id", "res").agg(
+        F.count("*").alias("n"),
+        F.max(F.col("interior").cast("int")).alias("any_interior"),
+    ).collect()}
+    assert len(rows) == 2 and set(rows) == {"rect", "cap"}
+    assert rows["rect"]["res"] == 7         # small polygon -> finest res
+    assert rows["cap"]["res"] < 7           # huge polygon -> coarser res
+    assert res_list == sorted(r["res"] for r in rows.values())
+    assert all(r["n"] <= 2048 for r in rows.values())
+    # the big cap certifies a substantial interior (the refine-skip fuel)
+    assert rows["cap"]["any_interior"] == 1
 
 
 def test_wide_ring_cover_superset():
@@ -482,7 +507,7 @@ def test_wide_ring_cover_superset():
     lo_steps = np.linspace(-100.0, 100.0, 5)
     lats = np.array([0.0] * 5 + [20.0] * 5 + [0.0])
     lons = np.concatenate([lo_steps, lo_steps[::-1], [-100.0]])
-    cover = set(sj._ring_cover_cells(lats, lons, 4).tolist())
+    cover = set(_cover_cells(lats, lons, 4).tolist())
     rng = np.random.default_rng(37)
     slat = rng.uniform(0.01, 19.99, 800)
     slon = rng.uniform(-99.99, 99.99, 800)
@@ -555,10 +580,9 @@ def test_candidate_join_runs_once_per_res(spark):
            + [(40.0, float(lo)) for lo in range(150, 59, -30)]
            + [(-10.0, 60.0)])
     polys = _mk_polys(spark, {"rect": rect, "box": box})
-    prows = polys.collect()
-    _, res_list, _ = sj.adaptive_polygon_covers(
-        prows, max_res=8, min_res=3, max_cover_cells=2048)
-    assert len(set(res_list)) == 2
+    _, _, res_list = sj.polygon_cover(polys, res=8, min_res=3,
+                                      max_cover_cells=2048)
+    assert len(res_list) == 2
     rng = np.random.default_rng(47)
     n = 2000
     base = spark.createDataFrame(
@@ -623,9 +647,10 @@ def test_polygon_dim_runs_once_per_call(spark, op):
 
 
 def test_distributed_duplicate_id_parts(spark):
-    """spatial_join_distributed groups its refine by ring content, not by
-    poly_id: multipolygon parts sharing an id, in one Arrow batch, each
-    ray-cast their own ring (keyed by poly_id, both cast the first's)."""
+    """The refine groups its rows by ring content, not by poly_id, in
+    either join plan: multipolygon parts sharing an id, in one Arrow
+    batch, each ray-cast their own ring (keyed by poly_id, both cast the
+    first's)."""
     parts = [_square(1.30, 103.70, 0.05), _square(1.40, 103.85, 0.05)]
     polys = spark.createDataFrame(
         [("m", "test", [{"lat": a, "lon": o} for a, o in ring], None)
@@ -636,6 +661,53 @@ def test_distributed_duplicate_id_parts(spark):
     pts = spark.createDataFrame(
         [("a", 1.325, 103.725), ("b", 1.425, 103.875), ("out", 1.38, 103.80)],
         "id string, lat double, lon double").coalesce(1)
-    got = sj.spatial_join_distributed(pts, polys, res=8).collect()
-    assert sorted((r["id"], r["poly_id"]) for r in got) == [
-        ("a", "m"), ("b", "m")]
+    got = _same_rows_both_plans(
+        spark, lambda: sj.spatial_join(pts, polys, res=8).select(
+            "id", "poly_id").coalesce(1))
+    assert sorted(got) == [("a", "m"), ("b", "m")]
+
+
+def test_polygon_cover_follows_resaved_snapshot(spark, tmp_path):
+    """A polygon dim re-saved to the same stage is a new dim snapshot: the
+    join after each reload uses the new rings, not the cover cached for
+    an earlier save.  A Spark write in this session refreshes Spark's own
+    cache of that path; a writer in another process does not, so the last
+    dim is published the way one would (new part files, the old ones
+    gone), and only the cover's file list tells the two loads apart."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from osmspark.plans.checkpoint import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path / "snap"))
+    stage = tmp_path / "snap" / "polys"
+    plon = [103.70 + 0.01 * i for i in range(30)]
+    pts = spark.createDataFrame([(f"p{i}", 1.3, lo) for i, lo in
+                                 enumerate(plon)],
+                                "id string, lat double, lon double")
+    boxes = [_square(1.25, 103.70 + d, 0.1) for d in (0.0, 0.05, 0.12)]
+    ring_type = pa.list_(pa.struct([("lat", pa.float64()),
+                                    ("lon", pa.float64())]))
+
+    def publish_elsewhere(ring):
+        for f in stage.glob("*.parquet"):
+            f.unlink()
+        pq.write_table(pa.table({
+            "poly_id": ["box"], "level": ["test"],
+            "ring": pa.array([[{"lat": a, "lon": o} for a, o in ring]],
+                             ring_type),
+            "postcode": pa.array([None], pa.string()),
+        }), stage / "part-00000-elsewhere.parquet")
+
+    got = []
+    for i, ring in enumerate(boxes):
+        if i < 2:
+            store.save(_mk_polys(spark, {"box": ring}), "polys")
+        else:
+            publish_elsewhere(ring)
+        snap = store.load(spark, "polys")
+        got.append({r["id"] for r in
+                    sj.spatial_join(pts, snap, res=8).collect()})
+        assert got[-1] == {f"p{j}" for j, lo in enumerate(plon)
+                           if _pip_py(1.3, lo, ring)}, i
+    assert len({frozenset(g) for g in got}) == 3

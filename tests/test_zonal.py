@@ -70,16 +70,14 @@ def test_zonal_interior_shortcut_fires(valued_nodes, polygons):
     big = polygons.filter(F.col("poly_id") == "admin_0")
     if big.count() == 0:  # fall back to the first polygon
         big = polygons.limit(1)
-    dim = sj._PolyDim(big, res=8)
-    covers = dim.covers_by_res[8]
-    n_int = sum(1 for *_, i in covers if i)
-    n_bnd = sum(1 for *_, i in covers if not i)
+    cov = sj.polygon_cover(big, res=8)[0]
+    n_int = cov.filter("interior").count()
+    n_bnd = cov.filter("NOT interior").count()
     assert n_int > 0, "no interior cells certified on the largest polygon"
     assert n_bnd > 0
     # refine-leg row count < polygon point count (interior points skipped)
     from osmspark.functions import hexgrid
     pts = hexgrid.with_hex_cell(valued_nodes, 8, out_col="__c")
-    cov = dim.cover(8)
     in_poly = sj.spatial_join(valued_nodes, big, res=8).count()
     refine_rows = pts.join(
         cov.filter(~F.col("interior")), pts["__c"] == cov["cell"]).count()
@@ -300,3 +298,35 @@ def test_zonal_length_plan(spark):
     assert "Cartesian" not in plan
     assert "BroadcastHashJoin" in plan
     assert "BatchEvalPython" not in plan
+
+
+def test_duplicated_dim_row_counts_per_row(spark):
+    """Two byte-identical dim rows are two dim rows to every point x
+    polygon operator: spatial_join emits each point once per copy,
+    zonal_stats counts it once per copy, and zonal_length counts each
+    segment once per copy, with the length summed per copy."""
+    from osmspark.operators.zonal import zonal_length
+
+    box = [(1.30, 103.70), (1.30, 103.75), (1.35, 103.75), (1.35, 103.70),
+           (1.30, 103.70)]
+    row = ("dup", "admin", [{"lat": a, "lon": o} for a, o in box], None)
+    schema = ("poly_id string, level string, "
+              "ring array<struct<lat:double,lon:double>>, postcode string")
+    one = spark.createDataFrame([row], schema=schema)
+    two = spark.createDataFrame([row, row], schema=schema)
+    pts = spark.createDataFrame(
+        [("a", 1.325, 103.725), ("edge", 1.3005, 103.7005),
+         ("out", 1.38, 103.80)],
+        "id string, lat double, lon double")
+    segs = spark.createDataFrame(
+        [("s", 1.32, 103.65, 1.32, 103.73)],
+        "seg_id string, lat1 double, lon1 double, lat2 double, lon2 double")
+
+    assert sorted(r["id"] for r in sj.spatial_join(pts, two, res=8)
+                  .collect()) == ["a", "a", "edge", "edge"]
+    assert _rows(zonal_stats(pts, two, res=8)) == {"dup": (4,)}
+    single = zonal_length(segs, one, res=8).collect()
+    double = zonal_length(segs, two, res=8).collect()
+    assert len(single) == len(double) == 1
+    assert single[0]["n_segments"] == 1 and double[0]["n_segments"] == 2
+    assert double[0]["len_m"] == pytest.approx(2.0 * single[0]["len_m"])

@@ -73,6 +73,23 @@ def _stencil_explodes(plan: str) -> int:
         plan)) for i in ids)
 
 
+def _cover_cached(plan: str) -> bool:
+    """The polygon cover and rings are read from their caches, and no
+    driver-built frame feeds the join: every `Scan ExistingRDD` of the
+    final plan (the generated dim) sits under an InMemoryRelation."""
+    final = _final(plan)
+    under = None  # indent of the InMemoryRelation being walked, if any
+    for ln in final.splitlines():
+        col = len(ln) - len(ln.lstrip(" +-:"))
+        if under is not None and col <= under:
+            under = None
+        if under is None and "InMemoryRelation" in ln:
+            under = col
+        elif under is None and "Scan ExistingRDD" in ln:
+            return False
+    return "InMemoryTableScan" in final
+
+
 def _first_join_or_union(plan: str, node: str) -> str:
     """The first join or union line in the final-plan subtree of `node`."""
     return next((ln.strip(" +-:*") for ln in _subtree(plan, node)
@@ -134,8 +151,24 @@ def main() -> None:
          ("no row-wise python", lambda p: "BatchEvalPython" not in p),
          ("cell assignment is native — refine is the ONLY Python node "
           "(one per AQE initial/final tree)",
-          lambda p: p.count("+- ArrowEvalPython") <= 2)],
+          lambda p: p.count("+- ArrowEvalPython") <= 2),
+         ("cover read from its cache (InMemoryTableScan), no driver-built "
+          "cover frame", _cover_cached)],
     )
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+    add(
+        "Two-phase PIP spatial join, cover past the broadcast threshold "
+        "(B4 — the same call, threshold 1 byte)",
+        spatial_join(nodes.select("id", "lat", "lon"), polys, res=8),
+        ["SortMergeJoin",
+         ("no broadcast: the cached cover's size decides the join",
+          lambda p: "BroadcastHashJoin" not in p),
+         ("cover read from its cache (InMemoryTableScan), no driver-built "
+          "cover frame", _cover_cached),
+         ("no row-wise python", lambda p: "BatchEvalPython" not in p)],
+    )
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     from osmspark.operators.knn import knn_kring
 
     nodes.select("id", "lat", "lon").repartition(8).write.mode(
@@ -281,10 +314,11 @@ def main() -> None:
          ("one candidate join per distinct res, unioned (the 90-deg box "
           "takes coarse cells, the km-scale grid stays fine)",
           lambda p: "Union" in p),
-         ("each points scan feeds exactly one refine UDF: interior and "
-          "boundary candidates share one candidate join",
-          lambda p: _final(p).count("ArrowEvalPython (")
-          == _final(p).count("Scan parquet")),
+         ("one points scan per res and ONE refine UDF over the unioned "
+          "candidates: interior and boundary candidates share one "
+          "candidate join",
+          lambda p: _final(p).count("ArrowEvalPython (") == 1
+          and _final(p).count("Scan parquet") == 2),
          ("no row-wise python", lambda p: "BatchEvalPython" not in p)],
     )
 
@@ -439,7 +473,9 @@ def main() -> None:
         polygon_intersect_join(polys, shifted, res=7),
         [("candidate join is an equi-join on the cell key",
           lambda p: "CartesianProduct" not in p),
-         ("Arrow-vectorized cover + verify only",
+         ("both covers read from their caches (InMemoryTableScan)",
+          lambda p: _final(p).count("InMemoryTableScan") >= 2),
+         ("Arrow-vectorized verify only",
           lambda p: "ArrowEvalPython" in p and "BatchEvalPython" not in p)],
     )
 
@@ -749,7 +785,7 @@ def main() -> None:
           "leg is pure native cell-aggregate credit "
           "(formatted mode may repeat it in AQE initial/final trees)",
           lambda p: 1 <= p.count("+- ArrowEvalPython") <= 2),
-         ("cover joins broadcast (the dim contract)",
+         ("cover joins broadcast (a small cached cover)",
           lambda p: "BroadcastHashJoin" in p),
          ("partial+final aggregates on the cell and polygon keys",
           lambda p: "HashAggregate" in p),
@@ -765,9 +801,9 @@ def main() -> None:
         (F.col("lon") + 0.004).alias("lon2"))
     add(
         "Zonal length (road-km per polygon — segment covers x the shared "
-        "broadcast polygon cover, exact clip)",
+        "cached polygon cover, exact clip)",
         zonal_length(zl_segs, polys, res=8),
-        [("cover join broadcast (the dim contract)",
+        [("cover join broadcast (a small cached cover)",
           lambda p: "BroadcastHashJoin" in p and "BroadcastExchange" in p),
          ("exactly ONE clip ArrowEvalPython — the `frac > 0` filter is "
           "not pushed under the clip projection, so no candidate is "
